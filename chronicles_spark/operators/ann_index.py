@@ -32,6 +32,7 @@ and removable with the same sweep that removes orphan data directories).
 
 from __future__ import annotations
 
+import functools
 import json
 from dataclasses import dataclass
 
@@ -47,6 +48,8 @@ from ..core.version import generate_version
 from ..trackers.base import VersionTracker
 from ..trackers.fs import filesystem_for
 from . import similarity as SIM
+from . import dedup_index as DX
+from .dedup_index import _restrict_to_values
 
 ARTIFACT_PREFIX = "_ann_artifacts_"
 BUCKET_COL = "bucket"
@@ -62,24 +65,19 @@ _LOCATE_PUSHDOWN_MAX_IDS = 10_000
 # with the other primary+companion families (operators/pairing.py)
 from .pairing import (  # noqa: E402
     TornPairError as TornAnnPairError,
+    check_pair as _check_pair,
     pair_label as _pair_label,
     pair_message as _pair_message,
     pinned_state as _pinned_state,
 )
 
-
-def _check_ann_pair(table, pi: "str | None", pm: "str | None") -> None:
-    """The ANN family's torn-pair refusal: extending from a torn pair
-    would locate upserts through a map that does not describe the index
-    (silently wrong results), so the hot path fails loudly with this
-    family's audit/repair advice instead."""
-    from . import pairing
-
-    pairing.check_pair(
-        table, pi, pm,
-        "run verify_ann_id_map to audit and rebuild_ann_id_map to "
-        "repair before extending",
-    )
+# the torn-pair refusal's advice: extending from a torn pair would
+# locate upserts through a map that does not describe the index
+# (silently wrong results), so the hot path fails loudly with it
+_ANN_REPAIR_ADVICE = (
+    "run verify_ann_id_map to audit and rebuild_ann_id_map to repair "
+    "before extending"
+)
 
 
 def ann_id_map_table(table: TableDefinition) -> TableDefinition:
@@ -271,6 +269,15 @@ class AnnArtifacts:
     max_bucket_rows: "int | None" = None
     bucket_splits: "tuple | None" = None
 
+    def geometry(self) -> dict:
+        """The fields every live label's sidecar must agree on — the
+        quantizer, ``id_shards`` and ``max_bucket_rows``; the evolving
+        ``bucket_splits`` and the label are left out."""
+        d = self.__dict__.copy()
+        d.pop("version_label")
+        d.pop("bucket_splits")
+        return d
+
     def to_json(self) -> str:
         return json.dumps(
             {
@@ -327,9 +334,7 @@ def _freeze_splits(splits) -> "tuple | None":
     return tuple(sorted((str(k), int(v)) for k, v in dict(splits).items()))
 
 
-def _artifact_path(table: TableDefinition, label: str):
-    fs, root = filesystem_for(table.location)
-    return fs, fs.join(root, ARTIFACT_PREFIX + label + ".json")
+_artifact_path = functools.partial(DX._artifact_path, prefix=ARTIFACT_PREFIX)
 
 
 def _write_artifact_sidecar(
@@ -338,15 +343,10 @@ def _write_artifact_sidecar(
     max_bucket_rows: "int | None" = None,
     bucket_splits=None,
 ) -> AnnArtifacts:
-    """Stamp + persist the artifact sidecar for a version BEFORE its data
-    commit — a crash leaves an orphan sidecar (reclaimable via
-    :func:`vacuum_ann_artifacts`'s age guard), never a committed index
-    whose artifacts are missing."""
-    import json as _json
-
-    from .artifact_payload import externalize_doc
-    from .dedup_index import _check_artifact_size
-
+    """Stamp the artifacts under ``version_label`` and persist them through
+    the shared sidecar writer BEFORE the data commit — a crash leaves an
+    orphan sidecar (reclaimable via :func:`vacuum_ann_artifacts`'s age
+    guard), never a committed index whose artifacts are missing."""
     stamped = AnnArtifacts(
         centroids=tuple((cid, tuple(c)) for cid, c in centroids),
         codebooks=tuple(tuple(tuple(x) for x in cb) for cb in codebooks),
@@ -355,15 +355,7 @@ def _write_artifact_sidecar(
         max_bucket_rows=max_bucket_rows,
         bucket_splits=_freeze_splits(bucket_splits),
     )
-    fs, root = filesystem_for(table.location)
-    text = stamped.to_json()
-    orig = _json.loads(text)
-    doc = externalize_doc(fs, root, orig)
-    payload = text if doc is orig else _json.dumps(doc)
-    _check_artifact_size(payload, table, "ann")
-    _, apath = _artifact_path(table, version_label)
-    fs.mkdirs(root)  # first build: no dir yet
-    fs.write_text(apath, payload)
+    DX._write_artifact_sidecar(table, stamped, "ann", ARTIFACT_PREFIX)
     return stamped
 
 
@@ -555,7 +547,6 @@ def _publish_pair(
     any) is synced for the INDEX table only — the id map is derived
     internal state.  The group-commit + pair-marker mechanics live in
     :func:`pairing.publish_group`."""
-    from ..core.diff import compute_changes
     from ..spark.writer import partitions_written, write_versioned
     from .pairing import publish_group
 
@@ -566,14 +557,7 @@ def _publish_pair(
         # re-running assignment/PQ/skew-split over the raw embeddings
         from ..spark.reader import read_version
 
-        mode = spark.conf.get(
-            "spark.sql.sources.partitionOverwriteMode", "static"
-        )
-        if (mode or "").lower() != "dynamic":
-            raise RuntimeError(
-                "The Spark configuration must have spark.sql.sources."
-                "partitionOverwriteMode set to 'dynamic'"
-            )
+        DX._require_dynamic_overwrite(spark)
         write_versioned(index_df, table, version)
         if index_partitions is None:
             index_partitions = partitions_written(table, version, spark=spark)
@@ -597,9 +581,7 @@ def _publish_pair(
         expected_heads=expected_heads, allow_disjoint=allow_disjoint,
     )
     new_state = tracker.current_version(table.name)
-    if metastore is not None:
-        actual = metastore.current_version(table)
-        metastore.update(table, compute_changes(actual, new_state))
+    DX._sync_metastore(metastore, table, new_state)
     return new_state
 
 
@@ -625,49 +607,16 @@ def load_ann_artifacts(
     — bounded by the number of extends since the last full rebuild (a
     rebuild collapses every bucket to one label), all driver-side
     metadata.  Latency-sensitive repeat callers (the streaming sink's
-    per-batch default) should pass ``artifacts=`` and skip resolution."""
-    if not isinstance(table_version, PartitionedTableVersion):
-        raise ValueError("ANN index tables are partitioned by bucket")
-    labels = sorted({v.label for v in table_version.partition_versions.values()})
-    if not labels:
-        raise ValueError(f"table {table.name} has no live index data")
-    from .artifact_payload import resolve_text
+    per-batch default) should pass ``artifacts=`` and skip resolution.
 
-    pfs, proot = filesystem_for(table.location)
-    loaded: list[AnnArtifacts] = []
-    for label in labels:
-        fs, apath = _artifact_path(table, label)
-        if not fs.exists(apath):
-            raise ValueError(
-                f"no artifact sidecar for live index version {label} at "
-                f"{apath}"
-            )
-        loaded.append(
-            AnnArtifacts.from_json(resolve_text(pfs, proot, fs.read_text(apath)))
-        )
-    first = loaded[0]
-    for other in loaded[1:]:
-        # bucket_splits is deliberately NOT part of the agreement set: the
-        # split tree legitimately evolves across extends (in-commit
-        # re-splits add entries); placement takes the NEWEST label's tree
-        if (
-            other.centroids != first.centroids
-            or other.codebooks != first.codebooks
-            or other.id_shards != first.id_shards
-            or other.max_bucket_rows != first.max_bucket_rows
-        ):
-            raise ValueError(
-                f"table {table.name} has live partitions encoded under "
-                f"DIFFERENT quantizers (labels {labels}) — pass artifacts= "
-                "explicitly or rebuild the index"
-            )
-    return AnnArtifacts(
-        centroids=first.centroids,
-        codebooks=first.codebooks,
-        version_label=labels[-1],
-        id_shards=first.id_shards,
-        max_bucket_rows=first.max_bucket_rows,
-        bucket_splits=loaded[-1].bucket_splits,
+    ``bucket_splits`` is deliberately NOT part of the agreement set
+    (:meth:`AnnArtifacts.geometry`): the split tree legitimately evolves
+    across extends (in-commit re-splits add entries), and the shared
+    loader returns the NEWEST label's sidecar, so placement takes the
+    newest tree."""
+    return DX._load_artifacts(
+        table, table_version, AnnArtifacts.from_json, "quantizers",
+        prefix=ARTIFACT_PREFIX,
     )
 
 
@@ -769,34 +718,13 @@ def extend_ann_index(
             f"ANN index table must be partitioned by ({BUCKET_COL!r},), "
             f"got {table.partition_schema.columns}"
         )
-    if mode not in ("upsert", "append"):
-        raise ValueError(f"mode must be 'upsert' or 'append', got {mode!r}")
-    if concurrency not in ("last-writer-wins", "optimistic", "strict"):
-        raise ValueError(
-            "concurrency must be 'last-writer-wins', 'optimistic' or "
-            f"'strict', got {concurrency!r}"
-        )
-    if exclusive:
-        hold = getattr(tracker, "hold_commit_lock", None)
-        if hold is None or not getattr(tracker, "_use_lock", False):
-            raise ValueError(
-                "exclusive=True needs a FileBackedVersionTracker with "
-                "use_lock=True (the per-table flock is what serializes "
-                "the whole read-modify-write across processes)"
-            )
-        # hold the table's commit flock for the ENTIRE extend (public
-        # tracker surface); the inner commit's guard is re-entrant within
-        # this thread, while other processes' extends block until ours
-        # publishes — serial RMW, no Spark output-committer staging
-        # clash, no conflicts to retry
-        with hold(table.name):
-            return _extend_body(
-                df_new, table, tracker, user_id, message, artifacts, mode,
-                concurrency, id_col, vec_col, metastore,
-            )
-    return _extend_body(
-        df_new, table, tracker, user_id, message, artifacts, mode,
-        concurrency, id_col, vec_col, metastore,
+    DX._check_extend_args(concurrency, mode)
+    return DX._run_maybe_exclusive(
+        tracker, table, exclusive,
+        lambda: _extend_body(
+            df_new, table, tracker, user_id, message, artifacts, mode,
+            concurrency, id_col, vec_col, metastore,
+        ),
     )
 
 
@@ -829,7 +757,7 @@ def _extend_body(
         map_state, map_head, map_pair = _pinned_state(
             tracker, map_table.name
         )
-        _check_ann_pair(table, head_pair, map_pair)
+        _check_pair(table, head_pair, map_pair, _ANN_REPAIR_ADVICE)
         if not isinstance(map_state, PartitionedTableVersion):
             raise ValueError("ANN id-map tables are partitioned by id_shard")
 
@@ -1161,29 +1089,18 @@ def commit_ann_stream_batch(
     (extend's optimistic default) and fails the stream loudly — two
     writers maintaining one index is a deployment error, not a race to
     arbitrate silently."""
-    from ..streaming.ingest import epoch_replay_guard
 
-    if batch_df.isEmpty():
-        return
-    message = f"{message_prefix} epoch {epoch_id}"
-    if epoch_replay_guard(
-        tracker, table.name, message_prefix, epoch_id, epoch_cache
-    ):
-        return  # checkpoint replay of the just-committed epoch
-    try:
-        extend_ann_index(
-            batch_df, table, tracker, user_id, message,
+    def extend_fn(df, message):
+        return extend_ann_index(
+            df, table, tracker, user_id, message,
             artifacts=artifacts, mode=mode,
             id_col=id_col, vec_col=vec_col, metastore=metastore,
         )
-        if epoch_cache is not None:
-            epoch_cache["latest_epoch"] = epoch_id
-    except BaseException:
-        # same stale-cache hazard as the ingest sink: re-derive from the
-        # log on the next attempt rather than trusting a cached epoch
-        if epoch_cache is not None:
-            epoch_cache.pop("latest_epoch", None)
-        raise
+
+    DX._commit_index_stream_batch(
+        batch_df, epoch_id, table, tracker, extend_fn,
+        message_prefix, epoch_cache, None,
+    )
 
 
 def ann_stream_sink(
@@ -1574,19 +1491,6 @@ def restrict_to_buckets(table_version, buckets) -> PartitionedTableVersion:
         for p, v in table_version.partition_versions.items()
         if (val := dict(p.column_values).get(BUCKET_COL)) in wanted
         or (prefixes and val is not None and val.startswith(prefixes))
-    }
-    return PartitionedTableVersion(kept)
-
-
-def _restrict_to_values(table_version, column: str, values) -> PartitionedTableVersion:
-    """Exact-value partition restriction on an arbitrary partition column
-    (the id map's shard pruning — same structural-pruning move as
-    :func:`restrict_to_buckets`, without the skew-prefix rule)."""
-    wanted = {str(v) for v in values}
-    kept = {
-        p: v
-        for p, v in table_version.partition_versions.items()
-        if dict(p.column_values).get(column) in wanted
     }
     return PartitionedTableVersion(kept)
 

@@ -66,7 +66,7 @@ from __future__ import annotations
 
 import json
 import re
-from dataclasses import dataclass, replace
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -83,8 +83,12 @@ from . import dedup as DD
 from .dedup_index import (
     _FETCH_PUSHDOWN_MAX_IDS,
     _artifact_path,
+    _check_extend_args,
     _doc_shard_col,
+    _IndexArtifacts,
     _load_artifacts,
+    _positive,
+    _rebuild_geometry,
     _require_dynamic_overwrite,
     _restrict_to_values,
     _run_maybe_exclusive,
@@ -149,8 +153,12 @@ def _cluster_shard_col(cluster_col: str, cluster_shards: int):
     ).cast("string")
 
 
+# the family name the cluster index's sidecar writes and loads report
+_CLUSTER_WHAT = "dedup cluster"
+
+
 @dataclass(frozen=True)
-class ClusterArtifacts:
+class ClusterArtifacts(_IndexArtifacts):
     """Geometry sidecar (the shared dedup-artifacts contract: named by
     data version label, every live label must agree; swept by
     :func:`~chronicles_spark.operators.dedup_index.
@@ -159,26 +167,6 @@ class ClusterArtifacts:
     doc_shards: int
     cluster_shards: int
     version_label: str
-
-    def geometry(self) -> dict:
-        d = self.__dict__.copy()
-        d.pop("version_label")
-        return d
-
-    def with_label(self, label: str) -> "ClusterArtifacts":
-        return replace(self, version_label=label)
-
-    def to_json(self) -> str:
-        return json.dumps({"version_label": self.version_label, **self.geometry()})
-
-    @staticmethod
-    def from_json(text: str) -> "ClusterArtifacts":
-        d = json.loads(text)
-        return ClusterArtifacts(
-            doc_shards=int(d["doc_shards"]),
-            cluster_shards=int(d["cluster_shards"]),
-            version_label=d["version_label"],
-        )
 
 
 def load_cluster_artifacts(
@@ -189,7 +177,8 @@ def load_cluster_artifacts(
     before any pairs exist), so the head's pair label also anchors a
     sidecar lookup when no partitions are live yet."""
     return _load_artifacts(
-        table, table_version, ClusterArtifacts.from_json, "dedup cluster",
+        table, table_version, ClusterArtifacts.from_json,
+        f"{_CLUSTER_WHAT} geometries",
         extra_labels=(head_pair_label,) if head_pair_label else (),
     )
 
@@ -316,17 +305,12 @@ def build_dedup_clusters(
     ``(doc_shard,)`` and already ``init_table``-ed; the members
     companion is initialized here."""
     _require_cluster_partitioning(table)
-    for n, v in (("doc_shards", doc_shards), ("cluster_shards", cluster_shards)):
-        if v < 1:
-            raise ValueError(f"{n} must be >= 1, got {v}")
+    geo = _positive(doc_shards=doc_shards, cluster_shards=cluster_shards)
     members_table = cluster_members_table(table)
     tracker.init_table(members_table.name, is_snapshot=False, user_id=user_id)
     version = generate_version()
-    artifacts = ClusterArtifacts(
-        doc_shards=doc_shards, cluster_shards=cluster_shards,
-        version_label=version.label,
-    )
-    _write_artifact_sidecar(table, artifacts)
+    artifacts = ClusterArtifacts(version_label=version.label, **geo)
+    _write_artifact_sidecar(table, artifacts, _CLUSTER_WHAT)
     if pairs is None:
         spark = SparkSession.getActiveSession() or SparkSession.builder.getOrCreate()
         _require_dynamic_overwrite(spark)
@@ -401,19 +385,12 @@ def rebuild_dedup_clusters(
     mstate, m_head, m_pair = pinned_state(tracker, members_table.name)
     check_pair(table, head_pair, m_pair, _CLUSTER_REPAIR_ADVICE)
     old = load_cluster_artifacts(table, state, head_pair)
-    new_geo = dict(
-        doc_shards=doc_shards if doc_shards is not None else old.doc_shards,
-        cluster_shards=(
-            cluster_shards if cluster_shards is not None
-            else old.cluster_shards
-        ),
+    new_geo = _rebuild_geometry(
+        old, doc_shards=doc_shards, cluster_shards=cluster_shards
     )
-    for n, v in new_geo.items():
-        if v < 1:
-            raise ValueError(f"{n} must be >= 1, got {v}")
     version = generate_version()
     artifacts = ClusterArtifacts(version_label=version.label, **new_geo)
-    _write_artifact_sidecar(table, artifacts)
+    _write_artifact_sidecar(table, artifacts, _CLUSTER_WHAT)
 
     assign_parts: list = []
     member_parts: list = []
@@ -506,11 +483,7 @@ def extend_dedup_clusters(
     (run ONE fold maintainer per assignment table — the journal
     watermark assumes a single consumer)."""
     _require_cluster_partitioning(table)
-    if concurrency not in ("last-writer-wins", "optimistic", "strict"):
-        raise ValueError(
-            "concurrency must be 'last-writer-wins', 'optimistic' or "
-            f"'strict', got {concurrency!r}"
-        )
+    _check_extend_args(concurrency)
     labels = _norm_labels(batch_label)
     if labels and set(labels) <= folded_batch_labels(tracker, table):
         state = tracker.current_version(table.name)
@@ -562,9 +535,10 @@ def _collect_shards_and_ids(df, id_expr, shard_expr):
 _LOCAL_CC_PAIR_CAP = 100_000
 
 # id types whose Python ordering provably equals Spark's min() ordering
-# (ints trivially; str because UTF-8 byte order == codepoint order) —
-# anything else falls back to the distributed run
-_LOCAL_CC_ID_TYPES = ("byte", "short", "integer", "long", "string")
+# (ints trivially; a UTF8_BINARY string because UTF-8 byte order ==
+# codepoint order) — anything else, a collated string included, falls
+# back to the distributed run
+_LOCAL_CC_ID_TYPES = ("byte", "short", "integer", "long")
 
 
 def _local_components(spark, edges, id_col: str, n_pairs: int):
@@ -578,10 +552,14 @@ def _local_components(spark, edges, id_col: str, n_pairs: int):
     type's ordering is not provably identical across engines."""
     if n_pairs > _LOCAL_CC_PAIR_CAP:
         return None
+    from pyspark.sql import types as T
+
     f_a, f_b = edges.schema.fields[0], edges.schema.fields[1]
-    if (
-        f_a.dataType != f_b.dataType
-        or f_a.dataType.typeName() not in _LOCAL_CC_ID_TYPES
+    if f_a.dataType != f_b.dataType or not (
+        f_a.dataType.typeName() in _LOCAL_CC_ID_TYPES
+        # exactly UTF8_BINARY: a collated StringType also names itself
+        # 'string', but its min() order is not Python's codepoint order
+        or f_a.dataType == T.StringType()
     ):
         return None
     rows = edges.collect()
@@ -615,8 +593,6 @@ def _local_components(spark, edges, id_col: str, n_pairs: int):
         if m is None or v < m:
             min_of[root] = v
     out = [(v, min_of[find(v)]) for v in parent]
-    from pyspark.sql import types as T
-
     schema = T.StructType(
         [
             T.StructField(id_col, f_a.dataType),
@@ -710,7 +686,7 @@ def _fold_batch(
             mv, m_arts = Version(head_pair), arts
         else:
             mv, m_arts = version, new_arts
-            _write_artifact_sidecar(table, m_arts)
+            _write_artifact_sidecar(table, m_arts, _CLUSTER_WHAT)
         publish_group(
             spark, tracker, mv, user_id, stamped_message,
             [(table, None, (), ()), (members_table, None, (), ())],
@@ -938,7 +914,7 @@ def _fold_batch(
     # contract) — but only for folds that actually write data: a crash
     # here leaves an orphan sidecar for vacuum, never a committed index
     # without geometry
-    _write_artifact_sidecar(table, new_arts)
+    _write_artifact_sidecar(table, new_arts, _CLUSTER_WHAT)
     writes = [
         (
             table,

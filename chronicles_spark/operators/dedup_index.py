@@ -39,11 +39,16 @@ the touched shards, all tables in ONE optimistic pair commit
 Every per-invocation cost is bounded by the batch and its candidates;
 nothing scales with corpus size.
 
-The machinery is a FAMILY-GENERIC core (:class:`_IndexFamily`): the
-text family here (MinHash shingles + exact Jaccard) and the embedding
-family (:mod:`~chronicles_spark.operators.emb_dedup_index`: sign-LSH
-bands + exact cosine) share one extend/build/verify/rebuild protocol
-and differ only in their encoder, bander, and verifier.
+The machinery is a FAMILY-GENERIC core: the text family here (MinHash
+shingles + exact Jaccard), the simhash, embedding and semantic families
+(:mod:`~chronicles_spark.operators.simhash_index`,
+:mod:`~chronicles_spark.operators.emb_dedup_index`,
+:mod:`~chronicles_spark.operators.semantic_dedup_index`) and the
+cluster index share one build/extend/verify/rebuild protocol, one
+geometry-sidecar lifecycle (:class:`_IndexArtifacts`) and one extend
+front end (:func:`_extend_family_index`).  A family supplies only its
+artifacts fields, its encoder (``df -> (id, payload)``) and its
+:class:`_IndexFamily` (bander + verifier).
 
 All text hashes are md5-hex (the in-memory operators' convention) so
 DuckDB oracles reproduce results bit-for-bit; shard routing uses
@@ -112,10 +117,11 @@ class DedupGeometryDriftWarning(UserWarning):
 
 @dataclass(frozen=True)
 class _IndexFamily:
-    """The three points where the text and embedding dedup indexes
-    differ; everything else — shard routing, structural pruning,
-    row-group pushdown, the RMW pair-commit publish, upsert/append
-    semantics, the pairs journal, rebuild — is the shared core.
+    """The points where the dedup families differ; everything else —
+    shard routing, structural pruning, row-group pushdown, the RMW
+    pair-commit publish, upsert/append semantics, the pairs journal,
+    rebuild, the torn-pair advice (:func:`_repair_advice`) — is the
+    shared core.
 
     ``band_fn(payload_df) -> (id, band_id, band_key)`` must be
     DETERMINISTIC across invocations (extends must reproduce the
@@ -129,13 +135,19 @@ class _IndexFamily:
     payload_col: str
     band_fn: "object"
     verify_fn: "object"
-    repair_advice: str
 
 
-_TEXT_REPAIR_ADVICE = (
-    "rebuild with build_dedup_index over the full corpus (or checkout "
-    "both tables to a matching pair) before extending"
-)
+def _family_name(kind: str) -> str:
+    """A family's name in messages (``simhash_dedup`` -> ``simhash dedup``)."""
+    return kind.replace("_", " ")
+
+
+def _repair_advice(kind: str) -> str:
+    """Torn-pair advice naming the family's own build."""
+    return (
+        f"rebuild with build_{kind}_index over the full corpus (or "
+        "checkout both tables to a matching pair) before extending"
+    )
 
 
 def _text_family(artifacts: "DedupArtifacts", id_col: str, threshold: float):
@@ -148,7 +160,6 @@ def _text_family(artifacts: "DedupArtifacts", id_col: str, threshold: float):
         verify_fn=lambda payload, cand: DD.jaccard_verify(
             payload, cand, id_col, threshold
         ),
-        repair_advice=_TEXT_REPAIR_ADVICE,
     )
 
 
@@ -213,13 +224,55 @@ def _doc_shard_col(id_col: str, doc_shards: int):
 # geometry sidecars
 
 
+class _IndexArtifacts:
+    """Sidecar serialization shared by the dedup families' and the
+    cluster index's frozen-dataclass artifacts: every field but
+    ``version_label`` is geometry, so ALL of it rides the sidecar (named
+    by data version label, the AnnArtifacts convention) and the
+    loader's agreement check.  ``from_json`` is driven by the dataclass
+    fields: ``int`` fields are cast, the rest are taken as stored."""
+
+    def geometry(self) -> dict:
+        d = self.__dict__.copy()
+        d.pop("version_label")
+        return d
+
+    def with_label(self, label: str):
+        return replace(self, version_label=label)
+
+    def to_json(self) -> str:
+        return json.dumps({"version_label": self.version_label, **self.geometry()})
+
+    @classmethod
+    def from_json(cls, text: str):
+        d = json.loads(text)
+        return cls(**{
+            f.name: int(d[f.name]) if f.type == "int" else d[f.name]
+            for f in cls.__dataclass_fields__.values()
+        })
+
+
+def _positive(**geo) -> dict:
+    """Every geometry value must be >= 1; returns ``geo``."""
+    for n, v in geo.items():
+        if v < 1:
+            raise ValueError(f"{n} must be >= 1, got {v}")
+    return geo
+
+
+def _rebuild_geometry(old, **new) -> dict:
+    """A rebuild's geometry: each given value replaces the old sidecar's,
+    ``None`` keeps it."""
+    return _positive(
+        **{n: getattr(old, n) if v is None else v for n, v in new.items()}
+    )
+
+
 @dataclass(frozen=True)
-class DedupArtifacts:
+class DedupArtifacts(_IndexArtifacts):
     """The geometry a dedup index version pins: every field changes what
-    band keys / shard routes mean, so ALL of it rides the sidecar
-    (named by data version label, the AnnArtifacts convention) and the
-    loader's agreement check — extending under different geometry would
-    silently miss duplicates."""
+    band keys / shard routes mean — extending under different geometry
+    would silently miss duplicates."""
 
     bands: int
     rows: int
@@ -228,33 +281,12 @@ class DedupArtifacts:
     doc_shards: int
     version_label: str
 
-    def geometry(self) -> dict:
-        d = self.__dict__.copy()
-        d.pop("version_label")
-        return d
 
-    def with_label(self, label: str) -> "DedupArtifacts":
-        return replace(self, version_label=label)
-
-    def to_json(self) -> str:
-        return json.dumps({"version_label": self.version_label, **self.geometry()})
-
-    @staticmethod
-    def from_json(text: str) -> "DedupArtifacts":
-        d = json.loads(text)
-        return DedupArtifacts(
-            bands=int(d["bands"]),
-            rows=int(d["rows"]),
-            width=int(d["width"]),
-            band_shards=int(d["band_shards"]),
-            doc_shards=int(d["doc_shards"]),
-            version_label=d["version_label"],
-        )
-
-
-def _artifact_path(table: TableDefinition, label: str):
+def _artifact_path(
+    table: TableDefinition, label: str, prefix: str = ARTIFACT_PREFIX
+):
     fs, root = filesystem_for(table.location)
-    return fs, fs.join(root, ARTIFACT_PREFIX + label + ".json")
+    return fs, fs.join(root, prefix + label + ".json")
 
 
 # the geometry sidecar is a small JSON document re-read on EVERY
@@ -282,15 +314,19 @@ def _check_artifact_size(payload: str, table, what: str) -> None:
         )
 
 
-def _write_artifact_sidecar(table, stamped) -> None:
+def _write_artifact_sidecar(
+    table, stamped, what: str = "index", prefix: str = ARTIFACT_PREFIX
+) -> None:
     """Sidecar BEFORE the data commit (the ANN build's crash-ordering
     contract): a crash leaves an orphan sidecar (reclaimed by
-    :func:`vacuum_dedup_artifacts`), never a committed index whose
-    geometry is missing.  Quantizer-scale bulk fields externalize to a
-    content-addressed parquet payload (``operators/artifact_payload``,
-    landed before the sidecar referencing it — the crash ordering
-    extends one link); whatever stays inline is bounded by
-    ``ARTIFACT_JSON_MAX_BYTES`` (see :func:`_check_artifact_size`)."""
+    :func:`vacuum_dedup_artifacts` / ``vacuum_ann_artifacts``), never a
+    committed index whose geometry is missing.  Quantizer-scale bulk
+    fields externalize to a content-addressed parquet payload
+    (``operators/artifact_payload``, landed before the sidecar
+    referencing it — the crash ordering extends one link); whatever
+    stays inline is bounded by ``ARTIFACT_JSON_MAX_BYTES`` (see
+    :func:`_check_artifact_size`, whose refusal names the caller's
+    family ``what``)."""
     from .artifact_payload import externalize_doc
 
     fs, root = filesystem_for(table.location)
@@ -298,25 +334,30 @@ def _write_artifact_sidecar(table, stamped) -> None:
     orig = json.loads(text)
     doc = externalize_doc(fs, root, orig)
     payload = text if doc is orig else json.dumps(doc)
-    _check_artifact_size(payload, table, getattr(stamped, "kind", "index"))
-    _, apath = _artifact_path(table, stamped.version_label)
+    _check_artifact_size(payload, table, what)
+    _, apath = _artifact_path(table, stamped.version_label, prefix)
     fs.mkdirs(root)
     fs.write_text(apath, payload)
 
 
 def _load_artifacts(
     table: TableDefinition, table_version, from_json, what: str,
-    extra_labels=(),
+    extra_labels=(), prefix: str = ARTIFACT_PREFIX,
 ):
     """Geometry pinned by a resolved table state: every distinct live
-    label's sidecar must AGREE (extends re-stamp the same geometry
-    under their new label — the load_ann_artifacts contract).  Returns
-    the geometry stamped with the NEWEST label.  ``extra_labels`` joins
-    the check for families whose index may legitimately be EMPTY (the
-    cluster index anchors the head's pair label so a partition-less
-    state still resolves its sidecar)."""
+    label's sidecar must AGREE on ``geometry()`` (extends re-stamp the
+    same geometry under their new label).  Returns the NEWEST label's
+    sidecar — for the dedup families that equals the first one
+    re-stamped, for ANN it also carries the newest evolving split tree.
+    ``what`` names the disagreeing geometry in the refusal.
+    ``extra_labels`` joins the check for families whose index may
+    legitimately be EMPTY (the cluster index anchors the head's pair
+    label so a partition-less state still resolves its sidecar)."""
     if not isinstance(table_version, PartitionedTableVersion):
-        raise ValueError(f"{what} index tables are partitioned by shard")
+        raise ValueError(
+            f"index table {table.name} must resolve to a state partitioned "
+            f"by {', '.join(table.partition_schema.columns)}"
+        )
     labels = sorted(
         {v.label for v in table_version.partition_versions.values()}
         | set(extra_labels)
@@ -328,7 +369,7 @@ def _load_artifacts(
     pfs, proot = filesystem_for(table.location)
     loaded = []
     for label in labels:
-        fs, apath = _artifact_path(table, label)
+        fs, apath = _artifact_path(table, label, prefix)
         if not fs.exists(apath):
             raise ValueError(
                 f"no artifact sidecar for live index version {label} at {apath}"
@@ -339,16 +380,18 @@ def _load_artifacts(
         if other.geometry() != first.geometry():
             raise ValueError(
                 f"table {table.name} has live partitions written under "
-                f"DIFFERENT {what} geometries (labels {labels}) — rebuild "
-                "the index"
+                f"DIFFERENT {what} (labels {labels}) — pass artifacts= "
+                "explicitly or rebuild the index"
             )
-    return first.with_label(labels[-1])
+    return replace(loaded[-1], version_label=labels[-1])
 
 
 def load_dedup_artifacts(
     table: TableDefinition, table_version
 ) -> DedupArtifacts:
-    return _load_artifacts(table, table_version, DedupArtifacts.from_json, "dedup")
+    return _load_artifacts(
+        table, table_version, DedupArtifacts.from_json, "dedup geometries"
+    )
 
 
 def _shingle_batch(df, id_col, text_col, width):
@@ -423,15 +466,10 @@ def build_dedup_index(
     this function only materializes the state that makes every LATER
     batch O(batch)."""
     _require_band_partitioning(table, "dedup")
-    for n, v in (("bands", bands), ("rows", rows), ("width", width),
-                 ("band_shards", band_shards), ("doc_shards", doc_shards)):
-        if v < 1:
-            raise ValueError(f"{n} must be >= 1, got {v}")
+    geo = _positive(bands=bands, rows=rows, width=width,
+                    band_shards=band_shards, doc_shards=doc_shards)
     version = generate_version()
-    artifacts = DedupArtifacts(
-        bands=bands, rows=rows, width=width, band_shards=band_shards,
-        doc_shards=doc_shards, version_label=version.label,
-    )
+    artifacts = DedupArtifacts(version_label=version.label, **geo)
     family = _text_family(artifacts, id_col, threshold=None)
     encoded = _shingle_batch(df, id_col, text_col, width)
     return _build_index(
@@ -454,7 +492,7 @@ def _build_index(
     _require_dynamic_overwrite(spark)
     docs_table = dedup_docs_table(table)
     tracker.init_table(docs_table.name, is_snapshot=False, user_id=user_id)
-    _write_artifact_sidecar(table, artifacts)
+    _write_artifact_sidecar(table, artifacts, _family_name(family.kind))
     # one pass over the raw source → the doc store (payload evaluated
     # ONCE, into parquet — never a corpus-scale persist)
     docs_df = (
@@ -575,7 +613,18 @@ def extend_dedup_index(
     a ``use_lock=True`` tracker holds the primary table's flock across
     the whole read-modify-write (the ANN family's contract — see
     :func:`~chronicles_spark.operators.ann_index.extend_ann_index`)."""
-    _require_band_partitioning(table, "dedup")
+    return _extend_family_index(
+        "dedup", load_dedup_artifacts,
+        lambda df, arts: _shingle_batch(df, id_col, text_col, arts.width),
+        lambda arts: _text_family(arts, id_col, threshold),
+        df_new, table, tracker, user_id, message, mode, concurrency,
+        artifacts, id_col, metastore, pairs_table, exclusive,
+        drift_shard_rows,
+    )
+
+
+def _check_extend_args(concurrency: str, mode: str = "upsert") -> None:
+    """The argument checks every index extend/fold makes up front."""
     if mode not in ("upsert", "append"):
         raise ValueError(f"mode must be 'upsert' or 'append', got {mode!r}")
     if concurrency not in ("last-writer-wins", "optimistic", "strict"):
@@ -584,26 +633,42 @@ def extend_dedup_index(
             f"'strict', got {concurrency!r}"
         )
 
+
+def _extend_family_index(
+    kind, load_artifacts, encode, make_family,
+    df_new, table, tracker, user_id, message, mode, concurrency,
+    artifacts, id_col, metastore, pairs_table, exclusive,
+    drift_shard_rows,
+):
+    """The dedup families' shared extend front end.  The family passes
+    its ``kind``, its loader ``load_artifacts(table, state)``, its
+    encoder ``encode(df_new, artifacts) -> (id, payload)`` and its
+    family builder ``make_family(artifacts)``; the rest of the
+    arguments are the public extend's.  Checks the arguments, then —
+    under the primary's flock when ``exclusive`` — pins both lines,
+    refuses a torn pair, resolves the geometry, and runs
+    :func:`_extend_index` over the persisted encoded batch."""
+    _require_band_partitioning(table, _family_name(kind))
+    _check_extend_args(concurrency, mode)
+
     def _run():
         docs_table = dedup_docs_table(table)
         state, base_head, head_pair = pinned_state(tracker, table.name)
         docs_state, docs_head, docs_pair = pinned_state(
             tracker, docs_table.name
         )
-        check_pair(table, head_pair, docs_pair, _TEXT_REPAIR_ADVICE)
+        check_pair(table, head_pair, docs_pair, _repair_advice(kind))
         if not isinstance(state, PartitionedTableVersion) or not isinstance(
             docs_state, PartitionedTableVersion
         ):
             raise ValueError("dedup index tables are partitioned by shard")
         arts = artifacts
         if arts is None:
-            arts = load_dedup_artifacts(table, state)
-        family = _text_family(arts, id_col, threshold)
+            arts = load_artifacts(table, state)
+        family = make_family(arts)
         # bounded (one batch) payload base — consumed by the band
         # encode, the verify union, and the doc-store write
-        base_new = _shingle_batch(
-            df_new, id_col, text_col, arts.width
-        ).persist()
+        base_new = encode(df_new, arts).persist()
         try:
             return _extend_index(
                 table, docs_table, tracker, family, state, docs_state,
@@ -1090,7 +1155,7 @@ def _extend_publish(
 
     version = generate_version()
     stamped = artifacts.with_label(version.label)
-    _write_artifact_sidecar(table, stamped)
+    _write_artifact_sidecar(table, stamped, _family_name(family.kind))
     expected = None
     if concurrency != "last-writer-wins":
         expected = {table.name: base_head, docs_table.name: docs_head}
@@ -1217,18 +1282,14 @@ def rebuild_dedup_index(
     _require_band_partitioning(table, "dedup")
     state, _, _ = pinned_state(tracker, table.name)
     old = load_dedup_artifacts(table, state)
-    new_geo = dict(
-        bands=bands if bands is not None else old.bands,
-        rows=rows if rows is not None else old.rows,
-        width=old.width,
-        band_shards=band_shards if band_shards is not None else old.band_shards,
-        doc_shards=doc_shards if doc_shards is not None else old.doc_shards,
+    new_geo = _rebuild_geometry(
+        old, bands=bands, rows=rows, band_shards=band_shards,
+        doc_shards=doc_shards,
     )
-    for n, v in new_geo.items():
-        if v < 1:
-            raise ValueError(f"{n} must be >= 1, got {v}")
     version = generate_version()
-    artifacts = DedupArtifacts(version_label=version.label, **new_geo)
+    artifacts = DedupArtifacts(
+        version_label=version.label, width=old.width, **new_geo
+    )
     family = _text_family(artifacts, id_col, threshold=None)
     return _rebuild_index(
         spark, table, tracker, family, artifacts, version,
@@ -1251,8 +1312,8 @@ def _rebuild_index(
     docs_table = dedup_docs_table(table)
     state, base_head, head_pair = pinned_state(tracker, table.name)
     docs_state, docs_head, docs_pair = pinned_state(tracker, docs_table.name)
-    check_pair(table, head_pair, docs_pair, family.repair_advice)
-    _write_artifact_sidecar(table, artifacts)
+    check_pair(table, head_pair, docs_pair, _repair_advice(family.kind))
+    _write_artifact_sidecar(table, artifacts, _family_name(family.kind))
 
     encoded = read_version(
         spark, docs_table, docs_state, infer_partition_types=False
@@ -1393,8 +1454,10 @@ def _commit_index_stream_batch(
     batch_df, epoch_id, table, tracker, extend_fn,
     message_prefix, epoch_cache, on_pairs,
 ) -> None:
-    """Family-generic ``foreachBatch`` body: epoch-replay guard →
-    O(batch) extend → optional pairs callback.  Same epoch-replay
+    """Family-generic ``foreachBatch`` body (every dedup family and the
+    ANN index): epoch-replay guard → O(batch) extend → optional
+    callback on the extend's first result (the verified pairs; the
+    ANN index passes none).  Same epoch-replay
     contract as the other versioned sinks
     (:mod:`chronicles_spark.streaming.ingest`): an epoch EQUAL to the
     latest committed one is a crash-replay and is skipped; an epoch
@@ -1410,7 +1473,7 @@ def _commit_index_stream_batch(
     ):
         return  # checkpoint replay of the just-committed epoch
     try:
-        pairs, _, _ = extend_fn(batch_df, message)
+        result = extend_fn(batch_df, message)
         if epoch_cache is not None:
             epoch_cache["latest_epoch"] = epoch_id
     except BaseException:
@@ -1419,7 +1482,7 @@ def _commit_index_stream_batch(
             epoch_cache.pop("latest_epoch", None)
         raise
     if on_pairs is not None:
-        on_pairs(pairs, epoch_id)
+        on_pairs(result[0], epoch_id)
 
 
 def commit_dedup_stream_batch(

@@ -19,13 +19,16 @@ instance of that family-generic core:
 * the optional **pairs table** journals each extend's verified
   ``(id_a, id_b, cosine)`` pairs exactly-once in the same pair commit.
 
-Everything structural — shard pruning, band-key row-group pushdown,
+Everything structural — sidecar serialization and agreement, the
+extend front end, shard pruning, band-key row-group pushdown,
 upsert/append semantics, the RMW pair-commit publish, torn-pair
 refusal, re-geometry rebuild, streaming maintenance, sidecar GC — is
 the shared core in :mod:`~chronicles_spark.operators.dedup_index`; this
-module contributes only the encoder (identity over the vector column),
-the bander (sign-LSH), the verifier (exact cosine), and the geometry
-sidecar (``dim``/``n_planes`` in place of ``width``/``rows``).
+module supplies only its artifacts fields
+(:class:`EmbeddingDedupArtifacts`: ``dim``/``n_planes`` in place of
+``width``/``rows``), its encoder (identity over the vector column,
+after a dim check), and its ``_IndexFamily`` (the sign-LSH bander and
+the exact-cosine verifier).
 
 A replaced id's old vector re-derives its old band rows from the doc
 store (sign bits are a pure function of the stored vector), so upserts
@@ -41,12 +44,11 @@ protocol with its LLM-pipeline operators.
 
 from __future__ import annotations
 
-import json
-from dataclasses import dataclass, replace
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..core.model import PartitionedTableVersion, TableDefinition
+from ..core.model import TableDefinition
 from ..core.version import generate_version
 from ..trackers.base import VersionTracker
 from . import dedup as DD
@@ -54,25 +56,23 @@ from .dedup_index import (
     DRIFT_MAX_BAND_SHARD_ROWS,
     _build_index,
     _commit_index_stream_batch,
-    _extend_index,
+    _extend_family_index,
+    _IndexArtifacts,
     _IndexFamily,
     _load_artifacts,
+    _positive,
+    _rebuild_geometry,
     _rebuild_index,
     _require_band_partitioning,
     _verify_index,
     dedup_docs_table,
     dedup_pairs_table,
 )
-from .pairing import check_pair, pinned_state
-
-_EMB_REPAIR_ADVICE = (
-    "rebuild with build_embedding_dedup_index over the full corpus (or "
-    "checkout both tables to a matching pair) before extending"
-)
+from .pairing import pinned_state
 
 
 @dataclass(frozen=True)
-class EmbeddingDedupArtifacts:
+class EmbeddingDedupArtifacts(_IndexArtifacts):
     """The geometry an embedding dedup index version pins (the
     :class:`~chronicles_spark.operators.dedup_index.DedupArtifacts`
     contract: sidecar per data version label, all live labels must
@@ -86,36 +86,13 @@ class EmbeddingDedupArtifacts:
     doc_shards: int
     version_label: str
 
-    def geometry(self) -> dict:
-        d = self.__dict__.copy()
-        d.pop("version_label")
-        return d
-
-    def with_label(self, label: str) -> "EmbeddingDedupArtifacts":
-        return replace(self, version_label=label)
-
-    def to_json(self) -> str:
-        return json.dumps({"version_label": self.version_label, **self.geometry()})
-
-    @staticmethod
-    def from_json(text: str) -> "EmbeddingDedupArtifacts":
-        d = json.loads(text)
-        return EmbeddingDedupArtifacts(
-            n_planes=int(d["n_planes"]),
-            bands=int(d["bands"]),
-            dim=int(d["dim"]),
-            band_shards=int(d["band_shards"]),
-            doc_shards=int(d["doc_shards"]),
-            version_label=d["version_label"],
-        )
-
 
 def load_embedding_dedup_artifacts(
     table: TableDefinition, table_version
 ) -> EmbeddingDedupArtifacts:
     return _load_artifacts(
         table, table_version, EmbeddingDedupArtifacts.from_json,
-        "embedding dedup",
+        "embedding dedup geometries",
     )
 
 
@@ -133,7 +110,6 @@ def _emb_family(
         verify_fn=lambda payload, cand: DD.cosine_verify(
             payload, cand, id_col, vec_col, threshold
         ),
-        repair_advice=_EMB_REPAIR_ADVICE,
     )
 
 
@@ -147,6 +123,13 @@ def _check_dim(df, vec_col: str, dim: int) -> None:
             f"dim={dim} does not match the embedding dimension "
             f"{row[0]['d']} observed in {vec_col!r}"
         )
+
+
+def _vec_encode(df: DataFrame, id_col: str, vec_col: str, dim: int):
+    """The vector families' encoder: the dim check, then the identity
+    ``(id, vector)`` projection."""
+    _check_dim(df, vec_col, dim)
+    return df.select(F.col(id_col), F.col(vec_col))
 
 
 def build_embedding_dedup_index(
@@ -174,22 +157,16 @@ def build_embedding_dedup_index(
     the base corpus is :func:`embedding_lsh_dedup`'s job (same
     hyperplanes, so build-then-extend agrees with it exactly)."""
     _require_band_partitioning(table, "embedding dedup")
-    for n, v in (("n_planes", n_planes), ("bands", bands), ("dim", dim),
-                 ("band_shards", band_shards), ("doc_shards", doc_shards)):
-        if v < 1:
-            raise ValueError(f"{n} must be >= 1, got {v}")
+    geo = _positive(n_planes=n_planes, bands=bands, dim=dim,
+                    band_shards=band_shards, doc_shards=doc_shards)
     if n_planes % bands:
         raise ValueError(
             f"bands={bands} must divide n_planes={n_planes} evenly"
         )
-    _check_dim(df, vec_col, dim)
+    encoded = _vec_encode(df, id_col, vec_col, dim)
     version = generate_version()
-    artifacts = EmbeddingDedupArtifacts(
-        n_planes=n_planes, bands=bands, dim=dim, band_shards=band_shards,
-        doc_shards=doc_shards, version_label=version.label,
-    )
+    artifacts = EmbeddingDedupArtifacts(version_label=version.label, **geo)
     family = _emb_family(artifacts, id_col, vec_col, threshold=None)
-    encoded = df.select(F.col(id_col), F.col(vec_col))
     return _build_index(
         encoded, table, tracker, family, artifacts, version,
         user_id, message, id_col, metastore,
@@ -224,45 +201,14 @@ def extend_embedding_dedup_index(
     are the text family's (:func:`~chronicles_spark.operators.
     dedup_index.extend_dedup_index`) — one shared core, different
     encoder/verifier."""
-    from .dedup_index import _run_maybe_exclusive
-
-    _require_band_partitioning(table, "embedding dedup")
-    if mode not in ("upsert", "append"):
-        raise ValueError(f"mode must be 'upsert' or 'append', got {mode!r}")
-    if concurrency not in ("last-writer-wins", "optimistic", "strict"):
-        raise ValueError(
-            "concurrency must be 'last-writer-wins', 'optimistic' or "
-            f"'strict', got {concurrency!r}"
-        )
-
-    def _run():
-        docs_table = dedup_docs_table(table)
-        state, base_head, head_pair = pinned_state(tracker, table.name)
-        docs_state, docs_head, docs_pair = pinned_state(
-            tracker, docs_table.name
-        )
-        check_pair(table, head_pair, docs_pair, _EMB_REPAIR_ADVICE)
-        if not isinstance(state, PartitionedTableVersion) or not isinstance(
-            docs_state, PartitionedTableVersion
-        ):
-            raise ValueError("dedup index tables are partitioned by shard")
-        arts = artifacts
-        if arts is None:
-            arts = load_embedding_dedup_artifacts(table, state)
-        _check_dim(df_new, vec_col, arts.dim)
-        family = _emb_family(arts, id_col, vec_col, threshold)
-        base_new = df_new.select(F.col(id_col), F.col(vec_col)).persist()
-        try:
-            return _extend_index(
-                table, docs_table, tracker, family, state, docs_state,
-                base_head, docs_head, head_pair, base_new, arts, mode,
-                concurrency, user_id, message, id_col, metastore,
-                pairs_table, drift_shard_rows,
-            )
-        finally:
-            base_new.unpersist()
-
-    return _run_maybe_exclusive(tracker, table, exclusive, _run)
+    return _extend_family_index(
+        "embedding_dedup", load_embedding_dedup_artifacts,
+        lambda df, arts: _vec_encode(df, id_col, vec_col, arts.dim),
+        lambda arts: _emb_family(arts, id_col, vec_col, threshold),
+        df_new, table, tracker, user_id, message, mode, concurrency,
+        artifacts, id_col, metastore, pairs_table, exclusive,
+        drift_shard_rows,
+    )
 
 
 def verify_embedding_dedup_index(
@@ -304,23 +250,19 @@ def rebuild_embedding_dedup_index(
     _require_band_partitioning(table, "embedding dedup")
     state, _, _ = pinned_state(tracker, table.name)
     old = load_embedding_dedup_artifacts(table, state)
-    new_geo = dict(
-        n_planes=n_planes if n_planes is not None else old.n_planes,
-        bands=bands if bands is not None else old.bands,
-        dim=old.dim,
-        band_shards=band_shards if band_shards is not None else old.band_shards,
-        doc_shards=doc_shards if doc_shards is not None else old.doc_shards,
+    new_geo = _rebuild_geometry(
+        old, n_planes=n_planes, bands=bands, band_shards=band_shards,
+        doc_shards=doc_shards,
     )
-    for n, v in new_geo.items():
-        if v < 1:
-            raise ValueError(f"{n} must be >= 1, got {v}")
     if new_geo["n_planes"] % new_geo["bands"]:
         raise ValueError(
             f"bands={new_geo['bands']} must divide "
             f"n_planes={new_geo['n_planes']} evenly"
         )
     version = generate_version()
-    artifacts = EmbeddingDedupArtifacts(version_label=version.label, **new_geo)
+    artifacts = EmbeddingDedupArtifacts(
+        version_label=version.label, dim=old.dim, **new_geo
+    )
     family = _emb_family(artifacts, id_col, vec_col, threshold=None)
     return _rebuild_index(
         spark, table, tracker, family, artifacts, version,

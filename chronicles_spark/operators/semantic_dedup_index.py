@@ -11,7 +11,10 @@ learned centroids in the index's geometry sidecar — exactly how the ANN
 index pins its quantizer — and the k-means assignment becomes a
 deterministic bander over the stored payload, which is all the
 family-generic core (:mod:`~chronicles_spark.operators.dedup_index`)
-needs.  The FOURTH family instance:
+needs.  The FOURTH family instance, supplying only its artifacts
+fields (:class:`SemanticDedupArtifacts`: the pinned centroids plus
+``n_clusters``/``dim`` and the shard counts), its encoder, and its
+``_IndexFamily`` (bander + verifier):
 
 * **encoder**: identity over ``(vec_id, embedding)`` — the doc store
   keeps raw vectors (exact-cosine verify needs them; PQ codes live in
@@ -24,8 +27,9 @@ needs.  The FOURTH family instance:
 Extends therefore read only the batch's clusters' band shards and the
 candidates' vector shards; a re-submitted id re-derives its old cluster
 from the stored vector (no corpus scan) — every structural guarantee
-(shard pruning, row-group pushdown, RMW pair commits, torn-pair
-refusal, exactly-once pairs journal, streaming epoch guard, sidecar GC,
+(sidecar serialization and agreement, the extend front end, shard
+pruning, row-group pushdown, RMW pair commits, torn-pair refusal,
+exactly-once pairs journal, streaming epoch guard, sidecar GC,
 ``exclusive`` flock) is inherited.
 
 Centroid lifecycle: ``n_clusters``/``dim``/``centroids`` are IMMUTABLE
@@ -52,11 +56,11 @@ No reference counterpart: stettix/chronicles versions tables
 from __future__ import annotations
 
 import json
-from dataclasses import dataclass, replace
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..core.model import PartitionedTableVersion, TableDefinition
+from ..core.model import TableDefinition
 from ..core.version import generate_version
 from ..trackers.base import VersionTracker
 from . import dedup as DD
@@ -64,22 +68,19 @@ from .dedup_index import (
     DRIFT_MAX_BAND_SHARD_ROWS,
     _build_index,
     _commit_index_stream_batch,
-    _extend_index,
+    _extend_family_index,
+    _IndexArtifacts,
     _IndexFamily,
     _load_artifacts,
+    _positive,
+    _rebuild_geometry,
     _rebuild_index,
     _require_band_partitioning,
-    _run_maybe_exclusive,
     _verify_index,
     dedup_docs_table,
 )
-from .emb_dedup_index import _check_dim
-from .pairing import check_pair, pinned_state
-
-_SEM_REPAIR_ADVICE = (
-    "rebuild with build_semantic_dedup_index over the full corpus (or "
-    "checkout both tables to a matching pair) before extending"
-)
+from .emb_dedup_index import _vec_encode
+from .pairing import pinned_state
 
 
 def _norm_centroids(centroids) -> list:
@@ -92,7 +93,7 @@ def _norm_centroids(centroids) -> list:
 
 
 @dataclass(frozen=True)
-class SemanticDedupArtifacts:
+class SemanticDedupArtifacts(_IndexArtifacts):
     """Geometry sidecar (the shared contract): the pinned CENTROIDS are
     part of the geometry — they define what band keys mean, exactly as
     ``width`` defines shingles — so extending under different centroids
@@ -105,29 +106,6 @@ class SemanticDedupArtifacts:
     centroids: "list"  # [[cid, [floats...]], ...] — JSON-normalized
     version_label: str
 
-    def geometry(self) -> dict:
-        d = self.__dict__.copy()
-        d.pop("version_label")
-        return d
-
-    def with_label(self, label: str) -> "SemanticDedupArtifacts":
-        return replace(self, version_label=label)
-
-    def to_json(self) -> str:
-        return json.dumps({"version_label": self.version_label, **self.geometry()})
-
-    @staticmethod
-    def from_json(text: str) -> "SemanticDedupArtifacts":
-        d = json.loads(text)
-        return SemanticDedupArtifacts(
-            n_clusters=int(d["n_clusters"]),
-            dim=int(d["dim"]),
-            band_shards=int(d["band_shards"]),
-            doc_shards=int(d["doc_shards"]),
-            centroids=d["centroids"],
-            version_label=d["version_label"],
-        )
-
     def centroid_list(self) -> list:
         """The ``[(cid, vec), ...]`` shape the similarity helpers take."""
         return [(int(cid), list(vec)) for cid, vec in self.centroids]
@@ -138,7 +116,7 @@ def load_semantic_dedup_artifacts(
 ) -> SemanticDedupArtifacts:
     return _load_artifacts(
         table, table_version, SemanticDedupArtifacts.from_json,
-        "semantic dedup",
+        "semantic dedup geometries",
     )
 
 
@@ -167,7 +145,6 @@ def _sem_family(
         verify_fn=lambda payload, cand: DD.cosine_verify(
             payload, cand, id_col, vec_col, threshold
         ),
-        repair_advice=_SEM_REPAIR_ADVICE,
     )
 
 
@@ -199,11 +176,9 @@ def build_semantic_dedup_index(
     from .similarity import kmeans_fit
 
     _require_band_partitioning(table, "semantic dedup")
-    for n, v in (("n_clusters", n_clusters), ("dim", dim),
-                 ("band_shards", band_shards), ("doc_shards", doc_shards)):
-        if v < 1:
-            raise ValueError(f"{n} must be >= 1, got {v}")
-    _check_dim(df, vec_col, dim)
+    _positive(n_clusters=n_clusters, dim=dim, band_shards=band_shards,
+              doc_shards=doc_shards)
+    encoded = _vec_encode(df, id_col, vec_col, dim)
     if centroids is None:
         centroids = kmeans_fit(
             df, n_clusters, iters, id_col, vec_col,
@@ -224,7 +199,6 @@ def build_semantic_dedup_index(
         version_label=version.label,
     )
     family = _sem_family(artifacts, id_col, vec_col, threshold=None)
-    encoded = df.select(F.col(id_col), F.col(vec_col))
     return _build_index(
         encoded, table, tracker, family, artifacts, version,
         user_id, message, id_col, metastore,
@@ -257,43 +231,14 @@ def extend_semantic_dedup_index(
     under the pinned centroids would add for these vectors.  All other
     contracts (upsert/append, pairs journal, concurrency, drift
     warning, ``exclusive``) are the shared core's."""
-    _require_band_partitioning(table, "semantic dedup")
-    if mode not in ("upsert", "append"):
-        raise ValueError(f"mode must be 'upsert' or 'append', got {mode!r}")
-    if concurrency not in ("last-writer-wins", "optimistic", "strict"):
-        raise ValueError(
-            "concurrency must be 'last-writer-wins', 'optimistic' or "
-            f"'strict', got {concurrency!r}"
-        )
-
-    def _run():
-        docs_table = dedup_docs_table(table)
-        state, base_head, head_pair = pinned_state(tracker, table.name)
-        docs_state, docs_head, docs_pair = pinned_state(
-            tracker, docs_table.name
-        )
-        check_pair(table, head_pair, docs_pair, _SEM_REPAIR_ADVICE)
-        if not isinstance(state, PartitionedTableVersion) or not isinstance(
-            docs_state, PartitionedTableVersion
-        ):
-            raise ValueError("dedup index tables are partitioned by shard")
-        arts = artifacts
-        if arts is None:
-            arts = load_semantic_dedup_artifacts(table, state)
-        _check_dim(df_new, vec_col, arts.dim)
-        family = _sem_family(arts, id_col, vec_col, threshold)
-        base_new = df_new.select(F.col(id_col), F.col(vec_col)).persist()
-        try:
-            return _extend_index(
-                table, docs_table, tracker, family, state, docs_state,
-                base_head, docs_head, head_pair, base_new, arts, mode,
-                concurrency, user_id, message, id_col, metastore,
-                pairs_table, drift_shard_rows,
-            )
-        finally:
-            base_new.unpersist()
-
-    return _run_maybe_exclusive(tracker, table, exclusive, _run)
+    return _extend_family_index(
+        "semantic_dedup", load_semantic_dedup_artifacts,
+        lambda df, arts: _vec_encode(df, id_col, vec_col, arts.dim),
+        lambda arts: _sem_family(arts, id_col, vec_col, threshold),
+        df_new, table, tracker, user_id, message, mode, concurrency,
+        artifacts, id_col, metastore, pairs_table, exclusive,
+        drift_shard_rows,
+    )
 
 
 def verify_semantic_dedup_index(
@@ -332,13 +277,9 @@ def rebuild_semantic_dedup_index(
     _require_band_partitioning(table, "semantic dedup")
     state, _, _ = pinned_state(tracker, table.name)
     old = load_semantic_dedup_artifacts(table, state)
-    new_geo = dict(
-        band_shards=band_shards if band_shards is not None else old.band_shards,
-        doc_shards=doc_shards if doc_shards is not None else old.doc_shards,
+    new_geo = _rebuild_geometry(
+        old, band_shards=band_shards, doc_shards=doc_shards
     )
-    for n, v in new_geo.items():
-        if v < 1:
-            raise ValueError(f"{n} must be >= 1, got {v}")
     version = generate_version()
     artifacts = SemanticDedupArtifacts(
         n_clusters=old.n_clusters, dim=old.dim, centroids=old.centroids,

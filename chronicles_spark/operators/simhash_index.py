@@ -1,11 +1,14 @@
 """Incremental SIMHASH dedup: the banded-fingerprint state materialized
 on the versioned lake — the third instance of the family-generic dedup
 index core (:mod:`~chronicles_spark.operators.dedup_index`), and the
-existence proof that a new similarity family costs ONLY its encoder,
-bander, and verifier (everything structural — shard routing, band-key
-row-group pushdown, upsert/append, the RMW pair-commit publish,
-torn-pair refusal, the exactly-once pairs journal, re-geometry rebuild,
-streaming epoch guard, sidecar GC — is inherited):
+existence proof that a new similarity family supplies ONLY its
+artifacts fields (:class:`SimhashDedupArtifacts`: ``bits``/``bands``
+plus the shard counts), its encoder, and its ``_IndexFamily`` (bander
+and verifier).  Everything structural — sidecar serialization and
+agreement, the extend front end, shard routing, band-key row-group
+pushdown, upsert/append, the RMW pair-commit publish, torn-pair
+refusal, the exactly-once pairs journal, re-geometry rebuild,
+streaming epoch guard, sidecar GC — is inherited:
 
 * **encoder**: :func:`~chronicles_spark.operators.dedup.simhash_expr`
   — one map-side pass folds each doc to a ``bits``-wide fingerprint
@@ -32,12 +35,11 @@ No reference counterpart (stettix/chronicles versions tables only).
 
 from __future__ import annotations
 
-import json
-from dataclasses import dataclass, replace
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..core.model import PartitionedTableVersion, TableDefinition
+from ..core.model import TableDefinition
 from ..core.version import generate_version
 from ..trackers.base import VersionTracker
 from . import dedup as DD
@@ -45,25 +47,22 @@ from .dedup_index import (
     DRIFT_MAX_BAND_SHARD_ROWS,
     _build_index,
     _commit_index_stream_batch,
-    _extend_index,
+    _extend_family_index,
+    _IndexArtifacts,
     _IndexFamily,
     _load_artifacts,
+    _positive,
+    _rebuild_geometry,
     _rebuild_index,
     _require_band_partitioning,
-    _run_maybe_exclusive,
     _verify_index,
     dedup_docs_table,
 )
-from .pairing import check_pair, pinned_state
-
-_SIM_REPAIR_ADVICE = (
-    "rebuild with build_simhash_dedup_index over the full corpus (or "
-    "checkout both tables to a matching pair) before extending"
-)
+from .pairing import pinned_state
 
 
 @dataclass(frozen=True)
-class SimhashDedupArtifacts:
+class SimhashDedupArtifacts(_IndexArtifacts):
     """Geometry sidecar (the shared contract): ``bits`` defines the
     stored fingerprint (immutable on rebuild — the payload IS the
     fingerprint); ``bands`` slices it into band keys."""
@@ -74,34 +73,19 @@ class SimhashDedupArtifacts:
     doc_shards: int
     version_label: str
 
-    def geometry(self) -> dict:
-        d = self.__dict__.copy()
-        d.pop("version_label")
-        return d
-
-    def with_label(self, label: str) -> "SimhashDedupArtifacts":
-        return replace(self, version_label=label)
-
-    def to_json(self) -> str:
-        return json.dumps({"version_label": self.version_label, **self.geometry()})
-
-    @staticmethod
-    def from_json(text: str) -> "SimhashDedupArtifacts":
-        d = json.loads(text)
-        return SimhashDedupArtifacts(
-            bits=int(d["bits"]),
-            bands=int(d["bands"]),
-            band_shards=int(d["band_shards"]),
-            doc_shards=int(d["doc_shards"]),
-            version_label=d["version_label"],
-        )
-
 
 def load_simhash_dedup_artifacts(
     table: TableDefinition, table_version
 ) -> SimhashDedupArtifacts:
     return _load_artifacts(
-        table, table_version, SimhashDedupArtifacts.from_json, "simhash dedup"
+        table, table_version, SimhashDedupArtifacts.from_json,
+        "simhash dedup geometries",
+    )
+
+
+def _sim_encode(df: DataFrame, id_col: str, text_col: str, bits: int):
+    return df.select(
+        F.col(id_col), DD.simhash_expr(text_col, bits).alias("simhash")
     )
 
 
@@ -160,7 +144,6 @@ def _sim_family(
         payload_col="simhash",
         band_fn=band_fn,
         verify_fn=verify_fn,
-        repair_advice=_SIM_REPAIR_ADVICE,
     )
 
 
@@ -200,23 +183,15 @@ def build_simhash_dedup_index(
     build_dedup_index`.  Returns ``(band_table_state,
     SimhashDedupArtifacts)``."""
     _require_band_partitioning(table, "simhash dedup")
-    for n, v in (("bits", bits), ("bands", bands),
-                 ("band_shards", band_shards), ("doc_shards", doc_shards)):
-        if v < 1:
-            raise ValueError(f"{n} must be >= 1, got {v}")
+    geo = _positive(bits=bits, bands=bands, band_shards=band_shards,
+                    doc_shards=doc_shards)
     _validate_geometry(bits, bands)
     version = generate_version()
-    artifacts = SimhashDedupArtifacts(
-        bits=bits, bands=bands, band_shards=band_shards,
-        doc_shards=doc_shards, version_label=version.label,
-    )
+    artifacts = SimhashDedupArtifacts(version_label=version.label, **geo)
     family = _sim_family(artifacts, id_col, max_hamming=None)
-    encoded = df.select(
-        F.col(id_col), DD.simhash_expr(text_col, bits).alias("simhash")
-    )
     return _build_index(
-        encoded, table, tracker, family, artifacts, version,
-        user_id, message, id_col, metastore,
+        _sim_encode(df, id_col, text_col, bits), table, tracker, family,
+        artifacts, version, user_id, message, id_col, metastore,
     )
 
 
@@ -246,44 +221,14 @@ def extend_simhash_dedup_index(
     operators.dedup.simhash_near_dup_candidates` (no skew cap) would
     add for these docs.  All other contracts (upsert/append, pairs
     journal, concurrency, ``exclusive``) are the shared core's."""
-    _require_band_partitioning(table, "simhash dedup")
-    if mode not in ("upsert", "append"):
-        raise ValueError(f"mode must be 'upsert' or 'append', got {mode!r}")
-    if concurrency not in ("last-writer-wins", "optimistic", "strict"):
-        raise ValueError(
-            "concurrency must be 'last-writer-wins', 'optimistic' or "
-            f"'strict', got {concurrency!r}"
-        )
-
-    def _run():
-        docs_table = dedup_docs_table(table)
-        state, base_head, head_pair = pinned_state(tracker, table.name)
-        docs_state, docs_head, docs_pair = pinned_state(
-            tracker, docs_table.name
-        )
-        check_pair(table, head_pair, docs_pair, _SIM_REPAIR_ADVICE)
-        if not isinstance(state, PartitionedTableVersion) or not isinstance(
-            docs_state, PartitionedTableVersion
-        ):
-            raise ValueError("dedup index tables are partitioned by shard")
-        arts = artifacts
-        if arts is None:
-            arts = load_simhash_dedup_artifacts(table, state)
-        family = _sim_family(arts, id_col, max_hamming)
-        base_new = df_new.select(
-            F.col(id_col), DD.simhash_expr(text_col, arts.bits).alias("simhash")
-        ).persist()
-        try:
-            return _extend_index(
-                table, docs_table, tracker, family, state, docs_state,
-                base_head, docs_head, head_pair, base_new, arts, mode,
-                concurrency, user_id, message, id_col, metastore,
-                pairs_table, drift_shard_rows,
-            )
-        finally:
-            base_new.unpersist()
-
-    return _run_maybe_exclusive(tracker, table, exclusive, _run)
+    return _extend_family_index(
+        "simhash_dedup", load_simhash_dedup_artifacts,
+        lambda df, arts: _sim_encode(df, id_col, text_col, arts.bits),
+        lambda arts: _sim_family(arts, id_col, max_hamming),
+        df_new, table, tracker, user_id, message, mode, concurrency,
+        artifacts, id_col, metastore, pairs_table, exclusive,
+        drift_shard_rows,
+    )
 
 
 def verify_simhash_dedup_index(
@@ -319,18 +264,14 @@ def rebuild_simhash_dedup_index(
     _require_band_partitioning(table, "simhash dedup")
     state, _, _ = pinned_state(tracker, table.name)
     old = load_simhash_dedup_artifacts(table, state)
-    new_geo = dict(
-        bits=old.bits,
-        bands=bands if bands is not None else old.bands,
-        band_shards=band_shards if band_shards is not None else old.band_shards,
-        doc_shards=doc_shards if doc_shards is not None else old.doc_shards,
+    new_geo = _rebuild_geometry(
+        old, bands=bands, band_shards=band_shards, doc_shards=doc_shards
     )
-    for n, v in new_geo.items():
-        if v < 1:
-            raise ValueError(f"{n} must be >= 1, got {v}")
-    _validate_geometry(new_geo["bits"], new_geo["bands"])
+    _validate_geometry(old.bits, new_geo["bands"])
     version = generate_version()
-    artifacts = SimhashDedupArtifacts(version_label=version.label, **new_geo)
+    artifacts = SimhashDedupArtifacts(
+        version_label=version.label, bits=old.bits, **new_geo
+    )
     family = _sim_family(artifacts, id_col, max_hamming=None)
     return _rebuild_index(
         spark, table, tracker, family, artifacts, version,

@@ -66,3 +66,19 @@ def test_ann_sidecar_shares_the_bound(tmp_path, monkeypatch):
     small = [(0, [0.5, 0.5])]
     monkeypatch.setattr(di, "ARTIFACT_JSON_MAX_BYTES", 10_000)
     ai._write_artifact_sidecar(td, "v2", small, [])  # no raise
+
+
+def test_oversized_family_sidecar_names_its_family(spark, tmp_path, monkeypatch):
+    """The shared writer reports the family its caller names — not a
+    generic 'index' — and refuses before any data is written."""
+    from chronicles_spark.operators import simhash_index as SHX
+    from chronicles_spark.trackers import FileBackedVersionTracker
+
+    monkeypatch.setattr(di, "ARTIFACT_JSON_MAX_BYTES", 10)
+    td = _tdef(tmp_path)
+    tracker = FileBackedVersionTracker(str(tmp_path / "_log"))
+    tracker.init_table(td.name, is_snapshot=False, user_id="t")
+    docs = spark.createDataFrame([(1, "a b c d e f")], "doc_id long, text string")
+    with pytest.raises(ValueError, match="simhash dedup geometry sidecar"):
+        SHX.build_simhash_dedup_index(docs, td, tracker)
+    assert tracker.current_version(td.name).partition_versions == {}

@@ -1168,6 +1168,20 @@ def test_local_components_differential_vs_dedup_clusters(spark):
     assert CX._local_components(spark, dpairs, "doc_id", 1) is None
 
 
+def test_local_components_refuses_collated_string_ids(spark):
+    """A non-binary collation also names itself 'string', but Spark's
+    min() under it is not Python's codepoint min — such an id column
+    must take the distributed path (None)."""
+    edges = spark.createDataFrame(
+        [("b", "A"), ("a", "c")], "id_a string, id_b string"
+    ).select(
+        F.collate("id_a", "UTF8_LCASE").alias("id_a"),
+        F.collate("id_b", "UTF8_LCASE").alias("id_b"),
+    )
+    assert edges.schema.fields[0].dataType.typeName() == "string"
+    assert CX._local_components(spark, edges, "doc_id", 2) is None
+
+
 def test_fold_local_vs_distributed_cc_identical(spark, tmp_path, monkeypatch):
     """Same fold sequence with the driver-side CC (default) and with the
     cap forced to 0 (distributed propagation) — assignment tables must
