@@ -304,13 +304,12 @@ def _check_artifact_size(payload: str, table, what: str) -> None:
     if len(payload) > ARTIFACT_JSON_MAX_BYTES:
         raise ValueError(
             f"{what} geometry sidecar for {table.name} serializes to "
-            f"{len(payload) / 1e6:.0f} MB (> the "
-            f"{ARTIFACT_JSON_MAX_BYTES // (1024 * 1024)} MB sidecar "
-            "bound) — sidecars are re-parsed on every extend/load, so "
-            "quantizer-scale payloads don't fit this contract.  Reduce "
-            "n_clusters / sub-quantizer size, pre-reduce the embedding "
-            "dim, or keep the coarse quantizer in the ANN index family "
-            "at a size under the bound"
+            f"{len(payload):,} bytes (> the sidecar bound of "
+            f"{ARTIFACT_JSON_MAX_BYTES:,} bytes) — sidecars are re-parsed "
+            "on every extend/load, so quantizer-scale payloads don't fit "
+            "this contract.  Reduce n_clusters / sub-quantizer size, "
+            "pre-reduce the embedding dim, or keep the coarse quantizer "
+            "in the ANN index family at a size under the bound"
         )
 
 

@@ -102,6 +102,14 @@ def _touched_partitions(update: TableUpdate) -> Tuple[Set[Partition], bool]:
     return parts, whole
 
 
+def _as_utc(ts) -> datetime:
+    """A datetime or ISO-8601 string as an aware datetime; naive = UTC
+    (the timestamp time-travel convention)."""
+    if isinstance(ts, str):
+        ts = datetime.fromisoformat(ts)
+    return ts if ts.tzinfo is not None else ts.replace(tzinfo=timezone.utc)
+
+
 def head_of(tracker, table: TableName) -> str:
     """The current head commit id, from the head POINTER alone where the
     backend offers the cheap read (files: one small-file read; sqlite:
@@ -492,16 +500,10 @@ class VersionTracker(abc.ABC):
         authoritative — on (rare) non-monotonic timestamps the latest
         log-ordered qualifying commit wins, so resolution is deterministic.
         """
-        if isinstance(ts, str):
-            ts = datetime.fromisoformat(ts)
-        if ts.tzinfo is None:
-            ts = ts.replace(tzinfo=timezone.utc)
+        ts = _as_utc(ts)
 
         def _qualifies(u) -> bool:
-            uts = u.metadata.timestamp
-            if uts.tzinfo is None:
-                uts = uts.replace(tzinfo=timezone.utc)
-            return uts <= ts
+            return _as_utc(u.metadata.timestamp) <= ts
 
         # "newest log-ordered qualifying commit" means a BACKWARD scan can
         # stop at the first qualifying commit it meets — O(commits newer

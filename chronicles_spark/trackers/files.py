@@ -56,16 +56,19 @@ every ``checkpoint_interval`` commits the tracker persists the folded
 it — O(tail), not O(log), table resolution on a million-commit table.
 The checkpoint is a pure function of log ORDER (never of the head), so it
 stays valid across rollbacks: a head at or after the checkpoint folds as
-checkpoint+tail; a head rolled back BEFORE the checkpoint falls back to
-the full fold (reference cutoff semantics, VersionTracker.scala:37-55,
-including re-surfacing rolled-back commits when a later write re-advances
-the head past them).  A missing or corrupt checkpoint is never an error —
-readers degrade to the full fold; commit files remain the only source of
-truth.
+checkpoint+tail; a head rolled back BEFORE it is located by a newest-first
+commit-id scan and folds from the newest retained checkpoint at or below
+it (reference cutoff semantics, VersionTracker.scala:37-55, including
+re-surfacing rolled-back commits when a later write re-advances the head
+past them).  Checkout and time travel thus cost O(distance from the newest
+commit), and each commit file is read and decoded at most once per
+resolution.  A missing or corrupt checkpoint is never an error — readers
+degrade to the full fold; commit files remain the only source of truth.
 """
 
 from __future__ import annotations
 
+import bisect
 import heapq
 import json
 import re
@@ -74,6 +77,7 @@ import time
 import uuid as _uuid
 import zlib
 from contextlib import contextmanager
+from datetime import datetime
 from typing import List
 
 from ..core import fold
@@ -95,7 +99,14 @@ from ..core.ops import (
     update_to_json,
 )
 from ..core.version import UNVERSIONED, Version
-from .base import TableState, UnknownTableError, VersionTracker, apply_ops_to_path_state
+from .base import (
+    TableState,
+    UnknownCommitError,
+    UnknownTableError,
+    VersionTracker,
+    _as_utc,
+    apply_ops_to_path_state,
+)
 from .fs import FileSystem, LocalFileSystem, filesystem_for
 
 _TABLE_DIR_RE = re.compile(r"^_chronicles_table_([\w\-]+)\.([\w\-]+)$")
@@ -866,6 +877,28 @@ class FileBackedVersionTracker(VersionTracker):
             update_from_json(self.fs.read_text(self.fs.join(d, n))) for n in names
         )
 
+    def _read_doc(self, d: str, name: str) -> dict:
+        """One live commit file, ``json.loads``-ed but not decoded into a
+        TableUpdate: the newest-first scans compare only its
+        ``commit_id`` or ``timestamp``.  A file deleted since the listing
+        (a racing archival packed it) raises _ArchiveVanished."""
+        path = self.fs.join(d, name)
+        try:
+            return json.loads(self.fs.read_text(path))
+        except FileNotFoundError:
+            raise _ArchiveVanished(path) from None
+
+    def _locate(self, d: str, live, commit_id: str, lo: int = 0):
+        """``(index in live, parsed doc)`` of the newest live commit file
+        holding ``commit_id``, scanning ``live`` newest-first down to
+        ``live[lo]`` and reading each file once; None when the id is not
+        there.  Costs O(distance from the newest commit), not O(log)."""
+        for i in range(len(live) - 1, lo - 1, -1):
+            doc = self._read_doc(d, live[i][1])
+            if doc["commit_id"] == commit_id:
+                return i, doc
+        return None
+
     def _read_head(self, d: str) -> str:
         return json.loads(self.fs.read_text(self.fs.join(d, "head_ref")))["head_ref"]
 
@@ -880,20 +913,19 @@ class FileBackedVersionTracker(VersionTracker):
         """The checkpoint the ``_last_checkpoint`` pointer names, or None.
         Any missing/corrupt artifact degrades to None (full fold) — the
         commit files stay the only source of truth."""
-        ptr = self.fs.join(d, "_last_checkpoint")
-        if not self.fs.exists(ptr):
-            return None
+        seq = self._read_pointer_seq(d)
+        return None if seq is None else self._checkpoint_body(d, seq)
+
+    def _read_pointer_seq(self, d: str) -> "int | None":
+        """The seq the ``_last_checkpoint`` pointer names (its body is
+        not read), or None when the pointer is missing or corrupt."""
         try:
-            seq = int(json.loads(self.fs.read_text(ptr))["seq"])
-            ck = json.loads(
-                self.fs.read_text(self.fs.join(d, f"checkpoint_{seq:013d}.json"))
+            return int(
+                json.loads(
+                    self.fs.read_text(self.fs.join(d, "_last_checkpoint"))
+                )["seq"]
             )
-            if int(ck["last_seq"]) != seq or "last_commit_id" not in ck:
-                return None
-            return ck
         except (FileNotFoundError, KeyError, ValueError, TypeError):
-            # TypeError covers a JSON-null last_seq / non-dict body —
-            # any malformed retained checkpoint degrades to full fold
             return None
 
     @staticmethod
@@ -1080,82 +1112,86 @@ class FileBackedVersionTracker(VersionTracker):
         self.fs.write_text(ck_path, json.dumps(body))
         self.fs.write_text(ptr_path, ptr_doc)
 
-    # how many retained-checkpoint segments _fast_resolve walks backwards
-    # before degrading to the full fold: bounds the wasted reads for a
-    # very deep (or unknown — the error path re-reads via the full walk)
-    # commit at ~32·interval files, while covering every realistic
-    # lag-behind-head window (a CDC poll or time travel a few checkpoint
-    # cuts behind) at O(distance-from-head) cost
+    # how many retained checkpoints (newest first) _fast_resolve may
+    # resolve from before degrading to the full fold: bounds the locate
+    # scan's wasted reads for a very deep (or unknown — the error path
+    # re-reads via the full walk) commit at ~32·interval files, while
+    # covering every realistic lag-behind-head window (a CDC poll or time
+    # travel a few checkpoint cuts behind) at O(distance-from-head) cost
     _FAST_RESOLVE_MAX_SEGMENTS = 32
 
     def _fast_resolve(self, d: str, commit_id: str):
         """Checkpoint + tail fold at ``commit_id``, or None when the fast
-        path cannot answer (no usable checkpoint, gap-filled prefix, or a
-        commit deeper than the walked checkpoints — e.g. genesis-deep time
-        travel).  Round 11: checkpoints are never deleted (only the
-        pointer advances), so a commit that PRECEDES the newest checkpoint
-        resolves from the newest retained checkpoint at-or-below it — a
-        newest-first walk reading one checkpoint-sized commit segment at a
-        time, O(distance the commit lags the head), never the whole log.
-        Without this, a CDC consumer polling ``changed_partitions(from=
-        recent)`` fell to the full fold the moment a checkpoint was cut
-        past its cursor.  Cutoff semantics are identical in every path
-        (checkpoints are pure functions of log order); each older
-        checkpoint is covers-prefix-validated independently before use.
-        ``checkpoint_interval=None`` disables the READ side too, so a
-        None-interval tracker is a true full-fold ground truth even over a
-        directory that already carries checkpoints."""
+        path cannot answer (checkpoints disabled, no pointer, live files
+        at or below the archive floor, no covering checkpoint at or below
+        the commit, or a commit deeper than the newest
+        ``_FAST_RESOLVE_MAX_SEGMENTS`` retained checkpoints — e.g.
+        genesis-deep time travel, or an unknown id).
+
+        Locate, then fold: a newest-first scan of the live commit files
+        finds the commit's seq, comparing only each file's ``commit_id``;
+        then the newest retained checkpoint at or below that seq is read
+        (older ones only when it fails ``_checkpoint_covers_prefix``) and
+        only the commits in (checkpoint seq, target seq] are decoded and
+        folded on it.  So each commit file is read and decoded at most
+        once per resolution, one checkpoint body is read in the common
+        case, and the cost is O(distance the commit lags the newest
+        commit + checkpoint_interval), never the whole log.  Checkpoints
+        are never deleted above the archive floor (only the pointer
+        advances), and each is a pure function of log order, so cutoff
+        semantics equal the full fold's (including rolled-back commits
+        re-surfacing after a later write).  Retained checkpoints below
+        the archive floor are never used: their tail segments are
+        archived, so deeper travel takes the full fold (which reads the
+        archives).  ``checkpoint_interval=None`` disables the READ side
+        too, so a None-interval tracker is a true full-fold ground truth
+        even over a directory that already carries checkpoints."""
         if not self._checkpoint_interval:
             return None
-        ck = self._read_checkpoint(d)
-        if ck is None:
+        # the pointer is read BEFORE listing, so its checkpoint file is in
+        # the listing (checkpoint files are written before the pointer)
+        ptr = self._read_pointer_seq(d)
+        if ptr is None:
             return None
         live, archives, ck_seqs = self._scan_dir(d, with_checkpoints=True)
         arch_last, arch_n = self._arch_stats(archives)
-        seq_nums = [s for s, _ in live]
-        if not self._checkpoint_covers_prefix(ck, seq_nums, arch_last, arch_n):
-            return None  # gap-filled prefix: only the full fold is correct
-        # retained checkpoint seqs below the pointer's, newest first —
-        # but never below the archive floor: those checkpoints' tail
-        # segments are archived, so deeper travel takes the full fold
-        # (which reads the archives)
-        older = sorted(
-            (
-                s
-                for s in ck_seqs
-                if s < int(ck["last_seq"])
-                and (arch_last is None or s >= arch_last)
-            ),
-            reverse=True,
-        )
-        upper = None  # exclusive seq upper bound of segments already searched
-        for _ in range(self._FAST_RESOLVE_MAX_SEGMENTS):
-            if commit_id == ck["last_commit_id"]:
-                return self._fold_checkpoint_plus(ck, ())
-            names = [
-                n
-                for s, n in live
-                if s > int(ck["last_seq"]) and (upper is None or s <= upper)
-            ]
-            seg = self._read_updates(d, names)
-            if any(u.metadata.commit_id == commit_id for u in seg):
-                return self._fold_checkpoint_plus(
-                    ck, fold.take_through(seg, commit_id)
-                )
-            upper = int(ck["last_seq"])
-            ck = None
-            while older and older[0] >= upper:
-                older.pop(0)
-            while older:
-                cand = self._checkpoint_body(d, older.pop(0))
-                if cand is not None and self._checkpoint_covers_prefix(
-                    cand, seq_nums, arch_last, arch_n
+        seqs = [s for s, _ in live]
+        if ptr not in ck_seqs or (
+            arch_last is not None and seqs and seqs[0] <= arch_last
+        ):
+            return None  # dangling pointer, or gap-fill below the floor
+        cands = [
+            s
+            for s in reversed(ck_seqs)
+            if s <= ptr and (arch_last is None or s >= arch_last)
+        ][: self._FAST_RESOLVE_MAX_SEGMENTS]
+        if not cands:
+            return None  # the pointer's cut lies below the archive floor
+        try:
+            hit = self._locate(
+                d, live, commit_id, bisect.bisect_left(seqs, cands[-1])
+            )
+            if hit is None:
+                return None  # deeper than the walked checkpoints, or unknown
+            i, doc = hit
+            for c in cands:
+                if c > seqs[i]:
+                    continue
+                ck = self._checkpoint_body(d, c)
+                if ck is None or not self._checkpoint_covers_prefix(
+                    ck, seqs, arch_last, arch_n
                 ):
-                    ck = cand
-                    break
-            if ck is None:
-                return None  # deeper than the oldest usable checkpoint
-        return None
+                    continue  # corrupt or gap-filled cut: try an older one
+                j = bisect.bisect_right(seqs, c)
+                docs = [self._read_doc(d, n) for _, n in live[j:i]]
+                if j <= i:
+                    docs.append(doc)
+                return self._fold_checkpoint_plus(
+                    ck, [update_from_dict(o) for o in docs]
+                )
+        except _ArchiveVanished:
+            return None  # a racing archival: the full fold re-lists
+        return None  # no usable checkpoint at or below the commit
 
     def _checkpoint_body(self, d: str, seq: int) -> dict | None:
         """Parse + validate ``checkpoint_<seq>.json`` (any retained cut,
@@ -1241,11 +1277,13 @@ class FileBackedVersionTracker(VersionTracker):
         return self._fold_checkpoint_plus(ck, upto), head, marker
 
     def current_version(self, table: TableName):
-        """Checkpointed table resolution: fold = checkpoint + tail commits
-        (> checkpoint seq) instead of the whole log.  Falls back to the
-        base-class full fold when there is no usable checkpoint or the head
-        has been rolled back before it (VersionTracker.scala:37-55 cutoff
-        semantics are preserved exactly in both paths)."""
+        """Checkpointed table resolution at the head: ``_fast_resolve``
+        locates the head commit and folds it from the newest usable
+        checkpoint at or below it, O(distance from the newest commit +
+        checkpoint_interval) — a rolled-back head included.  Falls back
+        to the base-class full fold when the fast path cannot answer
+        (VersionTracker.scala:37-55 cutoff semantics are preserved
+        exactly in both paths)."""
         d = self._table_dir(table)
         if not self.fs.exists(self.fs.join(d, "table-metadata")):
             raise UnknownTableError(table)
@@ -1253,15 +1291,63 @@ class FileBackedVersionTracker(VersionTracker):
         return tv if tv is not None else super().current_version(table)
 
     def version_at(self, table: TableName, commit_id: str):
-        """Time travel with the same O(tail) fast path as current_version:
-        a commit at or after the checkpoint folds as checkpoint + tail; a
-        commit deeper in history (or unknown — the base class raises
-        UnknownCommitError) takes the full fold."""
+        """Time travel with the same locate-then-fold path as
+        current_version; a commit the fast path cannot answer (archived,
+        deeper than the walked checkpoints, or unknown — the base class
+        raises UnknownCommitError) takes the full fold."""
         d = self._table_dir(table)
         if not self.fs.exists(self.fs.join(d, "table-metadata")):
             raise UnknownTableError(table)
         tv = self._fast_resolve(d, commit_id)
         return tv if tv is not None else super().version_at(table, commit_id)
+
+    def set_current_version(self, table: TableName, commit_id: str) -> None:
+        """Move head to an existing commit — rollback/forward
+        (VersionTracker.scala:71) — at O(distance from the newest commit):
+        existence is proven by a newest-first commit-id scan of the live
+        files, reading each once.  An id that is not among them (archived
+        prefix or unknown id), or a file that vanished mid-scan, takes
+        the inherited full check, which reads the archives and raises
+        UnknownTableError / UnknownCommitError."""
+        d = self._table_dir(table)
+        if self.fs.exists(self.fs.join(d, "table-metadata")):
+            live, _ = self._scan_dir(d)
+            try:
+                found = self._locate(d, live, commit_id) is not None
+            except _ArchiveVanished:
+                found = False
+            if found:
+                self._set_head(table, commit_id)
+                return
+        super().set_current_version(table, commit_id)
+
+    def commit_at_timestamp(self, table: TableName, ts) -> str:
+        """The newest log-ordered commit whose timestamp is ≤ ``ts`` (the
+        base class's contract) from one listing and a newest-first scan
+        of the live files that stops at the first qualifying commit,
+        comparing only each file's ``timestamp``.  Once the scan reaches
+        the archived prefix, or a file vanished mid-scan, the base
+        class's ranged walk answers (it reads the archives)."""
+        ts = _as_utc(ts)
+        d = self._table_dir(table)
+        if not self.fs.exists(self.fs.join(d, "table-metadata")):
+            raise UnknownTableError(table)
+        live, archives = self._scan_dir(d)
+        arch_last, _ = self._arch_stats(archives)
+        try:
+            for s, n in reversed(live):
+                if arch_last is not None and s <= arch_last:
+                    break
+                doc = self._read_doc(d, n)
+                if _as_utc(datetime.fromisoformat(doc["timestamp"])) <= ts:
+                    return doc["commit_id"]
+        except _ArchiveVanished:
+            return super().commit_at_timestamp(table, ts)
+        if archives:
+            return super().commit_at_timestamp(table, ts)
+        raise UnknownCommitError(
+            None, f"no commit at or before {ts.isoformat()}"
+        )
 
     # -- commit-log archival --------------------------------------------
     # The last O(history) term on the metadata plane after round 11 was

@@ -82,3 +82,22 @@ def test_oversized_family_sidecar_names_its_family(spark, tmp_path, monkeypatch)
     with pytest.raises(ValueError, match="simhash dedup geometry sidecar"):
         SHX.build_simhash_dedup_index(docs, td, tracker)
     assert tracker.current_version(td.name).partition_versions == {}
+
+
+def test_sub_mb_refusal_reports_both_sizes_in_bytes(tmp_path, monkeypatch):
+    """Both sizes in the refusal are exact byte counts in one unit, so a
+    sub-MB bound does not round either of them to 0."""
+    import re
+
+    monkeypatch.setattr(di, "ARTIFACT_JSON_MAX_BYTES", 1000)
+    with pytest.raises(ValueError, match="sidecar bound") as err:
+        di._write_artifact_sidecar(_tdef(tmp_path), _Fake(1500))
+    m = re.search(
+        r"serializes to ([\d,]+) (\w+) \(> the sidecar bound of ([\d,]+) (\w+)\)",
+        str(err.value),
+    )
+    assert m, str(err.value)
+    size, size_unit, bound, bound_unit = m.groups()
+    assert int(size.replace(",", "")) == 1500
+    assert int(bound.replace(",", "")) == 1000
+    assert size_unit == bound_unit == "bytes"

@@ -467,3 +467,145 @@ def test_fresh_instance_commit_never_overwrites_a_slot(tmp_path):
     assert meta.commit_id in got
     for cid in ids:
         assert cid in got  # nothing was destroyed
+
+
+# -- locate, then fold: read counts of checkout and time travel -------------
+
+
+def _commit_reads(cfs):
+    return [p for p in cfs.reads if "table_update_" in p]
+
+
+def _checkpoint_reads(cfs):
+    return [p for p in cfs.reads if "checkpoint_" in p]
+
+
+def _counted(root, interval=10):
+    tr = FileBackedVersionTracker(root, checkpoint_interval=interval)
+    cfs = CountingFs(tr.fs)
+    tr.fs = cfs
+    return tr, cfs
+
+
+def test_checkout_reads_o_distance_from_head(tmp_path):
+    """Moving the head k commits back proves the target exists with a
+    newest-first id scan: at most k+1 commit files and no checkpoint
+    body, not the whole 250-commit log."""
+    root = str(tmp_path / "log")
+    _, commits = _build_log(root, n_commits=250, interval=10)
+    for k in (0, 7, 23):
+        tr, cfs = _counted(root)
+        tr.set_current_version(T, commits[-1 - k])
+        assert len(_commit_reads(cfs)) <= k + 1, (k, len(_commit_reads(cfs)))
+        assert _checkpoint_reads(cfs) == []
+        assert tr.head_commit_id(T) == commits[-1 - k]
+
+
+def test_deep_version_at_reads_one_checkpoint_and_each_commit_once(tmp_path):
+    """Time travel several checkpoint segments deep reads exactly one
+    checkpoint body (the newest one at or below the target) and no commit
+    file twice; the answer equals the checkpoint-free fold."""
+    root = str(tmp_path / "log")
+    _, commits = _build_log(root, n_commits=250, interval=10)
+    truth = FileBackedVersionTracker(root, checkpoint_interval=None)
+    for target in (commits[-75], commits[-131], commits[-44]):
+        tr, cfs = _counted(root)
+        assert tr.version_at(T, target) == truth.version_at(T, target)
+        assert len(_checkpoint_reads(cfs)) == 1, _checkpoint_reads(cfs)
+        reads = _commit_reads(cfs)
+        assert len(reads) == len(set(reads)), "a commit file was read twice"
+
+
+def test_checkout_back_to_head_after_deep_checkout_reads_o_tail(tmp_path):
+    """After a deep checkout, checking out the newest commit again and
+    resolving it reads O(checkpoint_interval) commit files."""
+    root = str(tmp_path / "log")
+    _, commits = _build_log(root, n_commits=250, interval=10)
+    tr, cfs = _counted(root)
+    tr.set_current_version(T, commits[-120])
+    deep = tr.current_version(T)
+    truth = FileBackedVersionTracker(root, checkpoint_interval=None)
+    assert deep == truth.version_at(T, commits[-120])
+    cfs.reads.clear()
+    tr.set_current_version(T, commits[-1])
+    head = tr.current_version(T)
+    assert head == truth.version_at(T, commits[-1])
+    reads = _commit_reads(cfs)
+    assert len(reads) <= 2 * 10 + 2, len(reads)
+    assert len(_checkpoint_reads(cfs)) == 1
+
+
+def test_locate_then_fold_differential_every_commit(tmp_path):
+    """Differential: on a seeded 120-commit log with removals, a rollback,
+    a write that re-surfaces the rolled-back commits, equal and
+    out-of-order timestamps, the checkpointed tracker answers every
+    version_at, checkout + current_version and commit_at_timestamp
+    exactly like a checkpoint-free tracker on the same directory — also
+    after archive_commits packed the log's prefix."""
+    import random
+    from datetime import datetime, timedelta, timezone
+
+    from chronicles_spark.trackers import UnknownCommitError
+
+    rng = random.Random(7)
+    root = str(tmp_path / "log")
+    fast = FileBackedVersionTracker(root, checkpoint_interval=10)
+    truth = FileBackedVersionTracker(root, checkpoint_interval=None)
+    base = datetime(2024, 3, 1, tzinfo=timezone.utc)
+    fast.init_table(T, is_snapshot=False, user_id="u", timestamp=base)
+    ms = 0
+    for i in range(120):
+        ms += rng.choice((0, 1, 2, 5, 10))  # equal timestamps included
+        ts = base + timedelta(milliseconds=ms + 1)
+        if i == 90:
+            ts -= timedelta(milliseconds=30)  # a lagging writer clock
+        p = f"date=2024-01-{rng.randrange(1, 13):02d}"
+        op = (
+            RemovePartition(Partition.parse(p))
+            if rng.random() < 0.15 else _add(p)
+        )
+        fast.commit(T, TableUpdate(TableUpdateMetadata.new("u", f"c{i}", ts), (op,)))
+        if i == 70:  # roll back; the next write re-surfaces 41..70
+            fast.set_current_version(
+                T, truth.table_state(T).updates[41].metadata.commit_id
+            )
+    updates = truth.table_state(T).updates
+    head = fast.head_commit_id(T)
+
+    def check(u):
+        cid = u.metadata.commit_id
+        assert fast.version_at(T, cid) == truth.version_at(T, cid), cid
+        fast.set_current_version(T, cid)
+        got = fast.current_version(T)
+        truth.set_current_version(T, cid)
+        assert got == truth.current_version(T), cid
+        for delta in (-1, 0, 1):
+            at = u.metadata.timestamp + timedelta(milliseconds=delta)
+            try:
+                want = truth.commit_at_timestamp(T, at)
+            except UnknownCommitError:
+                with pytest.raises(UnknownCommitError):
+                    fast.commit_at_timestamp(T, at)
+            else:
+                assert fast.commit_at_timestamp(T, at) == want, (cid, delta)
+
+    for u in updates:
+        check(u)
+    before_genesis = base - timedelta(milliseconds=1)
+    for tr in (fast, truth):
+        with pytest.raises(UnknownCommitError):
+            tr.commit_at_timestamp(T, before_genesis)
+        with pytest.raises(UnknownCommitError):
+            tr.version_at(T, "no-such-commit")
+        with pytest.raises(UnknownCommitError):
+            tr.set_current_version(T, "no-such-commit")
+
+    fast.set_current_version(T, head)
+    out = fast.archive_commits(T, retain_checkpoints=2)
+    assert out["archived"] > 0
+    for u in updates[:3] + updates[out["archived"] - 2:out["archived"] + 2] + updates[-3:]:
+        check(u)
+    with pytest.raises(UnknownCommitError):
+        fast.set_current_version(T, "no-such-commit")
+    with pytest.raises(UnknownCommitError):
+        fast.commit_at_timestamp(T, before_genesis)
