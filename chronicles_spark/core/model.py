@@ -9,6 +9,7 @@ strings exactly as they appear in paths.
 
 from __future__ import annotations
 
+import functools
 import re
 from dataclasses import dataclass, field
 from typing import Dict, Optional, Tuple
@@ -57,8 +58,10 @@ class Partition:
         if not self.column_values:
             raise ValueError("partition must have at least one column value")
 
-    @property
+    @functools.cached_property
     def path(self) -> str:
+        """The raw ``k1=v1/k2=v2`` fragment, joined once per instance
+        (it keys every fold state and orders every metastore diff)."""
         return "/".join(f"{k}={v}" for k, v in self.column_values)
 
     def __str__(self) -> str:
@@ -96,8 +99,14 @@ class Partition:
         return Partition(tuple(pairs))
 
     @staticmethod
+    @functools.lru_cache(maxsize=1 << 14)
     def parse(s: str) -> "Partition":
-        """Parse ``k1=v1/k2=v2`` (reference: model.scala:13-16, 45-50)."""
+        """Parse ``k1=v1/k2=v2`` (reference: model.scala:13-16, 45-50).
+
+        Memoized: every checkpoint fold parses the same partition strings
+        again, and a ``Partition`` is immutable, so equal strings may share
+        one instance (and its joined ``path``).  An invalid string is not
+        cached and raises on every call."""
         parts = s.split("/")
         out = []
         for p in parts:

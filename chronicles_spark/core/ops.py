@@ -130,14 +130,20 @@ def update_to_dict(u: TableUpdate) -> dict:
     }
 
 
-def update_from_dict(d: dict) -> TableUpdate:
-    meta = TableUpdateMetadata(
+def metadata_from_dict(d: dict) -> TableUpdateMetadata:
+    """A commit document's metadata alone; its operations stay undecoded."""
+    return TableUpdateMetadata(
         commit_id=d["commit_id"],
         user_id=d["user_id"],
         message=d["message"],
         timestamp=datetime.fromisoformat(d["timestamp"]),
     )
-    return TableUpdate(meta, tuple(op_from_dict(o) for o in d["operations"]))
+
+
+def update_from_dict(d: dict) -> TableUpdate:
+    return TableUpdate(
+        metadata_from_dict(d), tuple(op_from_dict(o) for o in d["operations"])
+    )
 
 
 def update_to_json(u: TableUpdate) -> str:

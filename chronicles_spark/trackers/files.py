@@ -94,6 +94,8 @@ from ..core.ops import (
     AddTableVersion,
     RemovePartition,
     TableUpdate,
+    TableUpdateMetadata,
+    metadata_from_dict,
     update_from_dict,
     update_from_json,
     update_to_json,
@@ -531,6 +533,23 @@ class FileBackedVersionTracker(VersionTracker):
 
         return self._retry_vanished(_go)
 
+    def updates(self, table: TableName) -> List[TableUpdateMetadata]:
+        """Commit history, most recent first (VersionTracker.scala:58-61),
+        over the same merged, seq-deduped log as :meth:`table_state`
+        (archived commits included), but each live commit file is
+        ``json.loads``-ed into its metadata only: its operations — the
+        whole table for a bulk-load commit — are never decoded."""
+        d = self._table_dir(table)
+        if not self.fs.exists(self.fs.join(d, "table-metadata")):
+            raise UnknownTableError(table)
+
+        def _go():
+            live, archives = self._scan_dir(d)
+            merged = self._merged_updates(d, live, archives, metadata_only=True)
+            return [m for _, m in reversed(merged)]
+
+        return self._retry_vanished(_go)
+
     # -- tail access (streaming source support) -----------------------------
     # Commit files sort in commit order, so a position in the log maps to a
     # filename slice: a consumer that already folded the first n commits
@@ -801,15 +820,21 @@ class FileBackedVersionTracker(VersionTracker):
 
     def _merged_updates(
         self, d: str, live, archives, lo: "int | None" = None,
-        hi: "int | None" = None,
+        hi: "int | None" = None, metadata_only: bool = False,
     ) -> list:
         """[(seq, update)] over archives + live files, ``lo < seq <= hi``
         (None = unbounded), seq-deduped.  A sequence slot present both
         archived and live must hold the SAME commit (crash leftover —
         benign, live wins); different commits in one slot means an
         archived slot was re-claimed, which the write-side floor guards
-        exist to prevent — fail loudly rather than pick an order."""
-        by: dict = {}
+        exist to prevent — fail loudly rather than pick an order.
+
+        The decode hook: with ``metadata_only`` each record is the
+        commit's ``TableUpdateMetadata`` instead — a live commit's
+        operations are never decoded, and an archived one's comes from
+        the process cache's already-decoded update."""
+        decode = metadata_from_dict if metadata_only else update_from_dict
+        by: dict = {}  # seq -> (commit id, record)
         for last, _, name in archives:
             if lo is not None and last <= lo:
                 continue  # whole chunk below the range: zero reads
@@ -818,24 +843,21 @@ class FileBackedVersionTracker(VersionTracker):
                 continue  # whole chunk above the range: zero reads
             for s, u in self._archive_entries(d, name):
                 if (lo is None or s > lo) and (hi is None or s <= hi):
-                    by[s] = u
+                    by[s] = (
+                        u.metadata.commit_id,
+                        u.metadata if metadata_only else u,
+                    )
         for s, n in live:
             if (lo is None or s > lo) and (hi is None or s <= hi):
-                path = self.fs.join(d, n)
-                try:
-                    u = update_from_json(self.fs.read_text(path))
-                except FileNotFoundError:
-                    # deleted between listing and read: a racing archival
-                    # PACKED this commit into an artifact our stale
-                    # listing doesn't know — skipping it would silently
-                    # drop a committed update from the merged view, so
-                    # force a retry from a fresh listing instead
-                    raise _ArchiveVanished(path) from None
+                # a file deleted between listing and read raises
+                # _ArchiveVanished: a racing archival PACKED this commit
+                # into an artifact our stale listing doesn't know —
+                # skipping it would silently drop a committed update from
+                # the merged view, so the caller retries from a fresh
+                # listing instead
+                doc = self._read_doc(d, n)
                 prev = by.get(s)
-                if (
-                    prev is not None
-                    and prev.metadata.commit_id != u.metadata.commit_id
-                ):
+                if prev is not None and prev[0] != doc["commit_id"]:
                     # a CAS writer that claimed a just-freed slot holds it
                     # only for the instant between its conditional create
                     # and its own post-claim floor check (which removes
@@ -844,19 +866,19 @@ class FileBackedVersionTracker(VersionTracker):
                     # BYPASSED the floor protocol (pre-archival code
                     # version) — ambiguous log order, fail loudly.
                     time.sleep(0.05)
-                    if not self.fs.exists(path):
+                    if not self.fs.exists(self.fs.join(d, n)):
                         continue  # transient claim resolved; archived wins
                     raise RuntimeError(
                         f"commit sequence slot {s} holds DIFFERENT commits "
-                        f"archived ({prev.metadata.commit_id}) and live "
-                        f"({u.metadata.commit_id}) — an archived slot was "
+                        f"archived ({prev[0]}) and live "
+                        f"({doc['commit_id']}) — an archived slot was "
                         "re-claimed by a writer that bypassed the archive "
                         "floor (all writers must run an archival-aware "
                         "version); the log order is ambiguous and no read "
                         "can be trusted until repaired"
                     )
-                by[s] = u
-        return [(s, by[s]) for s in sorted(by)]
+                by[s] = (doc["commit_id"], decode(doc))
+        return [(s, by[s][1]) for s in sorted(by)]
 
     def _read_floor_seq(self, d: str) -> int:
         """Highest archived commit seq per the floor doc (-1 when no
@@ -1320,6 +1342,22 @@ class FileBackedVersionTracker(VersionTracker):
                 self._set_head(table, commit_id)
                 return
         super().set_current_version(table, commit_id)
+
+    def _checkout(self, table: TableName, commit_id: str):
+        """Move the head to ``commit_id`` and return its folded version in
+        one pass: ``_fast_resolve`` lists the log once, locates the commit
+        once and folds it from a checkpoint, so no commit file is read
+        twice.  A located commit proves existence exactly as
+        :meth:`set_current_version`'s scan does.  When the fast path
+        cannot answer (no usable checkpoint, an archived or unknown id, a
+        racing archival) the base class's set-then-resolve answers."""
+        d = self._table_dir(table)
+        if self.fs.exists(self.fs.join(d, "table-metadata")):
+            tv = self._fast_resolve(d, commit_id)
+            if tv is not None:
+                self._set_head(table, commit_id)
+                return tv
+        return super()._checkout(table, commit_id)
 
     def commit_at_timestamp(self, table: TableName, ts) -> str:
         """The newest log-ordered commit whose timestamp is ≤ ``ts`` (the

@@ -52,9 +52,10 @@ class VersionedMetastore:
     def checkout(
         self, table: TableDefinition, commit_id: str
     ) -> Tuple[object, List[MetastoreOperation]]:
-        """V10 — metadata-only rollback (VersionedMetastore.scala:71-78)."""
-        self.tracker.set_current_version(table.name, commit_id)
-        desired = self.tracker.current_version(table.name)
+        """V10 — metadata-only rollback (VersionedMetastore.scala:71-78).
+        The tracker moves the head and re-folds in one call
+        (``_checkout``), so a backend can locate the commit once."""
+        desired = self.tracker._checkout(table.name, commit_id)
         actual = self.metastore.current_version(table)
         changes = compute_changes(actual, desired)
         self.metastore.update(table, changes)

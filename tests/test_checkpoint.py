@@ -609,3 +609,129 @@ def test_locate_then_fold_differential_every_commit(tmp_path):
         fast.set_current_version(T, "no-such-commit")
     with pytest.raises(UnknownCommitError):
         fast.commit_at_timestamp(T, before_genesis)
+
+
+# -- one-pass checkout and metadata-only history ----------------------------
+
+
+def test_metastore_checkout_lists_once_and_reads_each_commit_once(tmp_path):
+    """A VersionedMetastore checkout k commits behind the newest lists the
+    log directory once and reads no commit file twice: the tracker proves
+    the target exists and folds it in the same newest-first pass."""
+    from chronicles_spark.core.model import PartitionSchema, TableDefinition
+    from chronicles_spark.spark.metastore import InMemoryMetastore
+    from chronicles_spark.versioned_metastore import VersionedMetastore
+
+    root = str(tmp_path / "log")
+    _, commits = _build_log(root, n_commits=250, interval=10)
+    table = TableDefinition(T, str(tmp_path / "data"), PartitionSchema(("date",)))
+    truth = FileBackedVersionTracker(root, checkpoint_interval=None)
+    for k in (0, 7, 23):
+        tr, cfs = _counted(root)
+        ms = InMemoryMetastore()
+        ms.create_table(table)
+        desired, _ = VersionedMetastore(tr, ms).checkout(table, commits[-1 - k])
+        reads = _commit_reads(cfs)
+        assert len(reads) == len(set(reads)), (k, len(reads), len(set(reads)))
+        assert len(cfs.lists) == 1, (k, cfs.lists)
+        assert desired == truth.version_at(T, commits[-1 - k])
+        assert ms.current_version(table) == desired
+        assert tr.head_commit_id(T) == commits[-1 - k]
+
+
+def test_checkout_and_updates_differential(tmp_path):
+    """Differential: on a seeded log with removals, a rollback, commits
+    re-surfaced by a later write and equal timestamps, the files
+    tracker's metadata-only ``updates()`` equals the metadata of its full
+    ``table_state`` (newest first), and its one-pass ``_checkout``
+    returns the version and leaves the head that ``set_current_version``
+    + ``current_version`` give on a checkpoint-free tracker — also after
+    ``archive_commits``, with a crash-leftover live copy of an archived
+    commit, and an unknown id still raises UnknownCommitError."""
+    import random
+    from datetime import datetime, timedelta, timezone
+
+    from chronicles_spark.core.ops import update_to_json
+    from chronicles_spark.trackers import UnknownCommitError
+
+    rng = random.Random(11)
+    root = str(tmp_path / "log")
+    fast = FileBackedVersionTracker(root, checkpoint_interval=10)
+    truth = FileBackedVersionTracker(root, checkpoint_interval=None)
+    base = datetime(2024, 5, 1, tzinfo=timezone.utc)
+    fast.init_table(T, is_snapshot=False, user_id="u", timestamp=base)
+    ms = 0
+    for i in range(90):
+        ms += rng.choice((0, 0, 1, 3))  # many equal timestamps
+        p = f"date=2024-02-{rng.randrange(1, 10):02d}"
+        op = (
+            RemovePartition(Partition.parse(p))
+            if rng.random() < 0.2 else _add(p)
+        )
+        meta = TableUpdateMetadata.new(
+            "u", f"c{i}", base + timedelta(milliseconds=ms + 1)
+        )
+        fast.commit(T, TableUpdate(meta, (op,)))
+        if i == 60:  # roll back; the next write re-surfaces 31..60
+            fast.set_current_version(
+                T, truth.table_state(T).updates[31].metadata.commit_id
+            )
+    updates = truth.table_state(T).updates
+    head = fast.head_commit_id(T)
+
+    def check_updates():
+        want = [u.metadata for u in reversed(truth.table_state(T).updates)]
+        assert fast.updates(T) == want
+        assert truth.updates(T) == want
+
+    def check_checkout(u):
+        cid = u.metadata.commit_id
+        got = fast._checkout(T, cid)
+        got_head = fast.head_commit_id(T)
+        truth.set_current_version(T, cid)
+        assert got == truth.current_version(T), cid
+        assert got_head == truth.head_commit_id(T) == cid
+        assert fast.current_version(T) == got, cid
+
+    def check_unknown():
+        before = fast.head_commit_id(T)
+        for tr in (fast, truth):
+            with pytest.raises(UnknownCommitError):
+                tr._checkout(T, "no-such-commit")
+        assert fast.head_commit_id(T) == before
+
+    check_updates()
+    for u in updates:
+        check_checkout(u)
+    check_unknown()
+
+    fast.set_current_version(T, head)
+    out = fast.archive_commits(T, retain_checkpoints=2)
+    n = out["archived"]
+    assert n > 0
+    check_updates()
+    for u in updates[:3] + updates[n - 2:n + 2] + updates[-3:]:
+        check_checkout(u)
+    check_unknown()
+
+    # a crash between an archive write and its live-file deletes leaves
+    # identical live copies of archived commits: deduped, not doubled
+    d = fast._table_dir(T)
+    floor = fast._read_floor_seq(d)
+    fast.fs.write_text(
+        fast.fs.join(d, f"table_update_{floor:013d}.json"),
+        update_to_json(updates[n - 1]),
+    )
+    check_updates()
+    assert len(fast.updates(T)) == len(updates)
+    for u in updates[n - 2:n + 1] + updates[-2:]:
+        check_checkout(u)
+
+    # a DIFFERENT commit in an archived slot fails the metadata read too
+    forged = TableUpdate(TableUpdateMetadata.new("evil", "reclaimed"), ())
+    fast.fs.write_text(
+        fast.fs.join(d, f"table_update_{floor:013d}.json"),
+        update_to_json(forged),
+    )
+    with pytest.raises(RuntimeError, match="DIFFERENT commits"):
+        fast.updates(T)

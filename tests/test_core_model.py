@@ -53,6 +53,37 @@ def test_partition_resolve_and_hive_expr():
     assert Partition.parse("date=2019-01-30").hive_expr() == "(date='2019-01-30')"
 
 
+
+def test_partition_parse_memo_equals_fresh_instances():
+    """Memoized parses are equal, and hash-equal, to freshly built
+    partitions, so they mix with them as dict keys."""
+    s = "event_date=2019-01-30/processed_date=2019-01-31"
+    fresh = Partition.of(("event_date", "2019-01-30"), ("processed_date", "2019-01-31"))
+    a, b = Partition.parse(s), Partition.parse(s)
+    assert a == b == fresh
+    assert hash(a) == hash(b) == hash(fresh)
+    assert {fresh: 1}[a] == 1
+    assert a.path == fresh.path == s
+
+
+def test_partition_parse_invalid_raises_every_call():
+    for _ in range(2):
+        with pytest.raises(ValueError, match="invalid partition string"):
+            Partition.parse("no-equals-sign")
+
+
+def test_partition_path_survives_pickle():
+    import pickle
+
+    computed = Partition.parse("year=2019/month=01")
+    assert computed.path == "year=2019/month=01"  # cached before pickling
+    untouched = Partition.of(("day", "31"))
+    for p in (computed, untouched):
+        q = pickle.loads(pickle.dumps(p))
+        assert q == p and hash(q) == hash(p)
+        assert q.path == "/".join(f"{k}={v}" for k, v in q.column_values)
+
+
 # --- table names (ModelSpec.scala:67-87) -----------------------------------
 
 def test_table_name_parse():

@@ -103,3 +103,51 @@ def test_diff_snapshot():
     assert compute_changes(SnapshotTableVersion(V1), SnapshotTableVersion(V1)) == []
     with pytest.raises(TypeError):
         compute_changes(SnapshotTableVersion(V1), PartitionedTableVersion({}))
+
+
+def _reference_changes(current, target):
+    """The diff spelled out with freshly joined paths: adds and updates
+    in target path order, then removes in current path order."""
+    def path(p):
+        return "/".join(f"{k}={v}" for k, v in p.column_values)
+
+    cur, tgt = current.partition_versions, target.partition_versions
+    ops = []
+    for p in sorted(tgt, key=path):
+        if p not in cur:
+            ops.append(AddPartition(p, tgt[p]))
+        elif cur[p] != tgt[p]:
+            ops.append(UpdatePartitionVersion(p, tgt[p]))
+    ops.extend(RemovePartitionOp(p) for p in sorted(cur, key=path) if p not in tgt)
+    return ops
+
+
+def test_diff_2000_partitions_matches_reference_order():
+    """A seeded 2,000-partition pair: memoized parses on one side, fresh
+    instances on the other; ops and their order equal the reference."""
+    import hashlib
+    import random
+
+    rng = random.Random(2000)
+    paths = [f"date=2019-{m:02d}-{d:02d}/h={h}" for m in range(1, 13)
+             for d in range(1, 29) for h in (0, 1, 2, 3, 5, 7)][:2000]
+    rng.shuffle(paths)
+    labels = [Version(f"v{i}") for i in range(5)]
+    cur = PartitionedTableVersion(
+        {Partition.parse(s): rng.choice(labels) for s in paths if rng.random() > 0.1}
+    )
+    tgt = PartitionedTableVersion({
+        Partition(tuple(tuple(kv.split("=", 1)) for kv in s.split("/"))):
+        rng.choice(labels)
+        for s in paths if rng.random() > 0.1
+    })
+    ops = compute_changes(cur, tgt)
+    assert ops == _reference_changes(cur, tgt)
+    # digest of the same diff before the partition kernels were memoized
+    digest = hashlib.sha256("\n".join(map(repr, ops)).encode()).hexdigest()
+    assert (len(ops), digest) == (
+        1686, "39d2f0433bed977163721390c6f51269456c5df8d1aa7a0dbf78625c013e5c39"
+    )
+    kinds = {type(op) for op in ops}
+    assert kinds == {AddPartition, UpdatePartitionVersion, RemovePartitionOp}
+    assert compute_changes(tgt, tgt) == []

@@ -359,3 +359,30 @@ def test_commit_at_timestamp_resolution(tracker):
     )
     with pytest.raises(UnknownCommitError):
         tracker.commit_at_timestamp(T, t0 - timedelta(seconds=1))
+
+
+def test_checkout_moves_head_and_returns_the_fold(tracker):
+    """``_checkout`` (the tracker half of VersionedMetastore.checkout)
+    returns what ``version_at`` gives and leaves the head on the commit,
+    on every backend; the log crosses the files tracker's default
+    checkpoint interval, so its one-pass path runs too.  Unknown ids and
+    tables raise without moving the head."""
+    rng = random.Random(5)
+    tracker.init_table(T, is_snapshot=False, user_id="alice")
+    ids = []
+    for i in range(130):
+        p = Partition.parse(f"date=2019-01-{rng.randrange(1, 8):02d}")
+        op = RemovePartition(p) if rng.random() < 0.2 else AddPartitionVersion(p, generate_version())
+        ids.append(_commit(tracker, op))
+        if i == 110:  # roll back; the next write re-surfaces 90..110
+            tracker.set_current_version(T, ids[90])
+    for cid in ids[::10] + ids[-3:] + ids[85:95]:
+        got = tracker._checkout(T, cid)
+        assert got == tracker.version_at(T, cid), cid
+        assert tracker.table_state(T).current_version == cid
+        assert tracker.current_version(T) == got
+    with pytest.raises(UnknownCommitError):
+        tracker._checkout(T, "no-such-commit")
+    assert tracker.table_state(T).current_version == cid
+    with pytest.raises(UnknownTableError):
+        tracker._checkout(TableName("x", "y"), ids[0])
