@@ -1350,14 +1350,17 @@ class FileBackedVersionTracker(VersionTracker):
         twice.  A located commit proves existence exactly as
         :meth:`set_current_version`'s scan does.  When the fast path
         cannot answer (no usable checkpoint, an archived or unknown id, a
-        racing archival) the base class's set-then-resolve answers."""
+        racing archival) :meth:`set_current_version` checks the id and
+        moves the head, and the full fold resolves it: ``current_version``
+        would only repeat the fast path that just failed for this commit."""
         d = self._table_dir(table)
         if self.fs.exists(self.fs.join(d, "table-metadata")):
             tv = self._fast_resolve(d, commit_id)
             if tv is not None:
                 self._set_head(table, commit_id)
                 return tv
-        return super()._checkout(table, commit_id)
+        self.set_current_version(table, commit_id)
+        return VersionTracker.current_version(self, table)
 
     def commit_at_timestamp(self, table: TableName, ts) -> str:
         """The newest log-ordered commit whose timestamp is ≤ ``ts`` (the
