@@ -849,12 +849,9 @@ class FileBackedVersionTracker(VersionTracker):
                     )
         for s, n in live:
             if (lo is None or s > lo) and (hi is None or s <= hi):
-                # a file deleted between listing and read raises
-                # _ArchiveVanished: a racing archival PACKED this commit
-                # into an artifact our stale listing doesn't know —
-                # skipping it would silently drop a committed update from
-                # the merged view, so the caller retries from a fresh
-                # listing instead
+                # a file deleted since the listing was PACKED by a racing
+                # archival: skipping it would silently drop a committed
+                # update, so _read_doc raises and the caller re-lists
                 doc = self._read_doc(d, n)
                 prev = by.get(s)
                 if prev is not None and prev[0] != doc["commit_id"]:
