@@ -95,7 +95,7 @@ from ..core.ops import (
     RemovePartition,
     TableUpdate,
     TableUpdateMetadata,
-    metadata_from_dict,
+    metadata_from_json,
     update_from_dict,
     update_from_json,
     update_to_json,
@@ -833,8 +833,11 @@ class FileBackedVersionTracker(VersionTracker):
         commit's ``TableUpdateMetadata`` instead — a live commit's
         operations are never decoded, and an archived one's comes from
         the process cache's already-decoded update."""
-        decode = metadata_from_dict if metadata_only else update_from_dict
-        by: dict = {}  # seq -> (commit id, record)
+        if metadata_only:
+            decode, meta = metadata_from_json, lambda m: m
+        else:
+            decode, meta = update_from_json, lambda u: u.metadata
+        by: dict = {}
         for last, _, name in archives:
             if lo is not None and last <= lo:
                 continue  # whole chunk below the range: zero reads
@@ -843,18 +846,24 @@ class FileBackedVersionTracker(VersionTracker):
                 continue  # whole chunk above the range: zero reads
             for s, u in self._archive_entries(d, name):
                 if (lo is None or s > lo) and (hi is None or s <= hi):
-                    by[s] = (
-                        u.metadata.commit_id,
-                        u.metadata if metadata_only else u,
-                    )
+                    by[s] = u.metadata if metadata_only else u
         for s, n in live:
             if (lo is None or s > lo) and (hi is None or s <= hi):
-                # a file deleted since the listing was PACKED by a racing
-                # archival: skipping it would silently drop a committed
-                # update, so _read_doc raises and the caller re-lists
-                doc = self._read_doc(d, n)
+                path = self.fs.join(d, n)
+                try:
+                    u = decode(self.fs.read_text(path))
+                except FileNotFoundError:
+                    # deleted between listing and read: a racing archival
+                    # PACKED this commit into an artifact our stale
+                    # listing doesn't know — skipping it would silently
+                    # drop a committed update from the merged view, so
+                    # force a retry from a fresh listing instead
+                    raise _ArchiveVanished(path) from None
                 prev = by.get(s)
-                if prev is not None and prev[0] != doc["commit_id"]:
+                if (
+                    prev is not None
+                    and meta(prev).commit_id != meta(u).commit_id
+                ):
                     # a CAS writer that claimed a just-freed slot holds it
                     # only for the instant between its conditional create
                     # and its own post-claim floor check (which removes
@@ -863,19 +872,19 @@ class FileBackedVersionTracker(VersionTracker):
                     # BYPASSED the floor protocol (pre-archival code
                     # version) — ambiguous log order, fail loudly.
                     time.sleep(0.05)
-                    if not self.fs.exists(self.fs.join(d, n)):
+                    if not self.fs.exists(path):
                         continue  # transient claim resolved; archived wins
                     raise RuntimeError(
                         f"commit sequence slot {s} holds DIFFERENT commits "
-                        f"archived ({prev[0]}) and live "
-                        f"({doc['commit_id']}) — an archived slot was "
+                        f"archived ({meta(prev).commit_id}) and live "
+                        f"({meta(u).commit_id}) — an archived slot was "
                         "re-claimed by a writer that bypassed the archive "
                         "floor (all writers must run an archival-aware "
                         "version); the log order is ambiguous and no read "
                         "can be trusted until repaired"
                     )
-                by[s] = (doc["commit_id"], decode(doc))
-        return [(s, by[s][1]) for s in sorted(by)]
+                by[s] = u
+        return [(s, by[s]) for s in sorted(by)]
 
     def _read_floor_seq(self, d: str) -> int:
         """Highest archived commit seq per the floor doc (-1 when no
