@@ -152,7 +152,3 @@ def update_to_json(u: TableUpdate) -> str:
 
 def update_from_json(s: str) -> TableUpdate:
     return update_from_dict(json.loads(s))
-
-
-def metadata_from_json(s: str) -> TableUpdateMetadata:
-    return metadata_from_dict(json.loads(s))

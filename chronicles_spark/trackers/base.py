@@ -426,12 +426,13 @@ class VersionTracker(abc.ABC):
     def _checkout(self, table: TableName, commit_id: str):
         """Move the head to an existing commit and return the folded table
         version there — the tracker half of ``VersionedMetastore.checkout``
-        (VersionedMetastore.scala:71-78).  This default is
-        :meth:`set_current_version` followed by :meth:`current_version`;
-        a backend that can prove the commit exists and fold it in one pass
-        overrides it.  Raises UnknownTableError / UnknownCommitError."""
-        self.set_current_version(table, commit_id)
-        return self.current_version(table)
+        (VersionedMetastore.scala:71-78).  :meth:`version_at` proves the
+        commit exists and folds it in one pass (O(tail) on the
+        checkpointed backends); it raises UnknownTableError /
+        UnknownCommitError before the head moves."""
+        tv = self.version_at(table, commit_id)
+        self._set_head(table, commit_id)
+        return tv
 
     # -- tags (beyond reference parity: git-tag-style data-version pinning) --
     # A tag is an IMMUTABLE named pointer to a commit — "the exact corpus

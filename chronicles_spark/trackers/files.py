@@ -95,7 +95,7 @@ from ..core.ops import (
     RemovePartition,
     TableUpdate,
     TableUpdateMetadata,
-    metadata_from_json,
+    metadata_from_dict,
     update_from_dict,
     update_from_json,
     update_to_json,
@@ -834,7 +834,9 @@ class FileBackedVersionTracker(VersionTracker):
         operations are never decoded, and an archived one's comes from
         the process cache's already-decoded update."""
         if metadata_only:
-            decode, meta = metadata_from_json, lambda m: m
+            decode, meta = (
+                lambda s: metadata_from_dict(json.loads(s)), lambda m: m
+            )
         else:
             decode, meta = update_from_json, lambda u: u.metadata
         by: dict = {}
@@ -1348,25 +1350,6 @@ class FileBackedVersionTracker(VersionTracker):
                 self._set_head(table, commit_id)
                 return
         super().set_current_version(table, commit_id)
-
-    def _checkout(self, table: TableName, commit_id: str):
-        """Move the head to ``commit_id`` and return its folded version in
-        one pass: ``_fast_resolve`` lists the log once, locates the commit
-        once and folds it from a checkpoint, so no commit file is read
-        twice.  A located commit proves existence exactly as
-        :meth:`set_current_version`'s scan does.  When the fast path
-        cannot answer (no usable checkpoint, an archived or unknown id, a
-        racing archival) :meth:`set_current_version` checks the id and
-        moves the head, and the full fold resolves it: ``current_version``
-        would only repeat the fast path that just failed for this commit."""
-        d = self._table_dir(table)
-        if self.fs.exists(self.fs.join(d, "table-metadata")):
-            tv = self._fast_resolve(d, commit_id)
-            if tv is not None:
-                self._set_head(table, commit_id)
-                return tv
-        self.set_current_version(table, commit_id)
-        return VersionTracker.current_version(self, table)
 
     def commit_at_timestamp(self, table: TableName, ts) -> str:
         """The newest log-ordered commit whose timestamp is ≤ ``ts`` (the

@@ -638,8 +638,8 @@ def test_metastore_checkout_lists_once_and_reads_each_commit_once(tmp_path):
         assert ms.current_version(table) == desired
         assert tr.head_commit_id(T) == commits[-1 - k]
     # below the oldest checkpoint the one-pass path cannot answer: the
-    # fallback checks the id and folds the whole log once, without
-    # repeating the failed scan (3 listings, each file read <= 3 times)
+    # full fold checks the id and folds the whole log once, after the
+    # failed scan (2 listings, each file read <= 2 times)
     from collections import Counter
 
     tr, cfs = _counted(root)
@@ -647,8 +647,9 @@ def test_metastore_checkout_lists_once_and_reads_each_commit_once(tmp_path):
     ms.create_table(table)
     desired, _ = VersionedMetastore(tr, ms).checkout(table, commits[3])
     assert desired == truth.version_at(T, commits[3])
-    assert len(cfs.lists) <= 3, cfs.lists
-    assert max(Counter(_commit_reads(cfs)).values()) <= 3
+    assert len(cfs.lists) <= 2, cfs.lists
+    assert max(Counter(_commit_reads(cfs)).values()) <= 2
+    assert tr.head_commit_id(T) == commits[3]
 
 
 def test_checkout_and_updates_differential(tmp_path):
