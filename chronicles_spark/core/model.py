@@ -99,14 +99,26 @@ class Partition:
         return Partition(tuple(pairs))
 
     @staticmethod
-    @functools.lru_cache(maxsize=1 << 14)
     def parse(s: str) -> "Partition":
         """Parse ``k1=v1/k2=v2`` (reference: model.scala:13-16, 45-50).
 
         Memoized: every checkpoint fold parses the same partition strings
-        again, and a ``Partition`` is immutable, so equal strings may share
-        one instance (and its joined ``path``).  An invalid string is not
-        cached and raises on every call."""
+        again, and a ``Partition`` is immutable, so equal strings share one
+        instance (its joined ``path``, and identity hits in dict lookups).
+        The memo keeps the first ``_PARSE_MEMO_MAX`` distinct strings and
+        then stops adding: a fold over more partitions than that, in the
+        same order each time, would evict every entry before its reuse
+        under LRU and pay the bookkeeping for no hit.  An invalid string
+        is not memoized and raises on every call."""
+        p = _PARSE_MEMO.get(s)
+        if p is None:
+            p = Partition._parse(s)
+            if len(_PARSE_MEMO) < _PARSE_MEMO_MAX:
+                _PARSE_MEMO[s] = p
+        return p
+
+    @staticmethod
+    def _parse(s: str) -> "Partition":
         parts = s.split("/")
         out = []
         for p in parts:
@@ -115,6 +127,13 @@ class Partition:
                 raise ValueError(f"invalid partition string: {s!r}")
             out.append((m.group(1), m.group(2)))
         return Partition(tuple(out))
+
+
+# Partition.parse's memo: string → shared instance.  16,384 entries take
+# about 11 MB with their keys and joined paths (two-column strings of
+# ~25 characters), eight times a 2,000-partition table.
+_PARSE_MEMO: Dict[str, Partition] = {}
+_PARSE_MEMO_MAX = 1 << 14
 
 
 @dataclass(frozen=True)

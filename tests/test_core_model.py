@@ -53,7 +53,6 @@ def test_partition_resolve_and_hive_expr():
     assert Partition.parse("date=2019-01-30").hive_expr() == "(date='2019-01-30')"
 
 
-
 def test_partition_parse_memo_equals_fresh_instances():
     """Memoized parses are equal, and hash-equal, to freshly built
     partitions, so they mix with them as dict keys."""
@@ -70,6 +69,22 @@ def test_partition_parse_invalid_raises_every_call():
     for _ in range(2):
         with pytest.raises(ValueError, match="invalid partition string"):
             Partition.parse("no-equals-sign")
+
+
+def test_partition_parse_memo_stops_adding_when_full(monkeypatch):
+    """Past its bound the memo keeps what it holds and adds nothing; the
+    strings beyond it still parse correctly, to fresh instances."""
+    from chronicles_spark.core import model
+
+    monkeypatch.setattr(model, "_PARSE_MEMO", {})
+    monkeypatch.setattr(model, "_PARSE_MEMO_MAX", 3)
+    strings = [f"day={i}" for i in range(6)]
+    first = [Partition.parse(s) for s in strings]
+    again = [Partition.parse(s) for s in strings]
+    assert len(model._PARSE_MEMO) == 3
+    assert all(a is b for a, b in zip(first[:3], again[:3]))
+    assert all(a is not b and a == b for a, b in zip(first[3:], again[3:]))
+    assert [p.path for p in again] == strings
 
 
 def test_partition_path_survives_pickle():
