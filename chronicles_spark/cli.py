@@ -1408,7 +1408,8 @@ class CliClient:
         self.console.println(
             f"{verb} {out['archived']} commit file(s) through seq "
             f"{out['through_seq']} (repaired {out['repaired']}, pruned "
-            f"{out['pruned_checkpoints']} checkpoint file(s))"
+            f"{out['pruned_checkpoints']} checkpoint and "
+            f"{out['pruned_sidecars']} commit-index file(s))"
             + (
                 f" -> {len(chunks)} chunk(s), newest {out['archive']}"
                 if chunks else ""

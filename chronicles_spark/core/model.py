@@ -58,6 +58,24 @@ class Partition:
         if not self.column_values:
             raise ValueError("partition must have at least one column value")
 
+    def __hash__(self) -> int:
+        """The dataclass hash, computed once per instance: every fold
+        state and metastore diff looks partitions up in dicts, and
+        re-hashing the ``column_values`` tuple per lookup dominated them.
+        The cached value stays out of the pickled state
+        (:meth:`__getstate__`), because string hashes are seeded per
+        process."""
+        try:
+            return self._hash
+        except AttributeError:
+            h = self.__dict__["_hash"] = hash((self.column_values,))
+            return h
+
+    def __getstate__(self) -> dict:
+        state = dict(self.__dict__)
+        state.pop("_hash", None)
+        return state
+
     @functools.cached_property
     def path(self) -> str:
         """The raw ``k1=v1/k2=v2`` fragment, joined once per instance

@@ -9,6 +9,11 @@ and layout helpers :157-175. Layout under a root directory:
         table_update_<ms13>.json      # one commit per file; the 13-digit
                                       # zero-padded monotonic-ms filename
                                       # sorts in commit order
+        checkpoint_<seq13>.json       # fold checkpoint (see below)
+        commits_<seq13>.json          # commit index of one checkpoint cut:
+                                      # {"lo": seq, "commits": [[seq, id,
+                                      # timestamp, user, message], ...]}
+                                      # for the live commits in (lo, seq]
 
 Storage goes through the :mod:`.fs` facade (≙ PureFileSystem.scala:13-52),
 so the commit log can live on local disk (default), in memory
@@ -57,13 +62,23 @@ it — O(tail), not O(log), table resolution on a million-commit table.
 The checkpoint is a pure function of log ORDER (never of the head), so it
 stays valid across rollbacks: a head at or after the checkpoint folds as
 checkpoint+tail; a head rolled back BEFORE it is located by a newest-first
-commit-id scan and folds from the newest retained checkpoint at or below
+commit-id walk and folds from the newest retained checkpoint at or below
 it (reference cutoff semantics, VersionTracker.scala:37-55, including
 re-surfacing rolled-back commits when a later write re-advances the head
-past them).  Checkout and time travel thus cost O(distance from the newest
-commit), and each commit file is read and decoded at most once per
-resolution.  A missing or corrupt checkpoint is never an error — readers
+past them).  A missing or corrupt checkpoint is never an error — readers
 degrade to the full fold; commit files remain the only source of truth.
+
+Commit index: each cut also writes ``commits_<seq>.json``, the header
+(id, timestamp, user, message) of every commit in its segment, copied
+verbatim from the commit files the cut folds.  Locating a commit by id
+or timestamp and listing ``updates()`` walk the log newest-first over the
+tail files above the newest cut and then one index per cut, so checkout,
+time travel and history read about (cuts + ``checkpoint_interval``)
+files rather than every commit newer than their target, and each commit
+file is read and decoded at most once per resolution.  An index is used
+only when its seq list equals the live seqs the same listing shows in its
+segment; any other segment (gap-filled, archived, index missing or
+corrupt, log written before the index existed) is read file by file.
 """
 
 from __future__ import annotations
@@ -95,7 +110,6 @@ from ..core.ops import (
     RemovePartition,
     TableUpdate,
     TableUpdateMetadata,
-    metadata_from_dict,
     update_from_dict,
     update_from_json,
     update_to_json,
@@ -114,6 +128,9 @@ from .fs import FileSystem, LocalFileSystem, filesystem_for
 _TABLE_DIR_RE = re.compile(r"^_chronicles_table_([\w\-]+)\.([\w\-]+)$")
 _UPDATE_FILE_RE = re.compile(r"^table_update_(\d+)\.json$")
 _CHECKPOINT_FILE_RE = re.compile(r"^checkpoint_(\d+)\.json$")
+# a cut's commit index (module docstring); the name matches neither a
+# commit, an archive nor a checkpoint, so readers that predate it skip it
+_SIDECAR_FILE_RE = re.compile(r"^commits_(\d+)\.json$")
 # commit-log archive: a checkpoint-covered PREFIX of commit files packed
 # into size-capped CHUNK artifacts (docs/scale.md "commit-log archival").
 # The filename carries (first_seq, last_seq, n_entries, crc32-of-body):
@@ -148,6 +165,25 @@ def _entry_pair(e) -> tuple:
     if isinstance(e, dict):
         return int(e["s"]), e["u"]
     return int(e[0]), e[1]
+
+
+def _doc_header(seq: int, doc: dict) -> list:
+    """A commit's commit-index record, ``[seq, commit_id, timestamp,
+    user_id, message]``: the commit document's own metadata strings."""
+    return [
+        seq, doc["commit_id"], doc["timestamp"], doc["user_id"], doc["message"]
+    ]
+
+
+def _header_metadata(rec) -> TableUpdateMetadata:
+    """The metadata of a commit-index record — equal to
+    ``metadata_from_dict`` of the commit document it was copied from."""
+    return TableUpdateMetadata(
+        commit_id=rec[1],
+        user_id=rec[3],
+        message=rec[4],
+        timestamp=datetime.fromisoformat(rec[2]),
+    )
 
 
 def _select_disjoint_cover(seqs_by: dict) -> set:
@@ -536,16 +572,19 @@ class FileBackedVersionTracker(VersionTracker):
     def updates(self, table: TableName) -> List[TableUpdateMetadata]:
         """Commit history, most recent first (VersionTracker.scala:58-61),
         over the same merged, seq-deduped log as :meth:`table_state`
-        (archived commits included), but each live commit file is
-        ``json.loads``-ed into its metadata only: its operations — the
-        whole table for a bulk-load commit — are never decoded."""
+        (archived commits included), but metadata only: live commits come
+        from the newest-first header walk (:meth:`_headers`), so a
+        checkpointed log reads its tail files and one commit index per
+        cut, and no commit's operations are decoded."""
         d = self._table_dir(table)
         if not self.fs.exists(self.fs.join(d, "table-metadata")):
             raise UnknownTableError(table)
 
         def _go():
-            live, archives = self._scan_dir(d)
-            merged = self._merged_updates(d, live, archives, metadata_only=True)
+            live, archives, _, sides = self._scan_cuts(d)
+            merged = self._merged_updates(
+                d, live, archives, metadata_only=True, sides=sides
+            )
             return [m for _, m in reversed(merged)]
 
         return self._retry_vanished(_go)
@@ -681,20 +720,27 @@ class FileBackedVersionTracker(VersionTracker):
         archives [(last_seq, n_entries, name)] ascending[, checkpoint
         seqs ascending]) — every fast path derives its counts from this
         single listing, never from archive reads."""
-        live, archives, cks = [], [], []
+        live, archives, cks, _ = self._scan_cuts(d)
+        return (live, archives, cks) if with_checkpoints else (live, archives)
+
+    def _scan_cuts(self, d: str):
+        """:meth:`_scan_dir` with checkpoints, plus the commit-index seqs
+        (ascending) of the same listing."""
+        live, archives, cks, sides = [], [], [], []
         for n in self.fs.list_dir(d):
             if (m := _UPDATE_FILE_RE.match(n)):
                 live.append((int(m.group(1)), n))
             elif (m := _ARCHIVE_FILE_RE.match(n)):
                 archives.append((int(m.group("last")), int(m.group("n")), n))
-            elif with_checkpoints and (m := _CHECKPOINT_FILE_RE.match(n)):
+            elif (m := _CHECKPOINT_FILE_RE.match(n)):
                 cks.append(int(m.group(1)))
+            elif (m := _SIDECAR_FILE_RE.match(n)):
+                sides.append(int(m.group(1)))
         live.sort()
         archives.sort()
-        if with_checkpoints:
-            cks.sort()
-            return live, archives, cks
-        return live, archives
+        cks.sort()
+        sides.sort()
+        return live, archives, cks, sides
 
     @staticmethod
     def _arch_stats(archives) -> "tuple[int | None, int]":
@@ -820,7 +866,7 @@ class FileBackedVersionTracker(VersionTracker):
 
     def _merged_updates(
         self, d: str, live, archives, lo: "int | None" = None,
-        hi: "int | None" = None, metadata_only: bool = False,
+        hi: "int | None" = None, metadata_only: bool = False, sides=(),
     ) -> list:
         """[(seq, update)] over archives + live files, ``lo < seq <= hi``
         (None = unbounded), seq-deduped.  A sequence slot present both
@@ -829,16 +875,41 @@ class FileBackedVersionTracker(VersionTracker):
         archived slot was re-claimed, which the write-side floor guards
         exist to prevent — fail loudly rather than pick an order.
 
-        The decode hook: with ``metadata_only`` each record is the
-        commit's ``TableUpdateMetadata`` instead — a live commit's
-        operations are never decoded, and an archived one's comes from
-        the process cache's already-decoded update."""
+        With ``metadata_only`` each record is the commit's
+        ``TableUpdateMetadata`` instead: live commits come from the
+        header walk over the listing's commit indexes ``sides``, so no
+        live commit's operations are decoded, and an archived one's
+        comes from the process cache's already-decoded update."""
+
+        def _in(s) -> bool:
+            return (lo is None or s > lo) and (hi is None or s <= hi)
+
+        def _decoded():
+            for s, n in live:
+                if _in(s):
+                    path = self.fs.join(d, n)
+                    try:
+                        u = update_from_json(self.fs.read_text(path))
+                    except FileNotFoundError:
+                        # deleted between listing and read: a racing
+                        # archival PACKED this commit into an artifact
+                        # our stale listing doesn't know — skipping it
+                        # would silently drop a committed update from the
+                        # merged view, so force a retry from a fresh
+                        # listing instead
+                        raise _ArchiveVanished(path) from None
+                    yield s, n, u
+
         if metadata_only:
-            decode, meta = (
-                lambda s: metadata_from_dict(json.loads(s)), lambda m: m
+            meta = lambda m: m  # noqa: E731
+            records = (
+                (*live[i], _header_metadata(rec))
+                for i, rec, _ in self._headers(d, live, archives, sides)
+                if _in(live[i][0])
             )
         else:
-            decode, meta = update_from_json, lambda u: u.metadata
+            meta = lambda u: u.metadata  # noqa: E731
+            records = _decoded()
         by: dict = {}
         for last, _, name in archives:
             if lo is not None and last <= lo:
@@ -847,45 +918,32 @@ class FileBackedVersionTracker(VersionTracker):
             if hi is not None and first is not None and first > hi:
                 continue  # whole chunk above the range: zero reads
             for s, u in self._archive_entries(d, name):
-                if (lo is None or s > lo) and (hi is None or s <= hi):
+                if _in(s):
                     by[s] = u.metadata if metadata_only else u
-        for s, n in live:
-            if (lo is None or s > lo) and (hi is None or s <= hi):
+        for s, n, u in records:
+            prev = by.get(s)
+            if prev is not None and meta(prev).commit_id != meta(u).commit_id:
                 path = self.fs.join(d, n)
-                try:
-                    u = decode(self.fs.read_text(path))
-                except FileNotFoundError:
-                    # deleted between listing and read: a racing archival
-                    # PACKED this commit into an artifact our stale
-                    # listing doesn't know — skipping it would silently
-                    # drop a committed update from the merged view, so
-                    # force a retry from a fresh listing instead
-                    raise _ArchiveVanished(path) from None
-                prev = by.get(s)
-                if (
-                    prev is not None
-                    and meta(prev).commit_id != meta(u).commit_id
-                ):
-                    # a CAS writer that claimed a just-freed slot holds it
-                    # only for the instant between its conditional create
-                    # and its own post-claim floor check (which removes
-                    # the file and re-claims above).  Give that window one
-                    # beat; a claim still present is a writer that
-                    # BYPASSED the floor protocol (pre-archival code
-                    # version) — ambiguous log order, fail loudly.
-                    time.sleep(0.05)
-                    if not self.fs.exists(path):
-                        continue  # transient claim resolved; archived wins
-                    raise RuntimeError(
-                        f"commit sequence slot {s} holds DIFFERENT commits "
-                        f"archived ({meta(prev).commit_id}) and live "
-                        f"({meta(u).commit_id}) — an archived slot was "
-                        "re-claimed by a writer that bypassed the archive "
-                        "floor (all writers must run an archival-aware "
-                        "version); the log order is ambiguous and no read "
-                        "can be trusted until repaired"
-                    )
-                by[s] = u
+                # a CAS writer that claimed a just-freed slot holds it
+                # only for the instant between its conditional create
+                # and its own post-claim floor check (which removes the
+                # file and re-claims above).  Give that window one beat;
+                # a claim still present is a writer that BYPASSED the
+                # floor protocol (pre-archival code version) — ambiguous
+                # log order, fail loudly.
+                time.sleep(0.05)
+                if not self.fs.exists(path):
+                    continue  # transient claim resolved; archived wins
+                raise RuntimeError(
+                    f"commit sequence slot {s} holds DIFFERENT commits "
+                    f"archived ({meta(prev).commit_id}) and live "
+                    f"({meta(u).commit_id}) — an archived slot was "
+                    "re-claimed by a writer that bypassed the archive "
+                    "floor (all writers must run an archival-aware "
+                    "version); the log order is ambiguous and no read "
+                    "can be trusted until repaired"
+                )
+            by[s] = u
         return [(s, by[s]) for s in sorted(by)]
 
     def _read_floor_seq(self, d: str) -> int:
@@ -918,14 +976,85 @@ class FileBackedVersionTracker(VersionTracker):
         except FileNotFoundError:
             raise _ArchiveVanished(path) from None
 
-    def _locate(self, d: str, live, commit_id: str, lo: int = 0):
-        """``(index in live, parsed doc)`` of the newest live commit file
-        holding ``commit_id``, scanning ``live`` newest-first down to
-        ``live[lo]`` and reading each file once; None when the id is not
-        there.  Costs O(distance from the newest commit), not O(log)."""
-        for i in range(len(live) - 1, lo - 1, -1):
+    def _headers(self, d: str, live, archives, sides, stop: int = 0):
+        """Newest-first ``(i, rec, doc)`` for ``live[i]``, ``i >= stop``:
+        ``rec`` is the commit's ``_doc_header`` record and ``doc`` its
+        parsed file, or None when the record came from a commit index.
+
+        The walk reads the live files above the newest cut one by one,
+        then each cut's commit index in turn (``sides``, the listing's
+        index seqs), and the files of any segment whose index is missing,
+        corrupt or stale one by one — so a checkpointed log costs about
+        (cuts + ``checkpoint_interval``) reads.  An index is used only
+        when no live file sits at or below the archive floor, its cut
+        lies above the floor, and its seq list equals the live seqs of
+        ``(lo, cut]`` in this same listing; then its records are exactly
+        what reading those (immutable) files would give.  A file deleted
+        since the listing raises _ArchiveVanished."""
+        seqs = [s for s, _ in live]
+        floor = archives[-1][0] if archives else None
+        if floor is not None and seqs and seqs[0] <= floor:
+            sides = ()  # a gap-fill or crash leftover below the floor
+        hi, top = len(live), None  # live[hi:] (seqs above top) are done
+        for c in reversed(sides):
+            if hi <= stop or (floor is not None and c <= floor):
+                break
+            if top is not None and c > top:
+                continue  # inside a segment an index already covered
+            j = bisect.bisect_right(seqs, c)
+            for i in range(hi - 1, max(j, stop) - 1, -1):
+                doc = self._read_doc(d, live[i][1])
+                yield i, _doc_header(seqs[i], doc), doc
+            hi, top = j, c
+            if j <= stop:
+                return
+            got = self._read_sidecar(d, c, seqs, j)
+            if got is None:
+                continue  # this segment is read file by file
+            lo, recs = got
+            for k in range(len(recs) - 1, -1, -1):
+                i = j - len(recs) + k
+                if i < stop:
+                    return
+                yield i, recs[k], None
+            hi, top = j - len(recs), lo
+        for i in range(hi - 1, stop - 1, -1):
             doc = self._read_doc(d, live[i][1])
-            if doc["commit_id"] == commit_id:
+            yield i, _doc_header(seqs[i], doc), doc
+
+    def _read_sidecar(self, d: str, cut: int, seqs, j: int):
+        """``(lo, records)`` of ``commits_<cut>.json`` when its records'
+        seqs equal ``seqs`` in ``(lo, cut]`` (``seqs[:j]`` are the ones
+        at or below the cut), else None: missing, corrupt, or stale — a
+        commit gap-filled into the segment, or one archived or vanished
+        since the cut."""
+        try:
+            doc = json.loads(
+                self.fs.read_text(self.fs.join(d, f"commits_{cut:013d}.json"))
+            )
+            lo, recs = doc["lo"], doc["commits"]
+            if not isinstance(lo, int) or lo >= cut:
+                return None
+            # a malformed record (not five fields, a field not a string)
+            # drops out here and fails the seq comparison
+            got = [
+                r[0]
+                for r in recs
+                if len(r) == 5
+                and str is type(r[1]) is type(r[2]) is type(r[3]) is type(r[4])
+            ]
+            if got != seqs[bisect.bisect_right(seqs, lo):j]:
+                return None
+            return lo, recs
+        except (FileNotFoundError, KeyError, ValueError, TypeError, IndexError):
+            return None
+
+    def _locate(self, d: str, live, archives, sides, commit_id: str, stop: int = 0):
+        """``(index in live, parsed doc or None)`` of the newest live
+        commit holding ``commit_id`` at index ``>= stop``, by the header
+        walk; None when the id is not there."""
+        for i, rec, doc in self._headers(d, live, archives, sides, stop):
+            if rec[1] == commit_id:
                 return i, doc
         return None
 
@@ -996,9 +1125,9 @@ class FileBackedVersionTracker(VersionTracker):
         """Write a new checkpoint when ``checkpoint_interval`` commits have
         accumulated since the last one.  Incremental: reads only the tail
         commits after the previous checkpoint, so checkpointing stays O(1)
-        amortized per commit.  Crash-safe ordering: the checkpoint file is
-        written before the pointer; a crash between the two leaves the old
-        pointer valid."""
+        amortized per commit.  Crash-safe ordering: the cut's commit index,
+        then the checkpoint file, then the pointer; a crash between any
+        two leaves the old pointer valid."""
         if not self._checkpoint_interval:
             return
         # O(1) fast path: the exact check below LISTS the whole table dir
@@ -1044,18 +1173,20 @@ class FileBackedVersionTracker(VersionTracker):
             self._ck_pending[d] = len(tail)
             return
         self._ck_pending[d] = 0  # cutting now (every exit below counts)
+        try:
+            docs = [self._read_doc(d, n) for _, n in tail]
+            # a full rebuild must fold the ARCHIVED prefix too (every live
+            # file lies above the floor, checked above)
+            prefix = () if ck else tuple(
+                u for _, u in self._merged_updates(d, [], archives)
+            )
+        except _ArchiveVanished:
+            return  # consolidation raced the cut: skip it
+        updates = prefix + tuple(update_from_dict(o) for o in docs)
         if ck:
-            updates = self._read_updates(d, [n for _, n in tail])
             state = dict(ck["partitions"])
             snapshot_version = ck.get("snapshot_version")
         else:
-            # full rebuild must fold the ARCHIVED prefix too
-            try:
-                updates = tuple(
-                    u for _, u in self._merged_updates(d, live, archives)
-                )
-            except _ArchiveVanished:
-                return  # consolidation raced the rebuild: skip this cut
             state, snapshot_version = {}, None
         self._apply_to_state(state, updates)
         for u in updates:
@@ -1090,6 +1221,25 @@ class FileBackedVersionTracker(VersionTracker):
             body["pair_label"] = marker
         elif "pair_label" in ck:
             body["pair_label"] = ck["pair_label"]
+        # the cut's commit index, written BEFORE the checkpoint so an
+        # orphaned one is harmless: the tail's headers — on a rebuild only
+        # the newest checkpoint_interval of them, so its size stays
+        # bounded (older segments are read file by file).  A pure function
+        # of the commit files, so racers at the same cut write the same
+        # bytes; readers validate it against their own listing.
+        k = 0 if ck else max(0, len(tail) - self._checkpoint_interval)
+        self.fs.write_text(
+            self.fs.join(d, f"commits_{last_seq:013d}.json"),
+            json.dumps(
+                {
+                    "lo": tail[k - 1][0] if k else base_seq,
+                    "commits": [
+                        _doc_header(s, o) for (s, _), o in zip(tail[k:], docs[k:])
+                    ],
+                },
+                separators=(",", ":"),
+            ),
+        )
         ck_path = self.fs.join(d, f"checkpoint_{last_seq:013d}.json")
         ptr_path = self.fs.join(d, "_last_checkpoint")
         ptr_doc = json.dumps({"seq": last_seq})
@@ -1155,27 +1305,31 @@ class FileBackedVersionTracker(VersionTracker):
         path cannot answer (checkpoints disabled, no pointer, live files
         at or below the archive floor, no covering checkpoint at or below
         the commit, or a commit deeper than the newest
-        ``_FAST_RESOLVE_MAX_SEGMENTS`` retained checkpoints — e.g.
-        genesis-deep time travel, or an unknown id).
+        ``_FAST_RESOLVE_MAX_SEGMENTS`` retained checkpoints — e.g. an
+        unknown id, or travel below them on an archived log).
 
-        Locate, then fold: a newest-first scan of the live commit files
-        finds the commit's seq, comparing only each file's ``commit_id``;
+        Locate, then fold: the newest-first header walk
+        (:meth:`_headers`) finds the commit's seq, comparing only each
+        record's ``commit_id`` and reading one commit index per cut;
         then the newest retained checkpoint at or below that seq is read
         (older ones only when it fails ``_checkpoint_covers_prefix``) and
         only the commits in (checkpoint seq, target seq] are decoded and
         folded on it.  So each commit file is read and decoded at most
         once per resolution, one checkpoint body is read in the common
-        case, and the cost is O(distance the commit lags the newest
-        commit + checkpoint_interval), never the whole log.  Checkpoints
-        are never deleted above the archive floor (only the pointer
-        advances), and each is a pure function of log order, so cutoff
-        semantics equal the full fold's (including rolled-back commits
-        re-surfacing after a later write).  Retained checkpoints below
-        the archive floor are never used: their tail segments are
-        archived, so deeper travel takes the full fold (which reads the
-        archives).  ``checkpoint_interval=None`` disables the READ side
-        too, so a None-interval tracker is a true full-fold ground truth
-        even over a directory that already carries checkpoints."""
+        case, and the cost is O(cuts + checkpoint_interval), never the
+        whole log.  A commit below the oldest checkpoint of a log with no
+        archive (the genesis segment) folds from the empty state over the
+        live files up to it, the table kind read from ``table-metadata``
+        as the cuts do.  Checkpoints are never deleted above the archive
+        floor (only the pointer advances), and each is a pure function of
+        log order, so cutoff semantics equal the full fold's (including
+        rolled-back commits re-surfacing after a later write).  Retained
+        checkpoints below the archive floor are never used: their tail
+        segments are archived, so deeper travel takes the full fold
+        (which reads the archives).  ``checkpoint_interval=None``
+        disables the READ side too, so a None-interval tracker is a true
+        full-fold ground truth even over a directory that already
+        carries checkpoints."""
         if not self._checkpoint_interval:
             return None
         # the pointer is read BEFORE listing, so its checkpoint file is in
@@ -1183,7 +1337,7 @@ class FileBackedVersionTracker(VersionTracker):
         ptr = self._read_pointer_seq(d)
         if ptr is None:
             return None
-        live, archives, ck_seqs = self._scan_dir(d, with_checkpoints=True)
+        live, archives, ck_seqs, sides = self._scan_cuts(d)
         arch_last, arch_n = self._arch_stats(archives)
         seqs = [s for s, _ in live]
         if ptr not in ck_seqs or (
@@ -1194,13 +1348,16 @@ class FileBackedVersionTracker(VersionTracker):
             s
             for s in reversed(ck_seqs)
             if s <= ptr and (arch_last is None or s >= arch_last)
-        ][: self._FAST_RESOLVE_MAX_SEGMENTS]
+        ]
         if not cands:
             return None  # the pointer's cut lies below the archive floor
+        # the walk reaches the genesis segment when nothing is archived
+        # and every retained cut is within the segment bound
+        genesis = not archives and len(cands) <= self._FAST_RESOLVE_MAX_SEGMENTS
+        cands = cands[: self._FAST_RESOLVE_MAX_SEGMENTS]
+        stop = 0 if genesis else bisect.bisect_left(seqs, cands[-1])
         try:
-            hit = self._locate(
-                d, live, commit_id, bisect.bisect_left(seqs, cands[-1])
-            )
+            hit = self._locate(d, live, archives, sides, commit_id, stop)
             if hit is None:
                 return None  # deeper than the walked checkpoints, or unknown
             i, doc = hit
@@ -1212,16 +1369,27 @@ class FileBackedVersionTracker(VersionTracker):
                     ck, seqs, arch_last, arch_n
                 ):
                     continue  # corrupt or gap-filled cut: try an older one
-                j = bisect.bisect_right(seqs, c)
-                docs = [self._read_doc(d, n) for _, n in live[j:i]]
-                if j <= i:
-                    docs.append(doc)
-                return self._fold_checkpoint_plus(
-                    ck, [update_from_dict(o) for o in docs]
+                return self._fold_segment(
+                    d, ck, live, bisect.bisect_right(seqs, c), i, doc
                 )
+            if genesis and seqs[i] < cands[-1]:
+                empty = {
+                    "is_snapshot": self._is_snapshot_dir(d),
+                    "snapshot_version": None,
+                    "partitions": [],
+                }
+                return self._fold_segment(d, empty, live, 0, i, doc)
         except _ArchiveVanished:
             return None  # a racing archival: the full fold re-lists
         return None  # no usable checkpoint at or below the commit
+
+    def _fold_segment(self, d: str, ck: dict, live, j: int, i: int, doc):
+        """``ck`` + the commits ``live[j..i]`` folded; ``doc`` is
+        ``live[i]``'s parsed file when the locate already read it."""
+        docs = [self._read_doc(d, n) for _, n in live[j:i]]
+        if j <= i:
+            docs.append(doc if doc is not None else self._read_doc(d, live[i][1]))
+        return self._fold_checkpoint_plus(ck, [update_from_dict(o) for o in docs])
 
     def _checkpoint_body(self, d: str, seq: int) -> dict | None:
         """Parse + validate ``checkpoint_<seq>.json`` (any retained cut,
@@ -1333,17 +1501,20 @@ class FileBackedVersionTracker(VersionTracker):
 
     def set_current_version(self, table: TableName, commit_id: str) -> None:
         """Move head to an existing commit — rollback/forward
-        (VersionTracker.scala:71) — at O(distance from the newest commit):
-        existence is proven by a newest-first commit-id scan of the live
-        files, reading each once.  An id that is not among them (archived
+        (VersionTracker.scala:71) — at O(cuts + checkpoint_interval)
+        reads: existence is proven by the newest-first header walk over
+        the live commits (:meth:`_headers`).  An id that is not among them (archived
         prefix or unknown id), or a file that vanished mid-scan, takes
         the inherited full check, which reads the archives and raises
         UnknownTableError / UnknownCommitError."""
         d = self._table_dir(table)
         if self.fs.exists(self.fs.join(d, "table-metadata")):
-            live, _ = self._scan_dir(d)
+            live, archives, _, sides = self._scan_cuts(d)
             try:
-                found = self._locate(d, live, commit_id) is not None
+                found = (
+                    self._locate(d, live, archives, sides, commit_id)
+                    is not None
+                )
             except _ArchiveVanished:
                 found = False
             if found:
@@ -1353,24 +1524,23 @@ class FileBackedVersionTracker(VersionTracker):
 
     def commit_at_timestamp(self, table: TableName, ts) -> str:
         """The newest log-ordered commit whose timestamp is ≤ ``ts`` (the
-        base class's contract) from one listing and a newest-first scan
-        of the live files that stops at the first qualifying commit,
-        comparing only each file's ``timestamp``.  Once the scan reaches
-        the archived prefix, or a file vanished mid-scan, the base
-        class's ranged walk answers (it reads the archives)."""
+        base class's contract) from one listing and the newest-first
+        header walk (:meth:`_headers`), stopping at the first qualifying
+        commit and comparing only each record's ``timestamp``.  Once the
+        walk reaches the archived prefix, or a file vanished mid-walk,
+        the base class's ranged walk answers (it reads the archives)."""
         ts = _as_utc(ts)
         d = self._table_dir(table)
         if not self.fs.exists(self.fs.join(d, "table-metadata")):
             raise UnknownTableError(table)
-        live, archives = self._scan_dir(d)
+        live, archives, _, sides = self._scan_cuts(d)
         arch_last, _ = self._arch_stats(archives)
         try:
-            for s, n in reversed(live):
-                if arch_last is not None and s <= arch_last:
+            for i, rec, _ in self._headers(d, live, archives, sides):
+                if arch_last is not None and live[i][0] <= arch_last:
                     break
-                doc = self._read_doc(d, n)
-                if _as_utc(datetime.fromisoformat(doc["timestamp"])) <= ts:
-                    return doc["commit_id"]
+                if _as_utc(datetime.fromisoformat(rec[2])) <= ts:
+                    return rec[1]
         except _ArchiveVanished:
             return super().commit_at_timestamp(table, ts)
         if archives:
@@ -1409,8 +1579,10 @@ class FileBackedVersionTracker(VersionTracker):
         """Pack the commit files at-or-below a retained checkpoint into
         size-capped archive chunk artifacts; delete the packed files.
         Returns a summary ``{"archived", "through_seq", "repaired",
-        "pruned_checkpoints", "archive", "archives",
-        "consolidated_artifacts"}``.
+        "pruned_checkpoints", "pruned_sidecars", "archive", "archives",
+        "consolidated_artifacts"}``; a dry run reports the same counts
+        an apply run would.  The cut prunes the checkpoints below it and
+        the commit indexes at or below it (their segments are archived).
 
         The cut is the newest retained checkpoint after skipping
         ``retain_checkpoints`` of them that COVERS its prefix (keeping
@@ -1475,9 +1647,9 @@ class FileBackedVersionTracker(VersionTracker):
             if not self._acquire_archival_lease(d, lease_ttl_seconds):
                 return {
                     "archived": 0, "through_seq": None, "repaired": 0,
-                    "pruned_checkpoints": 0, "archive": None,
-                    "archives": [], "consolidated_artifacts": 0,
-                    "skipped_lease": True,
+                    "pruned_checkpoints": 0, "pruned_sidecars": 0,
+                    "archive": None, "archives": [],
+                    "consolidated_artifacts": 0, "skipped_lease": True,
                 }
             try:
                 return self._archive_locked(
@@ -1519,8 +1691,8 @@ class FileBackedVersionTracker(VersionTracker):
         live, archives, ck_seqs = self._scan_dir(d, with_checkpoints=True)
         out = {
             "archived": 0, "through_seq": None, "repaired": 0,
-            "pruned_checkpoints": 0, "archive": None, "archives": [],
-            "consolidated_artifacts": 0,
+            "pruned_checkpoints": 0, "pruned_sidecars": 0, "archive": None,
+            "archives": [], "consolidated_artifacts": 0,
         }
         # 0. repair a crashed/raced consolidation: overlapping artifacts
         # (duplicate slots hold identical commits by the immutability
@@ -1667,8 +1839,15 @@ class FileBackedVersionTracker(VersionTracker):
         absorb = list(archives) if consolidate else []
         out["through_seq"] = cut
         out["archived"] = len(to_pack)
+        # step 5 prunes the checkpoints below the cut and the commit
+        # indexes at or below it (their segments are archived now)
+        # (the indexes from one more listing: maintenance cadence)
+        doomed_cks = [s for s in ck_seqs if s < cut]
+        doomed_sides = [s for s in self._scan_cuts(d)[3] if s <= cut]
         if dry_run:
             out["consolidated_artifacts"] += len(absorb)
+            out["pruned_checkpoints"] = len(doomed_cks)
+            out["pruned_sidecars"] = len(doomed_sides)
             return out
         # 3. stream the entries (absorbed artifacts in seq order, then
         # the newly packed live files — raw documents copied verbatim, no
@@ -1789,7 +1968,8 @@ class FileBackedVersionTracker(VersionTracker):
         # 5. delete the packed commit files, the absorbed artifacts, then
         # the checkpoint files strictly below the cut (unreachable by
         # fast paths now — the covers-prefix guard rejects any checkpoint
-        # below the floor).  A file a racing archiver already removed is
+        # below the floor) and the commit indexes at or below it (the
+        # header walk never reads an index at or below the floor).  A file a racing archiver already removed is
         # that racer finishing the same delete — never an error.
         written = set(chunk_names)
         for _, n in to_pack:
@@ -1807,15 +1987,16 @@ class FileBackedVersionTracker(VersionTracker):
             # same content-unique name was still absorbed — dry-run
             # (which counts len(absorb)) and apply must report alike
             out["consolidated_artifacts"] += 1
-        for s in ck_seqs:
-            if s < cut:
+        for key, names in (
+            ("pruned_checkpoints", (f"checkpoint_{s:013d}.json" for s in doomed_cks)),
+            ("pruned_sidecars", (f"commits_{s:013d}.json" for s in doomed_sides)),
+        ):
+            for n in names:
                 try:
-                    self.fs.remove_file(
-                        self.fs.join(d, f"checkpoint_{s:013d}.json")
-                    )
+                    self.fs.remove_file(self.fs.join(d, n))
                 except FileNotFoundError:
                     continue
-                out["pruned_checkpoints"] += 1
+                out[key] += 1
         return out
 
     def _acquire_archival_lease(self, d: str, ttl_seconds: float) -> bool:

@@ -286,6 +286,9 @@ class MemoryFileSystem(FileSystem):
     _buckets: Dict[str, Dict[str, str]] = {}
     _dirs: Dict[str, set] = {}
     _mtimes: Dict[str, Dict[str, float]] = {}
+    # parent path → names of its direct files and dirs, so a listing
+    # costs O(children), not O(keys in the bucket)
+    _children: Dict[str, Dict[str, set]] = {}
     # RLock: write_text calls mkdirs while holding the lock
     _lock = threading.RLock()
 
@@ -294,6 +297,23 @@ class MemoryFileSystem(FileSystem):
             self._files = MemoryFileSystem._buckets.setdefault(bucket, {})
             self._d = MemoryFileSystem._dirs.setdefault(bucket, set())
             self._mt = MemoryFileSystem._mtimes.setdefault(bucket, {})
+            self._kids = MemoryFileSystem._children.setdefault(bucket, {})
+            self._gens = MemoryFileSystem._gens.setdefault(bucket, {})
+
+    def _link(self, p: str) -> None:
+        """Enter ``p`` in its parent's children (callers hold the lock)."""
+        self._kids.setdefault(posixpath.dirname(p), set()).add(
+            posixpath.basename(p)
+        )
+
+    def _unlink(self, p: str) -> None:
+        """Drop ``p`` from its parent's children once it is neither a file
+        nor a dir (callers hold the lock)."""
+        if p in self._files or p in self._d:
+            return
+        kids = self._kids.get(posixpath.dirname(p))
+        if kids is not None:
+            kids.discard(posixpath.basename(p))
 
     @staticmethod
     def _norm(path: str) -> str:
@@ -308,6 +328,7 @@ class MemoryFileSystem(FileSystem):
         with MemoryFileSystem._lock:
             while p and p != ".":
                 self._d.add(p)
+                self._link(p)
                 p = posixpath.dirname(p)
 
     def read_text(self, path: str) -> str:
@@ -326,9 +347,9 @@ class MemoryFileSystem(FileSystem):
             if parent:
                 self.mkdirs(parent)
             self._files[p] = text
+            self._link(p)
             self._mt[p] = time.time()
-            gens = self._gen_map()
-            gens[p] = gens.get(p, 0) + 1  # EVERY write is a new generation
+            self._gens[p] = self._gens.get(p, 0) + 1  # EVERY write is a new generation
 
     def supports_put_if_absent(self) -> bool:
         return True
@@ -361,20 +382,13 @@ class MemoryFileSystem(FileSystem):
             if parent:
                 self.mkdirs(parent)
             self._files[p] = bytes(data)
+            self._link(p)
             self._mt[p] = time.time()
-            gens = self._gen_map()
-            gens[p] = gens.get(p, 0) + 1
+            self._gens[p] = self._gens.get(p, 0) + 1
 
     # token CAS: the per-path "generation" is the write count (the same
-    # model as GCS object generations)
+    # model as GCS object generations), one map per bucket
     _gens: Dict[str, Dict[str, int]] = {}
-
-    def _gen_map(self) -> Dict[str, int]:
-        # keyed by bucket via the shared class registries
-        for bucket, files in MemoryFileSystem._buckets.items():
-            if files is self._files:
-                return MemoryFileSystem._gens.setdefault(bucket, {})
-        return MemoryFileSystem._gens.setdefault("?", {})
 
     def supports_put_if_match(self) -> bool:
         return True
@@ -384,17 +398,16 @@ class MemoryFileSystem(FileSystem):
         with MemoryFileSystem._lock:
             if p not in self._files:
                 raise FileNotFoundError(path)
-            return self._files[p], self._gen_map().get(p, 0)
+            return self._files[p], self._gens.get(p, 0)
 
     def write_text_if_match(self, path: str, text: str, token) -> bool:
         p = self._norm(path)
         with MemoryFileSystem._lock:
-            gens = self._gen_map()
             if token is None:
                 if p in self._files:
                     return False
             else:
-                if p not in self._files or gens.get(p, 0) != token:
+                if p not in self._files or self._gens.get(p, 0) != token:
                     return False
             self.write_text(path, text)  # bumps the generation
             return True
@@ -406,11 +419,8 @@ class MemoryFileSystem(FileSystem):
 
     def list_dir(self, path: str) -> List[str]:
         p = self._norm(path)
-        out = set()
-        for known in list(self._files) + list(self._d):
-            if known != p and posixpath.dirname(known) == p:
-                out.add(posixpath.basename(known))
-        return sorted(out)
+        with MemoryFileSystem._lock:
+            return sorted(self._kids.get(p, ()))
 
     def is_dir(self, path: str) -> bool:
         return self._norm(path) in self._d
@@ -425,12 +435,20 @@ class MemoryFileSystem(FileSystem):
             for known in list(self._d):
                 if known == p or known.startswith(p + "/"):
                     self._d.discard(known)
+            for known in list(self._kids):
+                if known == p or known.startswith(p + "/"):
+                    for n in list(self._kids[known]):
+                        self._unlink(posixpath.join(known, n))
+                    if not self._kids[known]:
+                        del self._kids[known]
+            self._unlink(p)
 
     def remove_file(self, path: str) -> None:
         with MemoryFileSystem._lock:
             p = self._norm(path)
             self._files.pop(p, None)
             self._mt.pop(p, None)
+            self._unlink(p)
 
 
 class FsspecFileSystem(FileSystem):

@@ -748,3 +748,280 @@ def test_checkout_and_updates_differential(tmp_path):
     )
     with pytest.raises(RuntimeError, match="DIFFERENT commits"):
         fast.updates(T)
+
+
+# -- commit index per checkpoint cut -----------------------------------------
+
+
+def _sidecar_reads(cfs):
+    return [p for p in cfs.reads if p.rsplit("/", 1)[-1].startswith("commits_")]
+
+
+def _sidecar_names(tr):
+    d = tr._table_dir(T)
+    return sorted(n for n in tr.fs.list_dir(d) if n.startswith("commits_"))
+
+
+def _seeded_log(root, seed, n=90):
+    """A seeded log for the commit-index differentials: removals, a
+    rollback whose commits a later write re-surfaces, runs of equal
+    timestamps, a lagging writer clock, and free seq slots (a short sleep
+    every 7th commit) so a commit can be gap-filled into a segment."""
+    import random
+    import time
+    from datetime import datetime, timedelta, timezone
+
+    rng = random.Random(seed)
+    fast = FileBackedVersionTracker(root, checkpoint_interval=10)
+    truth = FileBackedVersionTracker(root, checkpoint_interval=None)
+    base = datetime(2024, 6, 1, tzinfo=timezone.utc)
+    fast.init_table(T, is_snapshot=False, user_id="u", timestamp=base)
+    ms = 0
+    for i in range(n):
+        ms += rng.choice((0, 0, 1, 4))
+        ts = base + timedelta(milliseconds=ms + 1)
+        if i == 50:
+            ts -= timedelta(milliseconds=20)  # a lagging writer clock
+        p = f"date=2024-03-{rng.randrange(1, 11):02d}"
+        op = RemovePartition(Partition.parse(p)) if rng.random() < 0.2 else _add(p)
+        fast.commit(T, TableUpdate(TableUpdateMetadata.new("u", f"c{i}", ts), (op,)))
+        if i == 60:  # roll back; the next write re-surfaces 31..60
+            fast.set_current_version(
+                T, truth.table_state(T).updates[31].metadata.commit_id
+            )
+        if i % 7 == 6:
+            time.sleep(0.003)
+    return fast, truth
+
+
+def _gap_fill(tr):
+    """Write one commit into a free seq slot inside the oldest indexed
+    segment (as a CAS writer with a lagging clock can); returns it."""
+    from datetime import datetime, timezone
+
+    from chronicles_spark.core.ops import update_to_json
+
+    d = tr._table_dir(T)
+    live, _, _, sides = tr._scan_cuts(d)
+    seqs = {s for s, _ in live}
+    cut = sides[1]
+    slot = next(s for s in range(cut - 1, sides[0], -1) if s not in seqs)
+    u = TableUpdate(
+        TableUpdateMetadata(
+            "gap-filled", "late", "gap", datetime(2024, 6, 1, tzinfo=timezone.utc)
+        ),
+        (_add("date=2024-03-04"),),
+    )
+    tr.fs.write_text(tr.fs.join(d, f"table_update_{slot:013d}.json"), update_to_json(u))
+    return u
+
+
+def _check_against_truth(fast, truth, commits):
+    """version_at, _checkout, commit_at_timestamp (at, just before and
+    just after each commit's timestamp) and updates() of the checkpointed
+    tracker equal those of a checkpoint-free tracker on the same log."""
+    from datetime import timedelta
+
+    from chronicles_spark.trackers import UnknownCommitError
+
+    head = fast.head_commit_id(T)
+    want = [u.metadata for u in reversed(truth.table_state(T).updates)]
+    assert fast.updates(T) == want
+    for u in commits:
+        cid = u.metadata.commit_id
+        assert fast.version_at(T, cid) == truth.version_at(T, cid), cid
+        got = fast._checkout(T, cid)
+        truth.set_current_version(T, cid)
+        assert got == truth.current_version(T), cid
+        assert fast.head_commit_id(T) == cid
+        for delta in (-1, 0, 1):
+            at = u.metadata.timestamp + timedelta(milliseconds=delta)
+            try:
+                expect = truth.commit_at_timestamp(T, at)
+            except UnknownCommitError:
+                with pytest.raises(UnknownCommitError):
+                    fast.commit_at_timestamp(T, at)
+            else:
+                assert fast.commit_at_timestamp(T, at) == expect, (cid, delta)
+    fast._set_head(T, head)
+    with pytest.raises(UnknownCommitError):
+        fast.version_at(T, "no-such-commit")
+    with pytest.raises(UnknownCommitError):
+        fast._checkout(T, "no-such-commit")
+    assert fast.head_commit_id(T) == head
+
+
+@pytest.mark.parametrize(
+    "case", ["valid", "gap_filled", "missing_and_corrupt", "no_sidecars"]
+)
+def test_commit_index_differential_every_commit(tmp_path, case):
+    """Differential over the commit-index cases: every version_at,
+    checkout, timestamp lookup and updates() of the checkpointed tracker
+    equals the checkpoint-free fold — with valid indexes, with a stale
+    one (a commit gap-filled into its segment), with a deleted one and
+    corrupt ones (unparseable, a malformed record, a bad ``lo``), and on
+    a log that has no index at all (written before indexes existed)."""
+    root = str(tmp_path / "log")
+    fast, truth = _seeded_log(root, seed=23)
+    d = fast._table_dir(T)
+    names = _sidecar_names(fast)
+    assert len(names) >= 8
+    if case == "gap_filled":
+        _gap_fill(fast)
+    elif case == "missing_and_corrupt":
+        fast.fs.remove_file(fast.fs.join(d, names[-2]))
+        fast.fs.write_text(fast.fs.join(d, names[-3]), '{"lo": 1, "commits": [')
+        doc = json.loads(fast.fs.read_text(fast.fs.join(d, names[-4])))
+        doc["commits"][3] = doc["commits"][3][:4]
+        fast.fs.write_text(fast.fs.join(d, names[-4]), json.dumps(doc))
+        doc = json.loads(fast.fs.read_text(fast.fs.join(d, names[-5])))
+        doc["lo"] = "0"
+        fast.fs.write_text(fast.fs.join(d, names[-5]), json.dumps(doc))
+    elif case == "no_sidecars":
+        for n in names:
+            fast.fs.remove_file(fast.fs.join(d, n))
+    _check_against_truth(fast, truth, truth.table_state(T).updates)
+
+
+def test_commit_index_differential_after_archival(tmp_path):
+    """After archive_commits packs the log's prefix, the indexes at or
+    below the cut are gone and the header walk still answers like the
+    checkpoint-free fold (which reads the archive) — also with a commit
+    gap-filled into a live indexed segment."""
+    root = str(tmp_path / "log")
+    fast, truth = _seeded_log(root, seed=29, n=120)
+    head = fast.head_commit_id(T)
+    out = fast.archive_commits(T, retain_checkpoints=3)
+    n = out["archived"]
+    assert n > 0 and out["pruned_sidecars"] > 0
+    d = fast._table_dir(T)
+    assert all(
+        int(x[len("commits_"):-len(".json")]) > out["through_seq"]
+        for x in _sidecar_names(fast)
+    )
+    fast._set_head(T, head)
+    updates = truth.table_state(T).updates
+    sample = updates[:3] + updates[n - 2:n + 2] + updates[-40:]
+    _check_against_truth(fast, truth, sample)
+    assert len(fast._scan_cuts(d)[3]) >= 2
+    _gap_fill(fast)
+    updates = truth.table_state(T).updates
+    _check_against_truth(fast, truth, updates[:2] + updates[n - 1:])
+
+
+def test_commit_index_matches_commit_files(tmp_path):
+    """Each index record is its commit file's own metadata: the
+    TableUpdateMetadata built from it equals the file's, its segment is
+    exactly the live commits in (lo, cut], and the JSON is compact."""
+    from chronicles_spark.core.ops import metadata_from_dict
+    from chronicles_spark.trackers.files import _header_metadata
+
+    root = str(tmp_path / "log")
+    tr, _ = _build_log(root, n_commits=45, interval=10)
+    d = tr._table_dir(T)
+    live, _, cks, sides = tr._scan_cuts(d)
+    assert sides == cks and len(sides) == 4
+    seqs = [s for s, _ in live]
+    names = dict(live)
+    for c in sides:
+        text = tr.fs.read_text(tr.fs.join(d, f"commits_{c:013d}.json"))
+        assert ", " not in text and ": " not in text
+        doc = json.loads(text)
+        assert [r[0] for r in doc["commits"]] == [
+            s for s in seqs if doc["lo"] < s <= c
+        ]
+        for rec in doc["commits"]:
+            file_doc = json.loads(tr.fs.read_text(tr.fs.join(d, names[rec[0]])))
+            assert _header_metadata(rec) == metadata_from_dict(file_doc)
+
+
+def test_reads_never_write_a_commit_index(tmp_path):
+    """A log with no indexes stays without them: reads (time travel,
+    timestamp lookup, history, resolution) never write a file."""
+    root = str(tmp_path / "log")
+    fast, _ = _seeded_log(root, seed=31, n=40)
+    d = fast._table_dir(T)
+    for n in _sidecar_names(fast):
+        fast.fs.remove_file(fast.fs.join(d, n))
+    writes = []
+    for name in ("write_text", "write_text_if_absent", "write_text_if_match"):
+        real = getattr(fast.fs, name)
+        setattr(
+            fast.fs, name,
+            lambda path, *a, _real=real: (writes.append(path), _real(path, *a))[1],
+        )
+    for u in fast.updates(T):
+        fast.version_at(T, u.commit_id)
+        fast.commit_at_timestamp(T, u.timestamp)
+    fast.current_version(T)
+    assert writes == [] and _sidecar_names(fast) == []
+
+
+def test_deep_reads_cost_cuts_plus_interval(tmp_path):
+    """Read-count pins, commit indexes counted on their own: updates()
+    reads the tail above the newest cut and each index once, and a deep
+    version_at or timestamp lookup reads at most (cuts + interval + 3)
+    files beyond the tail, each at most once — not every commit newer
+    than its target."""
+    from datetime import timedelta
+
+    root = str(tmp_path / "log")
+    _, commits = _build_log(root, n_commits=250, interval=10)
+    tr, cfs = _counted(root)
+    d = tr._table_dir(T)
+    live, _, cks, sides = tr._scan_cuts(d)
+    cuts = len(sides)
+    tail = sum(1 for s, _ in live if s > sides[-1])
+    assert cuts >= 20
+
+    history = tr.updates(T)
+    assert len(history) == 251
+    assert len(_sidecar_reads(cfs)) == cuts
+    assert len(set(_sidecar_reads(cfs))) == cuts
+    assert len(_commit_reads(cfs)) == tail
+    assert len(cfs.reads) <= cuts + 10 + 3
+
+    for target in (commits[5], commits[40], commits[131], commits[-60]):
+        cfs.reads.clear()
+        tr.version_at(T, target)
+        reads = [p for p in cfs.reads if "table_update_" in p or "commits_" in p]
+        assert len(reads) == len(set(reads)), "a file was read twice"
+        assert len(_sidecar_reads(cfs)) <= cuts
+        assert len(cfs.reads) <= cuts + 10 + 3 + tail, len(cfs.reads)
+        cfs.reads.clear()
+        ts = next(m.timestamp for m in history if m.commit_id == target)
+        tr.commit_at_timestamp(T, ts + timedelta(microseconds=1))
+        assert len(cfs.reads) <= cuts + tail, len(cfs.reads)
+
+
+def test_genesis_segment_fold_lists_once_reads_each_commit_once(tmp_path):
+    """Time travel and a metastore checkout to a commit below the oldest
+    checkpoint of a log with no archive fold from the empty state over
+    the live files up to it: one listing, no commit file read twice, no
+    checkpoint body, and the checkpoint-free answer."""
+    from chronicles_spark.core.model import PartitionSchema, TableDefinition
+    from chronicles_spark.spark.metastore import InMemoryMetastore
+    from chronicles_spark.versioned_metastore import VersionedMetastore
+
+    root = str(tmp_path / "log")
+    _, commits = _build_log(root, n_commits=250, interval=10)
+    truth = FileBackedVersionTracker(root, checkpoint_interval=None)
+    table = TableDefinition(T, str(tmp_path / "data"), PartitionSchema(("date",)))
+    for k in (1, 5):
+        want = truth.version_at(T, commits[k])
+        tr, cfs = _counted(root)
+        assert tr.version_at(T, commits[k]) == want
+        reads = _commit_reads(cfs)
+        assert len(cfs.lists) == 1, cfs.lists
+        assert len(reads) == len(set(reads)), k
+        assert _checkpoint_reads(cfs) == []
+
+        tr, cfs = _counted(root)
+        ms = InMemoryMetastore()
+        ms.create_table(table)
+        desired, _ = VersionedMetastore(tr, ms).checkout(table, commits[k])
+        reads = _commit_reads(cfs)
+        assert desired == want and ms.current_version(table) == want
+        assert len(cfs.lists) == 1, cfs.lists
+        assert len(reads) == len(set(reads)), k
+        assert tr.head_commit_id(T) == commits[k]

@@ -1377,6 +1377,7 @@ def test_consolidation_crash_sweep_every_mutation_point(tmp_path):
         got = [u.metadata.commit_id for u in fresh.table_state(T).updates]
         assert got == want_ids, f"crash point {k} corrupted reads"
         assert fresh.update_count(T) == len(want_ids)
+        assert [m.commit_id for m in fresh.updates(T)] == want_ids[::-1]
 
         # repair converges: disjoint cover, idempotent second pass
         fresh.archive_commits(T, retain_checkpoints=1)
@@ -1394,7 +1395,103 @@ def test_consolidation_crash_sweep_every_mutation_point(tmp_path):
             u.metadata.commit_id for u in fresh.table_state(T).updates
         ] == want_ids
 
+        d = fresh._table_dir(T)
+        assert all(
+            c > fresh._read_floor_seq(d) for c in fresh._scan_cuts(d)[3]
+        ), f"crash point {k}: a commit index at or below the floor"
+
         if not crashed:
             break  # k exceeded the run's mutation count: sweep complete
         k += 1
     assert k >= 8, f"sweep covered only {k} mutation points"
+
+    # the same sweep over an incremental run that cuts above the floor,
+    # so its deletes include commit indexes: reads through the header
+    # walk stay exact at every crash point and after the repair run
+    k = 1
+    while True:
+        root = str(tmp_path / f"index{k}")
+        tr = FileBackedVersionTracker(root, checkpoint_interval=10)
+        tr.init_table(T, is_snapshot=False, user_id="u")
+        for i in range(60):
+            _commit(tr, i)
+        want = tr.table_state(T).updates
+        want_ids = [u.metadata.commit_id for u in want]
+        ops, removed = {"n": 0}, []
+        real_put = tr.fs.write_text_if_absent
+        real_remove = tr.fs.remove_file
+
+        def _tick():
+            ops["n"] += 1
+            if ops["n"] == k:
+                raise OSError(f"injected at mutation {k}")
+
+        def put(path, text):
+            if path.rsplit("/", 1)[-1].startswith("archive_"):
+                _tick()
+            return real_put(path, text)
+
+        def remove(path):
+            bn = path.rsplit("/", 1)[-1]
+            if bn != "_archive_lease":
+                _tick()
+                removed.append(bn)
+            return real_remove(path)
+
+        tr.fs.write_text_if_absent = put
+        tr.fs.remove_file = remove
+        crashed = True
+        try:
+            tr.archive_commits(T, retain_checkpoints=1, max_chunk_bytes=4096)
+            crashed = False
+        except OSError:
+            pass
+        finally:
+            tr.fs.write_text_if_absent = real_put
+            tr.fs.remove_file = real_remove
+
+        for repaired in (False, True):
+            _clear_archive_caches()
+            fresh = FileBackedVersionTracker(root, checkpoint_interval=10)
+            if repaired:
+                fresh.archive_commits(T, retain_checkpoints=1)
+            assert [m.commit_id for m in fresh.updates(T)] == want_ids[::-1]
+            truth = _truth(root)
+            for u in want[::7] + want[-3:]:
+                cid = u.metadata.commit_id
+                assert fresh.version_at(T, cid) == truth.version_at(T, cid)
+                assert fresh.commit_at_timestamp(
+                    T, u.metadata.timestamp
+                ) == truth.commit_at_timestamp(T, u.metadata.timestamp)
+
+        if not crashed:
+            # the uninjected run deleted commit indexes among its mutations
+            assert any(n.startswith("commits_") for n in removed), removed
+            break
+        k += 1
+    assert k >= 8, f"index sweep covered only {k} mutation points"
+
+
+def test_archive_prunes_commit_indexes_and_dry_run_reports_alike(tmp_path):
+    """archive_commits deletes the commit indexes at or below its cut
+    (their segments are archived) with the checkpoints below it, keeps
+    the ones above, and a dry run reports the counts the apply run
+    then has."""
+    tr = _build(str(tmp_path), 75, interval=10)
+    d = tr._table_dir(T)
+    live, _, cks, sides = tr._scan_cuts(d)
+    assert sides == cks and len(sides) == 7
+    dry = tr.archive_commits(T, retain_checkpoints=2, dry_run=True)
+    assert tr._scan_cuts(d)[3] == sides  # a dry run deletes nothing
+    out = tr.archive_commits(T, retain_checkpoints=2)
+    cut = out["through_seq"]
+    for key in ("through_seq", "archived", "pruned_checkpoints", "pruned_sidecars"):
+        assert dry[key] == out[key], key
+    assert out["pruned_sidecars"] == sum(1 for s in sides if s <= cut) > 0
+    assert out["pruned_checkpoints"] == sum(1 for s in cks if s < cut)
+    _, _, cks_after, sides_after = tr._scan_cuts(d)
+    assert sides_after == [s for s in sides if s > cut]
+    assert cks_after == [s for s in cks if s >= cut]
+    # nothing new to archive: nothing more to prune either
+    again = tr.archive_commits(T, retain_checkpoints=2)
+    assert again["pruned_sidecars"] == again["pruned_checkpoints"] == 0

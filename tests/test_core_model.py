@@ -156,3 +156,37 @@ def test_monotonic_clock_unique_increasing():
     ts = [c.next_timestamp_ms() for _ in range(1000)]
     assert ts == sorted(ts)
     assert len(set(ts)) == len(ts)
+
+
+def test_partition_hash_is_cached_and_left_out_of_pickles():
+    """The hash is computed once per instance and never pickled: another
+    process seeds string hashes differently, so an unpickled partition
+    must hash like a fresh equal one there."""
+    import os
+    import pickle
+    import subprocess
+    import sys
+
+    p = Partition.parse("year=2019/month=02")
+    h = hash(p)
+    assert p.__dict__["_hash"] == h == hash(p)
+    assert "_hash" not in p.__getstate__()
+    q = pickle.loads(pickle.dumps(p))
+    assert "_hash" not in q.__dict__ and hash(q) == hash(Partition.parse(p.path))
+    assert {p: 1}[q] == 1
+    code = (
+        "import pickle, sys\n"
+        "from chronicles_spark.core.model import Partition\n"
+        "q = pickle.loads(sys.stdin.buffer.read())\n"
+        "fresh = Partition.of(('year', '2019'), ('month', '02'))\n"
+        "assert q == fresh and hash(q) == hash(fresh), 'stale hash'\n"
+        "assert {fresh: 1}[q] == 1\n"
+    )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    for seed in ("1", "2"):
+        env = dict(os.environ, PYTHONHASHSEED=seed, PYTHONPATH=root)
+        done = subprocess.run(
+            [sys.executable, "-c", code], input=pickle.dumps(p),
+            env=env, capture_output=True,
+        )
+        assert done.returncode == 0, done.stderr.decode()
