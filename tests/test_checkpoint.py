@@ -765,8 +765,9 @@ def _sidecar_names(tr):
 def _seeded_log(root, seed, n=90):
     """A seeded log for the commit-index differentials: removals, a
     rollback whose commits a later write re-surfaces, runs of equal
-    timestamps, a lagging writer clock, and free seq slots (a short sleep
-    every 7th commit) so a commit can be gap-filled into a segment."""
+    timestamps, a lagging writer clock, and a free seq slot between any
+    two commits (a 2 ms sleep after each) so a commit can be gap-filled
+    into any segment."""
     import random
     import time
     from datetime import datetime, timedelta, timezone
@@ -789,8 +790,7 @@ def _seeded_log(root, seed, n=90):
             fast.set_current_version(
                 T, truth.table_state(T).updates[31].metadata.commit_id
             )
-        if i % 7 == 6:
-            time.sleep(0.003)
+        time.sleep(0.002)
     return fast, truth
 
 
