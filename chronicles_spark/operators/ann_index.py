@@ -927,8 +927,10 @@ def _extend_publish(
     from ..core.model import Partition
     from .dedup import lineage_barrier as _lb
 
-    # eager=False: the bucket-count job right below is the first action
-    # and materializes the checkpoint in the same job (one job, not two)
+    # eager=False: the bucket-count action right below is the first
+    # action and lands the final stage; the map stages still run at this
+    # call under AQE, so it saves eager's result-stage pass, not a job
+    # (lineage_barrier docstring)
     out = _lb(out, eager=False)
     written_counts = {
         r[BUCKET_COL]: r["n"]

@@ -643,8 +643,9 @@ def _fold_batch(
     # null-safe so a NULL endpoint survives into the loud check below
     # instead of being silently dropped by three-valued logic)
     # eager=False: the counts agg right below is the barrier's first
-    # action — it materializes the checkpoint while computing the batch
-    # stats, one job instead of two (lineage_barrier docstring)
+    # action and lands the final stage while computing the batch stats;
+    # the distinct's map stage still runs at this call under AQE
+    # (lineage_barrier docstring)
     pairs = DD.lineage_barrier(
         pairs_new.select(F.col("id_a"), F.col("id_b"))
         .where(~F.col("id_a").eqNullSafe(F.col("id_b")))
@@ -720,8 +721,9 @@ def _fold_batch(
             live = live.where(DD.in_list(id_col, e_ids))
         known = live.join(endpoints, id_col, "left_semi")
     # eager=False: the next action — the local-CC edges collect, or the
-    # fallback's eager edges checkpoint — materializes this one in the
-    # same job
+    # fallback's eager edges checkpoint — lands the final stage; the
+    # semi-join's map stages run at this call under AQE (lineage_barrier
+    # docstring)
     known = DD.lineage_barrier(known, eager=False)
 
     # -- local components over {new pairs} ∪ {endpoint → current rep} ---
@@ -746,7 +748,9 @@ def _fold_batch(
     # -- relabel map: touched clusters whose representative changed -----
     touched = known.select(F.col("cluster_id").alias("old_cluster")).distinct()
     # eager=False: _collect_shards_and_ids' capped collect is the first
-    # action — barrier and collect fuse into one job
+    # action and lands the final stage; the join's map stages run at this
+    # call under AQE, so barrier and collect are not one job
+    # (lineage_barrier docstring)
     relabel = DD.lineage_barrier(
         touched.join(local, touched.old_cluster == local[id_col])
         .where(F.col("old_cluster") != F.col("cluster_id"))
@@ -784,7 +788,9 @@ def _fold_batch(
     )
     # drop no-op rows (endpoint already holding its final label): the
     # RMW then touches only shards something actually changed in.
-    # eager=False: the fused _stats job below is the first action
+    # eager=False: the _stats action below is the first action and lands
+    # the final stage; the map stages run at this call under AQE
+    # (lineage_barrier docstring)
     changed = DD.lineage_barrier(
         changed.join(
             known.withColumnRenamed("cluster_id", "_old_label"),
@@ -881,7 +887,8 @@ def _fold_batch(
     # Lineage barrier first: the frame is consumed TWICE (this count and
     # the data write below) and each full evaluation re-reads the touched
     # member shards from the table — the barrier reads them once.
-    # eager=False: the m_counts job right below materializes it.
+    # eager=False: the m_counts action right below lands the final stage;
+    # the map stages run at this call under AQE (lineage_barrier docstring).
     members_out = DD.lineage_barrier(members_out, eager=False)
     m_counts = members_out.groupBy(
         F.col(CLUSTER_SHARD_COL).alias("_s")

@@ -101,13 +101,19 @@ def lineage_barrier(
     intermediates (candidate pairs); keep ``materialize`` (columnar cache)
     for bases that big column expressions re-scan.
 
-    ``eager=False`` defers materialization to the barrier's FIRST action:
-    when the very next statement aggregates/collects over the barriered
-    frame anyway, that action computes the plan once AND lands the
-    checkpoint blocks every later consumer reads — fusing what used to be
-    two serial driver jobs (eager-ckpt + aggregate) into one.  Only use
-    it when exactly one action runs before other consumers touch the
-    frame (a concurrent first-touch would race the materialization)."""
+    ``eager=False`` defers only the barrier's FINAL stage to its first
+    action.  Under AQE the call itself still runs every shuffle map stage
+    of ``df``, synchronously, on the calling thread: building the
+    checkpoint RDD materializes the adaptive plan's query stages (1 job at
+    the call for a ``distinct``, 2 for a join, measured on Spark 4.1).
+    The first action then runs its own jobs over the checkpointed RDD,
+    which compute and land that final stage.  So the barrier and the
+    first action do not fuse into one job; the saving against
+    ``eager=True`` is eager's separate result-stage pass, and a lazy call
+    on a shuffle-bearing frame still costs its map stages at the call.
+    Only use it when exactly one action runs before other consumers touch
+    the frame (a concurrent first-touch would race the materialization of
+    the final stage)."""
     if scratch_dir is not None:
         return materialize(df, scratch_dir, name)
     return df.localCheckpoint(eager=eager)

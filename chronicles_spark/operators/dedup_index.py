@@ -987,9 +987,10 @@ def _extend_publish(
         # consumed TWICE (this count and the data write) and each full
         # evaluation re-reads the touched live band shards — the barrier
         # reads them once.
-        # eager=False: the shard-count job right below materializes it
-        # (this worker thread is the frame's only toucher until the
-        # publish joins the future)
+        # eager=False: the shard-count action right below lands the final
+        # stage (the map stages run at this call under AQE; lineage_barrier
+        # docstring) — this worker thread is the frame's only toucher
+        # until the publish joins the future
         bands_out_ = DD.lineage_barrier(bands_out_, eager=False)
         shard_counts_ = bands_out_.groupBy(
             F.col(BAND_SHARD_COL).alias("s")
@@ -1048,9 +1049,10 @@ def _extend_publish(
     # lineage cut: the pair set is referenced three times by verify
     # (minhash_dedup's measured Catalyst-analysis blowup otherwise).
     # Both barriers are eager=False: the capped `sample` collect below is
-    # the first action on this chain and materializes old_cand_ids AND
-    # (transitively) cand in ONE job — the eager shape paid two serial
-    # checkpoint jobs before that collect (lineage_barrier docstring)
+    # the first action on this chain and lands the final stages of
+    # old_cand_ids and (transitively) cand; their shuffle map stages still
+    # run at each barrier call under AQE, so this saves the eager shape's
+    # two result-stage passes, not whole jobs (lineage_barrier docstring)
     cand = DD.lineage_barrier(cand.distinct(), eager=False)
 
     # -- exact verify: payloads from base_new + ONLY candidate shards --
@@ -1097,7 +1099,8 @@ def _extend_publish(
             verify_base = verify_base.unionByName(old_payloads)
     # eager=False: the publish's pairs-table write (or, without a pairs
     # journal, the caller's first action on the returned frame) is the
-    # single next toucher and materializes the checkpoint
+    # single next toucher and lands the final stage; the map stages run
+    # at this call under AQE (lineage_barrier docstring)
     verified = DD.lineage_barrier(
         family.verify_fn(verify_base, cand), eager=False
     )

@@ -20,14 +20,40 @@ Scale notes:
   Hive partition listing; for bigger metadata, checkpoint the folded map
   (Delta-style) — see plans/log_queries.py which computes the fold
   distributed.
+- Schema-known reads: a parquet ``load`` without a schema runs one Spark
+  job to read a footer and infer the data columns.  Version directories
+  are immutable, so that inference is memoized per directory label
+  (:func:`_memo_key`); a write seeds its own entry and a cold read stores
+  what Spark inferred, and every later read of the label passes the
+  schema and skips the job (docs/scale.md "Schema-known reads").
 """
 
 from __future__ import annotations
 
 import threading
-from typing import List, Optional
+from collections import OrderedDict
+from typing import List, Optional, Tuple
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import (
+    ArrayType,
+    BinaryType,
+    BooleanType,
+    ByteType,
+    DateType,
+    DecimalType,
+    DoubleType,
+    FloatType,
+    IntegerType,
+    LongType,
+    MapType,
+    ShortType,
+    StringType,
+    StructField,
+    StructType,
+    TimestampNTZType,
+    TimestampType,
+)
 
 from ..core import paths as vpaths
 from ..core.model import (
@@ -42,6 +68,129 @@ from ..trackers.base import VersionTracker
 # read_version; process-wide by design (coarser than strictly needed for
 # multi-SparkSession processes, but those are rare and correctness wins)
 _PARTITION_INFERENCE_LOCK = threading.Lock()
+
+# Data schemas of immutable version directories: ``(location, label)`` →
+# the data columns (no partition columns, no ``_version``, all nullable)
+# that a schema-less parquet read infers when the read's first data file
+# lies under ``_version=<label>``.  One write job per (table, label) is
+# the invariant that makes the entry a fixed fact (every library writer
+# mints a fresh label per table; an explicit ``version=`` appending into
+# a known label drops the entry, see ``writer.write_versioned``).  LRU-bounded:
+# new labels keep arriving in a long-running process and reads favour
+# recent ones; 4,096 entries of ten-column schemas take about 10 MB.
+_SCHEMA_MEMO: "OrderedDict[Tuple[str, str], StructType]" = OrderedDict()
+_SCHEMA_MEMO_MAX = 1 << 12
+_SCHEMA_MEMO_LOCK = threading.Lock()
+
+# reader options that change which files Spark infers from, or merge
+# their footers: a read carrying any of them infers as it always did
+_INFERENCE_OPTIONS = frozenset(
+    ("mergeschema", "pathglobfilter", "recursivefilelookup",
+     "modifiedbefore", "modifiedafter")
+)
+
+# atomic types whose parquet round trip returns the written type exactly
+# (Spark reads its own schema back from the footer metadata); anything
+# else (char/varchar, collated strings, UDTs, variant, intervals, null)
+# is learned from the first read instead of seeded by the write
+_SEEDABLE_ATOMIC = frozenset(
+    (BooleanType, ByteType, ShortType, IntegerType, LongType, FloatType,
+     DoubleType, DecimalType, BinaryType, DateType, TimestampType,
+     TimestampNTZType)
+)
+
+
+def _memo_key(
+    spark: SparkSession, table: TableDefinition, label: str
+) -> Optional[Tuple[str, str]]:
+    """The schema-memo key of ``table``'s version directories labelled
+    ``label``, or None when the memo does not apply: the bare unversioned
+    location (adopted in place, not immutable), a non-parquet format, or
+    footer merging / file filtering in the table's options or the
+    session's ``spark.sql.parquet.mergeSchema``."""
+    if not label or table.format.lower() != "parquet":
+        return None
+    if any(k.lower() in _INFERENCE_OPTIONS for k, _ in table.format_options):
+        return None
+    if spark.conf.get("spark.sql.parquet.mergeSchema", "false").lower() == "true":
+        return None
+    return (table.location.rstrip("/"), label)
+
+
+def _memo_get(key) -> Optional[StructType]:
+    with _SCHEMA_MEMO_LOCK:
+        schema = _SCHEMA_MEMO.get(key)
+        if schema is not None:
+            _SCHEMA_MEMO.move_to_end(key)
+        return schema
+
+
+def _memo_put(key, schema: StructType) -> None:
+    with _SCHEMA_MEMO_LOCK:
+        _SCHEMA_MEMO[key] = schema
+        _SCHEMA_MEMO.move_to_end(key)
+        while len(_SCHEMA_MEMO) > _SCHEMA_MEMO_MAX:
+            _SCHEMA_MEMO.popitem(last=False)
+
+
+def _memo_pop(key) -> bool:
+    with _SCHEMA_MEMO_LOCK:
+        return _SCHEMA_MEMO.pop(key, None) is not None
+
+
+def _data_columns(schema: StructType, table: TableDefinition) -> StructType:
+    """``schema`` without the partition columns and ``_version``
+    (matched case-insensitively, as Spark's default resolution does)."""
+    drop = {c.lower() for c in table.partition_schema.columns}
+    drop.add(VERSION_COLUMN.lower())
+    return StructType([f for f in schema.fields if f.name.lower() not in drop])
+
+
+def _as_nullable(dt):
+    """Spark's ``DataType.asNullable``: what a file-source read reports
+    for a data schema, whatever nullability the writer declared."""
+    if isinstance(dt, StructType):
+        return StructType([
+            StructField(f.name, _as_nullable(f.dataType), True, f.metadata)
+            for f in dt.fields
+        ])
+    if isinstance(dt, ArrayType):
+        return ArrayType(_as_nullable(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(_as_nullable(dt.keyType), _as_nullable(dt.valueType), True)
+    return dt
+
+
+def _seedable(dt) -> bool:
+    """True when parquet inference provably returns ``dt`` as written:
+    the atomic types of ``_SEEDABLE_ATOMIC``, the default-collation
+    string, and arrays, maps and structs of them with no field metadata."""
+    if isinstance(dt, StructType):
+        return all(not f.metadata and _seedable(f.dataType) for f in dt.fields)
+    if isinstance(dt, ArrayType):
+        return _seedable(dt.elementType)
+    if isinstance(dt, MapType):
+        return _seedable(dt.keyType) and _seedable(dt.valueType)
+    return type(dt) in _SEEDABLE_ATOMIC or dt == StringType()
+
+
+def _seed_from_write(key, schema: StructType, table: TableDefinition) -> None:
+    """Seed ``key`` with the data columns of a df just written under its
+    label, when their types pass :func:`_seedable` (else the first read
+    learns the entry)."""
+    data = _data_columns(schema, table)
+    if _seedable(data):
+        _memo_put(key, _as_nullable(data))
+
+
+def _first_data_dir(paths_: List[str]) -> str:
+    """The directory holding the file Spark infers a schema-less parquet
+    read from: it sorts the listed files by path and reads the first
+    footer, so the winner is the least ``dir + "/"`` (which is not
+    always ``paths_[0]``: ``a=1-x/`` sorts before ``a=1/``)."""
+    if len(paths_) == 1:
+        return paths_[0]
+    return min(paths_, key=lambda d: d + "/")
 
 
 def live_paths(table: TableDefinition, table_version) -> List[str]:
@@ -125,6 +274,14 @@ def read_version(
     reader = spark.read.format(table.format).option("basePath", table.location)
     for k, v in table.format_options:
         reader = reader.option(k, v)
+    # a known data schema skips the footer-inference job inside load();
+    # partition columns are still inferred from the directory names
+    key = _memo_key(
+        spark, table, vpaths.parse_version(_first_data_dir(paths_)).label
+    )
+    known = _memo_get(key) if key is not None else None
+    if known is not None:
+        reader = reader.schema(known)
     if infer_partition_types:
         df = reader.load(paths_)
     else:
@@ -143,6 +300,8 @@ def read_version(
                 df = reader.load(paths_)
             finally:
                 spark.conf.set(conf_key, prev)
+    if key is not None and known is None:
+        _memo_put(key, _data_columns(df.schema, table))
     if not keep_version_column and VERSION_COLUMN in df.columns:
         df = df.drop(VERSION_COLUMN)
     if pruned_all:

@@ -54,6 +54,7 @@ from ..core.ops import (
 from ..core.paths import VERSION_COLUMN, unescape_path_name
 from ..core.version import Version, generate_version
 from ..trackers.base import VersionTracker, head_of
+from .reader import _memo_key, _memo_pop, _seed_from_write
 
 
 def partition_values(df: DataFrame, partition_columns: Tuple[str, ...]) -> List[Partition]:
@@ -272,7 +273,14 @@ def write_versioned(
     version: Version,
 ) -> None:
     """W2+W4: stamp ``_version`` and append under versioned directories
-    (VersionContext.scala:81-96)."""
+    (VersionContext.scala:81-96).
+
+    Keeps the reader's schema memo exact: a successful write seeds the
+    data schema of ``(table.location, version.label)``, so reads of the
+    fresh directories skip footer inference.  Every library writer lands
+    ONE write job per (table, label); an explicit ``version=`` that
+    appends into a label the memo already knows drops the entry instead
+    (the directory's first footer may now be either write's)."""
     part_cols = list(table.partition_schema.columns)
     writer = (
         df.withColumn(VERSION_COLUMN, F.lit(version.label))
@@ -282,7 +290,13 @@ def write_versioned(
     )
     for k, v in table.format_options:
         writer = writer.option(k, v)
+    key = _memo_key(df.sparkSession, table, version.label)
+    appended = key is not None and _memo_pop(key)
     writer.save(table.location)
+    if appended:
+        _memo_pop(key)  # a read racing the append may have re-learned it
+    elif key is not None:
+        _seed_from_write(key, df.schema, table)
 
 
 def versioned_insert_group(

@@ -1,9 +1,13 @@
 """Driver-action profiler: attribute every Spark action to its call site.
 
-Wraps DataFrame.collect / count / localCheckpoint (the repo's three
-driver-action shapes) plus DataFrameWriter.save/parquet, recording wall
-duration, thread, and the nearest chronicles_spark / bench call frame.
-Usage:
+Wraps DataFrame.collect / count / take / localCheckpoint (the repo's
+driver-action shapes), DataFrameWriter.save/parquet and
+DataFrameReader.load/parquet (a schema-less parquet load runs one
+footer-inference job), recording wall duration, thread, and the nearest
+chronicles_spark / bench call frame.  An action run on a
+``ThreadPoolExecutor`` thread with no such frame of its own (e.g.
+``pool.submit(df.collect)``) is attributed to the frame that submitted
+it.  Usage:
 
     from scripts.profile_actions import trace_actions
     with trace_actions() as log:
@@ -18,12 +22,16 @@ import contextlib
 import threading
 import time
 import traceback
+from concurrent.futures import ThreadPoolExecutor
 
 try:  # Spark 4: concrete methods live on the classic subclass
     from pyspark.sql.classic.dataframe import DataFrame
 except ImportError:  # pragma: no cover - Spark 3 fallback
     from pyspark.sql import DataFrame
-from pyspark.sql.readwriter import DataFrameWriter
+from pyspark.sql.readwriter import DataFrameReader, DataFrameWriter
+
+# call site of the submit that runs the current pool task, if any
+_SUBMITTER = threading.local()
 
 
 def _call_site() -> str:
@@ -34,7 +42,7 @@ def _call_site() -> str:
         if "chronicles_spark" in fn or "bench" in fn or "profile_" in fn:
             short = fn.rsplit("/", 1)[-1]
             return f"{short}:{fr.lineno}:{fr.name}"
-    return "?"
+    return getattr(_SUBMITTER, "site", "?")
 
 
 class ActionLog:
@@ -62,30 +70,43 @@ class ActionLog:
 @contextlib.contextmanager
 def trace_actions():
     log = ActionLog()
-    orig = {
-        "collect": DataFrame.collect,
-        "count": DataFrame.count,
-        "localCheckpoint": DataFrame.localCheckpoint,
-        "save": DataFrameWriter.save,
-        "parquet": DataFrameWriter.parquet,
-        "take": DataFrame.take,
-    }
+    wrapped = [
+        (DataFrame, "collect"), (DataFrame, "count"), (DataFrame, "take"),
+        (DataFrame, "localCheckpoint"),
+        (DataFrameWriter, "save"), (DataFrameWriter, "parquet"),
+        (DataFrameReader, "load"), (DataFrameReader, "parquet"),
+    ]
+    orig = {(cls, name): getattr(cls, name) for cls, name in wrapped}
+    orig_submit = ThreadPoolExecutor.submit
 
-    def wrap(name, fn):
+    def wrap(kind, fn):
         def inner(*a, **kw):
             t0 = time.perf_counter()
             try:
                 return fn(*a, **kw)
             finally:
-                log.add(name, time.perf_counter() - t0, _call_site())
+                log.add(kind, time.perf_counter() - t0, _call_site())
         return inner
 
-    for name, fn in orig.items():
-        cls = DataFrameWriter if name in ("save", "parquet") else DataFrame
-        setattr(cls, name, wrap(name, fn))
+    def submit(self, fn, /, *args, **kwargs):
+        site = _call_site()
+
+        def run(*a, **kw):
+            prev = getattr(_SUBMITTER, "site", "?")
+            _SUBMITTER.site = site
+            try:
+                return fn(*a, **kw)
+            finally:
+                _SUBMITTER.site = prev
+        return orig_submit(self, run, *args, **kwargs)
+
+    for (cls, name), fn in orig.items():
+        kind = "read." + name if cls is DataFrameReader else name
+        setattr(cls, name, wrap(kind, fn))
+    ThreadPoolExecutor.submit = submit
     try:
         yield log
     finally:
-        for name, fn in orig.items():
-            cls = DataFrameWriter if name in ("save", "parquet") else DataFrame
+        for (cls, name), fn in orig.items():
             setattr(cls, name, fn)
+        ThreadPoolExecutor.submit = orig_submit
