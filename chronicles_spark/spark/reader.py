@@ -183,14 +183,15 @@ def _seed_from_write(key, schema: StructType, table: TableDefinition) -> None:
         _memo_put(key, _as_nullable(data))
 
 
-def _first_data_dir(paths_: List[str]) -> str:
-    """The directory holding the file Spark infers a schema-less parquet
-    read from: it sorts the listed files by path and reads the first
-    footer, so the winner is the least ``dir + "/"`` (which is not
-    always ``paths_[0]``: ``a=1-x/`` sorts before ``a=1/``)."""
-    if len(paths_) == 1:
-        return paths_[0]
-    return min(paths_, key=lambda d: d + "/")
+def _first_footer_dir(paths_: List[str]) -> str:
+    """The directory whose footer a schema-less parquet read infers
+    from.  Spark sorts the listed files by path (Java string order, i.e.
+    UTF-16 code units) and reads the first footer; no directory of a
+    state is a prefix of another, so that is the least directory, which
+    is not always ``paths_[0]`` (``a=1-x/`` sorts before ``a=1/``)."""
+    if all(map(str.isascii, paths_)):
+        return min(paths_)
+    return min(paths_, key=lambda d: d.encode("utf-16-be", "surrogatepass"))
 
 
 def live_paths(table: TableDefinition, table_version) -> List[str]:
@@ -277,7 +278,7 @@ def read_version(
     # a known data schema skips the footer-inference job inside load();
     # partition columns are still inferred from the directory names
     key = _memo_key(
-        spark, table, vpaths.parse_version(_first_data_dir(paths_)).label
+        spark, table, vpaths.parse_version(_first_footer_dir(paths_)).label
     )
     known = _memo_get(key) if key is not None else None
     if known is not None:

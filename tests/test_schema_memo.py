@@ -15,6 +15,7 @@ import datetime
 import decimal
 import os
 import shutil
+import sys
 import threading
 import uuid
 
@@ -89,7 +90,7 @@ def _jobs(spark, fn):
 
 
 def _key(spark, table, state):
-    first = R._first_data_dir(live_paths(table, state))
+    first = R._first_footer_dir(live_paths(table, state))
     return R._memo_key(spark, table, vpaths.parse_version(first).label)
 
 
@@ -315,7 +316,7 @@ def test_types_outside_the_gate_are_learned_not_seeded(spark, tmp_path):
     assert warm.schema == cold.schema and _rows(warm) == _rows(cold)
 
 
-def _evolved(spark, tmp_path):
+def test_schema_evolved_table_first_footer_wins(spark, tmp_path):
     """Version A (id) under ``p=1`` and ``p=2``, version B (id, extra)
     under ``p=1-x``: Spark infers from the path-wise first data file,
     which lies under ``p=1-x`` ('-' sorts before '/'), although the
@@ -326,22 +327,16 @@ def _evolved(spark, tmp_path):
         PartitionSchema(("p",)),
     )
     tracker.init_table(table.name, is_snapshot=False, user_id="t")
-    a, _ = versioned_insert_into(
+    versioned_insert_into(
         spark.range(3).select("id", F.lit("1").alias("p")).union(
             spark.range(3).select("id", F.lit("2").alias("p"))),
         table, tracker, "t", "A")
-    b, _ = versioned_insert_into(
+    state, _ = versioned_insert_into(
         spark.range(3).select("id", F.lit("e").alias("extra"),
                               F.lit("1-x").alias("p")),
         table, tracker, "t", "B")
-    return table, tracker, a, b
-
-
-def test_schema_evolved_table_first_footer_wins(spark, tmp_path):
-    table, tracker, _, _ = _evolved(spark, tmp_path)
-    state = tracker.current_version(table.name)
     paths_ = live_paths(table, state)
-    assert "/p=1/" in paths_[0] and "/p=1-x/" in R._first_data_dir(paths_)
+    assert "/p=1/" in paths_[0] and "/p=1-x/" in R._first_footer_dir(paths_)
     _assert_memo_read_equals_cold(spark, table, state)
     assert "extra" in read_version(spark, table, state).columns
 
@@ -352,6 +347,27 @@ def test_schema_evolved_table_first_footer_wins(spark, tmp_path):
     })
     _assert_memo_read_equals_cold(spark, table, only_a)
     assert "extra" not in read_version(spark, table, only_a).columns
+
+
+def test_first_footer_follows_java_string_order(spark, tmp_path):
+    """Spark orders paths by UTF-16 code units: a partition value outside
+    the BMP (a surrogate pair, 0xD83D...) sorts before U+FF01, although
+    Python's code-point order says the opposite."""
+    tracker = FileBackedVersionTracker(str(tmp_path / "_log"))
+    table = TableDefinition(
+        TableName("demo", "utf16"), str(tmp_path / "utf16"), PartitionSchema(("p",))
+    )
+    tracker.init_table(table.name, is_snapshot=False, user_id="t")
+    versioned_insert_into(spark.range(2).select("id", F.lit("\uff01").alias("p")),
+                          table, tracker, "t", "A")
+    state, _ = versioned_insert_into(
+        spark.range(2).select("id", F.lit("e").alias("extra"),
+                              F.lit("\U0001f600").alias("p")),
+        table, tracker, "t", "B")
+    paths_ = live_paths(table, state)
+    assert "\U0001f600" in R._first_footer_dir(paths_) and "\uff01" in min(paths_)
+    _assert_memo_read_equals_cold(spark, table, state)
+    assert "extra" in read_version(spark, table, state).columns
 
 
 def test_second_write_into_explicit_version_drops_the_entry(spark, tmp_path):
@@ -449,22 +465,35 @@ def test_memo_is_bounded_lru_and_thread_safe(monkeypatch):
     assert R._memo_get(("loc", "1")) is None
     assert R._memo_get(("loc", "0")) is s and len(R._SCHEMA_MEMO) == 8
 
-    errors = []
+    # more threads than cores and a short switch interval; a lost
+    # update would drop a key (below the bound) or overshoot the bound
+    def churn(t, n_keys, out):
+        for i in range(n_keys):
+            key = ("loc", f"{t}-{i}")
+            R._memo_put(key, s)
+            R._memo_get(key)
+            R._memo_pop(("loc", f"{t}-gone"))
+        out.append(t)
 
-    def churn(t):
+    def run_threads(n_keys):
+        done = []
+        threads = [threading.Thread(target=churn, args=(t, n_keys, done))
+                   for t in range(16)]
+        prev = sys.getswitchinterval()
+        sys.setswitchinterval(1e-6)
         try:
-            for i in range(500):
-                key = ("loc", f"{t}-{i % 13}")
-                R._memo_put(key, s)
-                R._memo_get(key)
-                if i % 7 == 0:
-                    R._memo_pop(key)
-        except Exception as e:  # pragma: no cover - the failure path
-            errors.append(e)
+            for t in threads:
+                t.start()
+            for t in threads:
+                t.join(timeout=60)
+        finally:
+            sys.setswitchinterval(prev)
+        assert not any(t.is_alive() for t in threads) and len(done) == 16
 
-    threads = [threading.Thread(target=churn, args=(t,)) for t in range(4)]
-    for t in threads:
-        t.start()
-    for t in threads:
-        t.join()
-    assert not errors and len(R._SCHEMA_MEMO) <= 8
+    R._SCHEMA_MEMO.clear()
+    monkeypatch.setattr(R, "_SCHEMA_MEMO_MAX", 16 * 200)
+    run_threads(200)
+    assert len(R._SCHEMA_MEMO) == 16 * 200
+    monkeypatch.setattr(R, "_SCHEMA_MEMO_MAX", 64)
+    run_threads(200)
+    assert len(R._SCHEMA_MEMO) == 64
