@@ -13,7 +13,6 @@ exactly 1 cold, and per-call ceilings for the three index maintainers.
 
 import datetime
 import decimal
-import os
 import shutil
 import sys
 import threading
@@ -56,8 +55,6 @@ from chronicles_spark.spark import reader as R
 from chronicles_spark.spark.reader import live_paths, read_version
 from chronicles_spark.spark.writer import versioned_insert_into
 from chronicles_spark.trackers import FileBackedVersionTracker
-
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_TEST", "/root/testdata/sf0.001")
 
 # per-call job ceilings on the tiny fixture below, set at the counts
 # measured with schema-known reads (Spark 4.1, local[4], AQE on); with an
@@ -158,7 +155,7 @@ def test_read_of_known_directory_launches_no_job_cold_read_one(spark, tmp_path):
 
 
 @pytest.fixture(scope="module")
-def lake(spark, tmp_path_factory):
+def lake(spark, sf_dir, tmp_path_factory):
     """Every index table the library writes, on a tiny fixture: the
     dedup index (bands, doc store, pairs journal), the cluster index
     (assign, members) and the ANN index (index, id map), each built and
@@ -178,7 +175,7 @@ def lake(spark, tmp_path_factory):
     ann = table("ann", "bucket")
     pairs = DX.dedup_pairs_table(bands)
 
-    docs = load_table(spark, SF_DIR, "documents").select("doc_id", "text")
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     DX.build_dedup_index(docs.where("doc_id < 300"), bands, tracker,
                          band_shards=4, doc_shards=2)
     CX.build_dedup_clusters(None, clusters, tracker, doc_shards=2,
@@ -191,7 +188,7 @@ def lake(spark, tmp_path_factory):
         spark, pairs, clusters, tracker))
     assert folded
 
-    emb = load_table(spark, SF_DIR, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     cents = SIM.kmeans_fit(emb, 4, 2)
     books = SIM.pq_fit(emb, m=4, k_sub=4, iters=2)
     AX.build_ann_index(emb.where("vec_id < 25").select("vec_id", "embedding"),
