@@ -15,15 +15,20 @@ The same algebra is re-expressed as a distributed DataFrame computation
 (windowed argmax over an ops-log table) in
 ``chronicles_spark.plans.log_queries`` — this module is the tiny
 driver-side metadata version used by the trackers.
+
+:func:`fold_onto` + :func:`state_version` continue the same fold from a
+SAVED state (a fold checkpoint, a stream's previous batch): the one
+incremental form every checkpointed resolution, checkpoint cut and the
+CDC source use.
 """
 
 from __future__ import annotations
 
-from typing import Dict, Iterable, Optional
+from typing import Dict, Iterable, Optional, Tuple
 
 from .model import Partition, PartitionedTableVersion, SnapshotTableVersion
 from .ops import AddPartitionVersion, AddTableVersion, InitTable, RemovePartition, TableUpdate
-from .version import Version
+from .version import UNVERSIONED, Version
 
 
 def take_through(updates: Iterable[TableUpdate], head_commit_id: Optional[str]) -> list:
@@ -83,7 +88,56 @@ def current_version(updates: Iterable[TableUpdate], head_commit_id: Optional[str
             return latest_snapshot_version(upto)
         except ValueError:
             # table initialised but nothing written yet → empty partitioned-ish
-            from .version import UNVERSIONED
-
             return SnapshotTableVersion(UNVERSIONED)
     return apply_partition_updates(upto)
+
+
+def fold_onto(
+    partitions, snapshot: Optional[str], updates: Iterable[TableUpdate]
+) -> Tuple[Dict[str, str], Optional[str]]:
+    """A saved fold state ``(partition path → version label, snapshot
+    label or None)`` — the string form checkpoints persist — advanced by
+    ``updates`` with the :func:`apply_partition_updates` and
+    :func:`latest_snapshot_version` rules.  ``partitions`` (a mapping or
+    ``(path, label)`` pairs) is copied, never mutated."""
+    state = dict(partitions)
+    for u in updates:
+        for op in u.operations:
+            if isinstance(op, AddPartitionVersion):
+                state[op.partition.path] = op.version.label
+            elif isinstance(op, RemovePartition):
+                state.pop(op.partition.path, None)
+            elif isinstance(op, AddTableVersion):
+                snapshot = op.version.label
+    return state, snapshot
+
+
+def state_version(is_snapshot: bool, partitions, snapshot: Optional[str]):
+    """The ``TableVersion`` of a :func:`fold_onto` state, as
+    :func:`current_version` resolves the same prefix."""
+    if is_snapshot:
+        return SnapshotTableVersion(
+            UNVERSIONED if snapshot is None else _version(snapshot)
+        )
+    return PartitionedTableVersion(
+        {Partition.parse(p): _version(v) for p, v in partitions.items()}
+    )
+
+
+def _version(label: str) -> Version:
+    """``Version(label)`` through a bounded memo: every resolution builds
+    one per label of its state, and the labels recur across resolutions
+    (a ``Version`` is immutable, so equal labels share one instance).  A
+    full memo starts over rather than evicting entry by entry."""
+    v = _VERSION_MEMO.get(label)
+    if v is None:
+        if len(_VERSION_MEMO) >= _VERSION_MEMO_MAX:
+            _VERSION_MEMO.clear()
+        v = _VERSION_MEMO[label] = Version(label)
+    return v
+
+
+# 16,384 labels of 62 characters take about 3.5 MB: 1.7 MB of instances and
+# table, the rest the label strings the memo keeps alive
+_VERSION_MEMO: Dict[str, Version] = {}
+_VERSION_MEMO_MAX = 1 << 14

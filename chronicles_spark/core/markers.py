@@ -5,9 +5,14 @@ Lives in ``core`` (not ``operators.pairing``) because the trackers'
 fold CHECKPOINTS record the newest marker of their folded prefix — the
 piece that makes the index families' read-modify-write base resolution
 O(tail) instead of O(commit history) (``head_resolution`` on the files
-and sqlite trackers).  :mod:`chronicles_spark.operators.pairing`
-re-exports these names; the marker spelling is a protocol property
-shared by every family.
+and sqlite trackers).  :func:`newest_pair_label` is the one scan for
+that marker (checkpoint cuts, ``head_resolution``, the full walk of
+``operators.pairing.pinned_state``).  A files checkpoint records it in
+three states: a label, an explicit null (the whole prefix holds no
+marker), or no field (a cut over a checkpoint written before the field
+existed: unknown, so ``head_resolution`` degrades to the full walk).
+:mod:`chronicles_spark.operators.pairing` re-exports the marker names;
+the marker spelling is a protocol property shared by every family.
 
 No reference counterpart: stettix/chronicles commits one table at a
 time (core/.../VersionTracker.scala); pairing is this repo's extension.
@@ -33,3 +38,14 @@ def pair_label(message: "str | None") -> "str | None":
     if i < 0:
         return None
     return message[i + len(PAIR_MARKER_PREFIX):-1]
+
+
+def newest_pair_label(messages, prior=None):
+    """The label of the first marked message in ``messages`` (newest
+    first), else ``prior``, the newest marker before them — returned
+    unchanged, so a caller's own "unknown" value survives."""
+    for m in messages:
+        label = pair_label(m)
+        if label is not None:
+            return label
+    return prior

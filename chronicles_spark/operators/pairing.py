@@ -32,7 +32,9 @@ from __future__ import annotations
 # checkpoints can record the newest marker of their folded prefix
 # (the O(tail) base-resolution fast path); re-exported here because the
 # operator families import the protocol from this module
-from ..core.markers import PAIR_MARKER_PREFIX, pair_label, pair_message
+from ..core.markers import (
+    PAIR_MARKER_PREFIX, newest_pair_label, pair_label, pair_message,
+)
 
 __all__ = [
     "PAIR_MARKER_PREFIX", "pair_label", "pair_message", "TornPairError",
@@ -81,7 +83,7 @@ def pinned_state(tracker, table_name):
     whole log (docs/scale.md "metadata plane").  ``head_resolution``
     returns None when it cannot answer (no checkpoint yet, a
     pre-upgrade checkpoint without the marker field, a gap-filled
-    prefix, or a head rolled back before the checkpoint) — then the
+    prefix, or a head deeper than the checkpoints it walks) — then the
     full ``table_state`` walk below is the always-correct degrade.
 
     The full walk must be SELF-CONSISTENT: the files tracker lists
@@ -93,10 +95,9 @@ def pinned_state(tracker, table_name):
     jittered exponential backoff, 10ms..~150ms, so a sustained
     concurrent writer can't keep every re-read inside one contention
     burst) until the pinned head's commit is present in the update
-    list.  (``head_resolution`` carries the same property internally:
-    it only answers when the head's commit is present in the listing it
-    folded, and returns None otherwise — landing here, where the retry
-    loop covers the race.)"""
+    list.  (``head_resolution`` cannot meet that race: it reads the
+    head before it lists, and the head's commit file is written before
+    the head moves.)"""
     from ..core import fold
 
     fast = getattr(tracker, "head_resolution", None)
@@ -111,14 +112,7 @@ def pinned_state(tracker, table_name):
     # actually contains (the head itself may be an out-of-band unmarked
     # commit; commits AFTER a rolled-back head must not count)
     prefix = fold.take_through(st.updates, base_head)
-    found = next(
-        (
-            lbl
-            for u in reversed(prefix)
-            if (lbl := pair_label(u.metadata.message)) is not None
-        ),
-        None,
-    )
+    found = newest_pair_label(u.metadata.message for u in reversed(prefix))
     return fold.current_version(st.updates, base_head), base_head, found
 
 

@@ -60,6 +60,7 @@ def vacuum_artifact_sidecars(
     from ..branching import branches, parse_branch
     from ..core import paths as vpaths
     from ..spark.version_index import line_versions_indexed
+    from .pairing import pinned_state
 
     if parse_branch(table.name) is not None:
         raise ValueError(
@@ -89,30 +90,7 @@ def vacuum_artifact_sidecars(
     # every line's newest head-pair marker label is load-bearing (the
     # families anchor artifact resolution on it) — never doom it, even
     # when the label maps to no (or no surviving) data directory
-    protected: set = set()
-    for line in lines:
-        lbl = None
-        fast = getattr(tracker, "head_resolution", None)
-        out = fast(line) if fast is not None else None
-        if out is not None:
-            lbl = out[2]
-        else:
-            from ..core import fold
-            from ..core.markers import pair_label
-
-            st = tracker.table_state(line)
-            lbl = next(
-                (
-                    pl
-                    for u in reversed(
-                        list(fold.take_through(st.updates, st.current_version))
-                    )
-                    if (pl := pair_label(u.metadata.message)) is not None
-                ),
-                None,
-            )
-        if lbl is not None:
-            protected.add(lbl)
+    protected = {pinned_state(tracker, line)[2] for line in lines} - {None}
     doomed = []
     now = _time.time()
     for n in sorted(sidecars):

@@ -337,8 +337,9 @@ class ChroniclesStreamReader(DataSourceStreamReader):
         if rollback not in ("error", "ignore"):
             raise ValueError(f"rollback must be error|ignore, got {rollback!r}")
         self._rollback = rollback
-        # incremental-fold cache: (last seq folded through, (partition→version
-        # | None, snapshot Version | None)); seq=-1 is the empty state
+        # incremental-fold cache: (last seq folded through, ``fold.fold_onto``
+        # state: partition path → version label, snapshot label | None);
+        # seq=-1 is the empty state
         self._fold_cache = (-1, ({}, None))
         self._snapshot_kind: Optional[bool] = None
         self._last_file_id: Tuple[int, Optional[str]] = (-1, None)  # seq → id
@@ -374,29 +375,15 @@ class ChroniclesStreamReader(DataSourceStreamReader):
 
     def _fold_onto(self, state, start_seq: int, end_seq: int):
         """Fold commits with ``start_seq < seq <= end_seq`` onto
-        ``state`` = (pv, snap)."""
-        from ..core.ops import AddPartitionVersion, AddTableVersion, RemovePartition
+        ``state``, a :func:`~chronicles_spark.core.fold.fold_onto` state."""
+        from ..core import fold
 
         if start_seq >= end_seq:
             return state
         updates = self._make_tracker().updates_in_seq_range(
             self._table_name(), start_seq, end_seq
         )
-        pv, snap = state
-        if self._is_snapshot():
-            for u in updates:
-                for op in u.operations:
-                    if isinstance(op, AddTableVersion):
-                        snap = op.version
-            return None, snap
-        pv = dict(pv or {})
-        for u in updates:
-            for op in u.operations:
-                if isinstance(op, AddPartitionVersion):
-                    pv[op.partition] = op.version
-                elif isinstance(op, RemovePartition):
-                    pv.pop(op.partition, None)
-        return pv, None
+        return fold.fold_onto(*state, updates)
 
     def _state_at(self, seq: int):
         cs, cstate = self._fold_cache
@@ -530,6 +517,8 @@ class ChroniclesStreamReader(DataSourceStreamReader):
 
     def partitions(self, start: dict, end: dict) -> Sequence[InputPartition]:
         from ..core import paths as vpaths
+        from ..core.model import Partition
+        from ..core.version import Version
 
         seqs = self._make_tracker().update_seqs(self._table_name())
         n0, s0 = self._offset_pos(start, seqs)
@@ -542,25 +531,25 @@ class ChroniclesStreamReader(DataSourceStreamReader):
         pv0, snap0 = self._state_at(s0)
         pv1, snap1 = self._fold_onto((pv0, snap0), s0, s1)
         self._fold_cache = (s1, (pv1, snap1))  # the next batch starts at s1
-        if n1 > 0 and self._is_snapshot():
-            pv0 = pv1 = None  # n=0 empty state is kind-agnostic ({}, None)
 
         out: List[InputPartition] = []
-        if pv1 is None:  # snapshot table at end of range
+        # n=0 empty state is kind-agnostic ({}, None): no table kind read
+        if n1 > 0 and self._is_snapshot():
             if snap1 is not None and snap1 != snap0:
                 out.append(
-                    _LiveDir(vpaths.path_for(self._location, snap1), (), self._fmt)
+                    _LiveDir(
+                        vpaths.path_for(self._location, Version(snap1)), (), self._fmt
+                    )
                 )
         else:
-            base = pv0 or {}
-            for partition, version in sorted(
-                pv1.items(), key=lambda kv: kv[0].path
-            ):
-                if base.get(partition) != version:
+            for path, label in sorted(pv1.items()):
+                if pv0.get(path) != label:
+                    partition = Partition.parse(path)
                     out.append(
                         _LiveDir(
                             vpaths.path_for(
-                                partition.resolve_path(self._location), version
+                                partition.resolve_path(self._location),
+                                Version(label),
                             ),
                             partition.column_values,
                             self._fmt,

@@ -78,18 +78,6 @@ class CommitConflictError(RuntimeError):
         self.overlapping = tuple(overlapping)
 
 
-def apply_ops_to_path_state(state: dict, updates) -> None:
-    """Fold ops into a mutable ``{partition_path: version_label}`` dict
-    (apply_partition_updates semantics, VersionTracker.scala:156-172) —
-    the shared kernel of the fold-checkpoint fast paths (files + sqlite)."""
-    for u in updates:
-        for op in u.operations:
-            if isinstance(op, AddPartitionVersion):
-                state[op.partition.path] = op.version.label
-            elif isinstance(op, RemovePartition):
-                state.pop(op.partition.path, None)
-
-
 def _touched_partitions(update: TableUpdate) -> Tuple[Set[Partition], bool]:
     """(partitions this commit writes or removes, touches-whole-table?)."""
     parts: Set[Partition] = set()
@@ -417,11 +405,10 @@ class VersionTracker(abc.ABC):
 
     def set_current_version(self, table: TableName, commit_id: str) -> None:
         """Move head to an existing commit — rollback/forward
-        (VersionTracker.scala:71)."""
-        state = self.table_state(table)  # raises UnknownTableError
-        if not any(u.metadata.commit_id == commit_id for u in state.updates):
-            raise UnknownCommitError(commit_id)
-        self._set_head(table, commit_id)
+        (VersionTracker.scala:71) — by :meth:`_checkout`, whose
+        ``version_at`` proves the commit exists (raising
+        UnknownTableError / UnknownCommitError before the head moves)."""
+        self._checkout(table, commit_id)
 
     def _checkout(self, table: TableName, commit_id: str):
         """Move the head to an existing commit and return the folded table

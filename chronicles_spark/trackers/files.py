@@ -97,31 +97,21 @@ from typing import List
 
 from ..core import fold
 from ..core.clock import MonotonicClock
-from ..core.markers import pair_label
-from ..core.model import (
-    Partition,
-    PartitionedTableVersion,
-    SnapshotTableVersion,
-    TableName,
-)
+from ..core.markers import newest_pair_label
+from ..core.model import TableName
 from ..core.ops import (
-    AddPartitionVersion,
-    AddTableVersion,
-    RemovePartition,
     TableUpdate,
     TableUpdateMetadata,
     update_from_dict,
     update_from_json,
     update_to_json,
 )
-from ..core.version import UNVERSIONED, Version
 from .base import (
     TableState,
     UnknownCommitError,
     UnknownTableError,
     VersionTracker,
     _as_utc,
-    apply_ops_to_path_state,
 )
 from .fs import FileSystem, LocalFileSystem, filesystem_for
 
@@ -705,14 +695,6 @@ class FileBackedVersionTracker(VersionTracker):
     # of the head pointer, so one checkpoint serves every head at or after it
     # (the same invariant Delta's _last_checkpoint relies on).
 
-    def _update_seqs(self, d: str) -> list:
-        """(seq, filename) for every LIVE commit file, ascending."""
-        return sorted(
-            (int(m.group(1)), n)
-            for n in self.fs.list_dir(d)
-            if (m := _UPDATE_FILE_RE.match(n))
-        )
-
     # -- commit-log archive access (docs/scale.md "commit-log archival") --
 
     def _scan_dir(self, d: str, with_checkpoints: bool = False):
@@ -960,11 +942,6 @@ class FileBackedVersionTracker(VersionTracker):
         except (FileNotFoundError, ValueError, KeyError, TypeError):
             return -1
 
-    def _read_updates(self, d: str, names) -> tuple:
-        return tuple(
-            update_from_json(self.fs.read_text(self.fs.join(d, n))) for n in names
-        )
-
     def _read_doc(self, d: str, name: str) -> dict:
         """One live commit file, ``json.loads``-ed but not decoded into a
         TableUpdate: the newest-first scans compare only its
@@ -1068,13 +1045,6 @@ class FileBackedVersionTracker(VersionTracker):
             ]
         )
 
-    def _read_checkpoint(self, d: str) -> dict | None:
-        """The checkpoint the ``_last_checkpoint`` pointer names, or None.
-        Any missing/corrupt artifact degrades to None (full fold) — the
-        commit files stay the only source of truth."""
-        seq = self._read_pointer_seq(d)
-        return None if seq is None else self._checkpoint_body(d, seq)
-
     def _read_pointer_seq(self, d: str) -> "int | None":
         """The seq the ``_last_checkpoint`` pointer names (its body is
         not read), or None when the pointer is missing or corrupt."""
@@ -1118,9 +1088,6 @@ class FileBackedVersionTracker(VersionTracker):
                 return False
         return sum(1 for s in live_seqs if s <= last) + arch_n == int(n)
 
-    # shared with the sqlite checkpoint fast path
-    _apply_to_state = staticmethod(apply_ops_to_path_state)
-
     def _maybe_checkpoint(self, d: str) -> None:
         """Write a new checkpoint when ``checkpoint_interval`` commits have
         accumulated since the last one.  Incremental: reads only the tail
@@ -1145,8 +1112,10 @@ class FileBackedVersionTracker(VersionTracker):
         # read the checkpoint BEFORE listing: the listing is then at least
         # as fresh as the checkpoint, so a checkpoint cut concurrently by
         # another writer can never spuriously fail the covers-prefix guard
-        # (a stale listing would under-count its prefix)
-        ck = self._read_checkpoint(d)
+        # (a stale listing would under-count its prefix); a missing or
+        # corrupt pointer or checkpoint reads as None (a rebuild)
+        ptr = self._read_pointer_seq(d)
+        ck = None if ptr is None else self._checkpoint_body(d, ptr)
         live, archives = self._scan_dir(d)
         arch_last, arch_n = self._arch_stats(archives)
         live_seqs = [s for s, _ in live]
@@ -1183,16 +1152,11 @@ class FileBackedVersionTracker(VersionTracker):
         except _ArchiveVanished:
             return  # consolidation raced the cut: skip it
         updates = prefix + tuple(update_from_dict(o) for o in docs)
-        if ck:
-            state = dict(ck["partitions"])
-            snapshot_version = ck.get("snapshot_version")
-        else:
-            state, snapshot_version = {}, None
-        self._apply_to_state(state, updates)
-        for u in updates:
-            for op in u.operations:
-                if isinstance(op, AddTableVersion):
-                    snapshot_version = op.version.label
+        state, snapshot_version = fold.fold_onto(
+            ck["partitions"] if ck else (),
+            ck.get("snapshot_version") if ck else None,
+            updates,
+        )
         last_seq = tail[-1][0]
         body = {
             "last_seq": last_seq,
@@ -1208,19 +1172,14 @@ class FileBackedVersionTracker(VersionTracker):
         # (newest marker), an explicit null (full prefix scanned, no
         # marker anywhere — legacy/non-pair tables), or ABSENT (an
         # incremental cut over a pre-upgrade checkpoint that never
-        # recorded the field — unknown, so head_resolution degrades).
-        marker = next(
-            (
-                pl
-                for u in reversed(updates)
-                if (pl := pair_label(u.metadata.message)) is not None
-            ),
-            None,
+        # recorded the field — unknown, so head_resolution degrades);
+        # ``...`` stands for the absent field
+        marker = newest_pair_label(
+            (u.metadata.message for u in reversed(updates)),
+            ck.get("pair_label", ...) if ck else None,
         )
-        if marker is not None or ck is None:
+        if marker is not ...:
             body["pair_label"] = marker
-        elif "pair_label" in ck:
-            body["pair_label"] = ck["pair_label"]
         # the cut's commit index, written BEFORE the checkpoint so an
         # orphaned one is harmless: the tail's headers — on a rebuild only
         # the newest checkpoint_interval of them, so its size stays
@@ -1300,27 +1259,34 @@ class FileBackedVersionTracker(VersionTracker):
     # travel a few checkpoint cuts behind) at O(distance-from-head) cost
     _FAST_RESOLVE_MAX_SEGMENTS = 32
 
-    def _fast_resolve(self, d: str, commit_id: str):
-        """Checkpoint + tail fold at ``commit_id``, or None when the fast
-        path cannot answer (checkpoints disabled, no pointer, live files
-        at or below the archive floor, no covering checkpoint at or below
-        the commit, or a commit deeper than the newest
-        ``_FAST_RESOLVE_MAX_SEGMENTS`` retained checkpoints — e.g. an
-        unknown id, or travel below them on an archived log).
+    def _fast_resolve(
+        self, d: str, commit_id: "str | None" = None, fallback: bool = True
+    ):
+        """``(table_version, commit_id, newest_pair_label_in_prefix)``
+        folded from a checkpoint (the label ``...`` when that checkpoint
+        lacks the field).  ``commit_id=None`` is the head, read after the
+        pointer and before the listing, so its commit file (written before
+        the head moves) is listed.  None when the fast path cannot
+        answer (checkpoints disabled, no pointer, live files at or below
+        the archive floor, no covering checkpoint at or below the commit,
+        or a commit deeper than the newest ``_FAST_RESOLVE_MAX_SEGMENTS``
+        retained checkpoints — e.g. an unknown id, or travel below them
+        on an archived log).
 
         Locate, then fold: the newest-first header walk
         (:meth:`_headers`) finds the commit's seq, comparing only each
         record's ``commit_id`` and reading one commit index per cut;
         then the newest retained checkpoint at or below that seq is read
-        (older ones only when it fails ``_checkpoint_covers_prefix``) and
-        only the commits in (checkpoint seq, target seq] are decoded and
-        folded on it.  So each commit file is read and decoded at most
-        once per resolution, one checkpoint body is read in the common
-        case, and the cost is O(cuts + checkpoint_interval), never the
-        whole log.  A commit below the oldest checkpoint of a log with no
-        archive (the genesis segment) folds from the empty state over the
-        live files up to it, the table kind read from ``table-metadata``
-        as the cuts do.  Checkpoints are never deleted above the archive
+        (older ones only when it fails ``_checkpoint_covers_prefix``;
+        ``fallback=False`` answers None instead) and only the commits in
+        (checkpoint seq, target seq] are decoded and folded on it.  So
+        each commit file is read and decoded at most once per
+        resolution, one checkpoint body is read in the common case, and
+        the cost is O(cuts + checkpoint_interval), never the whole log.
+        A commit below the oldest checkpoint of a log with no archive
+        (the genesis segment) folds from the empty state over the live
+        files up to it, the table kind read from ``table-metadata`` as
+        the cuts do.  Checkpoints are never deleted above the archive
         floor (only the pointer advances), and each is a pure function of
         log order, so cutoff semantics equal the full fold's (including
         rolled-back commits re-surfacing after a later write).  Retained
@@ -1337,6 +1303,8 @@ class FileBackedVersionTracker(VersionTracker):
         ptr = self._read_pointer_seq(d)
         if ptr is None:
             return None
+        if commit_id is None:
+            commit_id = self._read_head(d)
         live, archives, ck_seqs, sides = self._scan_cuts(d)
         arch_last, arch_n = self._arch_stats(archives)
         seqs = [s for s, _ in live]
@@ -1365,31 +1333,44 @@ class FileBackedVersionTracker(VersionTracker):
                 if c > seqs[i]:
                     continue
                 ck = self._checkpoint_body(d, c)
-                if ck is None or not self._checkpoint_covers_prefix(
+                if ck is not None and self._checkpoint_covers_prefix(
                     ck, seqs, arch_last, arch_n
                 ):
-                    continue  # corrupt or gap-filled cut: try an older one
-                return self._fold_segment(
-                    d, ck, live, bisect.bisect_right(seqs, c), i, doc
-                )
+                    j = bisect.bisect_right(seqs, c)
+                    tv, marker = self._fold_segment(d, ck, live, j, i, doc)
+                    return tv, commit_id, marker
+                if not fallback:
+                    return None
+                # corrupt or gap-filled cut: try an older one
             if genesis and seqs[i] < cands[-1]:
                 empty = {
                     "is_snapshot": self._is_snapshot_dir(d),
                     "snapshot_version": None,
                     "partitions": [],
+                    "pair_label": None,
                 }
-                return self._fold_segment(d, empty, live, 0, i, doc)
+                tv, marker = self._fold_segment(d, empty, live, 0, i, doc)
+                return tv, commit_id, marker
         except _ArchiveVanished:
             return None  # a racing archival: the full fold re-lists
         return None  # no usable checkpoint at or below the commit
 
     def _fold_segment(self, d: str, ck: dict, live, j: int, i: int, doc):
-        """``ck`` + the commits ``live[j..i]`` folded; ``doc`` is
-        ``live[i]``'s parsed file when the locate already read it."""
+        """``(table_version, newest_pair_label)`` of ``ck`` + the commits
+        ``live[j..i]``; ``doc`` is ``live[i]``'s parsed file when the
+        locate already read it."""
         docs = [self._read_doc(d, n) for _, n in live[j:i]]
         if j <= i:
             docs.append(doc if doc is not None else self._read_doc(d, live[i][1]))
-        return self._fold_checkpoint_plus(ck, [update_from_dict(o) for o in docs])
+        upto = [update_from_dict(o) for o in docs]
+        tv = fold.state_version(
+            ck["is_snapshot"],
+            *fold.fold_onto(ck["partitions"], ck.get("snapshot_version"), upto),
+        )
+        if "pair_label" not in ck:
+            return tv, ...
+        msgs = (u.metadata.message for u in reversed(upto))
+        return tv, newest_pair_label(msgs, ck["pair_label"])
 
     def _checkpoint_body(self, d: str, seq: int) -> dict | None:
         """Parse + validate ``checkpoint_<seq>.json`` (any retained cut,
@@ -1407,72 +1388,22 @@ class FileBackedVersionTracker(VersionTracker):
             # cuts, so every malformed shape must degrade, not crash
             return None
 
-    def _fold_checkpoint_plus(self, ck: dict, upto):
-        """The folded table version = checkpoint state + ``upto`` commits
-        applied on top (shared by _fast_resolve and head_resolution)."""
-        if ck["is_snapshot"]:
-            label = ck.get("snapshot_version")
-            for u in upto:
-                for op in u.operations:
-                    if isinstance(op, AddTableVersion):
-                        label = op.version.label
-            if label is None:
-                return SnapshotTableVersion(UNVERSIONED)
-            return SnapshotTableVersion(Version(label))
-        state = dict(ck["partitions"])
-        self._apply_to_state(state, upto)
-        return PartitionedTableVersion(
-            {Partition.parse(p): Version(v) for p, v in state.items()}
-        )
-
     def head_resolution(self, table: TableName):
         """O(tail) base resolution for the paired-table read-modify-write
         operators (``operators.pairing.pinned_state``): ``(folded_state,
-        head_commit_id, newest_pair_label_in_prefix)`` computed from the
-        fold checkpoint + the commit files after it — per call, ONE
-        directory listing, the head read, and at most
-        ``checkpoint_interval``-ish commit-file reads, never the whole
-        log.  Returns None whenever the fast path cannot answer —
-        checkpoints disabled, no checkpoint yet, a pre-upgrade
-        checkpoint without the ``pair_label`` field, a gap-filled
-        prefix, a head rolled back before the checkpoint, or a head
-        that outran this read's listing (the caller's self-consistent
-        full walk is the degrade in every case).  Fold cutoff semantics
-        are current_version's exactly (the checkpoint is a pure function
-        of log order)."""
+        head_commit_id, newest_pair_label_in_prefix)`` — the
+        :meth:`current_version` resolution (a rolled-back head included),
+        whose checkpoint records the newest marker of its prefix; never
+        the whole log.  None when that resolution cannot answer, when the
+        newest checkpoint at or below the head is unusable (a gap-filled
+        or corrupt cut: the log is in flux, and a pinned write's base
+        takes no older cut), or when it lacks the ``pair_label`` field —
+        the caller's self-consistent full walk is the degrade."""
         d = self._table_dir(table)
         if not self.fs.exists(self.fs.join(d, "table-metadata")):
             raise UnknownTableError(table)
-        if not self._checkpoint_interval:
-            return None
-        ck = self._read_checkpoint(d)
-        if ck is None or "pair_label" not in ck:
-            return None
-        live, archives = self._scan_dir(d)
-        arch_last, arch_n = self._arch_stats(archives)
-        if not self._checkpoint_covers_prefix(
-            ck, [s for s, _ in live], arch_last, arch_n
-        ):
-            return None
-        head = self._read_head(d)
-        tail = self._read_updates(
-            d, [n for s, n in live if s > int(ck["last_seq"])]
-        )
-        if head == ck["last_commit_id"]:
-            upto = ()
-        elif any(u.metadata.commit_id == head for u in tail):
-            upto = fold.take_through(tail, head)
-        else:
-            return None  # deep rollback, or the head outran the listing
-        marker = next(
-            (
-                pl
-                for u in reversed(list(upto))
-                if (pl := pair_label(u.metadata.message)) is not None
-            ),
-            ck["pair_label"],
-        )
-        return self._fold_checkpoint_plus(ck, upto), head, marker
+        got = self._fast_resolve(d, fallback=False)
+        return None if got is None or got[2] is ... else got
 
     def current_version(self, table: TableName):
         """Checkpointed table resolution at the head: ``_fast_resolve``
@@ -1485,8 +1416,8 @@ class FileBackedVersionTracker(VersionTracker):
         d = self._table_dir(table)
         if not self.fs.exists(self.fs.join(d, "table-metadata")):
             raise UnknownTableError(table)
-        tv = self._fast_resolve(d, self._read_head(d))
-        return tv if tv is not None else super().current_version(table)
+        got = self._fast_resolve(d)
+        return got[0] if got is not None else super().current_version(table)
 
     def version_at(self, table: TableName, commit_id: str):
         """Time travel with the same locate-then-fold path as
@@ -1496,31 +1427,8 @@ class FileBackedVersionTracker(VersionTracker):
         d = self._table_dir(table)
         if not self.fs.exists(self.fs.join(d, "table-metadata")):
             raise UnknownTableError(table)
-        tv = self._fast_resolve(d, commit_id)
-        return tv if tv is not None else super().version_at(table, commit_id)
-
-    def set_current_version(self, table: TableName, commit_id: str) -> None:
-        """Move head to an existing commit — rollback/forward
-        (VersionTracker.scala:71) — at O(cuts + checkpoint_interval)
-        reads: existence is proven by the newest-first header walk over
-        the live commits (:meth:`_headers`).  An id that is not among them (archived
-        prefix or unknown id), or a file that vanished mid-scan, takes
-        the inherited full check, which reads the archives and raises
-        UnknownTableError / UnknownCommitError."""
-        d = self._table_dir(table)
-        if self.fs.exists(self.fs.join(d, "table-metadata")):
-            live, archives, _, sides = self._scan_cuts(d)
-            try:
-                found = (
-                    self._locate(d, live, archives, sides, commit_id)
-                    is not None
-                )
-            except _ArchiveVanished:
-                found = False
-            if found:
-                self._set_head(table, commit_id)
-                return
-        super().set_current_version(table, commit_id)
+        got = self._fast_resolve(d, commit_id)
+        return got[0] if got is not None else super().version_at(table, commit_id)
 
     def commit_at_timestamp(self, table: TableName, ts) -> str:
         """The newest log-ordered commit whose timestamp is ≤ ``ts`` (the

@@ -21,6 +21,8 @@ import threading
 from datetime import datetime
 from typing import List
 
+from ..core import fold
+from ..core.markers import PAIR_MARKER_PREFIX, newest_pair_label
 from ..core.model import Partition, TableName
 from ..core.ops import (
     AddPartitionVersion,
@@ -32,12 +34,7 @@ from ..core.ops import (
     TableUpdateMetadata,
 )
 from ..core.version import Version
-from .base import (
-    TableState,
-    UnknownTableError,
-    VersionTracker,
-    apply_ops_to_path_state,
-)
+from .base import TableState, UnknownTableError, VersionTracker
 
 # db string tags (DbVersionTracker.scala:288-292)
 _TAG = {
@@ -408,16 +405,10 @@ class SqliteVersionTracker(VersionTracker):
             (name, base_seq),
         ).fetchall()
         tail = self._assemble(rows, name)
-        state = dict(json.loads(row[4])) if row else {}
-        snapshot_version = row[3] if row else None
-        apply_ops_to_path_state(state, tail)
-        is_snapshot = bool(row[2]) if row else False
-        for u in tail:
-            for op in u.operations:
-                if isinstance(op, AddTableVersion):
-                    snapshot_version = op.version.label
-                elif isinstance(op, InitTable) and row is None:
-                    is_snapshot = op.is_snapshot
+        state, snapshot_version = fold.fold_onto(
+            json.loads(row[4]) if row else (), row[3] if row else None, tail
+        )
+        is_snapshot = bool(row[2]) if row else fold.is_snapshot_from_updates(tail)
         last_seq, last_id = self._conn.execute(
             "SELECT sequence_id, commit_id FROM chronicle_table_updates_v1 "
             "WHERE table_name = ? ORDER BY sequence_id DESC LIMIT 1",
@@ -434,10 +425,6 @@ class SqliteVersionTracker(VersionTracker):
     def _fast_resolve(self, table: TableName, commit_id: str):
         """Checkpoint + tail fold at ``commit_id``, or None when the fast
         path does not apply (no checkpoint, or the commit precedes it)."""
-        from ..core import fold
-        from ..core.model import PartitionedTableVersion, SnapshotTableVersion
-        from ..core.version import UNVERSIONED
-
         if not self._checkpoint_interval:
             return None  # None disables the read side too (full-fold truth)
         with self._lock:
@@ -456,19 +443,8 @@ class SqliteVersionTracker(VersionTracker):
             upto = fold.take_through(tail, commit_id)
         else:
             return None  # precedes the checkpoint: full fold
-        if is_snap:
-            label = snap_v
-            for u in upto:
-                for op in u.operations:
-                    if isinstance(op, AddTableVersion):
-                        label = op.version.label
-            return SnapshotTableVersion(
-                UNVERSIONED if label is None else Version(label)
-            )
-        state = dict(json.loads(parts_json))
-        apply_ops_to_path_state(state, upto)
-        return PartitionedTableVersion(
-            {Partition.parse(p): Version(v) for p, v in state.items()}
+        return fold.state_version(
+            bool(is_snap), *fold.fold_onto(json.loads(parts_json), snap_v, upto)
         )
 
     def head_resolution(self, table: TableName):
@@ -483,8 +459,6 @@ class SqliteVersionTracker(VersionTracker):
         ``table_state`` walk is the degrade.  Sequence ids are
         append-only and transaction-serialized here, so the files
         tracker's listing/head race cannot occur."""
-        from ..core.markers import PAIR_MARKER_PREFIX, pair_label
-
         head = self.head_commit_id(table)  # raises UnknownTableError
         tv = self._fast_resolve(table, head)
         if tv is None:
@@ -498,18 +472,13 @@ class SqliteVersionTracker(VersionTracker):
             ).fetchone()
             if row is None:
                 return None
-            marker = None
             cur = self._conn.execute(
                 "SELECT message FROM chronicle_table_updates_v1 "
                 "WHERE table_name = ? AND sequence_id <= ? "
                 "AND message LIKE ? ORDER BY sequence_id DESC",
                 (name, row[0], f"%{PAIR_MARKER_PREFIX}%"),
             )
-            for (msg,) in cur:
-                pl = pair_label(msg)
-                if pl is not None:
-                    marker = pl
-                    break
+            marker = newest_pair_label(msg for (msg,) in cur)
         return tv, head, marker
 
     def current_version(self, table: TableName):

@@ -488,16 +488,17 @@ def _counted(root, interval=10):
 
 
 def test_checkout_reads_o_distance_from_head(tmp_path):
-    """Moving the head k commits back proves the target exists with a
-    newest-first id scan: at most k+1 commit files and no checkpoint
-    body, not the whole 250-commit log."""
+    """Moving the head k commits back proves the target exists by the
+    one-pass checkout (a newest-first id scan, then the fold): at most
+    k+1 commit files and the one checkpoint body the fold starts from,
+    not the whole 250-commit log."""
     root = str(tmp_path / "log")
     _, commits = _build_log(root, n_commits=250, interval=10)
     for k in (0, 7, 23):
         tr, cfs = _counted(root)
         tr.set_current_version(T, commits[-1 - k])
         assert len(_commit_reads(cfs)) <= k + 1, (k, len(_commit_reads(cfs)))
-        assert _checkpoint_reads(cfs) == []
+        assert len(_checkpoint_reads(cfs)) == 1, _checkpoint_reads(cfs)
         assert tr.head_commit_id(T) == commits[-1 - k]
 
 
@@ -518,7 +519,8 @@ def test_deep_version_at_reads_one_checkpoint_and_each_commit_once(tmp_path):
 
 def test_checkout_back_to_head_after_deep_checkout_reads_o_tail(tmp_path):
     """After a deep checkout, checking out the newest commit again and
-    resolving it reads O(checkpoint_interval) commit files."""
+    resolving it reads O(checkpoint_interval) commit files and one
+    checkpoint body per fold (the checkout's and the resolve's)."""
     root = str(tmp_path / "log")
     _, commits = _build_log(root, n_commits=250, interval=10)
     tr, cfs = _counted(root)
@@ -532,7 +534,7 @@ def test_checkout_back_to_head_after_deep_checkout_reads_o_tail(tmp_path):
     assert head == truth.version_at(T, commits[-1])
     reads = _commit_reads(cfs)
     assert len(reads) <= 2 * 10 + 2, len(reads)
-    assert len(_checkpoint_reads(cfs)) == 1
+    assert len(_checkpoint_reads(cfs)) == 2
 
 
 def test_locate_then_fold_differential_every_commit(tmp_path):

@@ -120,11 +120,13 @@ def test_rollback_before_checkpoint_degrades_correctly(tmp_path):
     st = tr.table_state(T)
     early = st.updates[10].metadata.commit_id
     tr.set_current_version(T, early)
-    assert tr.head_resolution(T) is None  # head precedes the checkpoint
-    got = pinned_state(tr, T)
     want = _truth(
         lambda: FileBackedVersionTracker(str(tmp_path), checkpoint_interval=None)
     )
+    # the head precedes every checkpoint: the fast path folds the genesis
+    # segment and answers
+    assert tr.head_resolution(T) == want
+    got = pinned_state(tr, T)
     assert got == want
     assert got[1] == early
 
