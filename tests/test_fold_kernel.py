@@ -23,8 +23,6 @@ from datetime import datetime, timedelta, timezone
 from pathlib import Path
 from unittest import mock
 
-import pytest
-
 from chronicles_spark.core import fold
 from chronicles_spark.core import ops as ops_mod
 from chronicles_spark.core.markers import pair_label, pair_message
@@ -141,7 +139,8 @@ def test_checkpoint_cut_bytes_match_golden(tmp_path):
 
 def _seeded_updates(seed: int, n: int):
     """``(table, update)`` pairs for a partitioned and a snapshot table,
-    interleaved: removals, re-adds, sparse pair markers."""
+    interleaved: removals, re-adds, commits without operations (a
+    marker-only publish), sparse pair markers."""
     rng = random.Random(seed)
     base = datetime(2024, 7, 1, tzinfo=timezone.utc)
     out = []
@@ -153,6 +152,8 @@ def _seeded_updates(seed: int, n: int):
             msg = pair_message(msg, label)
         if rng.random() < 0.3:
             table, ops = S, (AddTableVersion(Version(label)),)
+            if rng.random() < 0.3:
+                ops = ()
         else:
             table, ops = P, tuple(
                 RemovePartition(Partition.parse(f"d={rng.randrange(8)}"))
