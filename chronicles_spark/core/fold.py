@@ -117,27 +117,8 @@ def state_version(is_snapshot: bool, partitions, snapshot: Optional[str]):
     :func:`current_version` resolves the same prefix."""
     if is_snapshot:
         return SnapshotTableVersion(
-            UNVERSIONED if snapshot is None else _version(snapshot)
+            UNVERSIONED if snapshot is None else Version(snapshot)
         )
     return PartitionedTableVersion(
-        {Partition.parse(p): _version(v) for p, v in partitions.items()}
+        {Partition.parse(p): Version(v) for p, v in partitions.items()}
     )
-
-
-def _version(label: str) -> Version:
-    """``Version(label)`` through a bounded memo: every resolution builds
-    one per label of its state, and the labels recur across resolutions
-    (a ``Version`` is immutable, so equal labels share one instance).  A
-    full memo starts over rather than evicting entry by entry."""
-    v = _VERSION_MEMO.get(label)
-    if v is None:
-        if len(_VERSION_MEMO) >= _VERSION_MEMO_MAX:
-            _VERSION_MEMO.clear()
-        v = _VERSION_MEMO[label] = Version(label)
-    return v
-
-
-# 16,384 labels of 62 characters take about 3.5 MB: 1.7 MB of instances and
-# table, the rest the label strings the memo keeps alive
-_VERSION_MEMO: Dict[str, Version] = {}
-_VERSION_MEMO_MAX = 1 << 14
