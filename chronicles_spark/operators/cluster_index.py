@@ -67,8 +67,9 @@ from __future__ import annotations
 import json
 import re
 from dataclasses import dataclass
+from typing import NamedTuple
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from ..core.model import (
     Partition,
@@ -523,15 +524,14 @@ def _collect_shards_and_ids(df, id_expr, shard_expr):
     return shards, None
 
 
-# a fold whose batch has at most this many pairs runs its min-label
-# connected components ON THE DRIVER (one bounded collect + union-find)
-# instead of the iterative DataFrame propagation: the fold's local graph
-# is {batch pairs} ∪ {endpoint → current representative}, ≤ 3·n_pairs
-# edges by construction (never the corpus), so the collect is
-# batch-bounded — the same bounded-collect class as the IN-list pushdown
-# sample — while the distributed run pays ~6 driver actions (two eager
-# checkpoints plus a checkpoint+count per propagation round).  Batches
-# over the cap keep the scale-safe distributed path.
+# a fold whose batch has at most this many pairs runs on the driver: its
+# whole graph is {batch pairs} ∪ {endpoint → current representative},
+# ≤ 3·n_pairs edges by construction (never the corpus), so the pairs and
+# the endpoints' labels arrive in one bounded collect each — the same
+# bounded-collect class as the IN-list pushdown sample — and the
+# min-label connected components, the relabel map and the endpoint rows
+# of the changed set are derived there (:func:`_driver_fold_plan`).
+# Batches over the cap keep the scale-safe distributed path.
 _LOCAL_CC_PAIR_CAP = 100_000
 
 # id types whose Python ordering provably equals Spark's min() ordering
@@ -541,28 +541,23 @@ _LOCAL_CC_PAIR_CAP = 100_000
 _LOCAL_CC_ID_TYPES = ("byte", "short", "integer", "long")
 
 
-def _local_components(spark, edges, id_col: str, n_pairs: int):
-    """Driver-side min-label connected components over the fold's
-    bounded local graph: ``(id, cluster_id)`` with cluster_id = MIN
-    member id of the component — the same label contract as
-    :func:`~chronicles_spark.operators.dedup.dedup_clusters` over the
-    same edges (pinned by the differential test), computed in ONE
-    driver action.  Returns ``None`` (caller falls back to the
-    distributed propagation) when the batch is over the cap or the id
-    type's ordering is not provably identical across engines."""
-    if n_pairs > _LOCAL_CC_PAIR_CAP:
-        return None
-    from pyspark.sql import types as T
+def _local_id_type(type_a, type_b) -> bool:
+    """Both endpoint columns share one type whose Python order is Spark's
+    min() order (exactly UTF8_BINARY for strings: a collated StringType
+    also names itself 'string', but its min() order is not Python's
+    codepoint order)."""
+    return type_a == type_b and (
+        type_a.typeName() in _LOCAL_CC_ID_TYPES or type_a == T.StringType()
+    )
 
-    f_a, f_b = edges.schema.fields[0], edges.schema.fields[1]
-    if f_a.dataType != f_b.dataType or not (
-        f_a.dataType.typeName() in _LOCAL_CC_ID_TYPES
-        # exactly UTF8_BINARY: a collated StringType also names itself
-        # 'string', but its min() order is not Python's codepoint order
-        or f_a.dataType == T.StringType()
-    ):
-        return None
-    rows = edges.collect()
+
+def _min_labels(edges) -> "dict | None":
+    """Union-find over ``(a, b)`` edge tuples: every node → the MINIMUM
+    member of its component (the label contract of
+    :func:`~chronicles_spark.operators.dedup.dedup_clusters`).  None when
+    an endpoint is NULL — upstream validation makes that unreachable, and
+    the caller degrades to the distributed run rather than guess a
+    NULL-ordering here."""
     parent: dict = {}
 
     def find(x):
@@ -573,11 +568,8 @@ def _local_components(spark, edges, id_col: str, n_pairs: int):
             parent[x], x = root, parent[x]
         return root
 
-    for r in rows:
-        a, b = r[0], r[1]
+    for a, b in edges:
         if a is None or b is None:
-            # upstream validation makes this unreachable; degrade to the
-            # distributed run rather than guess a NULL-ordering here
             return None
         if a not in parent:
             parent[a] = a
@@ -592,14 +584,35 @@ def _local_components(spark, edges, id_col: str, n_pairs: int):
         m = min_of.get(root)
         if m is None or v < m:
             min_of[root] = v
-    out = [(v, min_of[find(v)]) for v in parent]
-    schema = T.StructType(
-        [
-            T.StructField(id_col, f_a.dataType),
-            T.StructField("cluster_id", f_a.dataType),
-        ]
+    return {v: min_of[find(v)] for v in parent}
+
+
+def _local_components(spark, edges, id_col: str, n_pairs: int):
+    """Driver-side min-label connected components over a bounded edge
+    frame: ``(id, cluster_id)`` with cluster_id = MIN member id of the
+    component — the same label contract as
+    :func:`~chronicles_spark.operators.dedup.dedup_clusters` over the
+    same edges (pinned by the differential test), computed in ONE
+    driver action.  Returns ``None`` (caller falls back to the
+    distributed propagation) when the batch is over the cap or the id
+    type's ordering is not provably identical across engines."""
+    if n_pairs > _LOCAL_CC_PAIR_CAP:
+        return None
+    f_a, f_b = edges.schema.fields[0], edges.schema.fields[1]
+    if not _local_id_type(f_a.dataType, f_b.dataType):
+        return None
+    labels = _min_labels((r[0], r[1]) for r in edges.collect())
+    if labels is None:
+        return None
+    return spark.createDataFrame(
+        list(labels.items()), _pair_schema(id_col, "cluster_id", f_a.dataType)
     )
-    return spark.createDataFrame(out, schema)
+
+
+def _pair_schema(first: str, second: str, id_type):
+    return T.StructType(
+        [T.StructField(first, id_type), T.StructField(second, id_type)]
+    )
 
 
 def _norm_labels(batch_label) -> tuple:
@@ -614,38 +627,208 @@ def _norm_labels(batch_label) -> tuple:
     return tuple(batch_label)
 
 
-def _fold_batch(
-    pairs_new, table, tracker, user_id, message, labels,
-    concurrency, artifacts, id_col, metastore,
-    drift_shard_rows: "int | None" = DRIFT_MAX_ASSIGN_SHARD_ROWS,
-    relabel_warn_rows: "int | None" = RELABEL_WARN_ROWS,
-):
+class _FoldPlan(NamedTuple):
+    """What a fold writes, however it was derived: ``changed`` holds the
+    ``(id, cluster_id)`` rows whose label this fold sets (an empty frame,
+    and no ``a_shards``, when nothing changes), ``a_shards`` and
+    ``c_shards`` their assign and cluster shards, ``r_shards`` the
+    member shards of the relabeled clusters and ``n_relabel`` how many
+    changed rows are relabeled members rather than batch endpoints."""
+
+    changed: DataFrame
+    a_shards: list
+    c_shards: list
+    r_shards: list
+    n_relabel: int
+
+
+def _check_no_null_endpoints(nn: int) -> None:
+    if nn:
+        raise ValueError(
+            f"pairs batch contains {nn} NULL endpoint(s) — "
+            "every pair needs two concrete ids"
+        )
+
+
+def _changed_stats(changed, endpoints, arts, id_col):
+    """Barrier the changed frame and take, in ONE job over it, the
+    relabel count (rows that are not batch endpoints) and both touched
+    shard sets — the plan of a fold whose changed set holds relabeled
+    members, which the batch does not bound."""
+    # the barrier feeds three consumers (this stats job and both RMW
+    # writes) with a frame the batch does not bound. eager=False: the
+    # stats collect below is the first action and lands the final stage;
+    # the map stages still run at this call under AQE (lineage_barrier
+    # docstring)
+    changed = DD.lineage_barrier(changed, eager=False)
+    stats = (
+        changed.join(
+            endpoints.withColumn("_ep", F.lit(1)), id_col, "left"
+        )
+        .agg(
+            F.count(F.when(F.col("_ep").isNull(), 1)).alias("n_relabel"),
+            F.collect_set(
+                _doc_shard_col(id_col, arts.doc_shards)
+            ).alias("a_shards"),
+            F.collect_set(
+                _cluster_shard_col("cluster_id", arts.cluster_shards)
+            ).alias("c_shards"),
+        )
+        .collect()[0]
+    )
+    return (
+        changed, sorted(stats["a_shards"]), sorted(stats["c_shards"]),
+        stats["n_relabel"],
+    )
+
+
+def _driver_fold_plan(
+    spark, pairs_new, table, members_table, state, mstate, arts, id_col
+) -> "_FoldPlan | None":
+    """The fold of a batch-bounded graph, derived on the driver: one
+    capped collect of the distinct pairs (with every endpoint's assign
+    and cluster shard) and one collect of the endpoints' current labels
+    feed the union-find, the relabel map, the endpoint rows of the
+    changed set and, when no existing cluster is relabeled, the whole
+    changed set and its shard sets.  Only a relabel's members (not
+    bounded by the batch) are read and joined in Spark.  Its rows equal
+    the distributed plan's (the differential test pins both against the
+    one-shot ``dedup_clusters``).  None — the caller takes the
+    distributed path — when the batch is over ``_LOCAL_CC_PAIR_CAP``,
+    the id type is outside the ``_local_id_type`` gate, the assignment
+    table stores another id type than the batch, or a stored label is
+    NULL."""
     from ..spark.reader import read_version
 
-    spark = pairs_new.sparkSession
-    _require_dynamic_overwrite(spark)
-    members_table = cluster_members_table(table)
-    tracker.init_table(members_table.name, is_snapshot=False, user_id=user_id)
-    state, base_head, head_pair = pinned_state(tracker, table.name)
-    mstate, m_head, m_pair = pinned_state(tracker, members_table.name)
-    check_pair(table, head_pair, m_pair, _CLUSTER_REPAIR_ADVICE)
-    if not isinstance(state, PartitionedTableVersion) or not isinstance(
-        mstate, PartitionedTableVersion
-    ):
-        raise ValueError("dedup cluster tables are partitioned by shard")
-    arts = artifacts
-    if arts is None:
-        arts = load_cluster_artifacts(table, state, head_pair)
+    pairs = pairs_new.select(F.col("id_a"), F.col("id_b"))
+    f_a, f_b = pairs.schema.fields
+    if not _local_id_type(f_a.dataType, f_b.dataType):
+        return None
+    id_type = f_a.dataType
+    schema = _pair_schema(id_col, "cluster_id", id_type)
+    ep_schema = T.StructType([T.StructField(id_col, id_type)])
+    # self-pairs carry no edge; null-safe so a NULL endpoint survives
+    # into the loud check instead of being dropped by three-valued logic
+    rows = (
+        pairs.where(~F.col("id_a").eqNullSafe(F.col("id_b")))
+        .distinct()
+        .select(
+            "id_a", "id_b",
+            _doc_shard_col("id_a", arts.doc_shards),
+            _doc_shard_col("id_b", arts.doc_shards),
+            _cluster_shard_col("id_a", arts.cluster_shards),
+            _cluster_shard_col("id_b", arts.cluster_shards),
+        )
+        .limit(_LOCAL_CC_PAIR_CAP + 1)
+        .collect()
+    )
+    if len(rows) > _LOCAL_CC_PAIR_CAP:
+        return None
+    _check_no_null_endpoints(
+        sum(1 for r in rows if r[0] is None or r[1] is None)
+    )
+    # endpoint → its assign shard; every node of the graph (endpoints
+    # and the touched clusters' labels) → its cluster shard
+    e_shard: dict = {}
+    c_shard: dict = {}
+    for a, b, da, db, ca, cb in rows:
+        e_shard[a], e_shard[b] = da, db
+        c_shard[a], c_shard[b] = ca, cb
 
-    stamped_message = message + "".join(f" [folds:{l}]" for l in labels)
+    # -- endpoint lookup: ONLY the endpoints' assign shards, one collect --
+    known: dict = {}
+    esub = _restrict_to_values(state, DOC_SHARD_COL, set(e_shard.values()))
+    if esub.partition_versions:
+        live = read_version(
+            spark, table, esub, infer_partition_types=False
+        ).select(F.col(id_col), F.col("cluster_id"))
+        if [f.dataType for f in live.schema.fields] != [id_type, id_type]:
+            return None
+        if len(e_shard) <= _FETCH_PUSHDOWN_MAX_IDS:
+            live = live.where(DD.in_list(id_col, list(e_shard)))
+        else:
+            live = live.join(
+                DD.local_relation(spark, [(e,) for e in e_shard], ep_schema),
+                id_col, "left_semi",
+            )
+        for r in live.select(
+            id_col, "cluster_id",
+            _cluster_shard_col("cluster_id", arts.cluster_shards),
+        ).collect():
+            known[r[0]] = r[1]
+            c_shard[r[1]] = r[2]
+
+    # -- min-label components over {new pairs} ∪ {endpoint → current rep}
+    labels = _min_labels(
+        [(r[0], r[1]) for r in rows] + list(known.items())
+    )
+    if labels is None:
+        return None
+    # touched clusters whose representative changed
+    relabel = {
+        old: labels[old] for old in set(known.values()) if labels[old] != old
+    }
+    # endpoint rows minus no-ops (an endpoint already holding its label)
+    ep_changed = [
+        (e, labels[e]) for e in e_shard if known.get(e) != labels[e]
+    ]
+    changed = DD.local_relation(spark, ep_changed, schema)
+    if not relabel:
+        return _FoldPlan(
+            changed,
+            sorted({e_shard[e] for e, _ in ep_changed}),
+            sorted({c_shard[c] for _, c in ep_changed}),
+            [],
+            0,
+        )
+
+    # -- relabeled members: the one part the batch does not bound -------
+    r_shards = sorted({c_shard[old] for old in relabel})
+    rsub = _restrict_to_values(mstate, CLUSTER_SHARD_COL, r_shards)
+    if rsub.partition_versions:
+        mem = read_version(
+            spark, members_table, rsub, infer_partition_types=False
+        ).select(F.col(id_col), F.col("cluster_id"))
+        if len(relabel) <= _FETCH_PUSHDOWN_MAX_IDS:
+            mem = mem.where(DD.in_list("cluster_id", list(relabel)))
+        moved = (
+            mem.withColumnRenamed("cluster_id", "old_cluster")
+            .join(
+                DD.local_relation(
+                    spark, list(relabel.items()),
+                    _pair_schema("old_cluster", "new_cluster", id_type),
+                ),
+                "old_cluster",
+            )
+            .select(F.col(id_col), F.col("new_cluster").alias("cluster_id"))
+        )
+        # an endpoint of a relabeled cluster is in both; the values agree
+        # by construction and min() collapses the duplicate
+        changed = (
+            changed.unionByName(moved)
+            .groupBy(id_col)
+            .agg(F.min("cluster_id").alias("cluster_id"))
+        )
+    endpoints = DD.local_relation(spark, [(e,) for e in e_shard], ep_schema)
+    changed, a_shards, c_shards, n_relabel = _changed_stats(
+        changed, endpoints, arts, id_col
+    )
+    return _FoldPlan(changed, a_shards, c_shards, r_shards, n_relabel)
+
+
+def _distributed_fold_plan(
+    spark, pairs_new, table, members_table, state, mstate, arts, id_col
+) -> _FoldPlan:
+    """The fold over Spark frames end to end — batches over
+    ``_LOCAL_CC_PAIR_CAP`` and id types outside the driver gate."""
+    from ..spark.reader import read_version
 
     # bounded: one batch's distinct pairs (self-pairs carry no edge;
     # null-safe so a NULL endpoint survives into the loud check below
     # instead of being silently dropped by three-valued logic)
     # eager=False: the counts agg right below is the barrier's first
-    # action and lands the final stage while computing the batch stats;
-    # the distinct's map stage still runs at this call under AQE
-    # (lineage_barrier docstring)
+    # action and lands the final stage; the distinct's map stage still
+    # runs at this call under AQE (lineage_barrier docstring)
     pairs = DD.lineage_barrier(
         pairs_new.select(F.col("id_a"), F.col("id_b"))
         .where(~F.col("id_a").eqNullSafe(F.col("id_b")))
@@ -658,50 +841,17 @@ def _fold_batch(
             F.when(F.col("id_a").isNull() | F.col("id_b").isNull(), 1)
         ).alias("nn"),
     ).collect()[0]
-    if counts["nn"]:
-        raise ValueError(
-            f"pairs batch contains {counts['nn']} NULL endpoint(s) — "
-            "every pair needs two concrete ids"
-        )
-
-    version = generate_version()
-    new_arts = arts.with_label(version.label)
-    expected = None
-    if concurrency != "last-writer-wins":
-        expected = {table.name: base_head, members_table.name: m_head}
+    _check_no_null_endpoints(counts["nn"])
 
     empty_changed = pairs.select(
         F.col("id_a").alias(id_col), F.col("id_a").alias("cluster_id")
     ).limit(0)
-
-    def _marker_only_publish():
-        """Empty-batch and no-change folds land ONLY the watermark
-        stamp, RE-USING the head's existing pair label — minting a
-        fresh label here would create a data-less sidecar that
-        ``vacuum_artifact_sidecars`` ages out as a commit-less orphan,
-        after which every load anchored on that head-pair label fails
-        on a perfectly healthy index.  A legacy pre-marker log
-        (``head_pair`` None) mints a new label + sidecar, the old
-        behavior (and the bootstrap shape)."""
-        if head_pair is not None:
-            mv, m_arts = Version(head_pair), arts
-        else:
-            mv, m_arts = version, new_arts
-            _write_artifact_sidecar(table, m_arts, _CLUSTER_WHAT)
-        publish_group(
-            spark, tracker, mv, user_id, stamped_message,
-            [(table, None, (), ()), (members_table, None, (), ())],
-            expected_heads=expected,
-            allow_disjoint=(concurrency == "optimistic"),
-        )
-        new_state = tracker.current_version(table.name)
-        _sync_metastore(metastore, table, new_state)
-        return empty_changed.localCheckpoint(eager=True), new_state, m_arts
-
     if not counts["n"]:
         # an empty journal batch still lands its watermark marker (the
         # exactly-once accounting must record the label as folded)
-        return _marker_only_publish()
+        return _FoldPlan(
+            empty_changed.localCheckpoint(eager=True), [], [], [], 0
+        )
 
     # -- endpoint lookup: ONLY the endpoints' assign shards -------------
     endpoints = pairs.select(
@@ -726,19 +876,16 @@ def _fold_batch(
     # docstring)
     known = DD.lineage_barrier(known, eager=False)
 
-    # -- local components over {new pairs} ∪ {endpoint → current rep} ---
+    # -- components over {new pairs} ∪ {endpoint → current rep} ---------
     # every node is a batch endpoint or a touched cluster's min-member
-    # representative, so the graph (and the CC run) is O(batch)
+    # representative, so the graph (and the CC run) is O(batch); the
+    # union-find still answers a batch under the cap that the driver plan
+    # declined because the table stores another id type than the batch
     edges = pairs.unionByName(
         known.select(
             F.col(id_col).alias("id_a"), F.col("cluster_id").alias("id_b")
         )
     )
-    # batch-bounded graphs resolve on the driver in one collect; the
-    # over-cap / exotic-id fallback is the distributed propagation,
-    # whose result is already a projection over ITS OWN checkpointed
-    # label frame — no extra barrier either way (consumers re-project
-    # the local relation / the checkpoint blocks)
     local = _local_components(spark, edges, id_col, counts["n"])
     if local is None:
         local = DD.dedup_clusters(edges, id_col).select(
@@ -749,8 +896,7 @@ def _fold_batch(
     touched = known.select(F.col("cluster_id").alias("old_cluster")).distinct()
     # eager=False: _collect_shards_and_ids' capped collect is the first
     # action and lands the final stage; the join's map stages run at this
-    # call under AQE, so barrier and collect are not one job
-    # (lineage_barrier docstring)
+    # call under AQE (lineage_barrier docstring)
     relabel = DD.lineage_barrier(
         touched.join(local, touched.old_cluster == local[id_col])
         .where(F.col("old_cluster") != F.col("cluster_id"))
@@ -779,20 +925,15 @@ def _fold_batch(
     # -- changed rows: exactly the rows whose label this fold sets ------
     # (endpoints keep the local run's label; relabeled members map
     # through the relabel table — where both apply the values agree by
-    # construction, min() just collapses the duplicate)
+    # construction, min() just collapses the duplicate); no-op rows
+    # (an endpoint already holding its final label) are dropped, so the
+    # RMW touches only shards something actually changed in
     changed = (
         local.join(endpoints, id_col, "left_semi")
         .unionByName(moved)
         .groupBy(id_col)
         .agg(F.min("cluster_id").alias("cluster_id"))
-    )
-    # drop no-op rows (endpoint already holding its final label): the
-    # RMW then touches only shards something actually changed in.
-    # eager=False: the _stats action below is the first action and lands
-    # the final stage; the map stages run at this call under AQE
-    # (lineage_barrier docstring)
-    changed = DD.lineage_barrier(
-        changed.join(
+        .join(
             known.withColumnRenamed("cluster_id", "_old_label"),
             id_col,
             "left",
@@ -801,56 +942,99 @@ def _fold_batch(
             F.col("_old_label").isNull()
             | (F.col("_old_label") != F.col("cluster_id"))
         )
-        .select(id_col, "cluster_id"),
-        eager=False,
+        .select(id_col, "cluster_id")
     )
-
-    # ONE job over the (checkpointed, O(batch)) changed frame yields the
-    # emptiness probe, the relabel count and both touched-shard sets —
-    # these were four separate actions, each paying full job-launch
-    # overhead on a frame this small
-    _stats = (
-        changed.join(
-            endpoints.withColumn("_ep", F.lit(1)), id_col, "left"
-        )
-        .agg(
-            F.count(F.when(F.col("_ep").isNull(), 1)).alias("n_relabel"),
-            F.collect_set(
-                _doc_shard_col(id_col, arts.doc_shards)
-            ).alias("a_shards"),
-            F.collect_set(
-                _cluster_shard_col("cluster_id", arts.cluster_shards)
-            ).alias("c_shards"),
-        )
-        .collect()[0]
+    changed, a_shards, c_shards, n_relabel = _changed_stats(
+        changed, endpoints, arts, id_col
     )
-    if not _stats["a_shards"]:
+    if not a_shards:
         # no changed rows (every changed row carries a doc shard)
-        return _marker_only_publish()
+        changed = empty_changed.localCheckpoint(eager=True)
+    return _FoldPlan(changed, a_shards, c_shards, r_shards, n_relabel)
 
-    if relabel_warn_rows is not None:
-        # rows that are NOT batch endpoints are exactly the relabeled
-        # members of merged clusters
-        n_relabel = _stats["n_relabel"]
-        if n_relabel > relabel_warn_rows:
-            import warnings
 
-            warnings.warn(
-                f"cluster index {table.name}: this fold relabels "
-                f"{n_relabel} member rows (> {relabel_warn_rows}) — a "
-                "giant-cluster merge handed a large cluster a new "
-                "min-member representative.  The rewrite is SEMANTIC "
-                "under the min-member label contract (the assignment "
-                "must equal the one-shot dedup_clusters oracle), not "
-                "write amplification; if touched shards have also "
-                "outgrown their sizing target, re-shard with "
-                "rebuild_dedup_clusters",
-                ClusterRelabelWarning,
-                stacklevel=4,
-            )
+def _fold_batch(
+    pairs_new, table, tracker, user_id, message, labels,
+    concurrency, artifacts, id_col, metastore,
+    drift_shard_rows: "int | None" = DRIFT_MAX_ASSIGN_SHARD_ROWS,
+    relabel_warn_rows: "int | None" = RELABEL_WARN_ROWS,
+):
+    from ..spark.reader import read_version
+
+    spark = pairs_new.sparkSession
+    _require_dynamic_overwrite(spark)
+    members_table = cluster_members_table(table)
+    tracker.init_table(members_table.name, is_snapshot=False, user_id=user_id)
+    state, base_head, head_pair = pinned_state(tracker, table.name)
+    mstate, m_head, m_pair = pinned_state(tracker, members_table.name)
+    check_pair(table, head_pair, m_pair, _CLUSTER_REPAIR_ADVICE)
+    if not isinstance(state, PartitionedTableVersion) or not isinstance(
+        mstate, PartitionedTableVersion
+    ):
+        raise ValueError("dedup cluster tables are partitioned by shard")
+    arts = artifacts
+    if arts is None:
+        arts = load_cluster_artifacts(table, state, head_pair)
+
+    stamped_message = message + "".join(f" [folds:{l}]" for l in labels)
+    version = generate_version()
+    new_arts = arts.with_label(version.label)
+    expected = None
+    if concurrency != "last-writer-wins":
+        expected = {table.name: base_head, members_table.name: m_head}
+
+    plan_args = (
+        spark, pairs_new, table, members_table, state, mstate, arts, id_col
+    )
+    plan = _driver_fold_plan(*plan_args) or _distributed_fold_plan(*plan_args)
+    changed = plan.changed
+
+    if not plan.a_shards:
+        # Empty-batch and no-change folds land ONLY the watermark stamp
+        # (the exactly-once accounting must record the label as folded),
+        # RE-USING the head's existing pair label — minting a fresh label
+        # here would create a data-less sidecar that
+        # ``vacuum_artifact_sidecars`` ages out as a commit-less orphan,
+        # after which every load anchored on that head-pair label fails
+        # on a perfectly healthy index.  A legacy pre-marker log
+        # (``head_pair`` None) mints a new label + sidecar, the old
+        # behavior (and the bootstrap shape).
+        if head_pair is not None:
+            mv, m_arts = Version(head_pair), arts
+        else:
+            mv, m_arts = version, new_arts
+            _write_artifact_sidecar(table, m_arts, _CLUSTER_WHAT)
+        publish_group(
+            spark, tracker, mv, user_id, stamped_message,
+            [(table, None, (), ()), (members_table, None, (), ())],
+            expected_heads=expected,
+            allow_disjoint=(concurrency == "optimistic"),
+        )
+        new_state = tracker.current_version(table.name)
+        _sync_metastore(metastore, table, new_state)
+        return changed, new_state, m_arts
+
+    # rows that are NOT batch endpoints are exactly the relabeled members
+    # of merged clusters
+    if relabel_warn_rows is not None and plan.n_relabel > relabel_warn_rows:
+        import warnings
+
+        warnings.warn(
+            f"cluster index {table.name}: this fold relabels "
+            f"{plan.n_relabel} member rows (> {relabel_warn_rows}) — a "
+            "giant-cluster merge handed a large cluster a new "
+            "min-member representative.  The rewrite is SEMANTIC "
+            "under the min-member label contract (the assignment "
+            "must equal the one-shot dedup_clusters oracle), not "
+            "write amplification; if touched shards have also "
+            "outgrown their sizing target, re-shard with "
+            "rebuild_dedup_clusters",
+            ClusterRelabelWarning,
+            stacklevel=4,
+        )
 
     # -- assign-table RMW: exactly the changed docs' shards -------------
-    a_shards = sorted(_stats["a_shards"])
+    a_shards = plan.a_shards
     asub = _restrict_to_values(state, DOC_SHARD_COL, a_shards)
     assign_out = changed.withColumn(
         DOC_SHARD_COL, _doc_shard_col(id_col, arts.doc_shards)
@@ -864,8 +1048,7 @@ def _fold_batch(
         )
 
     # -- members-table RMW: losers' shards + winners' shards ------------
-    new_label_shards = set(_stats["c_shards"])
-    m_touched = sorted(set(r_shards) | new_label_shards)
+    m_touched = sorted(set(plan.r_shards) | set(plan.c_shards))
     msub = _restrict_to_values(mstate, CLUSTER_SHARD_COL, m_touched)
     members_out = changed.withColumn(
         CLUSTER_SHARD_COL, _cluster_shard_col("cluster_id", arts.cluster_shards)

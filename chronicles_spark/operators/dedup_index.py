@@ -555,9 +555,12 @@ def extend_dedup_index(
     above ``threshold`` with at least one endpoint in the batch
     (batch × corpus AND batch × batch), id_a < id_b — exactly the rows
     a full :func:`~chronicles_spark.operators.dedup.minhash_dedup`
-    re-run over corpus+batch would add for these docs.  The pairs are
-    materialized (eager localCheckpoint) BEFORE the commit, so the
-    returned relation never depends on superseded shard versions.
+    re-run over corpus+batch would add for these docs.  With
+    ``pairs_table`` the returned relation reads the journal partition
+    the commit landed, so it never depends on superseded shard versions;
+    without it, it is a lazy checkpoint
+    (``lineage_barrier(eager=False)``) that the caller's first action
+    lands.
 
     ``mode="upsert"`` (default): a re-submitted id REPLACES its corpus
     entry — its OLD band rows are removed (recomputed from the stored
@@ -1048,25 +1051,25 @@ def _extend_publish(
     cand = cand_new if cand is None else cand.unionByName(cand_new)
     # lineage cut: the pair set is referenced three times by verify
     # (minhash_dedup's measured Catalyst-analysis blowup otherwise).
-    # Both barriers are eager=False: the capped `sample` collect below is
-    # the first action on this chain and lands the final stages of
-    # old_cand_ids and (transitively) cand; their shuffle map stages still
-    # run at each barrier call under AQE, so this saves the eager shape's
-    # two result-stage passes, not whole jobs (lineage_barrier docstring)
+    # eager=False: the capped `sample` collect below is the first action
+    # on this chain and lands the final stage; the shuffle map stages
+    # still run at this call under AQE, so this saves the eager shape's
+    # result-stage pass, not whole jobs (lineage_barrier docstring)
     cand = DD.lineage_barrier(cand.distinct(), eager=False)
 
     # -- exact verify: payloads from base_new + ONLY candidate shards --
-    old_cand_ids = DD.lineage_barrier(
+    old_cand_ids = (
         cand.select(F.col("id_a").alias(id_col))
         .union(cand.select("id_b"))
         .distinct()
-        .join(new_ids, id_col, "left_anti"),
-        eager=False,
+        .join(new_ids, id_col, "left_anti")
     )
-    # small candidate sets (the normal case) collect their ids for an
-    # IN-list row-group prune over the sorted shard files; above the
-    # cap only the DISTINCT shard values are collected (bounded ≤
-    # doc_shards) and shard pruning alone bounds the read
+    # small candidate sets (the normal case) collect every candidate id:
+    # the exact IN-list both restricts the payload read to them and
+    # prunes row groups over the sorted shard files, so old_cand_ids is
+    # never evaluated again.  Above the cap only the DISTINCT shard
+    # values are collected (bounded ≤ doc_shards), shard pruning bounds
+    # the read and a semi-join against old_cand_ids restricts it
     sample = old_cand_ids.select(
         F.col(id_col),
         _doc_shard_col(id_col, artifacts.doc_shards).alias("s"),
@@ -1077,6 +1080,10 @@ def _extend_publish(
             cand_shards = sorted({r["s"] for r in sample})
             in_ids = [r[id_col] for r in sample]
         else:
+            # two consumers (the shard collect and the semi-join) of a
+            # frame the pushdown cap does not bound. eager=False: the
+            # shard collect right below lands the final stage
+            old_cand_ids = DD.lineage_barrier(old_cand_ids, eager=False)
             cand_shards = sorted(
                 r["s"]
                 for r in old_cand_ids.select(
@@ -1093,17 +1100,17 @@ def _extend_publish(
                 old_payloads = old_payloads.where(
                     DD.in_list(id_col, in_ids)
                 )
-            old_payloads = old_payloads.join(
-                old_cand_ids, id_col, "left_semi"
-            )
+            else:
+                old_payloads = old_payloads.join(
+                    old_cand_ids, id_col, "left_semi"
+                )
             verify_base = verify_base.unionByName(old_payloads)
-    # eager=False: the publish's pairs-table write (or, without a pairs
-    # journal, the caller's first action on the returned frame) is the
-    # single next toucher and lands the final stage; the map stages run
-    # at this call under AQE (lineage_barrier docstring)
-    verified = DD.lineage_barrier(
-        family.verify_fn(verify_base, cand), eager=False
-    )
+    verified = family.verify_fn(verify_base, cand)
+    if pairs_table is None:
+        # the returned frame is the only product: its map stages run at
+        # this call under AQE and the caller's first action lands the
+        # final stage (lineage_barrier docstring)
+        verified = DD.lineage_barrier(verified, eager=False)
 
     # -- publish: RMW of exactly the touched shards, one pair commit --
     # join the overlapped lookup+RMW worker: its append-hit ValueError /
@@ -1204,7 +1211,31 @@ def _extend_publish(
     )
     new_state = tracker.current_version(table.name)
     _sync_metastore(metastore, table, new_state)
+    if pairs_table is not None:
+        # the journal save (overlapped with the band and doc saves by
+        # publish_group) is verify's one evaluation; the caller gets the
+        # partition it landed, so the returned pairs never depend on
+        # superseded shard versions
+        verified = _journaled_pairs(
+            spark, tracker, pairs_table, version.label, verified.schema
+        )
     return verified, new_state, stamped
+
+
+def _journaled_pairs(spark, tracker, pairs_table, label, schema):
+    """The ``batch=<label>`` partition of the pairs journal as the
+    verified-pairs frame (``schema``'s columns); empty when the extend
+    verified no pair (a data-less marker commit)."""
+    from ..spark.reader import read_version
+
+    sub = _restrict_to_values(
+        tracker.current_version(pairs_table.name), PAIRS_BATCH_COL, [label]
+    )
+    if not sub.partition_versions:
+        return spark.createDataFrame([], schema)
+    return read_version(
+        spark, pairs_table, sub, infer_partition_types=False
+    ).select(*schema.names)
 
 
 # ---------------------------------------------------------------------------

@@ -295,7 +295,7 @@ def publish_group(
         TableUpdate,
         TableUpdateMetadata,
     )
-    from ..spark.writer import partitions_written, write_versioned
+    from ..spark.writer import overlapped, partitions_written, write_versioned
 
     mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
     if (mode or "").lower() != "dynamic":
@@ -313,22 +313,9 @@ def publish_group(
             partitions = list(partitions or ())
         return (table, partitions, removes)
 
-    data_writes = sum(1 for _, df, _, _ in writes if df is not None)
-    if data_writes > 1:
-        # The per-table data writes are independent Spark jobs targeting
-        # different directories; submitting them from a small thread pool
-        # lets the next write's tasks back-fill executors freed by the
-        # previous write's straggler tail (Spark's scheduler runs jobs
-        # concurrently — actions are only sequential when the driver calls
-        # them sequentially).  Any failure propagates before commit_group,
-        # so the crash-ordering contract (data invisible until the group
-        # commit) is unchanged.
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=min(4, data_writes)) as pool:
-            resolved = list(pool.map(_write_one, writes))
-    else:
-        resolved = [_write_one(w) for w in writes]
+    # the per-table data writes are independent jobs into different
+    # directories; any failure propagates before commit_group
+    resolved = overlapped(_write_one, writes)
 
     meta_ts = datetime.now(timezone.utc)
     stamped = pair_message(message, version.label)

@@ -299,6 +299,28 @@ def write_versioned(
         _seed_from_write(key, df.schema, table)
 
 
+def overlapped(fn, items, max_workers: int = 4) -> list:
+    """``[fn(x) for x in items]`` with the calls overlapped on a small
+    thread pool when there are two or more.
+
+    For independent Spark writes into different directories: Spark's
+    scheduler runs jobs concurrently (actions are only sequential when
+    the driver calls them sequentially), so the next write's tasks
+    back-fill executors freed by the previous write's straggler tail.
+    Every call has returned before this does — the pool is joined even
+    when one raises, and then the first error in item order propagates —
+    so a caller that commits after it keeps the crash-ordering contract
+    (data invisible until the commit)."""
+    items = list(items)
+    if len(items) < 2:
+        return [fn(x) for x in items]
+    from concurrent.futures import ThreadPoolExecutor
+
+    with ThreadPoolExecutor(max_workers=min(max_workers, len(items))) as pool:
+        futures = [pool.submit(fn, x) for x in items]
+    return [f.result() for f in futures]
+
+
 def versioned_insert_group(
     writes,
     tracker: VersionTracker,
@@ -313,9 +335,10 @@ def versioned_insert_group(
     mutually consistent (``documents`` + ``embeddings`` refreshed from
     the same batch).  Beyond reference parity.
 
-    ``writes`` is a list of ``(df, table)`` pairs.  All data lands first
-    under fresh invisible ``_version=`` directories (a crash here leaves
-    every live view untouched, docs/concepts.md:71-75); then ONE
+    ``writes`` is a list of ``(df, table)`` pairs.  All data lands first,
+    the members' saves overlapped (:func:`overlapped`), under fresh
+    invisible ``_version=`` directories (a crash here leaves every live
+    view untouched, docs/concepts.md:71-75); then ONE
     ``tracker.commit_group`` publishes all the commits with the backend's
     native atomicity — all-or-nothing on sqlite, one lock on in-memory,
     ordered per-table appends on files.  Partition discovery uses the
@@ -361,17 +384,22 @@ def versioned_insert_group(
     from ..core.markers import pair_message
 
     stamped = pair_message(message, generate_version().label)
-    for df, table in writes:
-        version = generate_version()
+
+    def _write_one(entry) -> List[TableOperation]:
+        df, table, version = entry
         write_versioned(df, table, version)
         if table.is_snapshot:
-            ops: List[TableOperation] = [AddTableVersion(version)]
-        else:
-            parts = partitions_written(table, version, spark=df.sparkSession)
-            ops = [
-                AddPartitionVersion(p, version)
-                for p in sorted(parts, key=lambda p: p.path)
-            ]
+            return [AddTableVersion(version)]
+        parts = partitions_written(table, version, spark=df.sparkSession)
+        return [
+            AddPartitionVersion(p, version)
+            for p in sorted(parts, key=lambda p: p.path)
+        ]
+
+    # one fresh version per member, minted in member order before the
+    # overlapped saves
+    entries = [(df, table, generate_version()) for df, table in writes]
+    for (_df, table, _v), ops in zip(entries, overlapped(_write_one, entries)):
         meta = TableUpdateMetadata.new(user_id, stamped, meta_ts)
         group[table.name] = TableUpdate(meta, tuple(ops))
 

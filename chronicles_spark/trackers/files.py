@@ -1430,6 +1430,30 @@ class FileBackedVersionTracker(VersionTracker):
         got = self._fast_resolve(d, commit_id)
         return got[0] if got is not None else super().version_at(table, commit_id)
 
+    def set_current_version(self, table: TableName, commit_id: str) -> None:
+        """Move head to an existing commit — rollback/forward
+        (VersionTracker.scala:71) — proving the commit exists by the
+        newest-first header walk over the live commits (:meth:`_locate`):
+        at most k+1 commit reads for a commit k back, and no fold.  An id
+        not among them (archived prefix or unknown id), or a file that
+        vanished mid-walk, takes the inherited checkout, which reads the
+        archives and raises UnknownTableError / UnknownCommitError
+        before the head moves."""
+        d = self._table_dir(table)
+        if self.fs.exists(self.fs.join(d, "table-metadata")):
+            live, archives, _, sides = self._scan_cuts(d)
+            try:
+                found = (
+                    self._locate(d, live, archives, sides, commit_id)
+                    is not None
+                )
+            except _ArchiveVanished:
+                found = False
+            if found:
+                self._set_head(table, commit_id)
+                return
+        super().set_current_version(table, commit_id)
+
     def commit_at_timestamp(self, table: TableName, ts) -> str:
         """The newest log-ordered commit whose timestamp is ≤ ``ts`` (the
         base class's contract) from one listing and the newest-first

@@ -489,17 +489,44 @@ def _counted(root, interval=10):
 
 def test_checkout_reads_o_distance_from_head(tmp_path):
     """Moving the head k commits back proves the target exists by the
-    one-pass checkout (a newest-first id scan, then the fold): at most
-    k+1 commit files and the one checkpoint body the fold starts from,
-    not the whole 250-commit log."""
+    newest-first header walk and folds nothing: at most k+1 commit files
+    and no checkpoint body, not the whole 250-commit log."""
     root = str(tmp_path / "log")
     _, commits = _build_log(root, n_commits=250, interval=10)
     for k in (0, 7, 23):
         tr, cfs = _counted(root)
         tr.set_current_version(T, commits[-1 - k])
         assert len(_commit_reads(cfs)) <= k + 1, (k, len(_commit_reads(cfs)))
-        assert len(_checkpoint_reads(cfs)) == 1, _checkpoint_reads(cfs)
+        assert _checkpoint_reads(cfs) == []
         assert tr.head_commit_id(T) == commits[-1 - k]
+
+
+@pytest.mark.parametrize("n_commits,interval", [(60, 100), (250, None)])
+def test_set_current_version_reads_k_plus_one_without_a_cut(
+    tmp_path, n_commits, interval
+):
+    """Where no checkpoint covers the target (a log below its first cut,
+    or read with ``checkpoint_interval=None``) a rollback k commits back
+    still reads at most k+1 files in all — the header walk, no fold of
+    the live log — and an unknown id or table still raises before the
+    head moves."""
+    from chronicles_spark.trackers import UnknownCommitError, UnknownTableError
+
+    root = str(tmp_path / "log")
+    _, commits = _build_log(root, n_commits=n_commits, interval=interval)
+    for k in (0, 7, 23):
+        tr, cfs = _counted(root, interval=interval)
+        tr.set_current_version(T, commits[-1 - k])
+        assert len(cfs.reads) <= k + 1, (k, cfs.reads)
+        assert tr.head_commit_id(T) == commits[-1 - k]
+        assert tr.current_version(T) == FileBackedVersionTracker(
+            root, checkpoint_interval=None
+        ).version_at(T, commits[-1 - k])
+    with pytest.raises(UnknownCommitError):
+        tr.set_current_version(T, "no-such-commit")
+    assert tr.head_commit_id(T) == commits[-24]
+    with pytest.raises(UnknownTableError):
+        tr.set_current_version(TableName("db", "missing"), commits[0])
 
 
 def test_deep_version_at_reads_one_checkpoint_and_each_commit_once(tmp_path):
@@ -520,7 +547,7 @@ def test_deep_version_at_reads_one_checkpoint_and_each_commit_once(tmp_path):
 def test_checkout_back_to_head_after_deep_checkout_reads_o_tail(tmp_path):
     """After a deep checkout, checking out the newest commit again and
     resolving it reads O(checkpoint_interval) commit files and one
-    checkpoint body per fold (the checkout's and the resolve's)."""
+    checkpoint body (the resolve's fold; the checkout folds nothing)."""
     root = str(tmp_path / "log")
     _, commits = _build_log(root, n_commits=250, interval=10)
     tr, cfs = _counted(root)
@@ -534,7 +561,7 @@ def test_checkout_back_to_head_after_deep_checkout_reads_o_tail(tmp_path):
     assert head == truth.version_at(T, commits[-1])
     reads = _commit_reads(cfs)
     assert len(reads) <= 2 * 10 + 2, len(reads)
-    assert len(_checkpoint_reads(cfs)) == 2
+    assert len(_checkpoint_reads(cfs)) == 1
 
 
 def test_locate_then_fold_differential_every_commit(tmp_path):

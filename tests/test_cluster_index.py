@@ -1220,3 +1220,90 @@ def test_fold_local_vs_distributed_cc_identical(spark, tmp_path, monkeypatch):
         spark, t_dist, k_dist
     )
     assert CX.verify_dedup_clusters(spark, t_loc, k_loc).count() == 0
+
+
+def test_driver_fold_equals_distributed_and_one_shot(spark, tmp_path, monkeypatch):
+    """The driver-side fold against the distributed path (cap forced to
+    0) and the one-shot ``dedup_clusters``, over a seeded three-batch
+    pairs journal: a fold of seeded pairs into an empty index, one of
+    only new components (empty relabel map: the whole changed set is
+    derived on the driver) and one that merges two existing clusters
+    and hands a third a new minimum (non-empty relabel map, relabeled
+    members moved in Spark).  After every fold the assignment and
+    members tables of both paths equal the one-shot over the journal
+    so far."""
+    import random
+    import sys
+
+    from chronicles_spark.spark.writer import versioned_insert_into
+
+    rng = random.Random(20261019)
+    seeded = [tuple(rng.sample(range(200, 260), 2)) for _ in range(40)]
+    batches = [
+        [(110, 120), (120, 130), (140, 150), (300, 310)] + seeded,
+        # new components only, whose labels spread over the cluster shards
+        [(1000 + 2 * k, 1001 + 2 * k) for k in range(30)] + [(1001, 1002)],
+        [(130, 150), (5, 310)],  # merge 110 with 140; new minimum for 300
+    ]
+
+    def run(name):
+        table, tracker = _mk(tmp_path, name)
+        journal = TableDefinition(
+            TableName("demo", name + "_journal"),
+            str(tmp_path / (name + "_journal")),
+            PartitionSchema(("batch",)),
+        )
+        tracker.init_table(journal.name, is_snapshot=False, user_id="t")
+        # sparse shard sets: a fold touches few of the 16 cluster shards
+        CX.build_dedup_clusters(
+            None, table, tracker, doc_shards=8, cluster_shards=16
+        )
+        members = CX.cluster_members_table(table)
+        seen, out = [], []
+        for i, pairs in enumerate(batches):
+            versioned_insert_into(
+                _pairs_df(spark, pairs).withColumn("batch", F.lit(f"b{i}")),
+                journal, tracker, "t", f"journal b{i}",
+            )
+            assert CX.fold_new_dedup_pairs(spark, journal, table, tracker) == [
+                f"b{i}"
+            ]
+            assert CX.verify_dedup_clusters(spark, table, tracker).count() == 0
+            seen.extend(pairs)
+            want = _want(_pairs_df(spark, seen))
+            got = (
+                _assignments(spark, table, tracker),
+                _assignments(spark, members, tracker),
+            )
+            assert got == (want, want), i
+            out.append(got)
+        return out
+
+    plans = []
+    real_plan = CX._driver_fold_plan
+
+    def spy(*a):
+        plans.append(real_plan(*a))
+        return plans[-1]
+
+    monkeypatch.setattr(CX, "_driver_fold_plan", spy)
+    local = run("drv_local")
+    assert all(p is not None for p in plans)
+    assert [bool(p.r_shards) for p in plans] == [False, False, True]
+    assert plans[2].n_relabel == 2  # 140 and 300: relabeled, not endpoints
+
+    calls = {"n": 0}
+    real_cc = DD.dedup_clusters
+
+    def counting(*a, **kw):
+        # the folds' calls, not the one-shot oracle's
+        calls["n"] += sys._getframe(1).f_globals["__name__"] == CX.__name__
+        return real_cc(*a, **kw)
+
+    monkeypatch.setattr(CX, "_LOCAL_CC_PAIR_CAP", 0)
+    monkeypatch.setattr(DD, "dedup_clusters", counting)
+    del plans[:]
+    dist = run("drv_dist")
+    assert plans == [None] * len(batches)
+    assert calls["n"] == len(batches)  # every fold went distributed
+    assert local == dist

@@ -145,6 +145,42 @@ def test_versioned_insert_group_end_to_end(spark, tmp_path):
     assert not os.path.exists(ghost.location)
 
 
+def test_versioned_insert_group_failed_save_commits_nothing(
+    spark, tmp_path, monkeypatch
+):
+    """The members' saves overlap: when one fails, every other save has
+    returned before the error propagates, and no member commits."""
+    import time
+
+    from chronicles_spark.spark import writer as W
+    from chronicles_spark.trackers.base import head_of
+
+    tracker = FileBackedVersionTracker(str(tmp_path / "_log"))
+    fail, slow = (
+        TableDefinition(TableName("db", n), str(tmp_path / n),
+                        PartitionSchema(("d",)))
+        for n in ("fail", "slow")
+    )
+    for t in (fail, slow):
+        tracker.init_table(t.name, is_snapshot=False, user_id="u")
+    saved = []
+
+    def write(df, table, version):
+        if table is fail:
+            raise RuntimeError("save failed")
+        time.sleep(0.3)
+        saved.append(table.name)
+
+    monkeypatch.setattr(W, "write_versioned", write)
+    monkeypatch.setattr(W, "partitions_written", lambda *a, **kw: [P1])
+    heads = [head_of(tracker, t.name) for t in (fail, slow)]
+    df = spark.range(2)
+    with pytest.raises(RuntimeError, match="save failed"):
+        W.versioned_insert_group([(df, fail), (df, slow)], tracker, "u", "g")
+    assert saved == [slow.name]
+    assert [head_of(tracker, t.name) for t in (fail, slow)] == heads
+
+
 def test_inmemory_group_commit_is_atomic_under_threads():
     """Concurrent readers never observe one table of a group advanced
     without the other; concurrent groups never interleave (the per-table

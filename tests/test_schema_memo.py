@@ -8,7 +8,8 @@ read equals a cold read (memo entry removed) in ``df.schema`` and rows,
 under both partition-inference settings, and the write's seed equals
 what the cold read infers.  Job counts are pinned through a
 ``statusTracker`` job group: 0 jobs at ``load()`` for a known directory,
-exactly 1 cold, and per-call ceilings for the three index maintainers.
+exactly 1 cold, and per-call ceilings for the three index maintainers
+and a two-table group publish.
 """
 
 import datetime
@@ -53,15 +54,18 @@ from chronicles_spark.operators import similarity as SIM
 from chronicles_spark.sources import load_table
 from chronicles_spark.spark import reader as R
 from chronicles_spark.spark.reader import live_paths, read_version
-from chronicles_spark.spark.writer import versioned_insert_into
+from chronicles_spark.spark.writer import versioned_insert_group, versioned_insert_into
 from chronicles_spark.trackers import FileBackedVersionTracker
 
 # per-call job ceilings on the tiny fixture below, set at the counts
-# measured with schema-known reads (Spark 4.1, local[4], AQE on); with an
-# inference job per read_version the same calls launched 43, 21 and 23
-DEDUP_EXTEND_MAX_JOBS = 37
-CLUSTER_FOLD_MAX_JOBS = 20
+# measured (Spark 4.1, local[4], AQE on) with schema-known reads, the
+# driver-side cluster fold and the capped candidate-id sample; before the
+# fold and the sample the first two launched 37 and 20, and with an
+# inference job per read_version the first three 43, 21 and 23
+DEDUP_EXTEND_MAX_JOBS = 34
+CLUSTER_FOLD_MAX_JOBS = 8
 ANN_EXTEND_MAX_JOBS = 20
+GROUP_PUBLISH_MAX_JOBS = 2
 
 
 def _jobs(spark, fn):
@@ -217,6 +221,32 @@ def lake(spark, sf_dir, tmp_path_factory):
 def test_index_maintainer_job_ceilings(lake, name, ceiling):
     _, _, jobs = lake
     assert 0 < jobs[name] <= ceiling, jobs
+
+
+def test_group_publish_job_ceiling(spark, tmp_path):
+    """One 2-table ``versioned_insert_group``: a save job per member (the
+    saves overlap on pool threads, whose ungrouped jobs count too) and
+    nothing else — discovery lists directories, the schemas are seeded."""
+    tracker = FileBackedVersionTracker(str(tmp_path / "_log"))
+    tables = [
+        TableDefinition(TableName("demo", n), str(tmp_path / n),
+                        PartitionSchema(("d",)))
+        for n in ("docs", "emb")
+    ]
+    for t in tables:
+        tracker.init_table(t.name, is_snapshot=False, user_id="t")
+    df = spark.range(20).select(
+        F.col("id"), (F.col("id") % 3).cast("string").alias("d")
+    )
+    out, n = _jobs(spark, lambda: versioned_insert_group(
+        [(df, t) for t in tables], tracker, "t", "publish"))
+    assert 0 < n <= GROUP_PUBLISH_MAX_JOBS, n
+    for t in tables:
+        assert {p.path for p in out[t.name].partition_versions} == {
+            "d=0", "d=1", "d=2"
+        }
+        assert _rows(read_version(spark, t, out[t.name]).select("id")) == \
+            _rows(df.select("id"))
 
 
 # ------------------------------------------------------------ differential
