@@ -592,10 +592,13 @@ def _local_components(spark, edges, id_col: str, n_pairs: int):
     frame: ``(id, cluster_id)`` with cluster_id = MIN member id of the
     component — the same label contract as
     :func:`~chronicles_spark.operators.dedup.dedup_clusters` over the
-    same edges (pinned by the differential test), computed in ONE
-    driver action.  Returns ``None`` (caller falls back to the
-    distributed propagation) when the batch is over the cap or the id
-    type's ordering is not provably identical across engines."""
+    same edges, computed in ONE driver action.  It is the driver fold's
+    gate (``_local_id_type``) and union-find (``_min_labels``) over a
+    frame, the unit the differential tests pin against
+    ``dedup_clusters``; folds reach both through
+    :func:`_driver_fold_plan`.  Returns ``None`` when the batch is over
+    the cap or the id type's ordering is not provably identical across
+    engines."""
     if n_pairs > _LOCAL_CC_PAIR_CAP:
         return None
     f_a, f_b = edges.schema.fields[0], edges.schema.fields[1]
@@ -686,7 +689,7 @@ def _driver_fold_plan(
     spark, pairs_new, table, members_table, state, mstate, arts, id_col
 ) -> "_FoldPlan | None":
     """The fold of a batch-bounded graph, derived on the driver: one
-    capped collect of the distinct pairs (with every endpoint's assign
+    capped collect of the batch's pairs (with every endpoint's assign
     and cluster shard) and one collect of the endpoints' current labels
     feed the union-find, the relabel map, the endpoint rows of the
     changed set and, when no existing cluster is relabeled, the whole
@@ -694,10 +697,10 @@ def _driver_fold_plan(
     bounded by the batch) are read and joined in Spark.  Its rows equal
     the distributed plan's (the differential test pins both against the
     one-shot ``dedup_clusters``).  None — the caller takes the
-    distributed path — when the batch is over ``_LOCAL_CC_PAIR_CAP``,
-    the id type is outside the ``_local_id_type`` gate, the assignment
-    table stores another id type than the batch, or a stored label is
-    NULL."""
+    distributed path — when the batch has more than
+    ``_LOCAL_CC_PAIR_CAP`` rows that are not self-pairs, the id type is
+    outside the ``_local_id_type`` gate, the assignment table stores
+    another id type than the batch, or a stored label is NULL."""
     from ..spark.reader import read_version
 
     pairs = pairs_new.select(F.col("id_a"), F.col("id_b"))
@@ -708,10 +711,13 @@ def _driver_fold_plan(
     schema = _pair_schema(id_col, "cluster_id", id_type)
     ep_schema = T.StructType([T.StructField(id_col, id_type)])
     # self-pairs carry no edge; null-safe so a NULL endpoint survives
-    # into the loud check instead of being dropped by three-valued logic
-    rows = (
+    # into the loud check instead of being dropped by three-valued logic.
+    # The batch's rows as they are: the take stops at the cap, so a batch
+    # over it costs a scan of cap + 1 rows, not a distinct over the whole
+    # batch; the distinct is taken here (Python equality is Spark's for
+    # the gated types)
+    raw = (
         pairs.where(~F.col("id_a").eqNullSafe(F.col("id_b")))
-        .distinct()
         .select(
             "id_a", "id_b",
             _doc_shard_col("id_a", arts.doc_shards),
@@ -722,8 +728,9 @@ def _driver_fold_plan(
         .limit(_LOCAL_CC_PAIR_CAP + 1)
         .collect()
     )
-    if len(rows) > _LOCAL_CC_PAIR_CAP:
+    if len(raw) > _LOCAL_CC_PAIR_CAP:
         return None
+    rows = list({(r[0], r[1]): r for r in raw}.values())
     _check_no_null_endpoints(
         sum(1 for r in rows if r[0] is None or r[1] is None)
     )
@@ -878,19 +885,15 @@ def _distributed_fold_plan(
 
     # -- components over {new pairs} ∪ {endpoint → current rep} ---------
     # every node is a batch endpoint or a touched cluster's min-member
-    # representative, so the graph (and the CC run) is O(batch); the
-    # union-find still answers a batch under the cap that the driver plan
-    # declined because the table stores another id type than the batch
+    # representative, so the graph (and the CC run) is O(batch)
     edges = pairs.unionByName(
         known.select(
             F.col(id_col).alias("id_a"), F.col("cluster_id").alias("id_b")
         )
     )
-    local = _local_components(spark, edges, id_col, counts["n"])
-    if local is None:
-        local = DD.dedup_clusters(edges, id_col).select(
-            F.col(id_col), "cluster_id"
-        )
+    local = DD.dedup_clusters(edges, id_col).select(
+        F.col(id_col), "cluster_id"
+    )
 
     # -- relabel map: touched clusters whose representative changed -----
     touched = known.select(F.col("cluster_id").alias("old_cluster")).distinct()

@@ -557,8 +557,10 @@ def extend_dedup_index(
     a full :func:`~chronicles_spark.operators.dedup.minhash_dedup`
     re-run over corpus+batch would add for these docs.  With
     ``pairs_table`` the returned relation reads the journal partition
-    the commit landed, so it never depends on superseded shard versions;
-    without it, it is a lazy checkpoint
+    this call wrote, at its own version (a later consolidation of the
+    journal does not change it; a vacuum that reclaims that version
+    does), so it never depends on superseded shard versions; without
+    it, it is a lazy checkpoint
     (``lineage_barrier(eager=False)``) that the caller's first action
     lands.
 
@@ -1204,7 +1206,7 @@ def _extend_publish(
         )
         if expected is not None:
             expected[pairs_table.name] = pairs_head
-    publish_group(
+    added = publish_group(
         spark, tracker, version, user_id, message, writes,
         expected_heads=expected,
         allow_disjoint=(concurrency == "optimistic"),
@@ -1214,28 +1216,20 @@ def _extend_publish(
     if pairs_table is not None:
         # the journal save (overlapped with the band and doc saves by
         # publish_group) is verify's one evaluation; the caller gets the
-        # partition it landed, so the returned pairs never depend on
-        # superseded shard versions
-        verified = _journaled_pairs(
-            spark, tracker, pairs_table, version.label, verified.schema
+        # partition that save wrote, at this commit's version — not the
+        # journal's head, which a concurrent consolidation may already
+        # have moved — so the returned pairs never depend on superseded
+        # shard versions
+        written = PartitionedTableVersion(
+            {p: version for p in added[pairs_table.name]}
         )
+        if written.partition_versions:
+            verified = read_version(
+                spark, pairs_table, written, infer_partition_types=False
+            ).select(*verified.schema.names)
+        else:  # no pair verified: a data-less marker commit
+            verified = spark.createDataFrame([], verified.schema)
     return verified, new_state, stamped
-
-
-def _journaled_pairs(spark, tracker, pairs_table, label, schema):
-    """The ``batch=<label>`` partition of the pairs journal as the
-    verified-pairs frame (``schema``'s columns); empty when the extend
-    verified no pair (a data-less marker commit)."""
-    from ..spark.reader import read_version
-
-    sub = _restrict_to_values(
-        tracker.current_version(pairs_table.name), PAIRS_BATCH_COL, [label]
-    )
-    if not sub.partition_versions:
-        return spark.createDataFrame([], schema)
-    return read_version(
-        spark, pairs_table, sub, infer_partition_types=False
-    ).select(*schema.names)
 
 
 # ---------------------------------------------------------------------------

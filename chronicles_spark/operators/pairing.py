@@ -286,7 +286,10 @@ def publish_group(
     (build path); callers that already collected the touched sets pass
     them (extend path).  Data lands first and stays invisible until the
     group commit; a crash between the group's appends is exactly what
-    :func:`check_pair` catches on the next read-modify-write."""
+    :func:`check_pair` catches on the next read-modify-write.
+
+    Returns ``{table name: partitions}``, the partitions each table's
+    commit added at ``version``."""
     from datetime import datetime, timezone
 
     from ..core.ops import (
@@ -315,7 +318,7 @@ def publish_group(
 
     # the per-table data writes are independent jobs into different
     # directories; any failure propagates before commit_group
-    resolved = overlapped(_write_one, writes)
+    resolved = overlapped(spark, _write_one, writes)
 
     meta_ts = datetime.now(timezone.utc)
     stamped = pair_message(message, version.label)
@@ -334,3 +337,4 @@ def publish_group(
     tracker.commit_group(
         group, expected_heads=expected_heads, allow_disjoint=allow_disjoint
     )
+    return {table.name: list(partitions) for table, partitions, _ in resolved}

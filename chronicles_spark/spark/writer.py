@@ -299,7 +299,7 @@ def write_versioned(
         _seed_from_write(key, df.schema, table)
 
 
-def overlapped(fn, items, max_workers: int = 4) -> list:
+def overlapped(spark, fn, items) -> list:
     """``[fn(x) for x in items]`` with the calls overlapped on a small
     thread pool when there are two or more.
 
@@ -307,17 +307,33 @@ def overlapped(fn, items, max_workers: int = 4) -> list:
     scheduler runs jobs concurrently (actions are only sequential when
     the driver calls them sequentially), so the next write's tasks
     back-fill executors freed by the previous write's straggler tail.
-    Every call has returned before this does — the pool is joined even
-    when one raises, and then the first error in item order propagates —
-    so a caller that commits after it keeps the crash-ordering contract
-    (data invisible until the commit)."""
+    Each call runs with the caller's Spark local properties (job group,
+    description, scheduler pool) and ``spark``'s job tags, so cancelling
+    the caller's job group or tag cancels these jobs too.  Every call has
+    returned before this does — the pool is joined even when one raises,
+    and then the first error in item order propagates — so a caller that
+    commits after it keeps the crash-ordering contract (data invisible
+    until the commit)."""
     items = list(items)
     if len(items) < 2:
         return [fn(x) for x in items]
     from concurrent.futures import ThreadPoolExecutor
 
-    with ThreadPoolExecutor(max_workers=min(max_workers, len(items))) as pool:
-        futures = [pool.submit(fn, x) for x in items]
+    from pyspark import inheritable_thread_target
+    from pyspark.sql import SparkSession
+
+    def inheriting(f):
+        # wrapped per call: each task gets its own copy of the caller's
+        # properties, which Spark mutates while it submits a job
+        wrap = inheritable_thread_target(spark)
+        if isinstance(wrap, SparkSession):
+            # pinned-thread mode off: Python threads do not own a JVM
+            # thread, so there is nothing to inherit
+            return f
+        return wrap(f)
+
+    with ThreadPoolExecutor(max_workers=min(4, len(items))) as pool:
+        futures = [pool.submit(inheriting(fn), x) for x in items]
     return [f.result() for f in futures]
 
 
@@ -399,7 +415,8 @@ def versioned_insert_group(
     # one fresh version per member, minted in member order before the
     # overlapped saves
     entries = [(df, table, generate_version()) for df, table in writes]
-    for (_df, table, _v), ops in zip(entries, overlapped(_write_one, entries)):
+    saved = overlapped(writes[0][0].sparkSession, _write_one, entries)
+    for (_df, table, _v), ops in zip(entries, saved):
         meta = TableUpdateMetadata.new(user_id, stamped, meta_ts)
         group[table.name] = TableUpdate(meta, tuple(ops))
 

@@ -484,6 +484,60 @@ def test_pairs_table_exactly_once(spark, tmp_path):
     assert DX.verify_dedup_index(spark, table, tracker).count() == 0
 
 
+def test_extend_returns_its_journal_partition_after_the_head_moves(
+    spark, tmp_path, monkeypatch
+):
+    """The pairs an extend returns are the journal partition it wrote,
+    at its own version: a journal commit that lands between the extend's
+    commit and its return (here one that drops every batch partition, as
+    a consolidation does) changes neither the rows nor their count; a
+    zero-pair extend returns an empty frame."""
+    from datetime import datetime, timezone
+
+    from chronicles_spark.core.ops import (
+        RemovePartition,
+        TableUpdate,
+        TableUpdateMetadata,
+    )
+
+    docs = load_table(spark, SF_DIR, "documents").select("doc_id", "text")
+    corpus = docs.where("doc_id < 200")
+    table, tracker = _mk_index(tmp_path, "moved")
+    DX.build_dedup_index(corpus, table, tracker, band_shards=8, doc_shards=4)
+    pt = DX.dedup_pairs_table(table)
+    donor13 = corpus.where("doc_id = 13").collect()[0]["text"]
+    real_sync = DX._sync_metastore
+
+    def sync_then_move(metastore, tbl, state):
+        # runs after the extend's commit group, before its return
+        real_sync(metastore, tbl, state)
+        live = tracker.current_version(pt.name).partition_versions
+        tracker.commit(pt.name, TableUpdate(
+            TableUpdateMetadata.new(
+                "t", "drop the journal", datetime.now(timezone.utc)
+            ),
+            tuple(RemovePartition(p) for p in sorted(live, key=str)),
+        ))
+
+    monkeypatch.setattr(DX, "_sync_metastore", sync_then_move)
+    pairs, _, _ = DX.extend_dedup_index(
+        spark.createDataFrame([(900, donor13)], "doc_id long, text string"),
+        table, tracker, pairs_table=pt,
+    )
+    assert not tracker.current_version(pt.name).partition_versions
+    assert [(r["id_a"], r["id_b"]) for r in pairs.collect()] == [(13, 900)]
+
+    none, _, _ = DX.extend_dedup_index(
+        spark.createDataFrame(
+            [(901, "utterly unique zebra quine flux " * 3)],
+            "doc_id long, text string",
+        ),
+        table, tracker, pairs_table=pt,
+    )
+    assert none.count() == 0
+    assert none.columns == pairs.columns
+
+
 def test_vacuum_dedup_artifacts_follows_data_vacuum(spark, tmp_path):
     """Sidecar GC mirrors storage truth (round-9 directive #5, the ANN
     sweep generalized): live/retained labels keep their sidecars; a

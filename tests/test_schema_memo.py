@@ -224,9 +224,11 @@ def test_index_maintainer_job_ceilings(lake, name, ceiling):
 
 
 def test_group_publish_job_ceiling(spark, tmp_path):
-    """One 2-table ``versioned_insert_group``: a save job per member (the
-    saves overlap on pool threads, whose ungrouped jobs count too) and
-    nothing else — discovery lists directories, the schemas are seeded."""
+    """One 2-table ``versioned_insert_group``: a save job per member and
+    nothing else — discovery lists directories, the schemas are seeded.
+    The saves overlap on pool threads that run in the caller's job group,
+    so none of their jobs runs outside it (a cancel of the group reaches
+    them)."""
     tracker = FileBackedVersionTracker(str(tmp_path / "_log"))
     tables = [
         TableDefinition(TableName("demo", n), str(tmp_path / n),
@@ -238,9 +240,13 @@ def test_group_publish_job_ceiling(spark, tmp_path):
     df = spark.range(20).select(
         F.col("id"), (F.col("id") % 3).cast("string").alias("d")
     )
+    st = spark.sparkContext.statusTracker()
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    loose = set(st.getJobIdsForGroup(None))
     out, n = _jobs(spark, lambda: versioned_insert_group(
         [(df, t) for t in tables], tracker, "t", "publish"))
     assert 0 < n <= GROUP_PUBLISH_MAX_JOBS, n
+    assert set(st.getJobIdsForGroup(None)) == loose
     for t in tables:
         assert {p.path for p in out[t.name].partition_versions} == {
             "d=0", "d=1", "d=2"
