@@ -63,7 +63,7 @@ from chronicles_spark.trackers import FileBackedVersionTracker
 # fold and the sample the first two launched 37 and 20, and with an
 # inference job per read_version the first three 43, 21 and 23
 DEDUP_EXTEND_MAX_JOBS = 34
-CLUSTER_FOLD_MAX_JOBS = 8
+CLUSTER_FOLD_MAX_JOBS = 7
 ANN_EXTEND_MAX_JOBS = 20
 GROUP_PUBLISH_MAX_JOBS = 2
 
