@@ -450,7 +450,7 @@ def main():
     b7_shards = sorted(
         r["s"]
         for r in b7_batch.select(
-            AX._shard_col("vec_id", b7_arts_full.id_shards).alias("s")
+            AX.DX._shard_col(b7_arts_full.id_shards, "vec_id").alias("s")
         ).distinct().collect()
     )
     ann_locate_read_fraction = round(
@@ -644,7 +644,7 @@ def main():
             "doc_id", _DDmod.shingles_of(F.col("text")).alias("shingles")
         ),
         "doc_id", b8_arts.bands, b8_arts.rows,
-    ).withColumn("band_shard", DX._band_shard_col(b8_arts.band_shards))
+    ).withColumn("band_shard", DX._shard_col(b8_arts.band_shards, "band_id", "band_key"))
     b8_shards = sorted(
         r["band_shard"]
         for r in b8_banded.select("band_shard").distinct().collect()
@@ -746,7 +746,7 @@ def main():
     b9_banded = _DDmod.sign_lsh_banded(
         b9_batch4, b9_arts.dim, "vec_id", "embedding",
         b9_arts.n_planes, b9_arts.bands,
-    ).withColumn("band_shard", DX._band_shard_col(b9_arts.band_shards))
+    ).withColumn("band_shard", DX._shard_col(b9_arts.band_shards, "band_id", "band_key"))
     b9_shards = sorted(
         r["band_shard"]
         for r in b9_banded.select("band_shard").distinct().collect()
@@ -819,7 +819,7 @@ def main():
             for r in fold_df.select(
                 F.explode(F.array("id_a", "id_b")).alias("doc_id")
             ).select(
-                DX._doc_shard_col("doc_id", 64).alias("s")
+                DX._shard_col(64, "doc_id").alias("s")
             ).distinct().collect()
         )
         return round(
@@ -886,7 +886,7 @@ def main():
             "doc_id",
             _DDmod.simhash_expr("text", b10_arts.bits).alias("simhash"),
         )
-    ).withColumn("band_shard", DX._band_shard_col(b10_arts.band_shards))
+    ).withColumn("band_shard", DX._shard_col(b10_arts.band_shards, "band_id", "band_key"))
     b10_shards = sorted(
         r["band_shard"]
         for r in b10_banded.select("band_shard").distinct().collect()
@@ -1106,7 +1106,7 @@ def main():
         for r in _b12c_pairs(b12c_n["i"]).select(
             F.explode(F.array("id_a", "id_b")).alias("doc_id")
         ).select(
-            DX._doc_shard_col("doc_id", 1024).alias("s")
+            DX._shard_col(1024, "doc_id").alias("s")
         ).distinct().collect()
     )
     cluster_fold_read_fraction_100pairs_1024shards = round(

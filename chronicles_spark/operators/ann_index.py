@@ -103,14 +103,6 @@ def ann_id_map_table(table: TableDefinition) -> TableDefinition:
     )
 
 
-def _shard_col(id_col: str, id_shards: int):
-    """Deterministic shard of an id — xxhash64 is stable across Spark
-    sessions/versions by contract, so every extend hashes ids exactly as
-    the build did.  Callers must keep the id column's TYPE stable across
-    batches (xxhash64 hashes the typed value)."""
-    return F.pmod(F.xxhash64(F.col(id_col)), F.lit(id_shards)).cast("string")
-
-
 def _apply_split_tree(df: DataFrame, id_col: str, tree: "dict[str, int]"):
     """Route rows through the skew-split TREE: an entry ``parent -> m``
     rewrites bucket value ``parent`` to ``parent_<sub>`` with ``sub =
@@ -429,38 +421,30 @@ def build_ann_index(
         # only injected artifacts need the dim probe; the fit-here path
         # derives dims from the data and raises its own clearer errors
         SIM.validate_ann_artifacts(df, vec_col, centroids, codebooks)
-    if centroids is None and codebooks is None:
-        # the two fits are INDEPENDENT (PQ codebooks fit on raw vector
-        # subspaces, not residuals against the coarse centroids), and
-        # each is a short serial chain of driver actions — run them on
-        # two driver threads so one fit's job tails back-fill the
-        # other's (guide §2.6 overlap; same pattern as publish_group).
-        # Results are identical to the sequential calls (same functions,
-        # same deterministic inputs); errors surface at .result().
-        from concurrent.futures import ThreadPoolExecutor
+    # the two fits are INDEPENDENT (PQ codebooks fit on raw vector
+    # subspaces, not residuals against the coarse centroids), and each is
+    # a short serial chain of driver actions — when both run they overlap
+    # on threads in the caller's job group, so one fit's job tails
+    # back-fill the other's (guide §2.6).  Results are identical to the
+    # sequential calls (same functions, same deterministic inputs)
+    from ..spark.writer import overlapped
 
-        pool = ThreadPoolExecutor(max_workers=2)
-        try:
-            cent_f = pool.submit(
-                SIM.kmeans_fit, df, n_clusters, iters, id_col, vec_col,
-                train_fraction=train_fraction,
-            )
-            book_f = pool.submit(
-                SIM.pq_fit, df, m, k_sub, iters, id_col, vec_col,
-                train_fraction=train_fraction,
-            )
-            centroids = cent_f.result()
-            codebooks = book_f.result()
-        finally:
-            pool.shutdown(wait=True)
+    fits = []
     if centroids is None:
-        centroids = SIM.kmeans_fit(
-            df, n_clusters, iters, id_col, vec_col, train_fraction=train_fraction
-        )
+        fits.append(lambda: SIM.kmeans_fit(
+            df, n_clusters, iters, id_col, vec_col,
+            train_fraction=train_fraction,
+        ))
     if codebooks is None:
-        codebooks = SIM.pq_fit(
-            df, m, k_sub, iters, id_col, vec_col, train_fraction=train_fraction
-        )
+        fits.append(lambda: SIM.pq_fit(
+            df, m, k_sub, iters, id_col, vec_col,
+            train_fraction=train_fraction,
+        ))
+    fitted = iter(overlapped(df.sparkSession, lambda fit: fit(), fits))
+    if centroids is None:
+        centroids = next(fitted)
+    if codebooks is None:
+        codebooks = next(fitted)
 
     vd = df.select(F.col(id_col), SIM.as_double(F.col(vec_col)).alias("v"))
     encoded = SIM.pq_encode(
@@ -498,91 +482,32 @@ def build_ann_index(
     # held guards — crash exposure documented on extend_ann_index)
     if id_map_shards < 1:
         raise ValueError("id_map_shards must be >= 1 (or None for no map)")
+    from ..spark.reader import read_version
+    from ..spark.writer import partitions_written, write_versioned
+
+    spark = df.sparkSession
     map_table = ann_id_map_table(table)
     tracker.init_table(map_table.name, is_snapshot=False, user_id=user_id)
-    # map_df=None: _publish_pair derives the map from the JUST-WRITTEN
-    # index files (a column-pruned (id, bucket) read of the new version
+    DX._require_dynamic_overwrite(spark)
+    # the index lands FIRST and the map derives from the JUST-WRITTEN
+    # files (a column-pruned (id, bucket) read of the new version
     # directories, ~1/100 the corpus bytes) — materializing the mapping
-    # from `encoded` here would re-run the corpus-scale encode lineage
+    # from `encoded` would re-run the corpus-scale encode lineage
     # (centroid assignment + PQ + skew-split CASE) a second time
-    state = _publish_pair(
-        df.sparkSession, table, map_table, tracker, version,
-        encoded, None, user_id, message,
-        expected_heads=None, allow_disjoint=True, metastore=metastore,
-        map_id_col=id_col, map_id_shards=id_map_shards,
+    write_versioned(encoded, table, version)
+    index_parts = partitions_written(table, version, spark=spark)
+    written = PartitionedTableVersion({p: version for p in index_parts})
+    map_df = DX._shard_layout(
+        read_version(spark, table, written, infer_partition_types=False)
+        .select(F.col(id_col), F.col(BUCKET_COL)),
+        ID_SHARD_COL, [id_col], DX._shard_col(id_map_shards, id_col),
+    )
+    state, _ = DX._publish(
+        spark, tracker, version, user_id, message,
+        [(table, None, index_parts, ()), (map_table, map_df, None, ())],
+        metastore,
     )
     return state, artifacts
-
-
-def _publish_pair(
-    spark,
-    table: TableDefinition,
-    map_table: TableDefinition,
-    tracker: VersionTracker,
-    version,
-    index_df: DataFrame,
-    map_df: DataFrame,
-    user_id: str,
-    message: str,
-    expected_heads,
-    allow_disjoint: bool,
-    metastore,
-    index_partitions=None,
-    index_remove=(),
-    map_partitions=None,
-    map_id_col=None,
-    map_id_shards=None,
-    map_remove=(),
-):
-    """Write index + id-map data under ONE version label and publish both
-    commits as one ``tracker.commit_group`` (optionally optimistic via
-    ``expected_heads``).  Partitions are taken from the caller's plan
-    when given (extend — it already collected the touched sets), else
-    from the written-directory listing (build).  ``map_df=None`` (build)
-    derives the map from the index data ALREADY WRITTEN under this
-    version — a column-pruned (id, bucket) read of the new version
-    directories — instead of re-evaluating the caller's corpus-scale
-    encode lineage a second time; pass ``map_id_col``/``map_id_shards``
-    with it.  Returns the index table's new state; the metastore (if
-    any) is synced for the INDEX table only — the id map is derived
-    internal state.  The group-commit + pair-marker mechanics live in
-    :func:`pairing.publish_group`."""
-    from ..spark.writer import partitions_written, write_versioned
-    from .pairing import publish_group
-
-    if map_df is None and map_id_shards is not None:
-        # build path: write the index FIRST, then derive the map from
-        # the written files (id + bucket columns only; parquet column
-        # pruning makes this ~the map's own bytes) rather than
-        # re-running assignment/PQ/skew-split over the raw embeddings
-        from ..spark.reader import read_version
-
-        DX._require_dynamic_overwrite(spark)
-        write_versioned(index_df, table, version)
-        if index_partitions is None:
-            index_partitions = partitions_written(table, version, spark=spark)
-        index_df = None  # already on disk; publish_group lands its ops
-        written_state = PartitionedTableVersion(
-            {p: version for p in index_partitions}
-        )
-        map_df = (
-            read_version(spark, table, written_state, infer_partition_types=False)
-            .select(F.col(map_id_col), F.col(BUCKET_COL))
-            .withColumn(ID_SHARD_COL, _shard_col(map_id_col, map_id_shards))
-            .repartition(F.col(ID_SHARD_COL))
-            .sortWithinPartitions(ID_SHARD_COL, map_id_col)
-        )
-    publish_group(
-        spark, tracker, version, user_id, message,
-        [
-            (table, index_df, index_partitions, index_remove),
-            (map_table, map_df, map_partitions, map_remove),
-        ],
-        expected_heads=expected_heads, allow_disjoint=allow_disjoint,
-    )
-    new_state = tracker.current_version(table.name)
-    DX._sync_metastore(metastore, table, new_state)
-    return new_state
 
 
 def load_ann_artifacts(
@@ -807,34 +732,16 @@ def _extend_publish(
     # needs: row/dup/null counts plus the distinct bucket and shard sets
     # (both bounded — ≤ n_clusters / ≤ id_shards values), instead of a
     # separate collect per set
-    agg_cols = [
-        F.count(F.lit(1)).alias("n"),
-        F.countDistinct(F.col(id_col)).alias("nd"),
-        F.count(F.when(F.col(id_col).isNull(), 1)).alias("nn"),
-        F.collect_set(F.col(BUCKET_COL)).alias("bks"),
+    agg_cols = DX._batch_stats(id_col) + [
+        F.collect_set(F.col(BUCKET_COL)).alias("bks")
     ]
     if map_table is not None:
         agg_cols.append(
-            F.collect_set(_shard_col(id_col, artifacts.id_shards)).alias("shs")
+            F.collect_set(DX._shard_col(artifacts.id_shards, id_col)).alias("shs")
         )
     counts = encoded_new.agg(*agg_cols).collect()[0]
-    if counts["nn"]:
-        # countDistinct excludes NULLs, so without this check a null id
-        # would be misreported as a duplicate; it would also never match
-        # the upsert anti-join — reject it by name
-        raise ValueError(
-            f"df_new contains {counts['nn']} NULL {id_col} value(s) — "
-            "every row needs a concrete id"
-        )
-    if counts["n"] != counts["nd"]:
-        raise ValueError(
-            f"df_new contains duplicate {id_col} values "
-            f"({counts['n']} rows, {counts['nd']} distinct ids) — an upsert "
-            "needs one row per id; deduplicate the batch first"
-        )
+    DX._check_batch(counts, id_col, "ann")
     new_buckets = sorted(counts["bks"])
-    if not new_buckets:
-        raise ValueError("extend_ann_index got an empty batch")
 
     from ..spark.reader import read_version
 
@@ -895,49 +802,31 @@ def _extend_publish(
                 .collect()
             )
             touched |= {r[BUCKET_COL] for r in old_locs}
-    touched_sorted = sorted(touched)
-
-    sub_state = restrict_to_buckets(state, touched_sorted)
-    out = encoded_new
+    # current rows of exactly the touched buckets; in upsert mode same-id
+    # rows are superseded via a broadcast anti-join
+    out, sub_state = DX._rmw_shards(
+        spark, table, state, BUCKET_COL, sorted(touched), encoded_new,
+        [id_col, BUCKET_COL, "pq_codes"], id_col,
+        replaced=F.broadcast(new_ids) if mode == "upsert" else None,
+        restrict=lambda st, _, buckets: restrict_to_buckets(st, buckets),
+    )
     if sub_state.partition_versions:
-        # current rows of exactly the touched buckets, partition values as
-        # exact strings (read-modify-write contract); in upsert mode
-        # same-id rows are superseded via a broadcast anti-join.  The
-        # union re-routes through the recorded split tree (idempotent
+        # the union re-routes through the recorded split tree (idempotent
         # for rows already at a leaf) so live rows of a partition the
         # tree has since split MIGRATE to their leaf in this rewrite —
         # the self-heal that lets a stale layout converge without a
-        # rebuild.
-        live = read_version(
-            spark, table, sub_state, infer_partition_types=False
-        ).select(F.col(id_col), F.col(BUCKET_COL), F.col("pq_codes"))
-        if mode == "upsert":
-            live = live.join(F.broadcast(new_ids), id_col, "left_anti")
-        out = _apply_split_tree(
-            encoded_new.unionByName(live), id_col, split_tree or {}
-        )
+        # rebuild
+        out = _apply_split_tree(out, id_col, split_tree or {})
 
     # which physical buckets the rewrite lands — ONE small aggregation
     # over the touched slice (never an FS walk over every bucket
     # directory of the index; at n_clusters in the tens of thousands a
-    # per-batch walk would dwarf the batch itself).  `out` is consumed
-    # twice (this count + the write) — plus two more bounded passes in
-    # the rare re-split case — so a lineage barrier first reads the
-    # touched live buckets ONCE instead of once per consumer.
-    from ..core.model import Partition
-    from .dedup import lineage_barrier as _lb
-
-    # eager=False: the bucket-count action right below is the first
-    # action and lands the final stage; the map stages still run at this
-    # call under AQE, so it saves eager's result-stage pass, not a job
-    # (lineage_barrier docstring)
-    out = _lb(out, eager=False)
-    written_counts = {
-        r[BUCKET_COL]: r["n"]
-        for r in out.groupBy(BUCKET_COL)
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
+    # per-batch walk would dwarf the batch itself); every physical
+    # partition the RMW read but did not write back is emptied (its rows
+    # were replaced, or migrated by a re-split)
+    out, written_counts, emptied = DX._observe_written(
+        out, BUCKET_COL, sub_state
+    )
     if None in written_counts:
         raise ValueError(
             "encoded batch contains a NULL bucket (null embedding?) — "
@@ -957,12 +846,8 @@ def _extend_publish(
         )
         if new_entries:
             split_tree = {**(split_tree or {}), **new_entries}
-            written_counts = {
-                r[BUCKET_COL]: r["n"]
-                for r in out.groupBy(BUCKET_COL)
-                .agg(F.count(F.lit(1)).alias("n"))
-                .collect()
-            }
+            written_counts = DX._shard_counts(out, BUCKET_COL)
+            emptied = DX._emptied(sub_state, BUCKET_COL, written_counts)
 
     # sidecar BEFORE the data commit (build's crash-ordering contract);
     # it records the (possibly just-extended) split tree
@@ -973,22 +858,7 @@ def _extend_publish(
         bucket_splits=split_tree,
     )
 
-    written_buckets = set(written_counts)
-    written_parts = [
-        Partition.of((BUCKET_COL, b)) for b in sorted(written_buckets)
-    ]
-    # every physical partition this RMW read but did not write back is
-    # emptied (its rows were replaced, or migrated by a re-split) and
-    # must leave the live view in the SAME commit
-    had_live = {
-        dict(p.column_values)[BUCKET_COL]
-        for p in sub_state.partition_versions
-    }
-    emptied = [
-        Partition.of((BUCKET_COL, b))
-        for b in sorted(had_live)
-        if b not in written_buckets
-    ]
+    written_parts = DX._shard_parts(BUCKET_COL, written_counts)
 
     if map_table is None:
         from ..spark.writer import versioned_insert_into
@@ -1016,29 +886,24 @@ def _extend_publish(
     # -- id-map read-modify-write of exactly the batch's shards ------------
     # an id never leaves its shard, so the touched shard set = the batch's
     # shard set on both the read and the write side, and shards are never
-    # emptied by an extend
-    msub = _restrict_to_values(map_state, ID_SHARD_COL, batch_shards)
-    # batch ids' map rows take their FINAL physical bucket from `out`
-    # (encoded_new's values predate a possible in-commit re-split);
-    # non-batch rows migrated by a re-split keep their old map value,
-    # which stays resolvable as a prefix ancestor (locate restricts to
-    # the recorded value's whole subtree, verify tolerates ancestors)
-    new_map = out.join(F.broadcast(new_ids), id_col, "left_semi").select(
-        F.col(id_col), F.col(BUCKET_COL)
+    # emptied by an extend.  Batch ids' map rows take their FINAL physical
+    # bucket from `out` (encoded_new's values predate a possible
+    # in-commit re-split); non-batch rows migrated by a re-split keep
+    # their old map value, which stays resolvable as a prefix ancestor
+    # (locate restricts to the recorded value's whole subtree, verify
+    # tolerates ancestors)
+    new_map, _ = DX._rmw_shards(
+        spark, map_table, map_state, ID_SHARD_COL, batch_shards,
+        out.join(F.broadcast(new_ids), id_col, "left_semi").select(
+            F.col(id_col), F.col(BUCKET_COL)
+        ),
+        [id_col, BUCKET_COL], id_col,
+        replaced=F.broadcast(new_ids) if mode == "upsert" else None,
     )
-    if msub.partition_versions:
-        live_map = read_version(
-            spark, map_table, msub, infer_partition_types=False
-        ).select(F.col(id_col), F.col(BUCKET_COL))
-        if mode == "upsert":
-            live_map = live_map.join(F.broadcast(new_ids), id_col, "left_anti")
-        new_map = new_map.unionByName(live_map)
-    out_map = (
-        new_map.withColumn(ID_SHARD_COL, _shard_col(id_col, artifacts.id_shards))
-        .repartition(F.col(ID_SHARD_COL))
-        .sortWithinPartitions(ID_SHARD_COL, id_col)
+    out_map = DX._shard_layout(
+        new_map, ID_SHARD_COL, [id_col],
+        DX._shard_col(artifacts.id_shards, id_col),
     )
-    map_parts = [Partition.of((ID_SHARD_COL, s)) for s in batch_shards]
 
     # WITH the id map the upsert's read set is bounded (touched buckets +
     # batch shards), so "optimistic" genuinely disjoint-merges in BOTH
@@ -1052,15 +917,15 @@ def _extend_publish(
     expected = None
     if concurrency != "last-writer-wins":
         expected = {table.name: base_head, map_table.name: map_head}
-    new_state = _publish_pair(
-        spark, table, map_table, tracker, version, out, out_map,
-        user_id, message,
+    new_state, _ = DX._publish(
+        spark, tracker, version, user_id, message,
+        [
+            (table, out, written_parts, emptied),
+            (map_table, out_map, DX._shard_parts(ID_SHARD_COL, batch_shards), ()),
+        ],
+        metastore,
         expected_heads=expected,
         allow_disjoint=(concurrency == "optimistic"),
-        metastore=metastore,
-        index_partitions=written_parts,
-        index_remove=emptied,
-        map_partitions=map_parts,
     )
     return new_state, stamped
 
@@ -1266,7 +1131,6 @@ def rebuild_ann_id_map(
     extends resolving artifacts from the sidecars would see ``None``,
     take the scan-locate path, and silently stop MAINTAINING the map
     just created (leaving it to rot stale)."""
-    from ..core.model import Partition
     from ..spark.reader import read_version
 
     state = tracker.current_version(table.name)
@@ -1284,38 +1148,32 @@ def rebuild_ann_id_map(
     mapping = (
         read_version(spark, table, state, infer_partition_types=False)
         .select(F.col(id_col), F.col(BUCKET_COL))
-        .withColumn(ID_SHARD_COL, _shard_col(id_col, artifacts.id_shards))
+        .withColumn(ID_SHARD_COL, DX._shard_col(artifacts.id_shards, id_col))
     )
     written = sorted(
         r["s"]
         for r in mapping.select(F.col(ID_SHARD_COL).alias("s")).distinct().collect()
     )
     map_state = tracker.current_version(map_table.name)
-    live = (
-        {
-            dict(p.column_values)[ID_SHARD_COL]
-            for p in map_state.partition_versions
-        }
-        if isinstance(map_state, PartitionedTableVersion)
-        else set()
-    )
+    if not isinstance(map_state, PartitionedTableVersion):
+        map_state = PartitionedTableVersion({})
     # publish the repaired map AS A PAIR: the index side contributes an
     # empty update so both heads land the same pair marker — the repair
     # itself must re-establish the invariant the hot path checks (and a
     # crash between the rebuild's own two appends re-tears loudly, never
     # silently)
-    version = generate_version()
-    _publish_pair(
-        spark, table, map_table, tracker, version,
-        None,
-        mapping.repartition(F.col(ID_SHARD_COL))
-        .sortWithinPartitions(ID_SHARD_COL, id_col),
-        user_id, message,
-        expected_heads=None, allow_disjoint=True, metastore=None,
-        map_partitions=[Partition.of((ID_SHARD_COL, s)) for s in written],
-        map_remove=[
-            Partition.of((ID_SHARD_COL, s)) for s in sorted(live - set(written))
+    DX._publish(
+        spark, tracker, generate_version(), user_id, message,
+        [
+            (table, None, None, ()),
+            (
+                map_table,
+                DX._shard_layout(mapping, ID_SHARD_COL, [id_col]),
+                DX._shard_parts(ID_SHARD_COL, written),
+                DX._emptied(map_state, ID_SHARD_COL, written),
+            ),
         ],
+        None,
     )
     new_map_state = tracker.current_version(map_table.name)
     # migration completeness: pin the shard modulus into every live

@@ -85,22 +85,26 @@ from .dedup_index import (
     _FETCH_PUSHDOWN_MAX_IDS,
     _artifact_path,
     _check_extend_args,
-    _doc_shard_col,
     _IndexArtifacts,
     _load_artifacts,
+    _observe_written,
+    _pin_pair,
     _positive,
+    _publish,
     _rebuild_geometry,
     _require_dynamic_overwrite,
     _restrict_to_values,
+    _rmw_shards,
     _run_maybe_exclusive,
-    _sync_metastore,
+    _shard_col,
+    _shard_layout,
+    _shard_parts,
     _write_artifact_sidecar,
-    DedupGeometryDriftWarning,
     DOC_SHARD_COL,
     PAIRS_BATCH_COL,
 )
 
-from .pairing import check_pair, pinned_state, publish_group
+from .pairing import pinned_state
 
 CLUSTER_SHARD_COL = "cluster_shard"
 
@@ -146,12 +150,6 @@ def cluster_members_table(table: TableDefinition) -> TableDefinition:
         format=table.format,
         format_options=table.format_options,
     )
-
-
-def _cluster_shard_col(cluster_col: str, cluster_shards: int):
-    return F.pmod(
-        F.xxhash64(F.col(cluster_col)), F.lit(cluster_shards)
-    ).cast("string")
 
 
 # the family name the cluster index's sidecar writes and loads report
@@ -314,41 +312,26 @@ def build_dedup_clusters(
     _write_artifact_sidecar(table, artifacts, _CLUSTER_WHAT)
     if pairs is None:
         spark = SparkSession.getActiveSession() or SparkSession.builder.getOrCreate()
-        _require_dynamic_overwrite(spark)
-        writes = [(table, None, (), ()), (members_table, None, (), ())]
-        publish_group(spark, tracker, version, user_id, message, writes)
     else:
         spark = pairs.sparkSession
-        _require_dynamic_overwrite(spark)
+    _require_dynamic_overwrite(spark)
+    writes = [(table, None, (), ()), (members_table, None, (), ())]
+    if pairs is not None:
         assigned = DD.dedup_clusters(pairs, id_col).select(
             F.col(id_col), F.col("cluster_id")
         )
+        assign_route = _shard_col(doc_shards, id_col)
+        member_route = _shard_col(cluster_shards, "cluster_id")
         writes = [
-            (
-                table,
-                assigned.withColumn(
-                    DOC_SHARD_COL, _doc_shard_col(id_col, doc_shards)
-                )
-                .repartition(F.col(DOC_SHARD_COL))
-                .sortWithinPartitions(DOC_SHARD_COL, id_col),
-                None,
-                (),
-            ),
-            (
-                members_table,
-                assigned.withColumn(
-                    CLUSTER_SHARD_COL,
-                    _cluster_shard_col("cluster_id", cluster_shards),
-                )
-                .repartition(F.col(CLUSTER_SHARD_COL))
-                .sortWithinPartitions(CLUSTER_SHARD_COL, "cluster_id"),
-                None,
-                (),
-            ),
+            (table, _shard_layout(assigned, DOC_SHARD_COL, [id_col],
+                                  assign_route), None, ()),
+            (members_table, _shard_layout(assigned, CLUSTER_SHARD_COL,
+                                          ["cluster_id"], member_route),
+             None, ()),
         ]
-        publish_group(spark, tracker, version, user_id, message, writes)
-    state = tracker.current_version(table.name)
-    _sync_metastore(metastore, table, state)
+    state, _ = _publish(
+        spark, tracker, version, user_id, message, writes, metastore
+    )
     return state, artifacts
 
 
@@ -382,9 +365,9 @@ def rebuild_dedup_clusters(
     _require_cluster_partitioning(table)
     _require_dynamic_overwrite(spark)
     members_table = cluster_members_table(table)
-    state, base_head, head_pair = pinned_state(tracker, table.name)
-    mstate, m_head, m_pair = pinned_state(tracker, members_table.name)
-    check_pair(table, head_pair, m_pair, _CLUSTER_REPAIR_ADVICE)
+    state, base_head, head_pair, mstate, m_head = _pin_pair(
+        tracker, table, members_table, _CLUSTER_REPAIR_ADVICE
+    )
     old = load_cluster_artifacts(table, state, head_pair)
     new_geo = _rebuild_geometry(
         old, doc_shards=doc_shards, cluster_shards=cluster_shards
@@ -400,21 +383,14 @@ def rebuild_dedup_clusters(
             spark, table, state, infer_partition_types=False
         ).select(F.col(id_col), "cluster_id")
         write_versioned(
-            rows.withColumn(
-                DOC_SHARD_COL, _doc_shard_col(id_col, artifacts.doc_shards)
-            )
-            .repartition(F.col(DOC_SHARD_COL))
-            .sortWithinPartitions(DOC_SHARD_COL, id_col),
+            _shard_layout(rows, DOC_SHARD_COL, [id_col],
+                          _shard_col(artifacts.doc_shards, id_col)),
             table, version,
         )
         assign_parts = partitions_written(table, version, spark=spark)
         write_versioned(
-            rows.withColumn(
-                CLUSTER_SHARD_COL,
-                _cluster_shard_col("cluster_id", artifacts.cluster_shards),
-            )
-            .repartition(F.col(CLUSTER_SHARD_COL))
-            .sortWithinPartitions(CLUSTER_SHARD_COL, "cluster_id"),
+            _shard_layout(rows, CLUSTER_SHARD_COL, ["cluster_id"],
+                          _shard_col(artifacts.cluster_shards, "cluster_id")),
             members_table, version,
         )
         member_parts = partitions_written(members_table, version, spark=spark)
@@ -425,17 +401,16 @@ def rebuild_dedup_clusters(
     rm_members = [
         p for p in mstate.partition_versions if p not in set(member_parts)
     ]
-    publish_group(
+    new_state, _ = _publish(
         spark, tracker, version, user_id, message,
         [
             (table, None, assign_parts, rm_assign),
             (members_table, None, member_parts, rm_members),
         ],
+        metastore,
         expected_heads={table.name: base_head, members_table.name: m_head},
         allow_disjoint=False,
     )
-    new_state = tracker.current_version(table.name)
-    _sync_metastore(metastore, table, new_state)
     return new_state, artifacts
 
 
@@ -671,10 +646,10 @@ def _changed_stats(changed, endpoints, arts, id_col):
         .agg(
             F.count(F.when(F.col("_ep").isNull(), 1)).alias("n_relabel"),
             F.collect_set(
-                _doc_shard_col(id_col, arts.doc_shards)
+                _shard_col(arts.doc_shards, id_col)
             ).alias("a_shards"),
             F.collect_set(
-                _cluster_shard_col("cluster_id", arts.cluster_shards)
+                _shard_col(arts.cluster_shards, "cluster_id")
             ).alias("c_shards"),
         )
         .collect()[0]
@@ -720,10 +695,10 @@ def _driver_fold_plan(
         pairs.where(~F.col("id_a").eqNullSafe(F.col("id_b")))
         .select(
             "id_a", "id_b",
-            _doc_shard_col("id_a", arts.doc_shards),
-            _doc_shard_col("id_b", arts.doc_shards),
-            _cluster_shard_col("id_a", arts.cluster_shards),
-            _cluster_shard_col("id_b", arts.cluster_shards),
+            _shard_col(arts.doc_shards, "id_a"),
+            _shard_col(arts.doc_shards, "id_b"),
+            _shard_col(arts.cluster_shards, "id_a"),
+            _shard_col(arts.cluster_shards, "id_b"),
         )
         .limit(_LOCAL_CC_PAIR_CAP + 1)
         .collect()
@@ -760,7 +735,7 @@ def _driver_fold_plan(
             )
         for r in live.select(
             id_col, "cluster_id",
-            _cluster_shard_col("cluster_id", arts.cluster_shards),
+            _shard_col(arts.cluster_shards, "cluster_id"),
         ).collect():
             known[r[0]] = r[1]
             c_shard[r[1]] = r[2]
@@ -865,7 +840,7 @@ def _distributed_fold_plan(
         F.explode(F.array("id_a", "id_b")).alias(id_col)
     ).distinct()
     e_shards, e_ids = _collect_shards_and_ids(
-        endpoints, F.col(id_col), _doc_shard_col(id_col, arts.doc_shards)
+        endpoints, F.col(id_col), _shard_col(arts.doc_shards, id_col)
     )
     esub = _restrict_to_values(state, DOC_SHARD_COL, e_shards)
     known = empty_changed  # (id_col, cluster_id) schema, zero rows
@@ -909,7 +884,7 @@ def _distributed_fold_plan(
     r_shards, r_ids = _collect_shards_and_ids(
         relabel,
         F.col("old_cluster"),
-        _cluster_shard_col("old_cluster", arts.cluster_shards),
+        _shard_col(arts.cluster_shards, "old_cluster"),
     )
     moved = empty_changed
     rsub = _restrict_to_values(mstate, CLUSTER_SHARD_COL, r_shards)
@@ -962,19 +937,13 @@ def _fold_batch(
     drift_shard_rows: "int | None" = DRIFT_MAX_ASSIGN_SHARD_ROWS,
     relabel_warn_rows: "int | None" = RELABEL_WARN_ROWS,
 ):
-    from ..spark.reader import read_version
-
     spark = pairs_new.sparkSession
     _require_dynamic_overwrite(spark)
     members_table = cluster_members_table(table)
     tracker.init_table(members_table.name, is_snapshot=False, user_id=user_id)
-    state, base_head, head_pair = pinned_state(tracker, table.name)
-    mstate, m_head, m_pair = pinned_state(tracker, members_table.name)
-    check_pair(table, head_pair, m_pair, _CLUSTER_REPAIR_ADVICE)
-    if not isinstance(state, PartitionedTableVersion) or not isinstance(
-        mstate, PartitionedTableVersion
-    ):
-        raise ValueError("dedup cluster tables are partitioned by shard")
+    state, base_head, head_pair, mstate, m_head = _pin_pair(
+        tracker, table, members_table, _CLUSTER_REPAIR_ADVICE
+    )
     arts = artifacts
     if arts is None:
         arts = load_cluster_artifacts(table, state, head_pair)
@@ -1007,14 +976,13 @@ def _fold_batch(
         else:
             mv, m_arts = version, new_arts
             _write_artifact_sidecar(table, m_arts, _CLUSTER_WHAT)
-        publish_group(
+        new_state, _ = _publish(
             spark, tracker, mv, user_id, stamped_message,
             [(table, None, (), ()), (members_table, None, (), ())],
+            metastore,
             expected_heads=expected,
             allow_disjoint=(concurrency == "optimistic"),
         )
-        new_state = tracker.current_version(table.name)
-        _sync_metastore(metastore, table, new_state)
         return changed, new_state, m_arts
 
     # rows that are NOT batch endpoints are exactly the relabeled members
@@ -1036,104 +1004,58 @@ def _fold_batch(
             stacklevel=4,
         )
 
-    # -- assign-table RMW: exactly the changed docs' shards -------------
-    a_shards = plan.a_shards
-    asub = _restrict_to_values(state, DOC_SHARD_COL, a_shards)
-    assign_out = changed.withColumn(
-        DOC_SHARD_COL, _doc_shard_col(id_col, arts.doc_shards)
+    # -- assign-table RMW: exactly the changed docs' shards; they never
+    # empty (every touched one receives its changed rows back) ---------
+    changed_ids = changed.select(id_col)
+    assign_out, _ = _rmw_shards(
+        spark, table, state, DOC_SHARD_COL, plan.a_shards,
+        changed.withColumn(DOC_SHARD_COL, _shard_col(arts.doc_shards, id_col)),
+        [id_col, "cluster_id", DOC_SHARD_COL], id_col, replaced=changed_ids,
     )
-    if asub.partition_versions:
-        live_a = read_version(
-            spark, table, asub, infer_partition_types=False
-        ).select(F.col(id_col), "cluster_id", DOC_SHARD_COL)
-        assign_out = assign_out.unionByName(
-            live_a.join(changed.select(id_col), id_col, "left_anti")
-        )
-
     # -- members-table RMW: losers' shards + winners' shards ------------
-    m_touched = sorted(set(plan.r_shards) | set(plan.c_shards))
-    msub = _restrict_to_values(mstate, CLUSTER_SHARD_COL, m_touched)
-    members_out = changed.withColumn(
-        CLUSTER_SHARD_COL, _cluster_shard_col("cluster_id", arts.cluster_shards)
+    members_out, msub = _rmw_shards(
+        spark, members_table, mstate, CLUSTER_SHARD_COL,
+        set(plan.r_shards) | set(plan.c_shards),
+        changed.withColumn(
+            CLUSTER_SHARD_COL, _shard_col(arts.cluster_shards, "cluster_id")
+        ),
+        [id_col, "cluster_id", CLUSTER_SHARD_COL], id_col,
+        replaced=changed_ids,
     )
-    if msub.partition_versions:
-        live_m = read_version(
-            spark, members_table, msub, infer_partition_types=False
-        ).select(F.col(id_col), "cluster_id", CLUSTER_SHARD_COL)
-        members_out = members_out.unionByName(
-            live_m.join(changed.select(id_col), id_col, "left_anti")
-        )
-
-    # a relabeled-away cluster can empty its member shard; assign shards
-    # never empty (every touched one receives its changed rows back).
-    # The same pass that finds the written shards yields per-shard row
-    # counts for the geometry-drift guard (members rows == assignment
-    # rows overall, so observing the members side covers both tables
-    # without an extra evaluation of assign_out).
-    # Lineage barrier first: the frame is consumed TWICE (this count and
-    # the data write below) and each full evaluation re-reads the touched
-    # member shards from the table — the barrier reads them once.
-    # eager=False: the m_counts action right below lands the final stage;
-    # the map stages run at this call under AQE (lineage_barrier docstring).
-    members_out = DD.lineage_barrier(members_out, eager=False)
-    m_counts = members_out.groupBy(
-        F.col(CLUSTER_SHARD_COL).alias("_s")
-    ).agg(F.count(F.lit(1)).alias("_n")).collect()
-    written_m_shards = {r["_s"] for r in m_counts}
-    if drift_shard_rows is not None and m_counts:
-        worst = max(m_counts, key=lambda r: r["_n"])
-        if worst["_n"] > drift_shard_rows:
-            import warnings
-
-            warnings.warn(
-                f"cluster index {table.name}: touched member shard "
-                f"{worst['_s']!r} now holds {worst['_n']} rows (> "
-                f"{drift_shard_rows} sizing target) — the index has "
-                "outgrown its shard geometry; run rebuild_dedup_clusters "
-                "with scaled doc_shards/cluster_shards",
-                DedupGeometryDriftWarning,
-                stacklevel=3,
-            )
-    had_live_m = {
-        dict(p.column_values)[CLUSTER_SHARD_COL]
-        for p in msub.partition_versions
-    }
-    emptied_m = [
-        Partition.of((CLUSTER_SHARD_COL, s))
-        for s in sorted(had_live_m - written_m_shards)
-    ]
+    # a relabeled-away cluster can empty its member shard.  Members rows
+    # == assignment rows overall, so observing the members side covers
+    # both tables' drift without an extra evaluation of assign_out
+    members_out, m_counts, emptied_m = _observe_written(
+        members_out, CLUSTER_SHARD_COL, msub, table, drift_shard_rows,
+        "cluster index", "member shard",
+        "run rebuild_dedup_clusters with scaled doc_shards/cluster_shards",
+    )
 
     # sidecar BEFORE the data commit (the families' crash-ordering
     # contract) — but only for folds that actually write data: a crash
     # here leaves an orphan sidecar for vacuum, never a committed index
     # without geometry
     _write_artifact_sidecar(table, new_arts, _CLUSTER_WHAT)
-    writes = [
-        (
-            table,
-            assign_out.repartition(F.col(DOC_SHARD_COL))
-            .sortWithinPartitions(DOC_SHARD_COL, id_col),
-            [Partition.of((DOC_SHARD_COL, s)) for s in a_shards],
-            (),
-        ),
-        (
-            members_table,
-            members_out.repartition(F.col(CLUSTER_SHARD_COL))
-            .sortWithinPartitions(CLUSTER_SHARD_COL, "cluster_id"),
-            [
-                Partition.of((CLUSTER_SHARD_COL, s))
-                for s in sorted(written_m_shards)
-            ],
-            emptied_m,
-        ),
-    ]
-    publish_group(
-        spark, tracker, version, user_id, stamped_message, writes,
+    new_state, _ = _publish(
+        spark, tracker, version, user_id, stamped_message,
+        [
+            (
+                table,
+                _shard_layout(assign_out, DOC_SHARD_COL, [id_col]),
+                _shard_parts(DOC_SHARD_COL, plan.a_shards),
+                (),
+            ),
+            (
+                members_table,
+                _shard_layout(members_out, CLUSTER_SHARD_COL, ["cluster_id"]),
+                _shard_parts(CLUSTER_SHARD_COL, m_counts),
+                emptied_m,
+            ),
+        ],
+        metastore,
         expected_heads=expected,
         allow_disjoint=(concurrency == "optimistic"),
     )
-    new_state = tracker.current_version(table.name)
-    _sync_metastore(metastore, table, new_state)
     return changed, new_state, new_arts
 
 

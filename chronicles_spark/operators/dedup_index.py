@@ -81,6 +81,7 @@ from ..trackers.fs import filesystem_for
 from . import dedup as DD
 from .pairing import (
     TornPairError,
+    _require_dynamic_overwrite,
     check_pair,
     pair_message,
     pinned_state,
@@ -210,14 +211,146 @@ def dedup_pairs_table(table: TableDefinition) -> TableDefinition:
     )
 
 
-def _band_shard_col(band_shards: int):
-    return F.pmod(
-        F.xxhash64(F.col("band_id"), F.col("band_key")), F.lit(band_shards)
-    ).cast("string")
+# ---------------------------------------------------------------------------
+# the shard kernel every lake index shares (dedup families, ANN, cluster)
 
 
-def _doc_shard_col(id_col: str, doc_shards: int):
-    return F.pmod(F.xxhash64(F.col(id_col)), F.lit(doc_shards)).cast("string")
+def _shard_col(n: int, *cols: str):
+    """A row's shard, the routing rule of every index table: xxhash64 is
+    stable across Spark versions, so extends route as the build did; it
+    hashes TYPED values, so column types must stay stable."""
+    return F.pmod(F.xxhash64(*(F.col(c) for c in cols)), F.lit(n)).cast("string")
+
+
+def _shard_layout(df, shard: str, keys, route=None):
+    """``df`` laid out for a shard-partitioned write (``shard`` set to
+    ``route`` when given), files sorted by ``(shard, *keys)`` so IN-list
+    reads prune row groups."""
+    if route is not None:
+        df = df.withColumn(shard, route)
+    return df.repartition(F.col(shard)).sortWithinPartitions(shard, *keys)
+
+
+def _shard_parts(shard: str, values) -> list:
+    """The shard values' partitions, sorted."""
+    return [Partition.of((shard, s)) for s in sorted(values)]
+
+
+def _rmw_shards(
+    spark, table, state, shard, values, new_rows, cols, id_col,
+    replaced=None, restrict=None,
+):
+    """RMW of the touched shards: ``new_rows`` ∪ the live ``cols`` of the
+    partitions ``restrict`` picks for ``values`` (default
+    :func:`_restrict_to_values`), minus live rows whose ``id_col`` is in
+    ``replaced``.  Returns ``(rows, sub)``, ``sub`` the state read."""
+    from ..spark.reader import read_version
+
+    sub = (restrict or _restrict_to_values)(state, shard, values)
+    if not sub.partition_versions:
+        return new_rows, sub
+    live = read_version(
+        spark, table, sub, infer_partition_types=False
+    ).select(*cols)
+    if replaced is not None:
+        live = live.join(replaced, id_col, "left_anti")
+    return new_rows.unionByName(live), sub
+
+
+def _shard_counts(df, shard: str) -> dict:
+    """``{shard value: rows}`` of ``df``."""
+    return {
+        r["s"]: r["n"]
+        for r in df.groupBy(F.col(shard).alias("s"))
+        .agg(F.count(F.lit(1)).alias("n"))
+        .collect()
+    }
+
+
+def _emptied(sub, shard: str, written) -> list:
+    """The partitions an RMW read (``sub``) but wrote no row back into;
+    they leave the live view in the same commit."""
+    had_live = {dict(p.column_values)[shard] for p in sub.partition_versions}
+    return _shard_parts(shard, had_live - set(written))
+
+
+def _observe_written(
+    df, shard: str, sub, table=None, drift_rows=None, family="", what="",
+    advice="",
+):
+    """``(df, {shard: rows}, emptied)`` of an RMW output consumed twice
+    (this count and its write): the lineage barrier reads the touched
+    shards once; ``eager=False`` as the count lands its final stage.
+    A written shard over ``drift_rows`` warns (the sizing rule is only
+    enforced by rebuilds an operator remembers to run)."""
+    df = DD.lineage_barrier(df, eager=False)
+    counts = _shard_counts(df, shard)
+    if drift_rows is not None and counts:
+        s, n = max(counts.items(), key=lambda kv: kv[1])
+        if n > drift_rows:
+            import warnings
+
+            warnings.warn(
+                f"{family} {table.name}: touched {what} {s!r} now holds "
+                f"{n} rows (> {drift_rows} sizing target) — the index has "
+                f"outgrown its shard geometry; {advice}",
+                DedupGeometryDriftWarning,
+                stacklevel=4,
+            )
+    return df, counts, _emptied(sub, shard, counts)
+
+
+def _batch_stats(id_col: str) -> list:
+    """A batch's row, distinct-id and NULL-id counts (:func:`_check_batch`)."""
+    return [
+        F.count(F.lit(1)).alias("n"),
+        F.countDistinct(F.col(id_col)).alias("nd"),
+        F.count(F.when(F.col(id_col).isNull(), 1)).alias("nn"),
+    ]
+
+
+def _check_batch(counts, id_col: str, kind: str) -> None:
+    """Refuse NULL ids (they would never match the upsert anti-join),
+    duplicate ids and empty batches by name."""
+    if counts["nn"]:
+        raise ValueError(
+            f"df_new contains {counts['nn']} NULL {id_col} value(s) — "
+            "every row needs a concrete id"
+        )
+    if counts["n"] != counts["nd"]:
+        raise ValueError(
+            f"df_new contains duplicate {id_col} values ({counts['n']} rows, "
+            f"{counts['nd']} distinct ids) — deduplicate the batch first "
+            "(exact_duplicate_groups)"
+        )
+    if not counts["n"]:
+        raise ValueError(f"extend_{kind}_index got an empty batch")
+
+
+def _pin_pair(tracker, table, companion, advice):
+    """Both lines pinned (``pinned_state``), a torn pair refused:
+    ``(state, head, pair label, companion state, companion head)``."""
+    state, head, pair = pinned_state(tracker, table.name)
+    cstate, chead, cpair = pinned_state(tracker, companion.name)
+    check_pair(table, pair, cpair, advice)
+    if not isinstance(state, PartitionedTableVersion) or not isinstance(
+        cstate, PartitionedTableVersion
+    ):
+        raise ValueError(f"{table.name} index tables are partitioned by shard")
+    return state, head, pair, cstate, chead
+
+
+def _publish(spark, tracker, version, user_id, message, writes, metastore,
+             **group):
+    """``publish_group``, then ``(new state, added partitions)`` of the
+    primary (first) table, synced to the metastore when given."""
+    table = writes[0][0]
+    added = publish_group(
+        spark, tracker, version, user_id, message, writes, **group
+    )
+    state = tracker.current_version(table.name)
+    _sync_metastore(metastore, table, state)
+    return state, added
 
 
 # ---------------------------------------------------------------------------
@@ -399,15 +532,6 @@ def _shingle_batch(df, id_col, text_col, width):
     )
 
 
-def _require_dynamic_overwrite(spark) -> None:
-    mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    if (mode or "").lower() != "dynamic":
-        raise RuntimeError(
-            "The Spark configuration must have spark.sql.sources."
-            "partitionOverwriteMode set to 'dynamic'"
-        )
-
-
 def _require_band_partitioning(table, what: str) -> None:
     if tuple(table.partition_schema.columns) != (BAND_SHARD_COL,):
         raise ValueError(
@@ -484,9 +608,6 @@ def _build_index(
     """Family-generic build: one pass over the encoded corpus lands the
     doc (payload) store; the band table derives from the WRITTEN
     payload parquet; both publish as one pair commit."""
-    from ..spark.reader import read_version
-    from ..spark.writer import partitions_written, write_versioned
-
     spark = encoded.sparkSession
     _require_dynamic_overwrite(spark)
     docs_table = dedup_docs_table(table)
@@ -494,37 +615,48 @@ def _build_index(
     _write_artifact_sidecar(table, artifacts, _family_name(family.kind))
     # one pass over the raw source → the doc store (payload evaluated
     # ONCE, into parquet — never a corpus-scale persist)
-    docs_df = (
-        encoded
-        .withColumn(DOC_SHARD_COL, _doc_shard_col(id_col, artifacts.doc_shards))
-        .repartition(F.col(DOC_SHARD_COL))
-        .sortWithinPartitions(DOC_SHARD_COL, id_col)
+    doc_parts = _write_docs(encoded, docs_table, version, artifacts, id_col)
+    bands_df = _bands_of_written(
+        spark, docs_table, doc_parts, version, family, artifacts
     )
-    write_versioned(docs_df, docs_table, version)
-    doc_parts = partitions_written(docs_table, version, spark=spark)
+    state, _ = _publish(
+        spark, tracker, version, user_id, message,
+        [(table, bands_df, None, ()), (docs_table, None, doc_parts, ())],
+        metastore,
+    )
+    return state, artifacts
 
-    # band table derives from the WRITTEN payload parquet — columnar,
-    # already encoded; the raw corpus is not read a second time
+
+def _write_docs(encoded, docs_table, version, artifacts, id_col) -> list:
+    """Land the ``(id, payload)`` rows as the doc store's ``version``;
+    returns the written partitions."""
+    from ..spark.writer import partitions_written, write_versioned
+
+    write_versioned(
+        _shard_layout(
+            encoded, DOC_SHARD_COL, [id_col],
+            _shard_col(artifacts.doc_shards, id_col),
+        ),
+        docs_table, version,
+    )
+    return partitions_written(docs_table, version, spark=encoded.sparkSession)
+
+
+def _bands_of_written(spark, docs_table, doc_parts, version, family, artifacts):
+    """The band rows, laid out for the band table, derived from the doc
+    store's WRITTEN payload parquet — columnar and already encoded, so
+    the raw corpus is not read a second time."""
+    from ..spark.reader import read_version
+
     written_state = PartitionedTableVersion({p: version for p in doc_parts})
-    bands_df = (
+    return _shard_layout(
         family.band_fn(
             read_version(spark, docs_table, written_state,
                          infer_partition_types=False)
-        )
-        .withColumn(BAND_SHARD_COL, _band_shard_col(artifacts.band_shards))
-        .repartition(F.col(BAND_SHARD_COL))
-        .sortWithinPartitions(BAND_SHARD_COL, "band_id", "band_key")
+        ),
+        BAND_SHARD_COL, ["band_id", "band_key"],
+        _shard_col(artifacts.band_shards, "band_id", "band_key"),
     )
-    publish_group(
-        spark, tracker, version, user_id, message,
-        [
-            (table, bands_df, None, ()),
-            (docs_table, None, doc_parts, ()),
-        ],
-    )
-    state = tracker.current_version(table.name)
-    _sync_metastore(metastore, table, state)
-    return state, artifacts
 
 
 # ---------------------------------------------------------------------------
@@ -657,15 +789,9 @@ def _extend_family_index(
 
     def _run():
         docs_table = dedup_docs_table(table)
-        state, base_head, head_pair = pinned_state(tracker, table.name)
-        docs_state, docs_head, docs_pair = pinned_state(
-            tracker, docs_table.name
+        state, base_head, head_pair, docs_state, docs_head = _pin_pair(
+            tracker, table, docs_table, _repair_advice(kind)
         )
-        check_pair(table, head_pair, docs_pair, _repair_advice(kind))
-        if not isinstance(state, PartitionedTableVersion) or not isinstance(
-            docs_state, PartitionedTableVersion
-        ):
-            raise ValueError("dedup index tables are partitioned by shard")
         arts = artifacts
         if arts is None:
             arts = load_artifacts(table, state)
@@ -820,55 +946,43 @@ def _extend_index(
     # per batch doc
     banded_new = (
         family.band_fn(base_new)
-        .withColumn(BAND_SHARD_COL, _band_shard_col(artifacts.band_shards))
+        .withColumn(
+            BAND_SHARD_COL,
+            _shard_col(artifacts.band_shards, "band_id", "band_key"),
+        )
         .persist()
     )
     # the batch-stats agg and the band-key sample are independent bounded
     # jobs over the persisted batch frames — overlap them (guide §2.6)
-    # instead of paying two serial job launches
+    # instead of paying two serial job launches.  ONE aggregation yields
+    # the batch's row/dup/null counts plus its doc-shard set (≤
+    # doc_shards values)
     counts_plan = base_new.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.countDistinct(F.col(id_col)).alias("nd"),
-        F.count(F.when(F.col(id_col).isNull(), 1)).alias("nn"),
-        F.collect_set(_doc_shard_col(id_col, artifacts.doc_shards)).alias("ds"),
+        *_batch_stats(id_col),
+        F.collect_set(_shard_col(artifacts.doc_shards, id_col)).alias("ds"),
     )
     band_sample_plan = (
         banded_new.select(F.col(BAND_SHARD_COL), "band_id", "band_key")
         .distinct()
         .limit(_FETCH_PUSHDOWN_MAX_IDS + 1)
     )
-    pool = ThreadPoolExecutor(max_workers=2)
     try:
-        counts_f = pool.submit(counts_plan.collect)
-        band_sample_f = pool.submit(band_sample_plan.collect)
-        # ONE aggregation yields the batch's row/dup/null counts plus its
-        # doc-shard set (≤ doc_shards values)
-        counts = counts_f.result()[0]
-        if counts["nn"]:
-            raise ValueError(
-                f"df_new contains {counts['nn']} NULL {id_col} value(s) — "
-                "every row needs a concrete id"
-            )
-        if counts["n"] != counts["nd"]:
-            raise ValueError(
-                f"df_new contains duplicate {id_col} values ({counts['n']} rows, "
-                f"{counts['nd']} distinct ids) — deduplicate the batch first "
-                "(exact_duplicate_groups)"
-            )
-        if not counts["n"]:
-            raise ValueError(f"extend_{family.kind}_index got an empty batch")
-        batch_doc_shards = sorted(counts["ds"])
-        new_ids = base_new.select(id_col).distinct()
-        band_sample = band_sample_f.result()
+        from ..spark.writer import overlapped
+
+        counts, band_sample = overlapped(
+            spark, lambda plan: plan.collect(), [counts_plan, band_sample_plan]
+        )
+        counts = counts[0]
+        _check_batch(counts, id_col, family.kind)
         return _extend_publish(
             spark, table, docs_table, tracker, family, state, docs_state,
-            base_head, docs_head, pairs_head, base_new, banded_new, new_ids,
-            batch_doc_shards, band_sample, artifacts, mode, concurrency,
+            base_head, docs_head, pairs_head, base_new, banded_new,
+            base_new.select(id_col).distinct(), sorted(counts["ds"]),
+            band_sample, artifacts, mode, concurrency,
             user_id, message, id_col, metastore, pairs_table,
             drift_shard_rows,
         )
     finally:
-        pool.shutdown(wait=True)
         banded_new.unpersist()
 
 
@@ -964,7 +1078,8 @@ def _extend_publish(
                 .join(new_ids, id_col, "left_semi")
             )
             old_banded = family.band_fn(old_docs).withColumn(
-                BAND_SHARD_COL, _band_shard_col(artifacts.band_shards)
+                BAND_SHARD_COL,
+                _shard_col(artifacts.band_shards, "band_id", "band_key"),
             )
             replaced = sorted(
                 r["s"]
@@ -973,34 +1088,23 @@ def _extend_publish(
                 ).distinct().collect()
             )
         # -- RMW of exactly the touched band shards (the write set) --
-        touched = sorted(set(batch_band_shards) | set(replaced))
-        wsub_ = _restrict_to_values(state, BAND_SHARD_COL, touched)
-        bands_out_ = banded_new
-        if wsub_.partition_versions:
-            live = read_version(
-                spark, table, wsub_, infer_partition_types=False
-            ).select(F.col(id_col), "band_id", "band_key", BAND_SHARD_COL)
-            if mode == "upsert":
-                live = live.join(new_ids, id_col, "left_anti")
-            bands_out_ = banded_new.unionByName(live)
+        bands_out_, wsub_ = _rmw_shards(
+            spark, table, state, BAND_SHARD_COL,
+            set(batch_band_shards) | set(replaced), banded_new,
+            [id_col, "band_id", "band_key", BAND_SHARD_COL], id_col,
+            replaced=new_ids if mode == "upsert" else None,
+        )
         # which touched band shards still hold rows (a replaced doc's
         # removal can empty one); doc shards never empty (the batch
-        # writes into every shard it touches).  The same pass (the extend
-        # already scans bands_out here — a count costs nothing extra over
-        # the old distinct) yields per-shard row counts for the
-        # geometry-drift guard.  Lineage barrier first: the frame is
-        # consumed TWICE (this count and the data write) and each full
-        # evaluation re-reads the touched live band shards — the barrier
-        # reads them once.
-        # eager=False: the shard-count action right below lands the final
-        # stage (the map stages run at this call under AQE; lineage_barrier
-        # docstring) — this worker thread is the frame's only toucher
-        # until the publish joins the future
-        bands_out_ = DD.lineage_barrier(bands_out_, eager=False)
-        shard_counts_ = bands_out_.groupBy(
-            F.col(BAND_SHARD_COL).alias("s")
-        ).agg(F.count(F.lit(1)).alias("n")).collect()
-        return replaced, wsub_, bands_out_, shard_counts_
+        # writes into every shard it touches).  This worker thread is
+        # the frame's only toucher until the publish joins the future
+        return _observe_written(
+            bands_out_, BAND_SHARD_COL, wsub_, table, drift_shard_rows,
+            f"{family.kind} index", "band shard",
+            "rebuild with scaled band_shards/doc_shards "
+            "(rebuild_dedup_index or the family's rebuild; see "
+            "docs/scale.md sizing rule)",
+        )
 
     rmw_pool = ThreadPoolExecutor(max_workers=1)
     rmw_future = rmw_pool.submit(_lookup_and_rmw_bands)
@@ -1074,7 +1178,7 @@ def _extend_publish(
     # the read and a semi-join against old_cand_ids restricts it
     sample = old_cand_ids.select(
         F.col(id_col),
-        _doc_shard_col(id_col, artifacts.doc_shards).alias("s"),
+        _shard_col(artifacts.doc_shards, id_col).alias("s"),
     ).limit(_FETCH_PUSHDOWN_MAX_IDS + 1).collect()
     verify_base = base_new.select(F.col(id_col), payload)
     if sample:
@@ -1089,7 +1193,7 @@ def _extend_publish(
             cand_shards = sorted(
                 r["s"]
                 for r in old_cand_ids.select(
-                    _doc_shard_col(id_col, artifacts.doc_shards).alias("s")
+                    _shard_col(artifacts.doc_shards, id_col).alias("s")
                 ).distinct().collect()
             )
             in_ids = None
@@ -1117,52 +1221,15 @@ def _extend_publish(
     # -- publish: RMW of exactly the touched shards, one pair commit --
     # join the overlapped lookup+RMW worker: its append-hit ValueError /
     # any read error surfaces HERE, before anything is written
-    replaced_band_shards, wsub, bands_out, shard_counts = _consume_future(
-        rmw_future, rmw_pool
+    bands_out, band_counts, emptied = _consume_future(rmw_future, rmw_pool)
+    docs_out, _ = _rmw_shards(
+        spark, docs_table, docs_state, DOC_SHARD_COL, batch_doc_shards,
+        base_new.select(F.col(id_col), payload).withColumn(
+            DOC_SHARD_COL, _shard_col(artifacts.doc_shards, id_col)
+        ),
+        [id_col, payload, DOC_SHARD_COL], id_col,
+        replaced=new_ids if mode == "upsert" else None,
     )
-    docs_out = base_new.select(F.col(id_col), payload).withColumn(
-        DOC_SHARD_COL, _doc_shard_col(id_col, artifacts.doc_shards)
-    )
-    if dsub.partition_versions:
-        live_docs = read_version(
-            spark, docs_table, dsub, infer_partition_types=False
-        ).select(F.col(id_col), payload, DOC_SHARD_COL)
-        if mode == "upsert":
-            live_docs = live_docs.join(
-                new_ids, id_col, "left_anti"
-            )
-        docs_out = docs_out.unionByName(live_docs)
-    docs_out = docs_out.repartition(F.col(DOC_SHARD_COL)).sortWithinPartitions(
-        DOC_SHARD_COL, id_col
-    )
-
-    # the geometry-drift guard: the sizing rule (docs/scale.md) is only
-    # enforced by rebuilds the operator remembers to run, so an extend
-    # that OBSERVES a touched shard beyond the target warns loudly
-    written_band_shards = {r["s"] for r in shard_counts}
-    if drift_shard_rows is not None and shard_counts:
-        worst = max(shard_counts, key=lambda r: r["n"])
-        if worst["n"] > drift_shard_rows:
-            import warnings
-
-            warnings.warn(
-                f"{family.kind} index {table.name}: touched band shard "
-                f"{worst['s']!r} now holds {worst['n']} rows (> "
-                f"{drift_shard_rows} sizing target) — the index has "
-                "outgrown its shard geometry; rebuild with scaled "
-                "band_shards/doc_shards (rebuild_dedup_index or the "
-                "family's rebuild; see docs/scale.md sizing rule)",
-                DedupGeometryDriftWarning,
-                stacklevel=3,
-            )
-    had_live = {
-        dict(p.column_values)[BAND_SHARD_COL]
-        for p in wsub.partition_versions
-    }
-    emptied = [
-        Partition.of((BAND_SHARD_COL, s))
-        for s in sorted(had_live - written_band_shards)
-    ]
 
     version = generate_version()
     stamped = artifacts.with_label(version.label)
@@ -1173,21 +1240,14 @@ def _extend_publish(
     writes = [
         (
             table,
-            bands_out.repartition(F.col(BAND_SHARD_COL))
-            .sortWithinPartitions(BAND_SHARD_COL, "band_id", "band_key"),
-            [
-                Partition.of((BAND_SHARD_COL, s))
-                for s in sorted(written_band_shards)
-            ],
+            _shard_layout(bands_out, BAND_SHARD_COL, ["band_id", "band_key"]),
+            _shard_parts(BAND_SHARD_COL, band_counts),
             emptied,
         ),
         (
             docs_table,
-            docs_out,
-            [
-                Partition.of((DOC_SHARD_COL, s))
-                for s in batch_doc_shards
-            ],
+            _shard_layout(docs_out, DOC_SHARD_COL, [id_col]),
+            _shard_parts(DOC_SHARD_COL, batch_doc_shards),
             (),
         ),
     ]
@@ -1206,13 +1266,11 @@ def _extend_publish(
         )
         if expected is not None:
             expected[pairs_table.name] = pairs_head
-    added = publish_group(
-        spark, tracker, version, user_id, message, writes,
+    new_state, added = _publish(
+        spark, tracker, version, user_id, message, writes, metastore,
         expected_heads=expected,
         allow_disjoint=(concurrency == "optimistic"),
     )
-    new_state = tracker.current_version(table.name)
-    _sync_metastore(metastore, table, new_state)
     if pairs_table is not None:
         # the journal save (overlapped with the band and doc saves by
         # publish_group) is verify's one evaluation; the caller gets the
@@ -1337,33 +1395,21 @@ def _rebuild_index(
 
     _require_dynamic_overwrite(spark)
     docs_table = dedup_docs_table(table)
-    state, base_head, head_pair = pinned_state(tracker, table.name)
-    docs_state, docs_head, docs_pair = pinned_state(tracker, docs_table.name)
-    check_pair(table, head_pair, docs_pair, _repair_advice(family.kind))
+    state, base_head, _, docs_state, docs_head = _pin_pair(
+        tracker, table, docs_table, _repair_advice(family.kind)
+    )
     _write_artifact_sidecar(table, artifacts, _family_name(family.kind))
 
     encoded = read_version(
         spark, docs_table, docs_state, infer_partition_types=False
     ).select(F.col(id_col), family.payload_col)
-    docs_out = (
-        encoded
-        .withColumn(DOC_SHARD_COL, _doc_shard_col(id_col, artifacts.doc_shards))
-        .repartition(F.col(DOC_SHARD_COL))
-        .sortWithinPartitions(DOC_SHARD_COL, id_col)
+    doc_parts = _write_docs(encoded, docs_table, version, artifacts, id_col)
+    write_versioned(
+        _bands_of_written(
+            spark, docs_table, doc_parts, version, family, artifacts
+        ),
+        table, version,
     )
-    write_versioned(docs_out, docs_table, version)
-    doc_parts = partitions_written(docs_table, version, spark=spark)
-    written_state = PartitionedTableVersion({p: version for p in doc_parts})
-    bands_df = (
-        family.band_fn(
-            read_version(spark, docs_table, written_state,
-                         infer_partition_types=False)
-        )
-        .withColumn(BAND_SHARD_COL, _band_shard_col(artifacts.band_shards))
-        .repartition(F.col(BAND_SHARD_COL))
-        .sortWithinPartitions(BAND_SHARD_COL, "band_id", "band_key")
-    )
-    write_versioned(bands_df, table, version)
     band_parts = partitions_written(table, version, spark=spark)
 
     rm_bands = [
@@ -1383,12 +1429,10 @@ def _rebuild_index(
         _, pairs_head, _ = pinned_state(tracker, pairs_table.name)
         writes.append((pairs_table, None, (), ()))
         expected[pairs_table.name] = pairs_head
-    publish_group(
-        spark, tracker, version, user_id, message, writes,
+    new_state, _ = _publish(
+        spark, tracker, version, user_id, message, writes, metastore,
         expected_heads=expected, allow_disjoint=False,
     )
-    new_state = tracker.current_version(table.name)
-    _sync_metastore(metastore, table, new_state)
     return new_state, artifacts
 
 

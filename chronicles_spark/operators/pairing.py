@@ -82,8 +82,8 @@ def pinned_state(tracker, table_name):
     streaming log reads O(checkpoint_interval) commit records, not the
     whole log (docs/scale.md "metadata plane").  ``head_resolution``
     returns None when it cannot answer (no checkpoint yet, a
-    pre-upgrade checkpoint without the marker field, a gap-filled
-    prefix, or a head deeper than the checkpoints it walks) — then the
+    pre-upgrade checkpoint without the marker field, no covering
+    checkpoint, or a head deeper than the checkpoints it walks) — then the
     full ``table_state`` walk below is the always-correct degrade.
 
     The full walk must be SELF-CONSISTENT: the files tracker lists
@@ -264,6 +264,15 @@ def read_group_states(tracker, table_names, retries: int = 8) -> dict:
     return out
 
 
+def _require_dynamic_overwrite(spark) -> None:
+    mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
+    if (mode or "").lower() != "dynamic":
+        raise RuntimeError(
+            "The Spark configuration must have spark.sql.sources."
+            "partitionOverwriteMode set to 'dynamic'"
+        )
+
+
 def publish_group(
     spark,
     tracker,
@@ -300,12 +309,8 @@ def publish_group(
     )
     from ..spark.writer import overlapped, partitions_written, write_versioned
 
-    mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    if (mode or "").lower() != "dynamic":
-        raise RuntimeError(
-            "The Spark configuration must have spark.sql.sources."
-            "partitionOverwriteMode set to 'dynamic'"
-        )
+    _require_dynamic_overwrite(spark)
+
     def _write_one(entry):
         table, df, partitions, removes = entry
         if df is not None:

@@ -115,6 +115,11 @@ from .base import (
 )
 from .fs import FileSystem, LocalFileSystem, filesystem_for
 
+# one lock per table directory for every tracker instance and thread of
+# the process (FileBackedVersionTracker._commit_guard); a thread holding
+# several takes them in sorted table order (commit_group)
+_DIR_LOCKS: dict = {}
+
 _TABLE_DIR_RE = re.compile(r"^_chronicles_table_([\w\-]+)\.([\w\-]+)$")
 _UPDATE_FILE_RE = re.compile(r"^table_update_(\d+)\.json$")
 _CHECKPOINT_FILE_RE = re.compile(r"^checkpoint_(\d+)\.json$")
@@ -335,30 +340,40 @@ class FileBackedVersionTracker(VersionTracker):
 
     @contextmanager
     def _commit_guard(self, d: str):
-        """Exclusive per-table-directory flock when ``use_lock`` is on;
-        no-op otherwise (default last-writer-wins).  Re-entrant within one
-        THREAD of the instance: an optimistic commit holds the guard across
-        its check-then-append, and the nested append must not flock a
-        second fd against itself (flock from two fds of one thread
-        deadlocks) — while a DIFFERENT thread must still open its own fd
-        and block, so the held-set is thread-local."""
+        """Exclusive per-table-directory commit section.  In every mode a
+        process-wide lock keyed by the directory serializes this
+        process's commits: the plain-mode ``head_ref`` write is
+        last-writer-wins, so two threads committing at once could leave
+        the head on the older commit.  With ``use_lock`` a flock also
+        serializes other processes.  Re-entrant within one THREAD of the instance: an optimistic commit
+        holds the guard across its check-then-append, and the nested
+        append must not flock a second fd against itself (flock from two
+        fds of one thread deadlocks) — while a DIFFERENT thread must still
+        block, so the held-set is thread-local."""
         held = getattr(self._held_locks, "dirs", None)
         if held is None:
             held = self._held_locks.dirs = set()
-        if not self._use_lock or d in held:
+        if d in held:
             yield
             return
-        import fcntl
-
-        self.fs.mkdirs(d)
-        with open(self.fs.join(d, ".commit_lock"), "a+") as f:
-            fcntl.flock(f, fcntl.LOCK_EX)
+        # setdefault on a str-keyed dict is atomic: one lock per directory
+        with _DIR_LOCKS.setdefault(d, threading.RLock()):
             held.add(d)
             try:
-                yield
+                if not self._use_lock:
+                    yield
+                    return
+                import fcntl
+
+                self.fs.mkdirs(d)
+                with open(self.fs.join(d, ".commit_lock"), "a+") as f:
+                    fcntl.flock(f, fcntl.LOCK_EX)
+                    try:
+                        yield
+                    finally:
+                        fcntl.flock(f, fcntl.LOCK_UN)
             finally:
                 held.discard(d)
-                fcntl.flock(f, fcntl.LOCK_UN)
 
     def _serialized_commit(self, table: TableName):
         """Optimistic check-then-append atomicity: cross-process via flock
@@ -1259,9 +1274,7 @@ class FileBackedVersionTracker(VersionTracker):
     # travel a few checkpoint cuts behind) at O(distance-from-head) cost
     _FAST_RESOLVE_MAX_SEGMENTS = 32
 
-    def _fast_resolve(
-        self, d: str, commit_id: "str | None" = None, fallback: bool = True
-    ):
+    def _fast_resolve(self, d: str, commit_id: "str | None" = None):
         """``(table_version, commit_id, newest_pair_label_in_prefix)``
         folded from a checkpoint (the label ``...`` when that checkpoint
         lacks the field).  ``commit_id=None`` is the head, read after the
@@ -1277,8 +1290,8 @@ class FileBackedVersionTracker(VersionTracker):
         (:meth:`_headers`) finds the commit's seq, comparing only each
         record's ``commit_id`` and reading one commit index per cut;
         then the newest retained checkpoint at or below that seq is read
-        (older ones only when it fails ``_checkpoint_covers_prefix``;
-        ``fallback=False`` answers None instead) and only the commits in
+        (older ones only when it fails ``_checkpoint_covers_prefix``) and
+        only the commits in
         (checkpoint seq, target seq] are decoded and folded on it.  So
         each commit file is read and decoded at most once per
         resolution, one checkpoint body is read in the common case, and
@@ -1339,8 +1352,6 @@ class FileBackedVersionTracker(VersionTracker):
                     j = bisect.bisect_right(seqs, c)
                     tv, marker = self._fold_segment(d, ck, live, j, i, doc)
                     return tv, commit_id, marker
-                if not fallback:
-                    return None
                 # corrupt or gap-filled cut: try an older one
             if genesis and seqs[i] < cands[-1]:
                 empty = {
@@ -1394,15 +1405,15 @@ class FileBackedVersionTracker(VersionTracker):
         head_commit_id, newest_pair_label_in_prefix)`` — the
         :meth:`current_version` resolution (a rolled-back head included),
         whose checkpoint records the newest marker of its prefix; never
-        the whole log.  None when that resolution cannot answer, when the
-        newest checkpoint at or below the head is unusable (a gap-filled
-        or corrupt cut: the log is in flux, and a pinned write's base
-        takes no older cut), or when it lacks the ``pair_label`` field —
-        the caller's self-consistent full walk is the degrade."""
+        the whole log.  A gap-filled or corrupt newest cut falls back to
+        an older covering one, as :meth:`current_version` and
+        :meth:`version_at` do.  None when that resolution cannot answer or
+        the checkpoint it folds from lacks the ``pair_label`` field — the
+        caller's self-consistent full walk is the degrade."""
         d = self._table_dir(table)
         if not self.fs.exists(self.fs.join(d, "table-metadata")):
             raise UnknownTableError(table)
-        got = self._fast_resolve(d, fallback=False)
+        got = self._fast_resolve(d)
         return None if got is None or got[2] is ... else got
 
     def current_version(self, table: TableName):
@@ -1595,9 +1606,9 @@ class FileBackedVersionTracker(VersionTracker):
         self, d: str, retain_checkpoints: int, through_seq, dry_run: bool,
         consolidate: bool = False, max_chunk_bytes: int = 32 * 2**20,
     ) -> dict:
-        """Retry shell: under CAS/plain mode ``_commit_guard`` is a
-        no-op, so a CONCURRENT archiver's deletes can surface mid-pack as
-        vanished commit files or artifacts.  That is a benign race, not
+        """Retry shell: under CAS/plain mode ``_commit_guard`` serializes
+        only this process, so a CONCURRENT archiver's deletes can surface
+        mid-pack as vanished commit files or artifacts.  That is a benign race, not
         corruption — each retry restarts from a fresh listing, where the
         racer's superseding artifact (and advanced floor) is visible.
         Under ``use_lock`` the flock makes this loop one-shot."""

@@ -139,7 +139,7 @@ def test_locate_reads_only_batch_shards(spark, tmp_path):
     batch_shards = sorted(
         r["s"]
         for r in one.select(
-            AX._shard_col("vec_id", arts.id_shards).alias("s")
+            AX.DX._shard_col(arts.id_shards, "vec_id").alias("s")
         ).distinct().collect()
     )
     assert len(batch_shards) == 1

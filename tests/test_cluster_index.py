@@ -275,7 +275,7 @@ def test_lookup_reads_only_endpoint_shards(spark, tmp_path):
     shards = {
         r["s"]
         for r in endpoints.select(
-            CX._doc_shard_col("doc_id", 16).alias("s")
+            CX._shard_col(16, "doc_id").alias("s")
         ).collect()
     }
     sub = CX._restrict_to_values(state, CX.DOC_SHARD_COL, sorted(shards))
@@ -287,7 +287,7 @@ def test_lookup_reads_only_endpoint_shards(spark, tmp_path):
         sorted({
             r["s"]
             for r in spark.createDataFrame([(3,)], "old_cluster long").select(
-                CX._cluster_shard_col("old_cluster", 8).alias("s")
+                CX._shard_col(8, "old_cluster").alias("s")
             ).collect()
         }),
     )

@@ -971,8 +971,8 @@ def test_gap_filled_newest_checkpoint_archives_deeper_cut(tmp_path):
         tr.fs.join(d, f"table_update_{slot:013d}.json"), update_to_json(forged)
     )
 
-    # fast paths degrade (by design) while the gap-filled prefix stands
-    assert tr.head_resolution(T) is None
+    # the gap-filled newest cut is skipped for an older covering one
+    assert tr.head_resolution(T) == pinned_state(_truth(str(tmp_path)), T)
     # the pinned cut cannot cover: loud
     with pytest.raises(ValueError, match="does not cover"):
         tr.archive_commits(T, through_seq=newest_ck)
@@ -994,6 +994,49 @@ def test_gap_filled_newest_checkpoint_archives_deeper_cut(tmp_path):
     out2 = tr.archive_commits(T, retain_checkpoints=0)
     assert out2["archived"] > 0 and out2["through_seq"] > slot
     assert tr.current_version(T) == _truth(str(tmp_path)).current_version(T)
+
+
+def test_head_resolution_in_gap_filled_state_equals_full_walk(tmp_path):
+    """Differential: with a commit gap-filled below the newest retained
+    checkpoints, ``head_resolution`` folds from an older covering cut and
+    answers the full walk's ``(state, head, newest pair label)`` — at the
+    newest commit, after an unmarked commit on top, and at a rolled-back
+    head."""
+    import time as _time
+
+    root = str(tmp_path)
+    tr = FileBackedVersionTracker(root, checkpoint_interval=4)
+    tr.init_table(T, is_snapshot=False, user_id="u")
+    ids = []
+    for i in range(8):
+        ids.append(_commit(tr, i))
+        _time.sleep(0.002)  # free ms slots between the early seqs
+    for i in range(8, 20):
+        ids.append(_commit(tr, i))
+    d = tr._table_dir(T)
+    live, _, ck_seqs = tr._scan_dir(d, with_checkpoints=True)
+    first_ck = min(ck_seqs)
+    seqs = [s for s, _ in live if s > first_ck]
+    slot = next(a + 1 for a, b in zip(seqs, seqs[1:]) if b - a > 1)
+    assert slot < max(ck_seqs)  # the newest cut no longer covers
+    forged = TableUpdate(
+        TableUpdateMetadata.new("laggard", pair_message("gap-fill", "gf")),
+        (AddPartitionVersion(Partition.of(("p", "gf")), generate_version()),),
+    )
+    tr.fs.write_text(
+        tr.fs.join(d, f"table_update_{slot:013d}.json"), update_to_json(forged)
+    )
+
+    def agree():
+        got = tr.head_resolution(T)
+        assert got is not None
+        assert got == pinned_state(_truth(root), T)
+
+    agree()
+    _commit(tr, 20, marked=False)
+    agree()
+    tr.set_current_version(T, ids[-3])
+    agree()
 
 
 def test_no_checkpoint_cut_while_artifacts_overlap(tmp_path):

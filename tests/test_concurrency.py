@@ -110,6 +110,61 @@ def test_flock_guard_blocks_other_threads(tmp_path):
     tb.join(10)
 
 
+@pytest.mark.parametrize("mode", ["plain", "cas", "lock"])
+def test_in_process_commits_never_move_the_head_backwards(tmp_path, monkeypatch, mode):
+    """Two threads of one process commit to one table while the first
+    commit's head advance is held back (the interleaving overlapped
+    saves whose callbacks commit can produce).  The plain-mode head
+    write is last-writer-wins, so unless the process serializes its
+    commits per table the older commit's late write parks the head
+    behind the newest commit.  The head must end at the newest commit in
+    every mode."""
+    tracker = FileBackedVersionTracker(
+        str(tmp_path / "log"), use_cas=(mode == "cas"),
+        use_lock=(mode == "lock"),
+    )
+    tracker.init_table(T, is_snapshot=False, user_id="init")
+    first_in_advance, second_done = threading.Event(), threading.Event()
+    orig = FileBackedVersionTracker._advance_head
+    calls = []
+
+    def slow_first_advance(self, d, commit_id, seq):
+        calls.append(commit_id)
+        if len(calls) == 1:
+            first_in_advance.set()
+            # serialized: the second commit cannot finish meanwhile, so
+            # this waits out the timeout; unserialized it lands first
+            second_done.wait(2.0)
+        orig(self, d, commit_id, seq)
+
+    monkeypatch.setattr(
+        FileBackedVersionTracker, "_advance_head", slow_first_advance
+    )
+
+    def commit(tag):
+        meta = TableUpdateMetadata.new(tag, tag)
+        op = AddPartitionVersion(Partition((("p", tag),)), generate_version())
+        tracker.commit(T, TableUpdate(meta, (op,)))
+        return meta.commit_id
+
+    ids = {}
+    ta = threading.Thread(target=lambda: ids.setdefault("a", commit("a")))
+    ta.start()
+    assert first_in_advance.wait(10)
+    tb = threading.Thread(target=lambda: ids.setdefault("b", commit("b")))
+    tb.start()
+    tb.join(10)
+    second_done.set()
+    ta.join(10)
+    tb.join(10)
+    updates = tracker.table_state(T).updates
+    assert [u.metadata.commit_id for u in updates[1:]] == [ids["a"], ids["b"]]
+    assert tracker.head_commit_id(T) == ids["b"]
+    assert {p.path for p in tracker.current_version(T).partition_versions} == {
+        "p=a", "p=b"
+    }
+
+
 def test_optimistic_commits_serialized_across_threads(tmp_path):
     """Same-partition OCC race on one shared use_lock tracker: every commit
     either lands or raises CommitConflictError; retries drain, nothing is

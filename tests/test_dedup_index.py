@@ -141,7 +141,7 @@ def test_extend_reads_only_batch_shards(spark, tmp_path):
     banded = DD.lsh_banded(
         one.select("doc_id", DD.shingles_of(F.col("text")).alias("shingles")),
         "doc_id", arts.bands, arts.rows,
-    ).withColumn("band_shard", DX._band_shard_col(arts.band_shards))
+    ).withColumn("band_shard", DX._shard_col(arts.band_shards, "band_id", "band_key"))
     batch_shards = {
         r["band_shard"] for r in banded.select("band_shard").distinct().collect()
     }
@@ -155,7 +155,7 @@ def test_extend_reads_only_batch_shards(spark, tmp_path):
     dsub = DX._restrict_to_values(
         docs_state, DX.DOC_SHARD_COL,
         [r["s"] for r in one.select(
-            DX._doc_shard_col("doc_id", arts.doc_shards).alias("s")
+            DX._shard_col(arts.doc_shards, "doc_id").alias("s")
         ).collect()],
     )
     assert len(dsub.partition_versions) <= 1
@@ -183,7 +183,7 @@ def test_candidate_band_read_pushes_band_keys(spark, tmp_path):
             "doc_id", DD.shingles_of(F.col("text")).alias("shingles")
         ),
         "doc_id", arts.bands, arts.rows,
-    ).withColumn("band_shard", DX._band_shard_col(arts.band_shards))
+    ).withColumn("band_shard", DX._shard_col(arts.band_shards, "band_id", "band_key"))
     sample = banded.select("band_shard", "band_id", "band_key").collect()
     assert sample
     flt = DX._band_key_filter(sample)
@@ -651,6 +651,55 @@ def test_dedup_stream_sink_and_epoch_replay(spark, tmp_path):
         )
 
 
+def test_upsert_that_empties_a_band_shard_removes_it(spark, tmp_path):
+    """A re-submitted doc whose OLD band rows were the only rows of a
+    band shard, and whose new content routes elsewhere, empties that
+    shard: the extend's commit removes it from the live view, and the
+    offline verify stays empty (a stale live shard would keep the old
+    band rows)."""
+    docs = load_table(spark, SF_DIR, "documents").select("doc_id", "text")
+    table, tracker = _mk_index(tmp_path, "empties")
+    _, arts = DX.build_dedup_index(
+        docs.where("doc_id < 12"), table, tracker, band_shards=64, doc_shards=2,
+    )
+
+    def shards_of(df):
+        banded = DD.lsh_banded(
+            df.select("doc_id", DD.shingles_of(F.col("text")).alias("shingles")),
+            "doc_id", arts.bands, arts.rows,
+        ).select(
+            "doc_id",
+            DX._shard_col(arts.band_shards, "band_id", "band_key").alias("s"),
+        ).distinct()
+        out = {}
+        for r in banded.collect():
+            out.setdefault(r["doc_id"], set()).add(r["s"])
+        return out
+
+    held = shards_of(docs.where("doc_id < 12"))
+    owners = {}
+    for d, ss in held.items():
+        for s_ in ss:
+            owners.setdefault(s_, set()).add(d)
+    alone = sorted(
+        (d, s_) for s_, ds in owners.items() if len(ds) == 1 for d in ds
+    )
+    assert alone  # fixture: some shard holds one doc's band rows only
+    others = shards_of(docs.where("doc_id >= 100 AND doc_id < 140"))
+    doc_id, shard, text_of = next(
+        (d, s_, o) for d, s_ in alone for o, ss in sorted(others.items())
+        if s_ not in ss
+    )
+    id_type = docs.schema["doc_id"].dataType
+    batch = docs.where(f"doc_id = {text_of}").withColumn(
+        "doc_id", F.lit(doc_id).cast(id_type)
+    )
+    _, state, _ = DX.extend_dedup_index(batch, table, tracker, threshold=0.5)
+    live = {dict(p.column_values)["band_shard"] for p in state.partition_versions}
+    assert shard not in live
+    assert DX.verify_dedup_index(spark, table, tracker).count() == 0
+
+
 def test_extend_optimistic_conflict_and_exclusive(spark, tmp_path, monkeypatch):
     """An extend is a read-modify-write: a racer committing to one of ITS
     band shards between write and commit must raise CommitConflictError
@@ -675,7 +724,7 @@ def test_extend_optimistic_conflict_and_exclusive(spark, tmp_path, monkeypatch):
     banded = DD.lsh_banded(
         batch.select("doc_id", DD.shingles_of(F.col("text")).alias("shingles")),
         "doc_id", arts.bands, arts.rows,
-    ).withColumn("band_shard", DX._band_shard_col(arts.band_shards))
+    ).withColumn("band_shard", DX._shard_col(arts.band_shards, "band_id", "band_key"))
     touched = {
         r["band_shard"] for r in banded.select("band_shard").distinct().collect()
     }

@@ -255,6 +255,26 @@ def test_group_publish_job_ceiling(spark, tmp_path):
             _rows(df.select("id"))
 
 
+def test_ann_build_fits_run_in_the_callers_job_group(spark, sf_dir, tmp_path):
+    """A fitting ``build_ann_index`` overlaps its k-means and PQ fits on
+    threads that run in the caller's job group, like the group publish's
+    saves: no job of the build runs outside it."""
+    tracker = FileBackedVersionTracker(str(tmp_path / "_log"))
+    ann = TableDefinition(TableName("demo", "annfit"), str(tmp_path / "annfit"),
+                          PartitionSchema(("bucket",)))
+    tracker.init_table(ann.name, is_snapshot=False, user_id="t")
+    emb = load_table(spark, sf_dir, "embeddings").where("vec_id < 40").select(
+        "vec_id", "embedding")
+    st = spark.sparkContext.statusTracker()
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    loose = set(st.getJobIdsForGroup(None))
+    (state, _), n = _jobs(spark, lambda: AX.build_ann_index(
+        emb, ann, tracker, n_clusters=4, m=4, k_sub=4, iters=2,
+        id_map_shards=2))
+    assert n > 0 and state.partition_versions
+    assert set(st.getJobIdsForGroup(None)) == loose
+
+
 # ------------------------------------------------------------ differential
 
 
