@@ -922,6 +922,8 @@ def _extend_index(
     concurrency, user_id, message, id_col, metastore, pairs_table,
     drift_shard_rows: "int | None" = DRIFT_MAX_BAND_SHARD_ROWS,
 ):
+    from ..spark.writer import overlapped
+
     spark = base_new.sparkSession
     _require_dynamic_overwrite(spark)
     _check_payload_types(
@@ -967,8 +969,6 @@ def _extend_index(
         .limit(_FETCH_PUSHDOWN_MAX_IDS + 1)
     )
     try:
-        from ..spark.writer import overlapped
-
         counts, band_sample = overlapped(
             spark, lambda plan: plan.collect(), [counts_plan, band_sample_plan]
         )

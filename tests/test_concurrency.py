@@ -5,6 +5,7 @@ last-writer-wins on the file tracker (FileBackedVersionTracker.scala:23-25).
 These tests pin the rebuild to the same guarantees: no commit is lost or
 torn under concurrency, and the log stays totally ordered."""
 
+import sys
 import threading
 from datetime import datetime, timezone
 
@@ -45,10 +46,16 @@ def _hammer(tracker):
             errors.append(e)
 
     threads = [threading.Thread(target=work, args=(t,)) for t in range(N_THREADS)]
-    for t in threads:
-        t.start()
-    for t in threads:
-        t.join()
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)  # interleave the threads' commit steps
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(60)
+    finally:
+        sys.setswitchinterval(switch)
+    assert not any(t.is_alive() for t in threads)
     assert not errors, errors
     return tracker.table_state(T)
 
@@ -67,8 +74,9 @@ def test_concurrent_commits_none_lost(backend, tmp_path):
     assert len(set(commit_ids)) == len(commit_ids)
     # every commit carries exactly its one operation (no torn writes)
     assert all(len(u.operations) == 1 for u in state.updates[1:])
-    # head points at a real commit and the folded state resolves
-    assert state.current_version in commit_ids
+    # the head is the newest commit (a late head write of an older
+    # commit would park it behind) and the folded state resolves
+    assert state.current_version == commit_ids[-1]
     live = tracker.current_version(T)
     assert len(live.partition_versions) == N_THREADS  # one date per thread
 
