@@ -737,7 +737,9 @@ def _extend_publish(
     ]
     if map_table is not None:
         agg_cols.append(
-            F.collect_set(DX._shard_col(artifacts.id_shards, id_col)).alias("shs")
+            F.collect_set(
+                DX._shard_col(artifacts.id_shards, id_col)
+            ).alias("shs")
         )
     counts = encoded_new.agg(*agg_cols).collect()[0]
     DX._check_batch(counts, id_col, "ann")
@@ -921,7 +923,10 @@ def _extend_publish(
         spark, tracker, version, user_id, message,
         [
             (table, out, written_parts, emptied),
-            (map_table, out_map, DX._shard_parts(ID_SHARD_COL, batch_shards), ()),
+            (
+                map_table, out_map,
+                DX._shard_parts(ID_SHARD_COL, batch_shards), (),
+            ),
         ],
         metastore,
         expected_heads=expected,

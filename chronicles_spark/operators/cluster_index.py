@@ -395,17 +395,13 @@ def rebuild_dedup_clusters(
         )
         member_parts = partitions_written(members_table, version, spark=spark)
 
-    rm_assign = [
-        p for p in state.partition_versions if p not in set(assign_parts)
-    ]
-    rm_members = [
-        p for p in mstate.partition_versions if p not in set(member_parts)
-    ]
     new_state, _ = _publish(
         spark, tracker, version, user_id, message,
         [
-            (table, None, assign_parts, rm_assign),
-            (members_table, None, member_parts, rm_members),
+            (table, None, assign_parts,
+             set(state.partition_versions) - set(assign_parts)),
+            (members_table, None, member_parts,
+             set(mstate.partition_versions) - set(member_parts)),
         ],
         metastore,
         expected_heads={table.name: base_head, members_table.name: m_head},

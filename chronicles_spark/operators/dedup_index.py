@@ -219,7 +219,8 @@ def _shard_col(n: int, *cols: str):
     """A row's shard, the routing rule of every index table: xxhash64 is
     stable across Spark versions, so extends route as the build did; it
     hashes TYPED values, so column types must stay stable."""
-    return F.pmod(F.xxhash64(*(F.col(c) for c in cols)), F.lit(n)).cast("string")
+    route = F.pmod(F.xxhash64(*(F.col(c) for c in cols)), F.lit(n))
+    return route.cast("string")
 
 
 def _shard_layout(df, shard: str, keys, route=None):
@@ -642,7 +643,9 @@ def _write_docs(encoded, docs_table, version, artifacts, id_col) -> list:
     return partitions_written(docs_table, version, spark=encoded.sparkSession)
 
 
-def _bands_of_written(spark, docs_table, doc_parts, version, family, artifacts):
+def _bands_of_written(
+    spark, docs_table, doc_parts, version, family, artifacts
+):
     """The band rows, laid out for the band table, derived from the doc
     store's WRITTEN payload parquet — columnar and already encoded, so
     the raw corpus is not read a second time."""
@@ -986,18 +989,6 @@ def _extend_index(
         banded_new.unpersist()
 
 
-def _consume_future(future, pool):
-    """Join an overlapped single-job worker: propagate its error/result
-    and always release the pool.  (If the MAIN chain raises before this
-    is reached, the worker's bounded read-only jobs finish in the
-    background and the executor's threads exit when it is collected —
-    nothing is written by either side until after this join.)"""
-    try:
-        return future.result()
-    finally:
-        pool.shutdown(wait=True)
-
-
 def _extend_publish(
     spark, table, docs_table, tracker, family, state, docs_state,
     base_head, docs_head, pairs_head, base_new, banded_new, new_ids,
@@ -1220,8 +1211,13 @@ def _extend_publish(
 
     # -- publish: RMW of exactly the touched shards, one pair commit --
     # join the overlapped lookup+RMW worker: its append-hit ValueError /
-    # any read error surfaces HERE, before anything is written
-    bands_out, band_counts, emptied = _consume_future(rmw_future, rmw_pool)
+    # any read error surfaces HERE, before anything is written.  (If the
+    # main chain raised before this join, the worker's bounded read-only
+    # jobs finish in the background; nothing is written by either side.)
+    try:
+        bands_out, band_counts, emptied = rmw_future.result()
+    finally:
+        rmw_pool.shutdown(wait=True)
     docs_out, _ = _rmw_shards(
         spark, docs_table, docs_state, DOC_SHARD_COL, batch_doc_shards,
         base_new.select(F.col(id_col), payload).withColumn(
@@ -1412,15 +1408,11 @@ def _rebuild_index(
     )
     band_parts = partitions_written(table, version, spark=spark)
 
-    rm_bands = [
-        p for p in state.partition_versions if p not in set(band_parts)
-    ]
-    rm_docs = [
-        p for p in docs_state.partition_versions if p not in set(doc_parts)
-    ]
     writes = [
-        (table, None, band_parts, rm_bands),
-        (docs_table, None, doc_parts, rm_docs),
+        (table, None, band_parts,
+         set(state.partition_versions) - set(band_parts)),
+        (docs_table, None, doc_parts,
+         set(docs_state.partition_versions) - set(doc_parts)),
     ]
     expected = {table.name: base_head, docs_table.name: docs_head}
     if pairs_table is not None:

@@ -290,6 +290,10 @@ class FileBackedVersionTracker(VersionTracker):
         # the CAS post-claim check — keeps the plain-mode commit path at
         # one extra small read per DIRECTORY, not per commit
         self._floor_cache: dict = {}
+        # per-table-dir newest commit seq this instance has listed or
+        # written (only ever raised, under its lock)
+        self._seen_top: dict = {}
+        self._seen_lock = threading.Lock()
         self._lease_owner: dict = {}  # table dir → our live lease token
         # per-table-dir count of commits since the last EXACT checkpoint
         # check (the exact check lists the dir — see _maybe_checkpoint's
@@ -345,11 +349,12 @@ class FileBackedVersionTracker(VersionTracker):
         process's commits: the plain-mode ``head_ref`` write is
         last-writer-wins, so two threads committing at once could leave
         the head on the older commit.  With ``use_lock`` a flock also
-        serializes other processes.  Re-entrant within one THREAD of the instance: an optimistic commit
-        holds the guard across its check-then-append, and the nested
-        append must not flock a second fd against itself (flock from two
-        fds of one thread deadlocks) — while a DIFFERENT thread must still
-        block, so the held-set is thread-local."""
+        serializes other processes.  Re-entrant within one THREAD of the
+        instance: an optimistic commit holds the guard across its
+        check-then-append, and the nested append must not flock a second
+        fd against itself (flock from two fds of one thread deadlocks) —
+        while a DIFFERENT thread must still block, so the held-set is
+        thread-local."""
         held = getattr(self._held_locks, "dirs", None)
         if held is None:
             held = self._held_locks.dirs = set()
@@ -409,8 +414,12 @@ class FileBackedVersionTracker(VersionTracker):
         floor = self._floor_cache.get(d)
         if floor is None:
             floor = self._floor_cache[d] = self._read_floor_seq(d)
-        if ts <= floor:
-            ts = floor + 1
+        # never below a commit this instance has listed: an earlier
+        # instance's burst can run its clock ahead of wall time, and the
+        # first free name below the top would fold out every commit above
+        with self._seen_lock:
+            ts = max(ts, floor + 1, self._seen_top.get(d, 0) + 1)
+            self._seen_top[d] = ts
         if self._use_lock or self._use_cas:
             # the per-process monotonic clock cannot see OTHER processes'
             # filenames; under flock a directory check is race-free, and
@@ -737,6 +746,9 @@ class FileBackedVersionTracker(VersionTracker):
         archives.sort()
         cks.sort()
         sides.sort()
+        if live:
+            with self._seen_lock:
+                self._seen_top[d] = max(self._seen_top.get(d, 0), live[-1][0])
         return live, archives, cks, sides
 
     @staticmethod
@@ -1608,9 +1620,10 @@ class FileBackedVersionTracker(VersionTracker):
     ) -> dict:
         """Retry shell: under CAS/plain mode ``_commit_guard`` serializes
         only this process, so a CONCURRENT archiver's deletes can surface
-        mid-pack as vanished commit files or artifacts.  That is a benign race, not
-        corruption — each retry restarts from a fresh listing, where the
-        racer's superseding artifact (and advanced floor) is visible.
+        mid-pack as vanished commit files or artifacts.  That is a benign
+        race, not corruption — each retry restarts from a fresh listing,
+        where the racer's superseding artifact (and advanced floor) is
+        visible.
         Under ``use_lock`` the flock makes this loop one-shot."""
         last_err = None
         for _ in range(4):

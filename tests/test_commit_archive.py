@@ -284,6 +284,29 @@ def test_reclaimed_archived_slot_fails_loudly(tmp_path):
     assert tr.head_resolution(T) is None
 
 
+def test_fresh_writer_commits_above_every_listed_commit(tmp_path):
+    """A burst of more than one commit per ms runs an instance's clock
+    ahead of wall time.  A fresh instance on wall time that has listed
+    the log must still commit above every commit it saw: a free name
+    below the top would make its commit a head in the middle of the log,
+    folding out every commit above it."""
+    import time as _time
+
+    root = str(tmp_path)
+    ahead = FileBackedVersionTracker(root, checkpoint_interval=5)
+    ahead._clock._last_ms = int(_time.time() * 1000) + 60_000
+    ahead.init_table(T, is_snapshot=False, user_id="u")
+    for i in range(12):
+        _commit(ahead, i)
+    fresh = FileBackedVersionTracker(root, checkpoint_interval=5)
+    fresh.current_version(T)  # lists the log
+    mine = _commit(fresh, 99)
+    assert _truth(root).table_state(T).updates[-1].metadata.commit_id == mine
+    assert {p.path for p in fresh.current_version(T).partition_versions} == {
+        f"p={i}" for i in range(12)
+    }
+
+
 def test_writer_floor_guards_sequence_slots(tmp_path):
     """A fresh tracker instance whose clock lags behind the archive floor
     must claim slots ABOVE it (plain mode: cached floor read; CAS mode:
