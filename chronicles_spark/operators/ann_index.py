@@ -65,18 +65,8 @@ _LOCATE_PUSHDOWN_MAX_IDS = 10_000
 # with the other primary+companion families (operators/pairing.py)
 from .pairing import (  # noqa: E402
     TornPairError as TornAnnPairError,
-    check_pair as _check_pair,
     pair_label as _pair_label,
     pair_message as _pair_message,
-    pinned_state as _pinned_state,
-)
-
-# the torn-pair refusal's advice: extending from a torn pair would
-# locate upserts through a map that does not describe the index
-# (silently wrong results), so the hot path fails loudly with it
-_ANN_REPAIR_ADVICE = (
-    "run verify_ann_id_map to audit and rebuild_ann_id_map to repair "
-    "before extending"
 )
 
 
@@ -412,11 +402,7 @@ def build_ann_index(
     (map-side) encode lineage — nothing corpus-scale is persisted.
     Extends place new rows into the live sub-layout; a periodic rebuild
     re-balances drifted splits."""
-    if tuple(table.partition_schema.columns) != (BUCKET_COL,):
-        raise ValueError(
-            f"ANN index table must be partitioned by ({BUCKET_COL!r},), "
-            f"got {table.partition_schema.columns}"
-        )
+    DX._require_partitioning(table, _ANN)
     if centroids is not None or codebooks is not None:
         # only injected artifacts need the dim probe; the fit-here path
         # derives dims from the data and raises its own clearer errors
@@ -545,6 +531,25 @@ def load_ann_artifacts(
     )
 
 
+# the extend front end's inputs (DX._extend_front).  The id map is the
+# companion only when the sidecar names id_shards.  The torn-pair advice:
+# extending from a torn pair would locate upserts through a map that
+# does not describe the index (silently wrong results), so the hot path
+# fails loudly with it
+_ANN = DX._Maintainer(
+    what="ANN index table",
+    partition_col=BUCKET_COL,
+    advice=(
+        "run verify_ann_id_map to audit and rebuild_ann_id_map to repair "
+        "before extending"
+    ),
+    load=lambda table, state, _pair: load_ann_artifacts(table, state),
+    companion=lambda table, arts: (
+        None if arts.id_shards is None else ann_id_map_table(table)
+    ),
+)
+
+
 def extend_ann_index(
     df_new: DataFrame,
     table: TableDefinition,
@@ -638,67 +643,40 @@ def extend_ann_index(
     :func:`build_ann_index` refresh (which also re-fits drifted
     centroids).  Untouched buckets keep their version; vacuum reclaims
     superseded touched-bucket versions as usual."""
-    if tuple(table.partition_schema.columns) != (BUCKET_COL,):
-        raise ValueError(
-            f"ANN index table must be partitioned by ({BUCKET_COL!r},), "
-            f"got {table.partition_schema.columns}"
-        )
-    DX._check_extend_args(concurrency, mode)
-    return DX._run_maybe_exclusive(
-        tracker, table, exclusive,
-        lambda: _extend_body(
-            df_new, table, tracker, user_id, message, artifacts, mode,
-            concurrency, id_col, vec_col, metastore,
+    return DX._extend_front(
+        _ANN, df_new, table, tracker, artifacts, concurrency, exclusive,
+        lambda pinned, arts, encoded_new: _extend_publish(
+            df_new.sparkSession, table, tracker, pinned, encoded_new, arts,
+            mode, concurrency, user_id, message, id_col, metastore,
         ),
+        encode=lambda df, arts, state: _encode_batch(
+            df, arts, state, id_col, vec_col
+        ),
+        mode=mode,
     )
 
 
-def _extend_body(
-    df_new, table, tracker, user_id, message, artifacts, mode,
-    concurrency, id_col, vec_col, metastore,
-):
-    spark = df_new.sparkSession
-    state, base_head, head_pair = _pinned_state(tracker, table.name)
-    if not isinstance(state, PartitionedTableVersion):
-        # a snapshot-table log under an ANN table definition would
-        # otherwise surface downstream as an opaque AttributeError
-        raise ValueError("ANN index tables are partitioned by bucket")
-    if artifacts is None:
-        artifacts = load_ann_artifacts(table, state)
+def _split_tree(artifacts, state) -> "dict[str, int]":
+    """The skew-split tree new rows route through: the sidecar's
+    recorded ``bucket_splits``; pre-recording sidecars fall back to
+    layout inference."""
+    tree = artifacts.split_tree
+    return _live_splits(state) if tree is None else tree
+
+
+def _encode_batch(df_new, artifacts, state, id_col, vec_col):
+    """The batch encoded under the index's quantizer, ``(id, bucket,
+    pq_codes)``, routed through the split tree (:func:`_split_tree`) so
+    a split bucket keeps its per-partition cap.  The front end persists
+    it (bounded — one batch, never the index): it is consumed up to five
+    times (bucket collect, duplicate check, shard collect, locate
+    semi-join, RMW union+write), and re-running an expensive upstream
+    lineage per consumer would dominate the extend."""
     centroids = artifacts.centroid_list
     codebooks = artifacts.codebook_list
     SIM.validate_ann_artifacts(df_new, vec_col, centroids, codebooks)
-
-    # pin the companion id map's base alongside the index's: both heads
-    # go into the SAME optimistic group commit, so any interleaved
-    # extend (which must touch both lines) conflicts loudly.  The
-    # head-pair stamp check runs HERE, before any read the locate
-    # trusts: a torn pair (files-backend crash between the group's two
-    # appends) must fail loudly, never locate through a map that does
-    # not describe the index.
-    map_table = map_state = map_head = None
-    if artifacts.id_shards is not None:
-        map_table = ann_id_map_table(table)
-        map_state, map_head, map_pair = _pinned_state(
-            tracker, map_table.name
-        )
-        _check_pair(table, head_pair, map_pair, _ANN_REPAIR_ADVICE)
-        if not isinstance(map_state, PartitionedTableVersion):
-            raise ValueError("ANN id-map tables are partitioned by id_shard")
-
     vd = df_new.select(F.col(id_col), SIM.as_double(F.col(vec_col)).alias("v"))
-    # persist the (bounded — one batch, never the index) encoded batch:
-    # it is consumed up to five times below (bucket collect, duplicate
-    # check, shard collect, locate semi-join, RMW union+write) and
-    # re-running an expensive upstream lineage per consumer would
-    # dominate the extend.  New rows route through the recorded
-    # skew-split tree (sidecar bucket_splits; pre-recording sidecars
-    # fall back to layout inference) so a split bucket keeps its
-    # per-partition cap.
-    tree = artifacts.split_tree
-    if tree is None:
-        tree = _live_splits(state)
-    encoded_new = _apply_split_tree(
+    return _apply_split_tree(
         SIM.pq_encode(
             SIM._assign_nearest(vd, centroids).withColumnRenamed("cluster", BUCKET_COL),
             codebooks,
@@ -711,23 +689,21 @@ def _extend_body(
             "pq_codes",
         ),
         id_col,
-        tree,
-    ).persist()
-    try:
-        return _extend_publish(
-            spark, table, tracker, state, base_head, encoded_new, artifacts,
-            mode, concurrency, user_id, message, id_col, metastore,
-            map_table, map_state, map_head, split_tree=tree,
-        )
-    finally:
-        encoded_new.unpersist()
+        _split_tree(artifacts, state),
+    )
 
 
 def _extend_publish(
-    spark, table, tracker, state, base_head, encoded_new, artifacts,
+    spark, table, tracker, pinned, encoded_new, artifacts,
     mode, concurrency, user_id, message, id_col, metastore,
-    map_table=None, map_state=None, map_head=None, split_tree=None,
 ):
+    # the id map's base is pinned alongside the index's (the front end
+    # refused a torn pair before any read the locate trusts): both heads
+    # go into the SAME optimistic group commit, so any interleaved extend
+    # (which must touch both lines) conflicts loudly
+    state, base_head = pinned.state, pinned.head
+    map_table, map_state, map_head = pinned.companion, pinned.cstate, pinned.chead
+    split_tree = _split_tree(artifacts, state)
     # ONE aggregation job yields every piece of batch metadata the plan
     # needs: row/dup/null counts plus the distinct bucket and shard sets
     # (both bounded — ≤ n_clusters / ≤ id_shards values), instead of a
@@ -818,7 +794,7 @@ def _extend_publish(
         # tree has since split MIGRATE to their leaf in this rewrite —
         # the self-heal that lets a stale layout converge without a
         # rebuild
-        out = _apply_split_tree(out, id_col, split_tree or {})
+        out = _apply_split_tree(out, id_col, split_tree)
 
     # which physical buckets the rewrite lands — ONE small aggregation
     # over the touched slice (never an FS walk over every bucket
@@ -847,7 +823,7 @@ def _extend_publish(
             out, id_col, artifacts.max_bucket_rows, counts=written_counts
         )
         if new_entries:
-            split_tree = {**(split_tree or {}), **new_entries}
+            split_tree = {**split_tree, **new_entries}
             written_counts = DX._shard_counts(out, BUCKET_COL)
             emptied = DX._emptied(sub_state, BUCKET_COL, written_counts)
 
@@ -961,18 +937,7 @@ def commit_ann_stream_batch(
     (extend's optimistic default) and fails the stream loudly — two
     writers maintaining one index is a deployment error, not a race to
     arbitrate silently."""
-
-    def extend_fn(df, message):
-        return extend_ann_index(
-            df, table, tracker, user_id, message,
-            artifacts=artifacts, mode=mode,
-            id_col=id_col, vec_col=vec_col, metastore=metastore,
-        )
-
-    DX._commit_index_stream_batch(
-        batch_df, epoch_id, table, tracker, extend_fn,
-        message_prefix, epoch_cache, None,
-    )
+    DX._commit_index_stream_batch(extend=extend_ann_index, **locals())
 
 
 def ann_stream_sink(
@@ -1010,19 +975,7 @@ def ann_stream_sink(
     whole-index (id, bucket) locate scan per micro-batch; there, prefer
     ``mode="append"`` + periodic rebuild, or run
     :func:`rebuild_ann_id_map` once to migrate."""
-    epoch_cache: dict = {}
-
-    def commit_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        commit_ann_stream_batch(
-            batch_df, epoch_id, table, tracker, user_id,
-            artifacts=artifacts, message_prefix=message_prefix, mode=mode,
-            epoch_cache=epoch_cache, id_col=id_col, vec_col=vec_col,
-            metastore=metastore,
-        )
-
-    return stream_df.writeStream.foreachBatch(commit_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
+    return DX._index_stream_sink(commit_fn=commit_ann_stream_batch, **locals())
 
 
 def vacuum_ann_artifacts(
@@ -1102,14 +1055,8 @@ def verify_ann_id_map(
     agrees = (F.col("index_bucket") == F.col("map_bucket")) | F.col(
         "index_bucket"
     ).startswith(F.concat(F.col("map_bucket"), F.lit("_")))
-    return (
-        idx.join(mp, id_col, "full_outer")
-        .where(
-            F.col("index_bucket").isNull()
-            | F.col("map_bucket").isNull()
-            | ~agrees
-        )
-        .select(id_col, "index_bucket", "map_bucket")
+    return DX._disagreements(
+        idx, mp, [id_col], "index_bucket", "map_bucket", agrees
     )
 
 

@@ -84,15 +84,18 @@ from . import dedup as DD
 from .dedup_index import (
     _FETCH_PUSHDOWN_MAX_IDS,
     _artifact_path,
-    _check_extend_args,
+    _disagreements,
+    _extend_front,
     _IndexArtifacts,
     _load_artifacts,
+    _Maintainer,
     _observe_written,
     _pin_pair,
     _positive,
     _publish,
     _rebuild_geometry,
     _require_dynamic_overwrite,
+    _require_partitioning,
     _restrict_to_values,
     _rmw_shards,
     _run_maybe_exclusive,
@@ -127,11 +130,6 @@ class ClusterRelabelWarning(UserWarning):
     shards themselves have outgrown their sizing target)."""
 
 _FOLDS_RE = re.compile(r"\[folds:([^\]]+)\]")
-
-_CLUSTER_REPAIR_ADVICE = (
-    "rebuild with build_dedup_clusters over the full pair history (or "
-    "checkout both tables to a matching pair) before folding"
-)
 
 
 def cluster_members_table(table: TableDefinition) -> TableDefinition:
@@ -182,12 +180,17 @@ def load_cluster_artifacts(
     )
 
 
-def _require_cluster_partitioning(table: TableDefinition) -> None:
-    if tuple(table.partition_schema.columns) != (DOC_SHARD_COL,):
-        raise ValueError(
-            "dedup cluster assignment table must be partitioned by "
-            f"({DOC_SHARD_COL!r},), got {table.partition_schema.columns}"
-        )
+# the extend front end's inputs (dedup_index._extend_front)
+_CLUSTER = _Maintainer(
+    what="dedup cluster assignment table",
+    partition_col=DOC_SHARD_COL,
+    advice=(
+        "rebuild with build_dedup_clusters over the full pair history (or "
+        "checkout both tables to a matching pair) before folding"
+    ),
+    load=load_cluster_artifacts,
+    companion=lambda table, _arts: cluster_members_table(table),
+)
 
 
 _FOLDS_CURSOR_FILE = "_chronicles_folds_cursor.json"
@@ -303,7 +306,7 @@ def build_dedup_clusters(
     ClusterArtifacts)``.  ``table`` must be partitioned by exactly
     ``(doc_shard,)`` and already ``init_table``-ed; the members
     companion is initialized here."""
-    _require_cluster_partitioning(table)
+    _require_partitioning(table, _CLUSTER)
     geo = _positive(doc_shards=doc_shards, cluster_shards=cluster_shards)
     members_table = cluster_members_table(table)
     tracker.init_table(members_table.name, is_snapshot=False, user_id=user_id)
@@ -362,11 +365,11 @@ def rebuild_dedup_clusters(
     from ..spark.reader import read_version
     from ..spark.writer import partitions_written, write_versioned
 
-    _require_cluster_partitioning(table)
+    _require_partitioning(table, _CLUSTER)
     _require_dynamic_overwrite(spark)
     members_table = cluster_members_table(table)
     state, base_head, head_pair, mstate, m_head = _pin_pair(
-        tracker, table, members_table, _CLUSTER_REPAIR_ADVICE
+        tracker, table, members_table, _CLUSTER.advice
     )
     old = load_cluster_artifacts(table, state, head_pair)
     new_geo = _rebuild_geometry(
@@ -454,10 +457,13 @@ def extend_dedup_clusters(
     ``exclusive=True`` holds the primary's flock across the whole RMW
     (run ONE fold maintainer per assignment table — the journal
     watermark assumes a single consumer)."""
-    _require_cluster_partitioning(table)
-    _check_extend_args(concurrency)
     labels = _norm_labels(batch_label)
-    if labels and set(labels) <= folded_batch_labels(tracker, table):
+
+    def _already_folded():
+        # every named label is folded: a crash replay, skipped before
+        # the lock
+        if not labels or not set(labels) <= folded_batch_labels(tracker, table):
+            return None
         state = tracker.current_version(table.name)
         arts = artifacts
         if arts is None:
@@ -465,14 +471,16 @@ def extend_dedup_clusters(
             arts = load_cluster_artifacts(table, state, head_pair)
         return None, state, arts
 
-    def _run():
-        return _fold_batch(
-            pairs_new, table, tracker, user_id, message, labels,
-            concurrency, artifacts, id_col, metastore, drift_shard_rows,
+    return _extend_front(
+        _CLUSTER, pairs_new, table, tracker, artifacts, concurrency,
+        exclusive,
+        lambda pinned, arts, pairs: _fold_batch(
+            pairs, table, tracker, pinned, arts, user_id, message, labels,
+            concurrency, id_col, metastore, drift_shard_rows,
             relabel_warn_rows,
-        )
-
-    return _run_maybe_exclusive(tracker, table, exclusive, _run)
+        ),
+        done=_already_folded,
+    )
 
 
 def _collect_shards_and_ids(df, id_expr, shard_expr):
@@ -928,21 +936,13 @@ def _distributed_fold_plan(
 
 
 def _fold_batch(
-    pairs_new, table, tracker, user_id, message, labels,
-    concurrency, artifacts, id_col, metastore,
-    drift_shard_rows: "int | None" = DRIFT_MAX_ASSIGN_SHARD_ROWS,
-    relabel_warn_rows: "int | None" = RELABEL_WARN_ROWS,
+    pairs_new, table, tracker, pinned, arts, user_id, message, labels,
+    concurrency, id_col, metastore, drift_shard_rows, relabel_warn_rows,
 ):
     spark = pairs_new.sparkSession
     _require_dynamic_overwrite(spark)
-    members_table = cluster_members_table(table)
-    tracker.init_table(members_table.name, is_snapshot=False, user_id=user_id)
-    state, base_head, head_pair, mstate, m_head = _pin_pair(
-        tracker, table, members_table, _CLUSTER_REPAIR_ADVICE
-    )
-    arts = artifacts
-    if arts is None:
-        arts = load_cluster_artifacts(table, state, head_pair)
+    state, base_head, head_pair = pinned.state, pinned.head, pinned.pair
+    members_table, mstate, m_head = pinned.companion, pinned.cstate, pinned.chead
 
     stamped_message = message + "".join(f" [folds:{l}]" for l in labels)
     version = generate_version()
@@ -1343,20 +1343,9 @@ def verify_dedup_clusters(
         spark, members_table, tracker.current_version(members_table.name),
         infer_partition_types=False,
     ).select(F.col(id_col), F.col("cluster_id").alias("members_cluster"))
-    mismatch = (
-        a.join(m, id_col, "full_outer")
-        .where(
-            F.col("assign_cluster").isNull()
-            | F.col("members_cluster").isNull()
-            | (F.col("assign_cluster") != F.col("members_cluster"))
-        )
-        .select(
-            F.col(id_col),
-            "assign_cluster",
-            "members_cluster",
-            F.lit("assign_members_mismatch").alias("problem"),
-        )
-    )
+    mismatch = _disagreements(
+        a, m, [id_col], "assign_cluster", "members_cluster"
+    ).withColumn("problem", F.lit("assign_members_mismatch"))
     bad_min = (
         m.groupBy("members_cluster")
         .agg(F.min(id_col).alias("min_member"))

@@ -45,10 +45,13 @@ shingles + exact Jaccard), the simhash, embedding and semantic families
 :mod:`~chronicles_spark.operators.emb_dedup_index`,
 :mod:`~chronicles_spark.operators.semantic_dedup_index`) and the
 cluster index share one build/extend/verify/rebuild protocol, one
-geometry-sidecar lifecycle (:class:`_IndexArtifacts`) and one extend
-front end (:func:`_extend_family_index`).  A family supplies only its
-artifacts fields, its encoder (``df -> (id, payload)``) and its
-:class:`_IndexFamily` (bander + verifier).
+geometry-sidecar lifecycle (:class:`_IndexArtifacts`), one extend front
+end (:func:`_extend_front`, which the ANN index and the cluster fold
+run too), one stream kernel (:func:`_commit_index_stream_batch`,
+:func:`_index_stream_sink`) and one differential audit join
+(:func:`_disagreements`).  A family supplies only its artifacts fields,
+its encoder (``df -> (id, payload)``), its :class:`_Maintainer` record
+and its :class:`_IndexFamily` (bander + verifier).
 
 All text hashes are md5-hex (the in-memory operators' convention) so
 DuckDB oracles reproduce results bit-for-bit; shard routing uses
@@ -63,8 +66,8 @@ protocol with this repo's LLM-pipeline operators.
 from __future__ import annotations
 
 import json
-from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, replace
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -121,7 +124,7 @@ class _IndexFamily:
     """The points where the dedup families differ; everything else —
     shard routing, structural pruning, row-group pushdown, the RMW
     pair-commit publish, upsert/append semantics, the pairs journal,
-    rebuild, the torn-pair advice (:func:`_repair_advice`) — is the
+    rebuild, the extend front end (:class:`_Maintainer`) — is the
     shared core.
 
     ``band_fn(payload_df) -> (id, band_id, band_key)`` must be
@@ -143,11 +146,35 @@ def _family_name(kind: str) -> str:
     return kind.replace("_", " ")
 
 
-def _repair_advice(kind: str) -> str:
-    """Torn-pair advice naming the family's own build."""
-    return (
-        f"rebuild with build_{kind}_index over the full corpus (or "
-        "checkout both tables to a matching pair) before extending"
+@dataclass(frozen=True)
+class _Maintainer:
+    """What one lake-index maintainer supplies the shared extend front
+    end (:func:`_extend_front`): ``what`` names its primary table in the
+    partitioning refusal, ``partition_col`` is that table's one
+    partition column, ``advice`` ends the torn-pair refusal,
+    ``load(table, state, pair label)`` resolves the geometry when the
+    caller passes none, and ``companion(table, artifacts)`` is the
+    paired table (``None``: nothing to pin)."""
+
+    what: str
+    partition_col: str
+    advice: str
+    load: "object"
+    companion: "object"
+
+
+def _band_maintainer(kind: str, load) -> _Maintainer:
+    """A dedup family's maintainer: the band table with the doc store as
+    its companion; the advice names the family's own build."""
+    return _Maintainer(
+        what=f"{_family_name(kind)} band table",
+        partition_col=BAND_SHARD_COL,
+        advice=(
+            f"rebuild with build_{kind}_index over the full corpus (or "
+            "checkout both tables to a matching pair) before extending"
+        ),
+        load=lambda table, state, _pair: load(table, state),
+        companion=lambda table, _arts: dedup_docs_table(table),
     )
 
 
@@ -328,17 +355,32 @@ def _check_batch(counts, id_col: str, kind: str) -> None:
         raise ValueError(f"extend_{kind}_index got an empty batch")
 
 
-def _pin_pair(tracker, table, companion, advice):
-    """Both lines pinned (``pinned_state``), a torn pair refused:
-    ``(state, head, pair label, companion state, companion head)``."""
-    state, head, pair = pinned_state(tracker, table.name)
+def _require_partitioned(table, state) -> None:
+    """Refuse an index line whose state is not partitioned (a snapshot
+    log under an index table definition)."""
+    if not isinstance(state, PartitionedTableVersion):
+        raise ValueError(
+            f"index table {table.name} must resolve to a state partitioned "
+            f"by {', '.join(table.partition_schema.columns)}"
+        )
+
+
+def _pin_companion(tracker, table, pair, companion, advice):
+    """The companion line pinned (``pinned_state``), a torn pair against
+    the primary's ``pair`` label refused: ``(state, head)``."""
     cstate, chead, cpair = pinned_state(tracker, companion.name)
     check_pair(table, pair, cpair, advice)
-    if not isinstance(state, PartitionedTableVersion) or not isinstance(
-        cstate, PartitionedTableVersion
-    ):
-        raise ValueError(f"{table.name} index tables are partitioned by shard")
-    return state, head, pair, cstate, chead
+    _require_partitioned(companion, cstate)
+    return cstate, chead
+
+
+def _pin_pair(tracker, table, companion, advice):
+    """Both lines pinned, a torn pair refused: ``(state, head, pair
+    label, companion state, companion head)``."""
+    state, head, pair = pinned_state(tracker, table.name)
+    _require_partitioned(table, state)
+    return (state, head, pair,
+            *_pin_companion(tracker, table, pair, companion, advice))
 
 
 def _publish(spark, tracker, version, user_id, message, writes, metastore,
@@ -486,11 +528,7 @@ def _load_artifacts(
     ``extra_labels`` joins the check for families whose index may
     legitimately be EMPTY (the cluster index anchors the head's pair
     label so a partition-less state still resolves its sidecar)."""
-    if not isinstance(table_version, PartitionedTableVersion):
-        raise ValueError(
-            f"index table {table.name} must resolve to a state partitioned "
-            f"by {', '.join(table.partition_schema.columns)}"
-        )
+    _require_partitioned(table, table_version)
     labels = sorted(
         {v.label for v in table_version.partition_versions.values()}
         | set(extra_labels)
@@ -527,16 +565,21 @@ def load_dedup_artifacts(
     )
 
 
+_TEXT = _band_maintainer("dedup", load_dedup_artifacts)
+
+
 def _shingle_batch(df, id_col, text_col, width):
     return df.select(
         F.col(id_col), DD.shingles_of(F.col(text_col), width).alias("shingles")
     )
 
 
-def _require_band_partitioning(table, what: str) -> None:
-    if tuple(table.partition_schema.columns) != (BAND_SHARD_COL,):
+def _require_partitioning(table, m: _Maintainer) -> None:
+    """Refuse an index table not partitioned by exactly the maintainer's
+    one partition column."""
+    if tuple(table.partition_schema.columns) != (m.partition_col,):
         raise ValueError(
-            f"{what} band table must be partitioned by ({BAND_SHARD_COL!r},), "
+            f"{m.what} must be partitioned by ({m.partition_col!r},), "
             f"got {table.partition_schema.columns}"
         )
 
@@ -589,7 +632,7 @@ def build_dedup_index(
     md5 signatures, so build-then-extend agrees with it exactly);
     this function only materializes the state that makes every LATER
     batch O(batch)."""
-    _require_band_partitioning(table, "dedup")
+    _require_partitioning(table, _TEXT)
     geo = _positive(bands=bands, rows=rows, width=width,
                     band_shards=band_shards, doc_shards=doc_shards)
     version = generate_version()
@@ -753,8 +796,8 @@ def extend_dedup_index(
     the whole read-modify-write (the ANN family's contract — see
     :func:`~chronicles_spark.operators.ann_index.extend_ann_index`)."""
     return _extend_family_index(
-        "dedup", load_dedup_artifacts,
-        lambda df, arts: _shingle_batch(df, id_col, text_col, arts.width),
+        _TEXT,
+        lambda df, arts, _: _shingle_batch(df, id_col, text_col, arts.width),
         lambda arts: _text_family(arts, id_col, threshold),
         df_new, table, tracker, user_id, message, mode, concurrency,
         artifacts, id_col, metastore, pairs_table, exclusive,
@@ -773,46 +816,84 @@ def _check_extend_args(concurrency: str, mode: str = "upsert") -> None:
         )
 
 
-def _extend_family_index(
-    kind, load_artifacts, encode, make_family,
-    df_new, table, tracker, user_id, message, mode, concurrency,
-    artifacts, id_col, metastore, pairs_table, exclusive,
-    drift_shard_rows,
+class _Pinned(NamedTuple):
+    """The lines an extend body works from (:func:`_extend_front`): the
+    primary's pinned state, head and pair label, and the companion
+    table with its pinned state and head (all ``None`` without one)."""
+
+    state: PartitionedTableVersion
+    head: "str | None"
+    pair: "str | None"
+    companion: "TableDefinition | None"
+    cstate: "PartitionedTableVersion | None"
+    chead: "str | None"
+
+
+def _extend_front(
+    m: _Maintainer, df_new, table, tracker, artifacts, concurrency,
+    exclusive, body, encode=None, mode="upsert", done=None,
 ):
-    """The dedup families' shared extend front end.  The family passes
-    its ``kind``, its loader ``load_artifacts(table, state)``, its
-    encoder ``encode(df_new, artifacts) -> (id, payload)`` and its
-    family builder ``make_family(artifacts)``; the rest of the
-    arguments are the public extend's.  Checks the arguments, then —
-    under the primary's flock when ``exclusive`` — pins both lines,
-    refuses a torn pair, resolves the geometry, and runs
-    :func:`_extend_index` over the persisted encoded batch."""
-    _require_band_partitioning(table, _family_name(kind))
+    """The one extend front end of every lake index (the dedup families,
+    the ANN index, the cluster fold).  Checks the table's partitioning
+    and the arguments; returns ``done()`` when that is not None (a
+    replay already applied).  Then, under the primary's flock when
+    ``exclusive``: pins the primary, resolves the artifacts
+    (``artifacts=None`` loads them through ``m.load``), pins the
+    companion ``m.companion`` names and refuses a torn pair, and returns
+    ``body(pinned, artifacts, batch)`` (:class:`_Pinned`).  ``batch`` is
+    ``encode(df_new, artifacts, state)`` persisted for the body's run —
+    one bounded batch the body consumes several times — or ``df_new``
+    itself without an encoder."""
+    _require_partitioning(table, m)
     _check_extend_args(concurrency, mode)
+    if done is not None:
+        skipped = done()
+        if skipped is not None:
+            return skipped
 
     def _run():
-        docs_table = dedup_docs_table(table)
-        state, base_head, head_pair, docs_state, docs_head = _pin_pair(
-            tracker, table, docs_table, _repair_advice(kind)
-        )
+        state, head, pair = pinned_state(tracker, table.name)
+        _require_partitioned(table, state)
         arts = artifacts
         if arts is None:
-            arts = load_artifacts(table, state)
-        family = make_family(arts)
-        # bounded (one batch) payload base — consumed by the band
-        # encode, the verify union, and the doc-store write
-        base_new = encode(df_new, arts).persist()
-        try:
-            return _extend_index(
-                table, docs_table, tracker, family, state, docs_state,
-                base_head, docs_head, head_pair, base_new, arts, mode,
-                concurrency, user_id, message, id_col, metastore,
-                pairs_table, drift_shard_rows,
+            arts = m.load(table, state, pair)
+        companion = m.companion(table, arts)
+        cstate = chead = None
+        if companion is not None:
+            cstate, chead = _pin_companion(
+                tracker, table, pair, companion, m.advice
             )
+        pinned = _Pinned(state, head, pair, companion, cstate, chead)
+        if encode is None:
+            return body(pinned, arts, df_new)
+        batch = encode(df_new, arts, state).persist()
+        try:
+            return body(pinned, arts, batch)
         finally:
-            base_new.unpersist()
+            batch.unpersist()
 
     return _run_maybe_exclusive(tracker, table, exclusive, _run)
+
+
+def _extend_family_index(
+    m, encode, make_family, df_new, table, tracker, user_id, message,
+    mode, concurrency, artifacts, id_col, metastore, pairs_table,
+    exclusive, drift_shard_rows,
+):
+    """A dedup family's extend: the shared front end around
+    :func:`_extend_index`.  The family passes its :class:`_Maintainer`,
+    its encoder ``encode(df_new, artifacts, state) -> (id, payload)``
+    and its family builder ``make_family(artifacts)``; the rest of the
+    arguments are the public extend's."""
+    return _extend_front(
+        m, df_new, table, tracker, artifacts, concurrency, exclusive,
+        lambda pinned, arts, base_new: _extend_index(
+            table, tracker, make_family(arts), pinned, base_new, arts,
+            mode, concurrency, user_id, message, id_col, metastore,
+            pairs_table, drift_shard_rows,
+        ),
+        encode=encode, mode=mode,
+    )
 
 
 def _run_maybe_exclusive(tracker, table, exclusive: bool, fn):
@@ -920,27 +1001,27 @@ def _restrict_to_values(table_version, column, values) -> PartitionedTableVersio
 
 
 def _extend_index(
-    table, docs_table, tracker, family, state, docs_state,
-    base_head, docs_head, head_pair, base_new, artifacts, mode,
+    table, tracker, family, pinned, base_new, artifacts, mode,
     concurrency, user_id, message, id_col, metastore, pairs_table,
-    drift_shard_rows: "int | None" = DRIFT_MAX_BAND_SHARD_ROWS,
+    drift_shard_rows,
 ):
     from ..spark.writer import overlapped
 
     spark = base_new.sparkSession
+    docs_table = pinned.companion
     _require_dynamic_overwrite(spark)
     _check_payload_types(
-        spark, docs_table, docs_state, base_new, id_col, family.payload_col
+        spark, docs_table, pinned.cstate, base_new, id_col, family.payload_col
     )
     pairs_head = None
     if pairs_table is not None:
         _require_pairs_last(pairs_table, table, docs_table)
         tracker.init_table(pairs_table.name, is_snapshot=False, user_id=user_id)
         _, pairs_head, pairs_marker = pinned_state(tracker, pairs_table.name)
-        if pairs_marker is not None and pairs_marker != head_pair:
+        if pairs_marker is not None and pairs_marker != pinned.pair:
             raise TornPairError(
                 f"{pairs_table.name} heads pair commit {pairs_marker!r} but "
-                f"the index heads {head_pair!r} — a crash between the "
+                f"the index heads {pinned.pair!r} — a crash between the "
                 "group's appends tore the pairs journal off its extend "
                 "(or pairs_table was not passed on every extend); run "
                 "repair_dedup_pairs to re-land the torn batch partition"
@@ -978,9 +1059,9 @@ def _extend_index(
         counts = counts[0]
         _check_batch(counts, id_col, family.kind)
         return _extend_publish(
-            spark, table, docs_table, tracker, family, state, docs_state,
-            base_head, docs_head, pairs_head, base_new, banded_new,
-            base_new.select(id_col).distinct(), sorted(counts["ds"]),
+            spark, table, tracker, family, pinned, pairs_head, base_new,
+            banded_new, base_new.select(id_col).distinct(),
+            sorted(counts["ds"]),
             band_sample, artifacts, mode, concurrency,
             user_id, message, id_col, metastore, pairs_table,
             drift_shard_rows,
@@ -990,14 +1071,15 @@ def _extend_index(
 
 
 def _extend_publish(
-    spark, table, docs_table, tracker, family, state, docs_state,
-    base_head, docs_head, pairs_head, base_new, banded_new, new_ids,
-    batch_doc_shards, band_sample, artifacts, mode, concurrency,
-    user_id, message, id_col, metastore, pairs_table,
-    drift_shard_rows: "int | None" = DRIFT_MAX_BAND_SHARD_ROWS,
+    spark, table, tracker, family, pinned, pairs_head, base_new,
+    banded_new, new_ids, batch_doc_shards, band_sample, artifacts, mode,
+    concurrency, user_id, message, id_col, metastore, pairs_table,
+    drift_shard_rows,
 ):
     from ..spark.reader import read_version
+    from ..spark.writer import overlapped
 
+    state, docs_table, docs_state = pinned.state, pinned.companion, pinned.cstate
     payload = family.payload_col
     # ONE capped collect (overlapped with the batch-stats agg by
     # _extend_index) yields both the batch's band-shard set (the
@@ -1028,9 +1110,9 @@ def _extend_publish(
     # The lookup and the touched-shard RMW union it feeds are independent
     # of the candidate/verify chain (candidates read only the BATCH's
     # band shards; replaced shards matter only to the write set), so the
-    # whole chain runs on a worker thread OVERLAPPED with the verify
-    # (guide §2.6) — its result is consumed, and any error it raises
-    # surfaces, strictly before anything is written.
+    # two chains run OVERLAPPED (``overlapped``, guide §2.6: in the
+    # caller's job group) — their results are consumed, and any error
+    # either raises surfaces, strictly before anything is written.
     dsub = _restrict_to_values(docs_state, DOC_SHARD_COL, batch_doc_shards)
 
     def _lookup_and_rmw_bands():
@@ -1087,8 +1169,8 @@ def _extend_publish(
         )
         # which touched band shards still hold rows (a replaced doc's
         # removal can empty one); doc shards never empty (the batch
-        # writes into every shard it touches).  This worker thread is
-        # the frame's only toucher until the publish joins the future
+        # writes into every shard it touches).  This half is the
+        # frame's only toucher until ``overlapped`` returns
         return _observe_written(
             bands_out_, BAND_SHARD_COL, wsub_, table, drift_shard_rows,
             f"{family.kind} index", "band shard",
@@ -1097,127 +1179,124 @@ def _extend_publish(
             "docs/scale.md sizing rule)",
         )
 
-    rmw_pool = ThreadPoolExecutor(max_workers=1)
-    rmw_future = rmw_pool.submit(_lookup_and_rmw_bands)
-
-    # -- candidates: batch band keys vs ONLY the batch's band shards --
-    bsub = _restrict_to_values(state, BAND_SHARD_COL, batch_band_shards)
-    cand = None
-    if bsub.partition_versions:
-        live_bands = read_version(
-            spark, table, bsub, infer_partition_types=False
-        )
-        if band_filter is not None:
-            # superset of the equi-join keys — pure row-group pruning,
-            # never a semantic restriction
-            live_bands = live_bands.where(band_filter)
-        live_bands = live_bands.select(
-            F.col(id_col).alias("_old"), "band_id", "band_key"
-        )
-        # no forced broadcast: the batch side is b rows per doc — small
-        # for a daily delta (AQE picks a broadcast join then) but not
-        # provably small for a bulk backfill; the shard-pruned live side
-        # is bounded by the batch's shards either way
-        cand_old = (
-            live_bands.join(
-                banded_new.select(
-                    F.col(id_col).alias("_new"), "band_id", "band_key"
-                ),
-                ["band_id", "band_key"],
+    def _verify_candidates():
+        # -- candidates: batch band keys vs ONLY the batch's band shards --
+        bsub = _restrict_to_values(state, BAND_SHARD_COL, batch_band_shards)
+        cand = None
+        if bsub.partition_versions:
+            live_bands = read_version(
+                spark, table, bsub, infer_partition_types=False
             )
-            .where(F.col("_old") != F.col("_new"))
-        )
-        if mode == "upsert":
-            # a replaced id's OLD content must not pair with anything
-            cand_old = cand_old.join(
-                new_ids.select(F.col(id_col).alias("_old")),
-                "_old", "left_anti",
+            if band_filter is not None:
+                # superset of the equi-join keys — pure row-group pruning,
+                # never a semantic restriction
+                live_bands = live_bands.where(band_filter)
+            live_bands = live_bands.select(
+                F.col(id_col).alias("_old"), "band_id", "band_key"
             )
-        cand = cand_old.select(
-            F.least("_old", "_new").alias("id_a"),
-            F.greatest("_old", "_new").alias("id_b"),
-        )
-    # batch × batch pairs (the bounded self-join)
-    a = banded_new.select(F.col(id_col).alias("id_a"), "band_id", "band_key")
-    b = banded_new.select(F.col(id_col).alias("id_b"), "band_id", "band_key")
-    cand_new = (
-        a.join(b, ["band_id", "band_key"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-    )
-    cand = cand_new if cand is None else cand.unionByName(cand_new)
-    # lineage cut: the pair set is referenced three times by verify
-    # (minhash_dedup's measured Catalyst-analysis blowup otherwise).
-    # eager=False: the capped `sample` collect below is the first action
-    # on this chain and lands the final stage; the shuffle map stages
-    # still run at this call under AQE, so this saves the eager shape's
-    # result-stage pass, not whole jobs (lineage_barrier docstring)
-    cand = DD.lineage_barrier(cand.distinct(), eager=False)
-
-    # -- exact verify: payloads from base_new + ONLY candidate shards --
-    old_cand_ids = (
-        cand.select(F.col("id_a").alias(id_col))
-        .union(cand.select("id_b"))
-        .distinct()
-        .join(new_ids, id_col, "left_anti")
-    )
-    # small candidate sets (the normal case) collect every candidate id:
-    # the exact IN-list both restricts the payload read to them and
-    # prunes row groups over the sorted shard files, so old_cand_ids is
-    # never evaluated again.  Above the cap only the DISTINCT shard
-    # values are collected (bounded ≤ doc_shards), shard pruning bounds
-    # the read and a semi-join against old_cand_ids restricts it
-    sample = old_cand_ids.select(
-        F.col(id_col),
-        _shard_col(artifacts.doc_shards, id_col).alias("s"),
-    ).limit(_FETCH_PUSHDOWN_MAX_IDS + 1).collect()
-    verify_base = base_new.select(F.col(id_col), payload)
-    if sample:
-        if len(sample) <= _FETCH_PUSHDOWN_MAX_IDS:
-            cand_shards = sorted({r["s"] for r in sample})
-            in_ids = [r[id_col] for r in sample]
-        else:
-            # two consumers (the shard collect and the semi-join) of a
-            # frame the pushdown cap does not bound. eager=False: the
-            # shard collect right below lands the final stage
-            old_cand_ids = DD.lineage_barrier(old_cand_ids, eager=False)
-            cand_shards = sorted(
-                r["s"]
-                for r in old_cand_ids.select(
-                    _shard_col(artifacts.doc_shards, id_col).alias("s")
-                ).distinct().collect()
-            )
-            in_ids = None
-        csub = _restrict_to_values(docs_state, DOC_SHARD_COL, cand_shards)
-        if csub.partition_versions:
-            old_payloads = read_version(
-                spark, docs_table, csub, infer_partition_types=False
-            ).select(F.col(id_col), payload)
-            if in_ids is not None:
-                old_payloads = old_payloads.where(
-                    DD.in_list(id_col, in_ids)
+            # no forced broadcast: the batch side is b rows per doc — small
+            # for a daily delta (AQE picks a broadcast join then) but not
+            # provably small for a bulk backfill; the shard-pruned live side
+            # is bounded by the batch's shards either way
+            cand_old = (
+                live_bands.join(
+                    banded_new.select(
+                        F.col(id_col).alias("_new"), "band_id", "band_key"
+                    ),
+                    ["band_id", "band_key"],
                 )
+                .where(F.col("_old") != F.col("_new"))
+            )
+            if mode == "upsert":
+                # a replaced id's OLD content must not pair with anything
+                cand_old = cand_old.join(
+                    new_ids.select(F.col(id_col).alias("_old")),
+                    "_old", "left_anti",
+                )
+            cand = cand_old.select(
+                F.least("_old", "_new").alias("id_a"),
+                F.greatest("_old", "_new").alias("id_b"),
+            )
+        # batch × batch pairs (the bounded self-join)
+        a = banded_new.select(F.col(id_col).alias("id_a"), "band_id", "band_key")
+        b = banded_new.select(F.col(id_col).alias("id_b"), "band_id", "band_key")
+        cand_new = (
+            a.join(b, ["band_id", "band_key"])
+            .where(F.col("id_a") < F.col("id_b"))
+            .select("id_a", "id_b")
+        )
+        cand = cand_new if cand is None else cand.unionByName(cand_new)
+        # lineage cut: the pair set is referenced three times by verify
+        # (minhash_dedup's measured Catalyst-analysis blowup otherwise).
+        # eager=False: the capped `sample` collect below is the first action
+        # on this chain and lands the final stage; the shuffle map stages
+        # still run at this call under AQE, so this saves the eager shape's
+        # result-stage pass, not whole jobs (lineage_barrier docstring)
+        cand = DD.lineage_barrier(cand.distinct(), eager=False)
+
+        # -- exact verify: payloads from base_new + ONLY candidate shards --
+        old_cand_ids = (
+            cand.select(F.col("id_a").alias(id_col))
+            .union(cand.select("id_b"))
+            .distinct()
+            .join(new_ids, id_col, "left_anti")
+        )
+        # small candidate sets (the normal case) collect every candidate id:
+        # the exact IN-list both restricts the payload read to them and
+        # prunes row groups over the sorted shard files, so old_cand_ids is
+        # never evaluated again.  Above the cap only the DISTINCT shard
+        # values are collected (bounded ≤ doc_shards), shard pruning bounds
+        # the read and a semi-join against old_cand_ids restricts it
+        sample = old_cand_ids.select(
+            F.col(id_col),
+            _shard_col(artifacts.doc_shards, id_col).alias("s"),
+        ).limit(_FETCH_PUSHDOWN_MAX_IDS + 1).collect()
+        verify_base = base_new.select(F.col(id_col), payload)
+        if sample:
+            if len(sample) <= _FETCH_PUSHDOWN_MAX_IDS:
+                cand_shards = sorted({r["s"] for r in sample})
+                in_ids = [r[id_col] for r in sample]
             else:
-                old_payloads = old_payloads.join(
-                    old_cand_ids, id_col, "left_semi"
+                # two consumers (the shard collect and the semi-join) of a
+                # frame the pushdown cap does not bound. eager=False: the
+                # shard collect right below lands the final stage
+                old_cand_ids = DD.lineage_barrier(old_cand_ids, eager=False)
+                cand_shards = sorted(
+                    r["s"]
+                    for r in old_cand_ids.select(
+                        _shard_col(artifacts.doc_shards, id_col).alias("s")
+                    ).distinct().collect()
                 )
-            verify_base = verify_base.unionByName(old_payloads)
-    verified = family.verify_fn(verify_base, cand)
-    if pairs_table is None:
-        # the returned frame is the only product: its map stages run at
-        # this call under AQE and the caller's first action lands the
-        # final stage (lineage_barrier docstring)
-        verified = DD.lineage_barrier(verified, eager=False)
+                in_ids = None
+            csub = _restrict_to_values(docs_state, DOC_SHARD_COL, cand_shards)
+            if csub.partition_versions:
+                old_payloads = read_version(
+                    spark, docs_table, csub, infer_partition_types=False
+                ).select(F.col(id_col), payload)
+                if in_ids is not None:
+                    old_payloads = old_payloads.where(
+                        DD.in_list(id_col, in_ids)
+                    )
+                else:
+                    old_payloads = old_payloads.join(
+                        old_cand_ids, id_col, "left_semi"
+                    )
+                verify_base = verify_base.unionByName(old_payloads)
+        verified = family.verify_fn(verify_base, cand)
+        if pairs_table is None:
+            # the returned frame is the only product: its map stages run at
+            # this call under AQE and the caller's first action lands the
+            # final stage (lineage_barrier docstring)
+            verified = DD.lineage_barrier(verified, eager=False)
+        return verified
 
     # -- publish: RMW of exactly the touched shards, one pair commit --
-    # join the overlapped lookup+RMW worker: its append-hit ValueError /
-    # any read error surfaces HERE, before anything is written.  (If the
-    # main chain raised before this join, the worker's bounded read-only
-    # jobs finish in the background; nothing is written by either side.)
-    try:
-        bands_out, band_counts, emptied = rmw_future.result()
-    finally:
-        rmw_pool.shutdown(wait=True)
+    # the overlapped halves have both returned: the lookup's append-hit
+    # ValueError or any read error of either half surfaces HERE, before
+    # anything is written
+    (bands_out, band_counts, emptied), verified = overlapped(
+        spark, lambda half: half(), [_lookup_and_rmw_bands, _verify_candidates]
+    )
     docs_out, _ = _rmw_shards(
         spark, docs_table, docs_state, DOC_SHARD_COL, batch_doc_shards,
         base_new.select(F.col(id_col), payload).withColumn(
@@ -1232,7 +1311,7 @@ def _extend_publish(
     _write_artifact_sidecar(table, stamped, _family_name(family.kind))
     expected = None
     if concurrency != "last-writer-wins":
-        expected = {table.name: base_head, docs_table.name: docs_head}
+        expected = {table.name: pinned.head, docs_table.name: pinned.chead}
     writes = [
         (
             table,
@@ -1302,15 +1381,33 @@ def verify_dedup_index(
     doc entry, doc whose band rows are missing).  Empty = consistent.
     One column-pruned scan of each table — the OFFLINE deep audit
     backing the hot path's cheap pair-marker check."""
-    state = tracker.current_version(table.name)
-    artifacts = load_dedup_artifacts(table, state)
-    family = _text_family(artifacts, id_col, threshold=None)
-    return _verify_index(spark, table, tracker, family, state, id_col)
+    return _verify_index(
+        spark, table, tracker, _TEXT,
+        lambda arts: _text_family(arts, id_col, threshold=None), id_col,
+    )
 
 
-def _verify_index(spark, table, tracker, family, state, id_col) -> DataFrame:
+def _disagreements(want, have, keys, want_col, have_col, agrees=None):
+    """The differential audit join every index ``verify_*`` shares: the
+    rows of ``want`` full-outer-joined with ``have`` on ``keys`` where
+    either side is missing or the two values disagree (``agrees``
+    defaults to equality), as ``(*keys, want_col, have_col)``."""
+    if agrees is None:
+        agrees = F.col(want_col) == F.col(have_col)
+    return (
+        want.join(have, keys, "full_outer")
+        .where(F.col(want_col).isNull() | F.col(have_col).isNull() | ~agrees)
+        .select(*keys, want_col, have_col)
+    )
+
+
+def _verify_index(spark, table, tracker, m, make_family, id_col) -> DataFrame:
+    """A dedup family's audit: every doc's band rows re-derived from its
+    stored payload under the live geometry vs the band table."""
     from ..spark.reader import read_version
 
+    state = tracker.current_version(table.name)
+    family = make_family(m.load(table, state, None))
     docs_state = tracker.current_version(dedup_docs_table(table).name)
     docs = read_version(
         spark, dedup_docs_table(table), docs_state, infer_partition_types=False
@@ -1321,15 +1418,7 @@ def _verify_index(spark, table, tracker, family, state, id_col) -> DataFrame:
     have = read_version(
         spark, table, state, infer_partition_types=False
     ).select(F.col(id_col), "band_id", F.col("band_key").alias("have_key"))
-    return (
-        want.join(have, [id_col, "band_id"], "full_outer")
-        .where(
-            F.col("want_key").isNull()
-            | F.col("have_key").isNull()
-            | (F.col("want_key") != F.col("have_key"))
-        )
-        .select(id_col, "band_id", "want_key", "have_key")
-    )
+    return _disagreements(want, have, [id_col, "band_id"], "want_key", "have_key")
 
 
 def rebuild_dedup_index(
@@ -1360,7 +1449,7 @@ def rebuild_dedup_index(
     the pairs journal's marker keeps tracking the primary's) as one
     STRICT pair commit pinned on every line — any racing extend
     conflicts loudly.  Returns ``(band_table_state, DedupArtifacts)``."""
-    _require_band_partitioning(table, "dedup")
+    _require_partitioning(table, _TEXT)
     state, _, _ = pinned_state(tracker, table.name)
     old = load_dedup_artifacts(table, state)
     new_geo = _rebuild_geometry(
@@ -1373,13 +1462,13 @@ def rebuild_dedup_index(
     )
     family = _text_family(artifacts, id_col, threshold=None)
     return _rebuild_index(
-        spark, table, tracker, family, artifacts, version,
+        spark, table, tracker, _TEXT, family, artifacts, version,
         user_id, message, id_col, pairs_table, metastore,
     )
 
 
 def _rebuild_index(
-    spark, table, tracker, family, artifacts, version,
+    spark, table, tracker, m, family, artifacts, version,
     user_id, message, id_col, pairs_table, metastore,
 ):
     """Family-generic re-geometry: one doc-store pass re-shards the
@@ -1392,7 +1481,7 @@ def _rebuild_index(
     _require_dynamic_overwrite(spark)
     docs_table = dedup_docs_table(table)
     state, base_head, _, docs_state, docs_head = _pin_pair(
-        tracker, table, docs_table, _repair_advice(family.kind)
+        tracker, table, docs_table, m.advice
     )
     _write_artifact_sidecar(table, artifacts, _family_name(family.kind))
 
@@ -1514,13 +1603,15 @@ def vacuum_dedup_artifacts(
 
 
 def _commit_index_stream_batch(
-    batch_df, epoch_id, table, tracker, extend_fn,
-    message_prefix, epoch_cache, on_pairs,
+    extend, batch_df, epoch_id, table, tracker, message_prefix,
+    epoch_cache, on_pairs=None, **kw,
 ) -> None:
     """Family-generic ``foreachBatch`` body (every dedup family and the
-    ANN index): epoch-replay guard → O(batch) extend → optional
-    callback on the extend's first result (the verified pairs; the
-    ANN index passes none).  Same epoch-replay
+    ANN index; a family's ``commit_*_stream_batch`` passes its public
+    ``extend`` and its own parameters, ``**locals()``): epoch-replay
+    guard → O(batch) ``extend(batch_df, table, tracker, message=...,
+    **kw)`` → optional callback on the extend's first result (the
+    verified pairs; the ANN index takes none).  Same epoch-replay
     contract as the other versioned sinks
     (:mod:`chronicles_spark.streaming.ingest`): an epoch EQUAL to the
     latest committed one is a crash-replay and is skipped; an epoch
@@ -1536,7 +1627,7 @@ def _commit_index_stream_batch(
     ):
         return  # checkpoint replay of the just-committed epoch
     try:
-        result = extend_fn(batch_df, message)
+        result = extend(batch_df, table, tracker, message=message, **kw)
         if epoch_cache is not None:
             epoch_cache["latest_epoch"] = epoch_id
     except BaseException:
@@ -1546,6 +1637,20 @@ def _commit_index_stream_batch(
         raise
     if on_pairs is not None:
         on_pairs(result[0], epoch_id)
+
+
+def _index_stream_sink(stream_df, checkpoint_dir, commit_fn, **kw):
+    """Family-generic stream sink (a family's ``*_stream_sink`` passes
+    its ``commit_*_stream_batch`` and its own parameters,
+    ``**locals()``): every micro-batch runs ``commit_fn(batch_df,
+    epoch_id, epoch_cache=..., **kw)`` with one epoch cache per sink,
+    the stream checkpointed at ``checkpoint_dir``."""
+    epoch_cache: dict = {}
+    return stream_df.writeStream.foreachBatch(
+        lambda batch_df, epoch_id: commit_fn(
+            batch_df, epoch_id, epoch_cache=epoch_cache, **kw
+        )
+    ).option("checkpointLocation", checkpoint_dir)
 
 
 def commit_dedup_stream_batch(
@@ -1577,19 +1682,7 @@ def commit_dedup_stream_batch(
     per epoch — a crash between the extend's commit and the callback
     skips the epoch on replay WITHOUT re-delivering (recover from the
     pairs journal, which is why it is the primary surface)."""
-
-    def extend_fn(df, message):
-        return extend_dedup_index(
-            df, table, tracker, user_id, message,
-            threshold=threshold, mode=mode, artifacts=artifacts,
-            id_col=id_col, text_col=text_col, metastore=metastore,
-            pairs_table=pairs_table,
-        )
-
-    _commit_index_stream_batch(
-        batch_df, epoch_id, table, tracker, extend_fn,
-        message_prefix, epoch_cache, on_pairs,
-    )
+    _commit_index_stream_batch(extend=extend_dedup_index, **locals())
 
 
 def dedup_stream_sink(
@@ -1624,17 +1717,4 @@ def dedup_stream_sink(
     :func:`commit_dedup_stream_batch`).  Per-batch cost is O(batch +
     candidates) regardless of corpus size — the module's whole point,
     which is what makes ``mode="upsert"`` safe at streaming cadence."""
-    epoch_cache: dict = {}
-
-    def commit_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        commit_dedup_stream_batch(
-            batch_df, epoch_id, table, tracker, user_id,
-            artifacts=artifacts, message_prefix=message_prefix,
-            threshold=threshold, mode=mode, epoch_cache=epoch_cache,
-            on_pairs=on_pairs, id_col=id_col, text_col=text_col,
-            metastore=metastore, pairs_table=pairs_table,
-        )
-
-    return stream_df.writeStream.foreachBatch(commit_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
+    return _index_stream_sink(commit_fn=commit_dedup_stream_batch, **locals())

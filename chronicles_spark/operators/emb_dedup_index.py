@@ -22,13 +22,14 @@ instance of that family-generic core:
 Everything structural — sidecar serialization and agreement, the
 extend front end, shard pruning, band-key row-group pushdown,
 upsert/append semantics, the RMW pair-commit publish, torn-pair
-refusal, re-geometry rebuild, streaming maintenance, sidecar GC — is
-the shared core in :mod:`~chronicles_spark.operators.dedup_index`; this
-module supplies only its artifacts fields
+refusal, re-geometry rebuild, the stream kernel behind its stream
+wrappers, the differential join behind its verify audit, sidecar GC —
+is the shared core in :mod:`~chronicles_spark.operators.dedup_index`;
+this module supplies only its artifacts fields
 (:class:`EmbeddingDedupArtifacts`: ``dim``/``n_planes`` in place of
 ``width``/``rows``), its encoder (identity over the vector column,
-after a dim check), and its ``_IndexFamily`` (the sign-LSH bander and
-the exact-cosine verifier).
+after a dim check), its ``_IndexFamily`` (the sign-LSH bander and the
+exact-cosine verifier) and its ``_Maintainer`` record.
 
 A replaced id's old vector re-derives its old band rows from the doc
 store (sign bits are a pure function of the stored vector), so upserts
@@ -54,19 +55,19 @@ from ..trackers.base import VersionTracker
 from . import dedup as DD
 from .dedup_index import (
     DRIFT_MAX_BAND_SHARD_ROWS,
+    _band_maintainer,
     _build_index,
     _commit_index_stream_batch,
     _extend_family_index,
+    _index_stream_sink,
     _IndexArtifacts,
     _IndexFamily,
     _load_artifacts,
     _positive,
     _rebuild_geometry,
     _rebuild_index,
-    _require_band_partitioning,
+    _require_partitioning,
     _verify_index,
-    dedup_docs_table,
-    dedup_pairs_table,
 )
 from .pairing import pinned_state
 
@@ -94,6 +95,9 @@ def load_embedding_dedup_artifacts(
         table, table_version, EmbeddingDedupArtifacts.from_json,
         "embedding dedup geometries",
     )
+
+
+_EMBEDDING = _band_maintainer("embedding_dedup", load_embedding_dedup_artifacts)
 
 
 def _emb_family(
@@ -156,7 +160,7 @@ def build_embedding_dedup_index(
     EmbeddingDedupArtifacts)``.  The build produces no pairs — dedup of
     the base corpus is :func:`embedding_lsh_dedup`'s job (same
     hyperplanes, so build-then-extend agrees with it exactly)."""
-    _require_band_partitioning(table, "embedding dedup")
+    _require_partitioning(table, _EMBEDDING)
     geo = _positive(n_planes=n_planes, bands=bands, dim=dim,
                     band_shards=band_shards, doc_shards=doc_shards)
     if n_planes % bands:
@@ -202,8 +206,8 @@ def extend_embedding_dedup_index(
     dedup_index.extend_dedup_index`) — one shared core, different
     encoder/verifier."""
     return _extend_family_index(
-        "embedding_dedup", load_embedding_dedup_artifacts,
-        lambda df, arts: _vec_encode(df, id_col, vec_col, arts.dim),
+        _EMBEDDING,
+        lambda df, arts, _: _vec_encode(df, id_col, vec_col, arts.dim),
         lambda arts: _emb_family(arts, id_col, vec_col, threshold),
         df_new, table, tracker, user_id, message, mode, concurrency,
         artifacts, id_col, metastore, pairs_table, exclusive,
@@ -222,10 +226,10 @@ def verify_embedding_dedup_index(
     stored embeddings and returns disagreements with the band table
     (empty = consistent) — the embedding twin of
     :func:`~chronicles_spark.operators.dedup_index.verify_dedup_index`."""
-    state = tracker.current_version(table.name)
-    artifacts = load_embedding_dedup_artifacts(table, state)
-    family = _emb_family(artifacts, id_col, vec_col, threshold=None)
-    return _verify_index(spark, table, tracker, family, state, id_col)
+    return _verify_index(
+        spark, table, tracker, _EMBEDDING,
+        lambda arts: _emb_family(arts, id_col, vec_col, threshold=None), id_col,
+    )
 
 
 def rebuild_embedding_dedup_index(
@@ -247,7 +251,7 @@ def rebuild_embedding_dedup_index(
     re-derive everything; only ``dim`` — a property of the data — is
     immutable).  Same strict pair-commit semantics and sizing rule as
     :func:`~chronicles_spark.operators.dedup_index.rebuild_dedup_index`."""
-    _require_band_partitioning(table, "embedding dedup")
+    _require_partitioning(table, _EMBEDDING)
     state, _, _ = pinned_state(tracker, table.name)
     old = load_embedding_dedup_artifacts(table, state)
     new_geo = _rebuild_geometry(
@@ -265,7 +269,7 @@ def rebuild_embedding_dedup_index(
     )
     family = _emb_family(artifacts, id_col, vec_col, threshold=None)
     return _rebuild_index(
-        spark, table, tracker, family, artifacts, version,
+        spark, table, tracker, _EMBEDDING, family, artifacts, version,
         user_id, message, id_col, pairs_table, metastore,
     )
 
@@ -292,19 +296,7 @@ def commit_embedding_dedup_stream_batch(
     epoch-replay and exactly-once-pairs contracts as the text family's
     :func:`~chronicles_spark.operators.dedup_index.
     commit_dedup_stream_batch`."""
-
-    def extend_fn(df, message):
-        return extend_embedding_dedup_index(
-            df, table, tracker, user_id, message,
-            threshold=threshold, mode=mode, artifacts=artifacts,
-            id_col=id_col, vec_col=vec_col, metastore=metastore,
-            pairs_table=pairs_table,
-        )
-
-    _commit_index_stream_batch(
-        batch_df, epoch_id, table, tracker, extend_fn,
-        message_prefix, epoch_cache, on_pairs,
-    )
+    _commit_index_stream_batch(extend=extend_embedding_dedup_index, **locals())
 
 
 def embedding_dedup_stream_sink(
@@ -327,17 +319,6 @@ def embedding_dedup_stream_sink(
     micro-batch becomes one O(batch) extend commit — the daily-delta
     shape for embedding pipelines (each batch near-dup-checked against
     everything ever embedded, then folded in)."""
-    epoch_cache: dict = {}
-
-    def commit_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        commit_embedding_dedup_stream_batch(
-            batch_df, epoch_id, table, tracker, user_id,
-            artifacts=artifacts, message_prefix=message_prefix,
-            threshold=threshold, mode=mode, epoch_cache=epoch_cache,
-            on_pairs=on_pairs, id_col=id_col, vec_col=vec_col,
-            metastore=metastore, pairs_table=pairs_table,
-        )
-
-    return stream_df.writeStream.foreachBatch(commit_batch).option(
-        "checkpointLocation", checkpoint_dir
+    return _index_stream_sink(
+        commit_fn=commit_embedding_dedup_stream_batch, **locals()
     )

@@ -13,8 +13,8 @@ deterministic bander over the stored payload, which is all the
 family-generic core (:mod:`~chronicles_spark.operators.dedup_index`)
 needs.  The FOURTH family instance, supplying only its artifacts
 fields (:class:`SemanticDedupArtifacts`: the pinned centroids plus
-``n_clusters``/``dim`` and the shard counts), its encoder, and its
-``_IndexFamily`` (bander + verifier):
+``n_clusters``/``dim`` and the shard counts), its encoder, its
+``_IndexFamily`` (bander + verifier) and its ``_Maintainer`` record:
 
 * **encoder**: identity over ``(vec_id, embedding)`` — the doc store
   keeps raw vectors (exact-cosine verify needs them; PQ codes live in
@@ -29,8 +29,9 @@ candidates' vector shards; a re-submitted id re-derives its old cluster
 from the stored vector (no corpus scan) — every structural guarantee
 (sidecar serialization and agreement, the extend front end, shard
 pruning, row-group pushdown, RMW pair commits, torn-pair refusal,
-exactly-once pairs journal, streaming epoch guard, sidecar GC,
-``exclusive`` flock) is inherited.
+exactly-once pairs journal, the stream kernel with its epoch guard,
+the verify audit's differential join, sidecar GC, ``exclusive``
+flock) is inherited.
 
 Centroid lifecycle: ``n_clusters``/``dim``/``centroids`` are IMMUTABLE
 on rebuild (re-geometry re-shards from the stored vectors under the
@@ -66,18 +67,19 @@ from ..trackers.base import VersionTracker
 from . import dedup as DD
 from .dedup_index import (
     DRIFT_MAX_BAND_SHARD_ROWS,
+    _band_maintainer,
     _build_index,
     _commit_index_stream_batch,
     _extend_family_index,
+    _index_stream_sink,
     _IndexArtifacts,
     _IndexFamily,
     _load_artifacts,
     _positive,
     _rebuild_geometry,
     _rebuild_index,
-    _require_band_partitioning,
+    _require_partitioning,
     _verify_index,
-    dedup_docs_table,
 )
 from .emb_dedup_index import _vec_encode
 from .pairing import pinned_state
@@ -118,6 +120,9 @@ def load_semantic_dedup_artifacts(
         table, table_version, SemanticDedupArtifacts.from_json,
         "semantic dedup geometries",
     )
+
+
+_SEMANTIC = _band_maintainer("semantic_dedup", load_semantic_dedup_artifacts)
 
 
 def _sem_family(
@@ -175,7 +180,7 @@ def build_semantic_dedup_index(
     ``(band_table_state, SemanticDedupArtifacts)``."""
     from .similarity import kmeans_fit
 
-    _require_band_partitioning(table, "semantic dedup")
+    _require_partitioning(table, _SEMANTIC)
     _positive(n_clusters=n_clusters, dim=dim, band_shards=band_shards,
               doc_shards=doc_shards)
     encoded = _vec_encode(df, id_col, vec_col, dim)
@@ -232,8 +237,8 @@ def extend_semantic_dedup_index(
     contracts (upsert/append, pairs journal, concurrency, drift
     warning, ``exclusive``) are the shared core's."""
     return _extend_family_index(
-        "semantic_dedup", load_semantic_dedup_artifacts,
-        lambda df, arts: _vec_encode(df, id_col, vec_col, arts.dim),
+        _SEMANTIC,
+        lambda df, arts, _: _vec_encode(df, id_col, vec_col, arts.dim),
         lambda arts: _sem_family(arts, id_col, vec_col, threshold),
         df_new, table, tracker, user_id, message, mode, concurrency,
         artifacts, id_col, metastore, pairs_table, exclusive,
@@ -251,10 +256,10 @@ def verify_semantic_dedup_index(
     """Differential audit: cluster assignments re-derived from the
     stored vectors under the pinned centroids vs the band table
     (empty = consistent)."""
-    state = tracker.current_version(table.name)
-    artifacts = load_semantic_dedup_artifacts(table, state)
-    family = _sem_family(artifacts, id_col, vec_col, threshold=None)
-    return _verify_index(spark, table, tracker, family, state, id_col)
+    return _verify_index(
+        spark, table, tracker, _SEMANTIC,
+        lambda arts: _sem_family(arts, id_col, vec_col, threshold=None), id_col,
+    )
 
 
 def rebuild_semantic_dedup_index(
@@ -274,7 +279,7 @@ def rebuild_semantic_dedup_index(
     pinned centroids (``n_clusters``/``dim``/``centroids`` are
     immutable — re-fitting the quantizer is a fresh build).  Shared
     strict pair-commit semantics."""
-    _require_band_partitioning(table, "semantic dedup")
+    _require_partitioning(table, _SEMANTIC)
     state, _, _ = pinned_state(tracker, table.name)
     old = load_semantic_dedup_artifacts(table, state)
     new_geo = _rebuild_geometry(
@@ -287,7 +292,7 @@ def rebuild_semantic_dedup_index(
     )
     family = _sem_family(artifacts, id_col, vec_col, threshold=None)
     return _rebuild_index(
-        spark, table, tracker, family, artifacts, version,
+        spark, table, tracker, _SEMANTIC, family, artifacts, version,
         user_id, message, id_col, pairs_table, metastore,
     )
 
@@ -311,19 +316,7 @@ def commit_semantic_dedup_stream_batch(
 ) -> None:
     """``foreachBatch`` body — the shared epoch-replay and
     exactly-once-pairs contracts."""
-
-    def extend_fn(df, message):
-        return extend_semantic_dedup_index(
-            df, table, tracker, user_id, message,
-            threshold=threshold, mode=mode, artifacts=artifacts,
-            id_col=id_col, vec_col=vec_col, metastore=metastore,
-            pairs_table=pairs_table,
-        )
-
-    _commit_index_stream_batch(
-        batch_df, epoch_id, table, tracker, extend_fn,
-        message_prefix, epoch_cache, on_pairs,
-    )
+    _commit_index_stream_batch(extend=extend_semantic_dedup_index, **locals())
 
 
 def semantic_dedup_stream_sink(
@@ -344,17 +337,6 @@ def semantic_dedup_stream_sink(
 ):
     """Streaming maintenance: one O(batch) extend commit per
     micro-batch (the shared shape)."""
-    epoch_cache: dict = {}
-
-    def commit_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        commit_semantic_dedup_stream_batch(
-            batch_df, epoch_id, table, tracker, user_id,
-            artifacts=artifacts, message_prefix=message_prefix,
-            threshold=threshold, mode=mode, epoch_cache=epoch_cache,
-            on_pairs=on_pairs, id_col=id_col, vec_col=vec_col,
-            metastore=metastore, pairs_table=pairs_table,
-        )
-
-    return stream_df.writeStream.foreachBatch(commit_batch).option(
-        "checkpointLocation", checkpoint_dir
+    return _index_stream_sink(
+        commit_fn=commit_semantic_dedup_stream_batch, **locals()
     )

@@ -3,12 +3,14 @@ on the versioned lake — the third instance of the family-generic dedup
 index core (:mod:`~chronicles_spark.operators.dedup_index`), and the
 existence proof that a new similarity family supplies ONLY its
 artifacts fields (:class:`SimhashDedupArtifacts`: ``bits``/``bands``
-plus the shard counts), its encoder, and its ``_IndexFamily`` (bander
-and verifier).  Everything structural — sidecar serialization and
-agreement, the extend front end, shard routing, band-key row-group
-pushdown, upsert/append, the RMW pair-commit publish, torn-pair
-refusal, the exactly-once pairs journal, re-geometry rebuild,
-streaming epoch guard, sidecar GC — is inherited:
+plus the shard counts), its encoder, its ``_IndexFamily`` (bander and
+verifier) and its ``_Maintainer`` record (one ``_band_maintainer``
+call).  Everything structural — sidecar serialization and agreement,
+the extend front end, shard routing, band-key row-group pushdown,
+upsert/append, the RMW pair-commit publish, torn-pair refusal, the
+exactly-once pairs journal, re-geometry rebuild, the stream kernel
+behind its stream wrappers (epoch guard, ``foreachBatch`` chain), the
+differential join behind its verify audit, sidecar GC — is inherited:
 
 * **encoder**: :func:`~chronicles_spark.operators.dedup.simhash_expr`
   — one map-side pass folds each doc to a ``bits``-wide fingerprint
@@ -45,18 +47,19 @@ from ..trackers.base import VersionTracker
 from . import dedup as DD
 from .dedup_index import (
     DRIFT_MAX_BAND_SHARD_ROWS,
+    _band_maintainer,
     _build_index,
     _commit_index_stream_batch,
     _extend_family_index,
+    _index_stream_sink,
     _IndexArtifacts,
     _IndexFamily,
     _load_artifacts,
     _positive,
     _rebuild_geometry,
     _rebuild_index,
-    _require_band_partitioning,
+    _require_partitioning,
     _verify_index,
-    dedup_docs_table,
 )
 from .pairing import pinned_state
 
@@ -81,6 +84,9 @@ def load_simhash_dedup_artifacts(
         table, table_version, SimhashDedupArtifacts.from_json,
         "simhash dedup geometries",
     )
+
+
+_SIMHASH = _band_maintainer("simhash_dedup", load_simhash_dedup_artifacts)
 
 
 def _sim_encode(df: DataFrame, id_col: str, text_col: str, bits: int):
@@ -182,7 +188,7 @@ def build_simhash_dedup_index(
     the simhash twin of :func:`~chronicles_spark.operators.dedup_index.
     build_dedup_index`.  Returns ``(band_table_state,
     SimhashDedupArtifacts)``."""
-    _require_band_partitioning(table, "simhash dedup")
+    _require_partitioning(table, _SIMHASH)
     geo = _positive(bits=bits, bands=bands, band_shards=band_shards,
                     doc_shards=doc_shards)
     _validate_geometry(bits, bands)
@@ -222,8 +228,8 @@ def extend_simhash_dedup_index(
     add for these docs.  All other contracts (upsert/append, pairs
     journal, concurrency, ``exclusive``) are the shared core's."""
     return _extend_family_index(
-        "simhash_dedup", load_simhash_dedup_artifacts,
-        lambda df, arts: _sim_encode(df, id_col, text_col, arts.bits),
+        _SIMHASH,
+        lambda df, arts, _: _sim_encode(df, id_col, text_col, arts.bits),
         lambda arts: _sim_family(arts, id_col, max_hamming),
         df_new, table, tracker, user_id, message, mode, concurrency,
         artifacts, id_col, metastore, pairs_table, exclusive,
@@ -239,10 +245,10 @@ def verify_simhash_dedup_index(
 ) -> DataFrame:
     """Differential audit: band slices re-derived from the stored
     fingerprints vs the band table (empty = consistent)."""
-    state = tracker.current_version(table.name)
-    artifacts = load_simhash_dedup_artifacts(table, state)
-    family = _sim_family(artifacts, id_col, max_hamming=None)
-    return _verify_index(spark, table, tracker, family, state, id_col)
+    return _verify_index(
+        spark, table, tracker, _SIMHASH,
+        lambda arts: _sim_family(arts, id_col, max_hamming=None), id_col,
+    )
 
 
 def rebuild_simhash_dedup_index(
@@ -261,7 +267,7 @@ def rebuild_simhash_dedup_index(
     """Re-geometry from ONE fingerprint-store pass (``bits`` — the
     payload itself — cannot change; re-fingerprint from raw text via a
     fresh build instead).  Shared strict pair-commit semantics."""
-    _require_band_partitioning(table, "simhash dedup")
+    _require_partitioning(table, _SIMHASH)
     state, _, _ = pinned_state(tracker, table.name)
     old = load_simhash_dedup_artifacts(table, state)
     new_geo = _rebuild_geometry(
@@ -274,7 +280,7 @@ def rebuild_simhash_dedup_index(
     )
     family = _sim_family(artifacts, id_col, max_hamming=None)
     return _rebuild_index(
-        spark, table, tracker, family, artifacts, version,
+        spark, table, tracker, _SIMHASH, family, artifacts, version,
         user_id, message, id_col, pairs_table, metastore,
     )
 
@@ -298,19 +304,7 @@ def commit_simhash_dedup_stream_batch(
 ) -> None:
     """``foreachBatch`` body — the shared epoch-replay and
     exactly-once-pairs contracts."""
-
-    def extend_fn(df, message):
-        return extend_simhash_dedup_index(
-            df, table, tracker, user_id, message,
-            max_hamming=max_hamming, mode=mode, artifacts=artifacts,
-            id_col=id_col, text_col=text_col, metastore=metastore,
-            pairs_table=pairs_table,
-        )
-
-    _commit_index_stream_batch(
-        batch_df, epoch_id, table, tracker, extend_fn,
-        message_prefix, epoch_cache, on_pairs,
-    )
+    _commit_index_stream_batch(extend=extend_simhash_dedup_index, **locals())
 
 
 def simhash_dedup_stream_sink(
@@ -331,17 +325,6 @@ def simhash_dedup_stream_sink(
 ):
     """Streaming maintenance: one O(batch) extend commit per
     micro-batch (the shared shape)."""
-    epoch_cache: dict = {}
-
-    def commit_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        commit_simhash_dedup_stream_batch(
-            batch_df, epoch_id, table, tracker, user_id,
-            artifacts=artifacts, message_prefix=message_prefix,
-            max_hamming=max_hamming, mode=mode, epoch_cache=epoch_cache,
-            on_pairs=on_pairs, id_col=id_col, text_col=text_col,
-            metastore=metastore, pairs_table=pairs_table,
-        )
-
-    return stream_df.writeStream.foreachBatch(commit_batch).option(
-        "checkpointLocation", checkpoint_dir
+    return _index_stream_sink(
+        commit_fn=commit_simhash_dedup_stream_batch, **locals()
     )

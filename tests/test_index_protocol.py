@@ -14,6 +14,7 @@ from chronicles_spark.core.model import (
 )
 from chronicles_spark.core.version import generate_version
 from chronicles_spark.operators import ann_index as AX
+from chronicles_spark.operators import cluster_index as CX
 from chronicles_spark.operators import dedup_index as DX
 from chronicles_spark.operators import emb_dedup_index as EX
 from chronicles_spark.operators import semantic_dedup_index as SDX
@@ -112,20 +113,26 @@ EXTENDS = [
     (EX.extend_embedding_dedup_index, "band_shard"),
     (SDX.extend_semantic_dedup_index, "band_shard"),
     (AX.extend_ann_index, "bucket"),
+    (CX.extend_dedup_clusters, "doc_shard"),
 ]
 
+ARG_CHECKS = {
+    "mode": ({"mode": "merge"}, "mode must be 'upsert' or 'append'"),
+    "concurrency": ({"concurrency": "pessimistic"}, "concurrency must be"),
+    "exclusive": ({"exclusive": True}, "exclusive=True needs"),
+}
+
 
 @pytest.mark.parametrize(
-    "kwargs, match",
+    "extend, part_col, kwargs, match",
     [
-        ({"mode": "merge"}, "mode must be 'upsert' or 'append'"),
-        ({"concurrency": "pessimistic"}, "concurrency must be"),
-        ({"exclusive": True}, "exclusive=True needs"),
+        pytest.param(extend, part_col, *ARG_CHECKS[case],
+                     id=f"{extend.__name__}-{case}")
+        for case in ARG_CHECKS
+        for extend, part_col in EXTENDS
+        # the cluster fold has no mode: it only ever upserts labels
+        if not (case == "mode" and extend is CX.extend_dedup_clusters)
     ],
-    ids=["mode", "concurrency", "exclusive"],
-)
-@pytest.mark.parametrize(
-    "extend, part_col", EXTENDS, ids=[e.__name__ for e, _ in EXTENDS]
 )
 def test_extend_argument_checks_come_first(tmp_path, extend, part_col, kwargs, match):
     """Every extend entry point refuses a bad ``mode``, a bad

@@ -70,8 +70,8 @@ GROUP_PUBLISH_MAX_JOBS = 2
 
 def _jobs(spark, fn):
     """``(fn(), number of Spark jobs it launched)``: the jobs of a fresh
-    job group (this thread) plus those submitted without a group (the
-    operators' pool threads do not inherit the group)."""
+    job group (this thread) plus those submitted without a group (by a
+    thread that did not inherit the group)."""
     sc = spark.sparkContext
     st = sc.statusTracker()
     bus = sc._jsc.sc().listenerBus()
@@ -88,6 +88,13 @@ def _jobs(spark, fn):
     n = len(st.getJobIdsForGroup(group))
     n += len(set(st.getJobIdsForGroup(None)) - before)
     return out, n
+
+
+def _new_loose_jobs(st, loose) -> set:
+    """Retained jobs without a job group that are not in ``loose``: the
+    tracker keeps a bounded number of jobs, so older loose ones may be
+    dropped meanwhile, and only a NEW ungrouped job counts."""
+    return set(st.getJobIdsForGroup(None)) - loose
 
 
 def _key(spark, table, state):
@@ -246,7 +253,7 @@ def test_group_publish_job_ceiling(spark, tmp_path):
     out, n = _jobs(spark, lambda: versioned_insert_group(
         [(df, t) for t in tables], tracker, "t", "publish"))
     assert 0 < n <= GROUP_PUBLISH_MAX_JOBS, n
-    assert set(st.getJobIdsForGroup(None)) == loose
+    assert not _new_loose_jobs(st, loose)
     for t in tables:
         assert {p.path for p in out[t.name].partition_versions} == {
             "d=0", "d=1", "d=2"
@@ -272,7 +279,28 @@ def test_ann_build_fits_run_in_the_callers_job_group(spark, sf_dir, tmp_path):
         emb, ann, tracker, n_clusters=4, m=4, k_sub=4, iters=2,
         id_map_shards=2))
     assert n > 0 and state.partition_versions
-    assert set(st.getJobIdsForGroup(None)) == loose
+    assert not _new_loose_jobs(st, loose)
+
+
+def test_dedup_extend_runs_in_the_callers_job_group(spark, sf_dir, tmp_path):
+    """A dedup extend overlaps its replacement lookup + band RMW with
+    the candidate/verify chain on threads that run in the caller's job
+    group: no job of the extend runs outside it."""
+    tracker = FileBackedVersionTracker(str(tmp_path / "_log"))
+    bands = TableDefinition(TableName("demo", "bandsjg"), str(tmp_path / "bandsjg"),
+                            PartitionSchema(("band_shard",)))
+    tracker.init_table(bands.name, is_snapshot=False, user_id="t")
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    DX.build_dedup_index(docs.where("doc_id < 60"), bands, tracker,
+                         band_shards=4, doc_shards=2)
+    st = spark.sparkContext.statusTracker()
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    loose = set(st.getJobIdsForGroup(None))
+    (_, state, _), n = _jobs(spark, lambda: DX.extend_dedup_index(
+        docs.where("doc_id >= 50 AND doc_id < 90"), bands, tracker,
+        threshold=0.5))
+    assert n > 0 and state.partition_versions
+    assert not _new_loose_jobs(st, loose)
 
 
 # ------------------------------------------------------------ differential
