@@ -6,7 +6,6 @@ behind it and hands the verified pairs to ``on_pairs`` (dedup
 families); each ``*_stream_sink`` drains a small file stream with
 ``availableNow``."""
 
-import os
 from dataclasses import dataclass
 
 import pytest
@@ -20,8 +19,6 @@ from chronicles_spark.operators import semantic_dedup_index as SDX
 from chronicles_spark.operators import simhash_index as SX
 from chronicles_spark.sources import load_table
 from chronicles_spark.trackers import FileBackedVersionTracker
-
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_TEST", "/root/testdata/sf0.001")
 
 # corpus ids < CORPUS; the commit test's batch takes the next ten ids
 # plus a copy of row DONOR under id DUP_ID; the sink streams the ten after
@@ -90,7 +87,7 @@ IDS = [f.name for f in FAMILIES]
 
 
 @pytest.fixture(scope="module")
-def indexes(spark, tmp_path_factory):
+def indexes(spark, sf_dir, tmp_path_factory):
     """``get(family) -> (source frame, table, tracker)``: each family's
     index built once over ids < CORPUS, shared by the tests below (they
     commit under distinct message prefixes)."""
@@ -99,7 +96,7 @@ def indexes(spark, tmp_path_factory):
 
     def get(fam):
         if fam.name not in built:
-            src = load_table(spark, SF_DIR, fam.source).select(
+            src = load_table(spark, sf_dir, fam.source).select(
                 fam.id_col, fam.payload)
             tracker = FileBackedVersionTracker(str(tmp / f"_log_{fam.name}"))
             table = TableDefinition(
